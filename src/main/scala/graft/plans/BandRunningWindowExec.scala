@@ -26,7 +26,7 @@ import graft.ingest.v2.{ExtJsonScan, FilterEval, ZoneMaps}
   * Spark's own WindowExec partitions are).
   */
 case class BandRunningWindowExec(windowExprs: Seq[NamedExpression],
-    funcs: Seq[RunningWindow.RunningFunc], orderSpec: Seq[SortOrder],
+    funcs: Seq[RunningWindow.Fn], orderSpec: Seq[SortOrder],
     partitionTotals: Option[Seq[Array[Any]]], child: SparkPlan)
     extends UnaryExecNode {
 
@@ -112,11 +112,12 @@ case class BandRunningWindowExec(windowExprs: Seq[NamedExpression],
   }
 
   override protected def doExecute(): RDD[InternalRow] = {
+    import RunningWindow.{Acc, PendingRow}
     val childOut = child.output
-    val bound = funcs.map(_.bound(childOut))
+    val bound = funcs.map(_.bound(childOut)).toArray
     val totals: Seq[Array[Any]] = partitionTotals.getOrElse {
-      // carry functions' totals depend on row order: their pass must see
-      // the sorted stream; order-free totals run below the local sort
+      // order-sensitive totals must see the sorted stream; order-free
+      // totals run below the local sort
       val base =
         if (bound.exists(_.orderSensitive)) child else unsortedChild(child)
       // …and CONVERTS only the columns the accumulators read: the
@@ -129,178 +130,27 @@ case class BandRunningWindowExec(windowExprs: Seq[NamedExpression],
       val (tPlan, tBound) = narrowTotalsPlan(base, needed) match {
         case Some(np) if needed.subsetOf(np.outputSet) =>
           (np, funcs.map(_.bound(np.output)))
-        case _ => (base, bound)
+        case _ => (base, bound.toSeq)
       }
       longMetric("totalsPassColumns") += tPlan.output.length
       sparkContext.runJob(tPlan.execute(),
         (it: Iterator[InternalRow]) => {
-          val accs = tBound.map(_.newAcc())
+          val accs = tBound.map(new Acc(_, null)).toArray
           it.foreach(r => accs.foreach(_.update(r)))
           accs.map(_.total()).toArray
         }).toSeq
     }
-    // driver-side exclusive prefix scan: offsets(i) = fold of totals < i
-    val scanAccs = bound.map(_.newAcc())
+    // driver-side exclusive prefix scan: offsets(i) = fold of totals < i;
+    // the GRAND fold (every band merged) is what suffix frames subtract
+    // from and the size-based rank family divides by
+    val scanAccs = bound.map(new Acc(_, null))
     val offsets: Array[Array[Any]] = totals.indices.map { i =>
       val off = scanAccs.map(_.total()).toArray
       scanAccs.zip(totals(i)).foreach { case (a, t) => a.mergeTotal(t) }
       off
     }.toArray
-    // ...and the GRAND fold (every partition merged) — the global N the
-    // size-based rank family divides by
     val grands: Array[Any] = scanAccs.map(_.total()).toArray
-    // lead's carry flows BACKWARD: partition i's last row reads the
-    // FIRST input value of the next non-empty partition — wired as a
-    // per-partition suffix (lead blocks the metadata path, so `totals`
-    // here are always the computed ones holding each band's first value)
-    val leadIdxs: Array[Int] = bound.zipWithIndex
-      .collect { case (_: RunningWindow.RunLead, j) => j }.toArray
-    val leadSuffixes: Array[Array[Any]] =
-      if (leadIdxs.isEmpty) null
-      else Array.tabulate(totals.length) { i =>
-        leadIdxs.map { j =>
-          totals.drop(i + 1).iterator
-            .map(_(j).asInstanceOf[Array[Any]])
-            .collectFirst {
-              case a if a(1).asInstanceOf[java.lang.Boolean].booleanValue() =>
-                a(0)
-            }.getOrElse( // no later band has rows: the global last row —
-              // the constant default is what fell off the end
-              bound(j).asInstanceOf[RunningWindow.RunLead].default)
-        }
-      }
-    // deep leads (n ≥ 2): emission delays behind an n-slot ring; each
-    // partition's SUFFIX is the concatenation of the LATER partitions'
-    // first-n values (each RunLeadN total is its band's first ≤ n input
-    // values), padded to exactly n with the constant default — the
-    // values the partition's last n rows read from beyond its end
-    val deepIdxs: Array[Int] = bound.zipWithIndex
-      .collect { case (_: RunningWindow.RunLeadN, j) => j }.toArray
-    val deepSuffixes: Array[Array[Array[Any]]] =
-      if (deepIdxs.isEmpty) null
-      else Array.tabulate(totals.length) { i =>
-        deepIdxs.map { j =>
-          val f = bound(j).asInstanceOf[RunningWindow.RunLeadN]
-          val out = new Array[Any](f.n)
-          var z = 0
-          while (z < f.n) { out(z) = f.default; z += 1 }
-          var k = 0
-          totals.drop(i + 1).iterator
-            .map(_(j).asInstanceOf[Array[Any]])
-            .takeWhile(_ => k < f.n)
-            .foreach { a =>
-              var q = 0
-              while (k < f.n && q < a.length) { out(k) = a(q); k += 1; q += 1 }
-            }
-          out
-        }
-      }
-    // bounded-FOLLOWING frames also ride the delay ring: a partition's
-    // forward SUFFIX per function is the LATER partitions' first-m
-    // values concatenated (each RunSlidingFwd total = (last n, first m))
-    // — default-free, the global end just clips the frame
-    // lead IGNORE NULLS: per-partition SUFFIX = the later partitions'
-    // first ≤ n non-null values concatenated (each total is its band's
-    // firsts) — default-free; past the global end the constant default
-    // applies at read time
-    val lnIdxs: Array[Int] = bound.zipWithIndex
-      .collect { case (_: RunningWindow.RunLeadNulls, j) => j }.toArray
-    // suffix min/max: the LATER bands' fold per partition — a scalar
-    // assembled from the per-band totals (sidecar-free on the metadata
-    // path), seeding each partition's backward fold array
-    val smIdxs: Array[Int] = bound.zipWithIndex
-      .collect { case (_: RunningWindow.RunSuffixMinMax, j) => j }.toArray
-    val smLaters: Array[Array[Any]] =
-      if (smIdxs.isEmpty) null
-      else Array.tabulate(totals.length) { i =>
-        smIdxs.map { j =>
-          val f = bound(j).asInstanceOf[RunningWindow.RunSuffixMinMax]
-          val ord = TypeUtils.getInterpretedOrdering(f.dt)
-          var acc: Any = null
-          totals.drop(i + 1).foreach { t =>
-            val v = t(j)
-            if (v != null &&
-              (acc == null || (ord.compare(v, acc) < 0) == f.isMin))
-              acc = v
-          }
-          acc
-        }
-      }
-    val lnSuffixes: Array[Array[Array[Any]]] =
-      if (lnIdxs.isEmpty) null
-      else Array.tabulate(totals.length) { i =>
-        lnIdxs.map { j =>
-          val f = bound(j).asInstanceOf[RunningWindow.RunLeadNulls]
-          val buf = new scala.collection.mutable.ArrayBuffer[Any](
-            math.min(f.n, 64))
-          totals.drop(i + 1).iterator
-            .map(_(j).asInstanceOf[Array[Any]])
-            .takeWhile(_ => buf.length < f.n)
-            .foreach { a =>
-              var q = 0
-              while (buf.length < f.n && q < a.length) {
-                buf += a(q); q += 1
-              }
-            }
-          buf.toArray[Any]
-        }
-      }
-    // value-based FOLLOWING frames: per-partition forward SUFFIX per
-    // function = the later partitions' LEADING (key, value) entries up
-    // to this partition's lastKey + f, assembled from the totals
-    // (leading arrays ascend across bands, so the walk stops at the
-    // first beyond-bound entry; a wrapped distance reads as beyond)
-    val vfIdxs: Array[Int] = bound.zipWithIndex
-      .collect { case (_: RunningWindow.RunRangeFwd, j) => j }.toArray
-    val vfSuffixes: Array[Array[(Array[Long], Array[Any])]] =
-      if (vfIdxs.isEmpty) null
-      else Array.tabulate(totals.length) { i =>
-        vfIdxs.map { j =>
-          val fn = bound(j).asInstanceOf[RunningWindow.RunRangeFwd]
-          val ks = new scala.collection.mutable.ArrayBuffer[Long]()
-          val vs = new scala.collection.mutable.ArrayBuffer[Any]()
-          val myLast = totals(i)(j).asInstanceOf[Array[Any]](4)
-          if (myLast != null) {
-            val lastK = myLast.asInstanceOf[java.lang.Long].longValue()
-            var stop = false
-            val it = totals.iterator.drop(i + 1)
-            while (!stop && it.hasNext) {
-              val a = it.next()(j).asInstanceOf[Array[Any]]
-              val lk = a(2).asInstanceOf[Array[Any]]
-              val lv = a(3).asInstanceOf[Array[Any]]
-              var q = 0
-              while (!stop && q < lk.length) {
-                val k = lk(q).asInstanceOf[Long]
-                if (fn.withinFwdOf(lastK, k)) {
-                  ks += k; vs += lv(q); q += 1
-                } else stop = true
-              }
-            }
-          }
-          (ks.toArray, vs.toArray)
-        }
-      }
-    val fwdIdxs: Array[Int] = bound.zipWithIndex
-      .collect { case (_: RunningWindow.RunSlidingFwd, j) => j }.toArray
-    val fwdSuffixes: Array[Array[Array[Any]]] =
-      if (fwdIdxs.isEmpty) null
-      else Array.tabulate(totals.length) { i =>
-        fwdIdxs.map { j =>
-          val f = bound(j).asInstanceOf[RunningWindow.RunSlidingFwd]
-          val buf = new scala.collection.mutable.ArrayBuffer[Any](
-            math.min(f.m, 64))
-          totals.drop(i + 1).iterator
-            .map(_(j).asInstanceOf[Array[Any]](1).asInstanceOf[Array[Any]])
-            .takeWhile(_ => buf.length < f.m)
-            .foreach { a =>
-              var q = 0
-              while (buf.length < f.m && q < a.length) {
-                buf += a(q); q += 1
-              }
-            }
-          buf.toArray[Any]
-        }
-      }
+    val suffixes = RunningWindow.suffixes(bound, totals)
     val ordering = new LazilyGeneratedOrdering(orderSpec, childOut)
     val schema = output
     val inMemT = conf.windowExecBufferInMemoryThreshold
@@ -312,229 +162,117 @@ case class BandRunningWindowExec(windowExprs: Seq[NamedExpression],
       rdd.getNumPartitions == totals.length,
       s"band window prefix count ${totals.length} != " +
         s"${rdd.getNumPartitions} partitions")
+    def idx(p: RunningWindow.Fn => Boolean): Array[Int] =
+      bound.indices.filter(j => p(bound(j))).toArray
+    // the ONE emission delay, set by each frame's forward end: none
+    // (read at the row, or at its tie group's start/end), bounded (rows
+    // wait in the pending queue until their frame end arrives), or the
+    // whole partition (spilled first, every row then reads)
+    val whole = idx(_.whole)
+    val delayed = idx(_.delayed)
+    val atStart = idx(f => !f.whole && !f.delayed && !f.frame.rows && f.excl)
+    val atEnd = idx(f => !f.whole && !f.delayed && !f.frame.rows && !f.excl)
+    val perRow = idx(f => !f.whole && !f.delayed && f.frame.rows)
+    val excl = bound.map(_.excl)
+    val isDelayed = delayed.nonEmpty
     rdd.mapPartitionsWithIndex { (i, iter0) =>
-      val accs = bound.zip(grands).map { case (f, g) => f.newAcc(g) }
+      val accs = bound.indices.map(j => new Acc(bound(j), grands(j))).toArray
       accs.zip(offsets(i)).foreach { case (a, o) => a.mergeTotal(o) }
-      // lead IGNORE NULLS: buffer the partition FIRST (rows in the
-      // spillable window buffer, each function's non-null values on the
-      // heap, cap-guarded) — every row then answers by INDEX into the
-      // non-null list (see RunLeadNulls); the stream the rest of the
-      // pipeline sees is the buffered replay, same rows same order
-      val lnFuncs: Array[RunningWindow.RunLeadNulls] = lnIdxs.map(j =>
-        bound(j).asInstanceOf[RunningWindow.RunLeadNulls])
-      val lnSuffix: Array[Array[Any]] =
-        if (lnIdxs.isEmpty) null else lnSuffixes(i)
-      val lnCnt = new Array[Long](lnIdxs.length)
-      val smFuncs: Array[RunningWindow.RunSuffixMinMax] = smIdxs.map(j =>
-        bound(j).asInstanceOf[RunningWindow.RunSuffixMinMax])
-      val smLater: Array[Any] = if (smIdxs.isEmpty) null else smLaters(i)
-      // suffix-fold arrays, built backward after the buffering pass
-      var smSuffix: Array[Array[Any]] = null
-      val lnPass: (Iterator[InternalRow], Array[Array[Any]]) =
-        if (lnIdxs.isEmpty && smIdxs.isEmpty) (iter0, null)
+      def at(j: Int, ord: Long, grp: Long) = if (bound(j).frame.rows) ord else grp
+      val iter: Iterator[InternalRow] =
+        if (whole.isEmpty) iter0
         else {
           val pbuf = new ExternalAppendOnlyUnsafeRowArray(inMemT,
             spillSize, spillT, spillSize)
-          val collected = lnFuncs.map(_ =>
-            new scala.collection.mutable.ArrayBuffer[Any])
-          val smCollected = smFuncs.map(_ =>
-            new scala.collection.mutable.ArrayBuffer[Any])
+          val low = new Array[Long](whole.length)
+          var ord = 0L
+          var grp = -1L
+          var prev: UnsafeRow = null
           while (iter0.hasNext) {
             val r = iter0.next().asInstanceOf[UnsafeRow]
-            var p = 0
-            while (p < lnIdxs.length) {
-              val v = lnFuncs(p).input.eval(r)
-              if (v != null) {
-                collected(p) += RunningWindow.retain(v)
-                if (collected(p).length > lnFuncs(p).cap)
-                  throw new org.apache.spark.SparkException(
-                    s"graft lead-ignore-nulls buffer exceeds " +
-                      s"${lnFuncs(p).cap} values; raise " +
-                      "spark.graft.window.maxRangeFrameRows or let " +
-                      "Spark's spillable window plan this function")
-              }
-              p += 1
+            if (prev == null || ordering.compare(prev, r) != 0) {
+              grp += 1; prev = r.copy()
             }
-            p = 0
-            while (p < smIdxs.length) {
-              smCollected(p) += RunningWindow.retain(
-                smFuncs(p).input.eval(r))
-              if (smCollected(p).length > smFuncs(p).cap)
-                throw new org.apache.spark.SparkException(
-                  s"graft suffix-min/max buffer exceeds " +
-                    s"${smFuncs(p).cap} values; raise " +
-                    "spark.graft.window.maxRangeFrameRows or let " +
-                    "Spark's spillable window plan this function")
+            var p = 0
+            while (p < whole.length) {
+              val a = accs(whole(p))
+              val k = a.keyOf(r, at(whole(p), ord, grp))
+              if (ord == 0L) low(p) = k
+              a.arrive(r, k, low(p))
               p += 1
             }
             pbuf.add(r)
+            ord += 1
           }
-          smSuffix = smFuncs.zipWithIndex.map { case (f, p) =>
-            val ord = TypeUtils.getInterpretedOrdering(f.dt)
-            val vals = smCollected(p)
-            val out = new Array[Any](vals.length)
-            var acc: Any = smLater(p)
-            var q = vals.length - 1
-            while (q >= 0) {
-              val v = vals(q)
-              if (v != null &&
-                (acc == null || (ord.compare(v, acc) < 0) == f.isMin))
-                acc = v
-              out(q) = acc
-              q -= 1
-            }
-            out
-          }
-          (pbuf.generateIterator(), collected.map(_.toArray[Any]))
+          whole.foreach(j => accs(j).finish(suffixes(i)(j)))
+          pbuf.generateIterator()
         }
-      val iter = lnPass._1
-      val lnVals = lnPass._2
-      // per-partition row index + tie-group start index for the
-      // suffix-fold reads (ROWS form reads its own row; RANGE form the
-      // group's first)
-      var pbRowIdx = 0
-      var groupStartIdx = 0
-      // lead is rows-framed but evaluated by LOOKAHEAD (n = 1) or the
-      // delay ring (n ≥ 2), not through its accumulator — exclude both
-      // from the per-row update set
-      val perRow = bound.zipWithIndex.filter(f => f._1.rowsFrame &&
-        !f._1.isInstanceOf[RunningWindow.RunLead] &&
-        !f._1.isInstanceOf[RunningWindow.RunLeadN] &&
-        !f._1.isInstanceOf[RunningWindow.RunLeadNulls] &&
-        !f._1.isInstanceOf[RunningWindow.RunSuffixMinMax]).map(_._2)
-      val leadInputs: Array[Expression] = leadIdxs.map(j =>
-        bound(j).asInstanceOf[RunningWindow.RunLead].input)
-      val leadSuffix: Array[Any] =
-        if (leadIdxs.isEmpty) null else leadSuffixes(i)
-      val deepFuncs: Array[RunningWindow.RunLeadN] = deepIdxs.map(j =>
-        bound(j).asInstanceOf[RunningWindow.RunLeadN])
-      val deepSuffix: Array[Array[Any]] =
-        if (deepIdxs.isEmpty) null else deepSuffixes(i)
-      val fwdFuncs: Array[RunningWindow.RunSlidingFwd] = fwdIdxs.map(j =>
-        bound(j).asInstanceOf[RunningWindow.RunSlidingFwd])
-      val fwdAccs: Array[RunningWindow.FwdAcc] = fwdIdxs.map(j =>
-        accs(j).asInstanceOf[RunningWindow.FwdAcc])
-      val fwdSuffix: Array[Array[Any]] =
-        if (fwdIdxs.isEmpty) null else fwdSuffixes(i)
-      val vfFuncs: Array[RunningWindow.RunRangeFwd] = vfIdxs.map(j =>
-        bound(j).asInstanceOf[RunningWindow.RunRangeFwd])
-      val vfAccs: Array[RunningWindow.FwdRangeAcc] = vfIdxs.map(j =>
-        accs(j).asInstanceOf[RunningWindow.FwdRangeAcc])
-      // eval-pass accs fold per released row: opt in to the two-pointer
-      // running aggregate (totals-pass accs never fold — tracking the
-      // not-yet-admitted tail there would buffer the whole band)
-      vfAccs.foreach(_.enableIncremental())
-      val vfSuffix: Array[(Array[Long], Array[Any])] =
-        if (vfIdxs.isEmpty) null else vfSuffixes(i)
-      val deep = deepIdxs.nonEmpty || fwdIdxs.nonEmpty || vfIdxs.nonEmpty
-      val atStart = bound.zipWithIndex
-        .filter(f => !f._1.rowsFrame && f._1.groupStart).map(_._2)
-      // RANGE-FOLLOWING funcs are group-scoped semantically but
-      // evaluated by the pending-queue consumer, not at group end
-      val atEnd = bound.zipWithIndex
-        .filter(f => !f._1.rowsFrame && !f._1.groupStart &&
-          !f._1.isInstanceOf[RunningWindow.RunRangeFwd]).map(_._2)
-      val groupScoped = atStart ++ atEnd
       val buf = new ExternalAppendOnlyUnsafeRowArray(inMemT, spillSize,
         spillT, spillSize)
       val winRow = new GenericInternalRow(bound.length)
       val joined = new JoinedRow
       val proj = UnsafeProjection.create(schema, schema)
-      // the deep-lead path emits DELAYED carriers (copied row + its
-      // window values) instead of projected rows — type-erased so the
-      // common path stays allocation-free per row
+      // delayed rows leave as carriers (copied row + its window values)
+      // for the pending queue; the rest project at once, allocation-free
       val inner: Iterator[AnyRef] = new Iterator[AnyRef] {
         private val groupVals = new Array[Any](bound.length)
         private var pending: UnsafeRow = _
         private var emit: Iterator[AnyRef] = Iterator.empty
+        private var ord = 0L
+        private var grp = -1L
+
+        private def arriveGroup(r: InternalRow): Unit = {
+          var p = 0
+          while (p < atStart.length + atEnd.length) {
+            val j = if (p < atStart.length) atStart(p) else atEnd(p - atStart.length)
+            val k = accs(j).keyOf(r, grp)
+            accs(j).arrive(r, k, k)
+            p += 1
+          }
+        }
 
         private def loadGroup(): Unit = {
           buf.clear()
+          grp += 1
           val first =
             if (pending != null) pending
             else iter.next().asInstanceOf[UnsafeRow].copy()
           pending = null
-          groupStartIdx = pbRowIdx // the group's rows emit from here
-          atStart.foreach(j => groupVals(j) = accs(j).value())
+          atStart.foreach(j => groupVals(j) = accs(j).value(accs(j).keyOf(first, grp)))
           buf.add(first)
-          groupScoped.foreach(j => accs(j).update(first))
+          arriveGroup(first)
           var open = true
           while (open && iter.hasNext) {
             val r = iter.next().asInstanceOf[UnsafeRow]
             if (ordering.compare(first, r) == 0) {
               buf.add(r)
-              groupScoped.foreach(j => accs(j).update(r))
+              arriveGroup(r)
             } else { pending = r.copy(); open = false }
           }
-          atEnd.foreach(j => groupVals(j) = accs(j).value())
-          // lead's one-row lookahead: a second iterator over the same
-          // buffer, one position ahead; the group's last row reads
-          // `pending` (the next group's first row, already copied) or,
-          // at partition end, the next band's first value (the suffix)
-          val ahead =
-            if (leadIdxs.isEmpty) null else buf.generateIterator(1)
+          atEnd.foreach(j => groupVals(j) = accs(j).value(accs(j).keyOf(first, grp)))
           emit = buf.generateIterator().map { row =>
             val wr =
-              if (deep) new GenericInternalRow(bound.length) else winRow
+              if (isDelayed) new GenericInternalRow(bound.length) else winRow
             var k = 0
             while (k < bound.length) { wr(k) = groupVals(k); k += 1 }
-            perRow.foreach { j =>
-              accs(j).update(row)
-              wr(j) = accs(j).value()
+            var p = 0
+            while (p < perRow.length) {
+              val j = perRow(p)
+              val a = accs(j)
+              val key = a.keyOf(row, ord)
+              if (excl(j)) { wr(j) = a.value(key); a.arrive(row, key, key) }
+              else { a.arrive(row, key, key); wr(j) = a.value(key) }
+              p += 1
             }
-            if (ahead != null) {
-              val nxt: InternalRow =
-                if (ahead.hasNext) ahead.next() else pending
-              var p = 0
-              while (p < leadIdxs.length) {
-                val x =
-                  if (nxt != null) leadInputs(p).eval(nxt)
-                  else leadSuffix(p)
-                // the deep path DELAYS projection behind the ring: a
-                // value eval'd from the lookahead row (a reused spill
-                // buffer past the next advance) must be retained; the
-                // common path projects immediately and stays copy-free
-                wr(leadIdxs(p)) = if (deep) RunningWindow.retain(x) else x
-                p += 1
-              }
+            p = 0
+            while (p < whole.length) {
+              val j = whole(p)
+              wr(j) = accs(j).value(accs(j).keyOf(row, at(j, ord, grp)))
+              p += 1
             }
-            // lead IGNORE NULLS reads the partition's non-null list by
-            // index: the n-th non-null strictly after this row is
-            // global non-null index c+n−1 (c counts non-nulls
-            // at-or-before it); past the list, the suffix; past the
-            // global end, the constant default. All values are already
-            // retained/stable — safe to hold across the deep delay.
-            if (lnIdxs.length > 0) {
-              var p = 0
-              while (p < lnIdxs.length) {
-                if (lnFuncs(p).input.eval(row) != null) lnCnt(p) += 1
-                val target = lnCnt(p) + lnFuncs(p).n - 1
-                val vals = lnVals(p)
-                wr(lnIdxs(p)) =
-                  if (target < vals.length) vals(target.toInt)
-                  else {
-                    val s = target - vals.length
-                    if (s < lnSuffix(p).length) lnSuffix(p)(s.toInt)
-                    else lnFuncs(p).default
-                  }
-                p += 1
-              }
-            }
-            // suffix min/max read the precomputed backward fold: ROWS
-            // at this row's index, RANGE at its tie group's first
-            if (smIdxs.length > 0) {
-              var p = 0
-              while (p < smIdxs.length) {
-                val at = if (smFuncs(p).rowsForm) pbRowIdx
-                  else groupStartIdx
-                wr(smIdxs(p)) = smSuffix(p)(at)
-                p += 1
-              }
-            }
-            if (lnIdxs.length > 0 || smIdxs.length > 0) pbRowIdx += 1
-            if (deep)
-              new RunningWindow.PendingRow(
-                row.asInstanceOf[UnsafeRow].copy(), wr)
+            ord += 1
+            if (isDelayed)
+              new PendingRow(row.asInstanceOf[UnsafeRow].copy(), wr, ord - 1, grp)
             else {
               rows += 1
               proj(joined(row, wr)): AnyRef
@@ -552,161 +290,78 @@ case class BandRunningWindowExec(windowExprs: Seq[NamedExpression],
           emit.next()
         }
       }
-      if (!deep) inner.asInstanceOf[Iterator[InternalRow]]
-      else if (vfIdxs.nonEmpty) new Iterator[InternalRow] {
-        // the VALUE-RELEASED PENDING QUEUE (RANGE FOLLOWING frames;
-        // delayCompatible guarantees no ring funcs coexist): a pending
-        // row releases once an arrival's key is strictly beyond its
-        // key + fMax — all of every frame has then arrived (keys only
-        // ascend in stream order) — or at partition end, where the
-        // forward suffix supplies the next bands' leading entries.
-        // Mid-band releases never need the suffix (suffix keys exceed
-        // the band's last key, hence every mid-band frame's bound).
-        private val pending =
-          new java.util.ArrayDeque[RunningWindow.PendingRow]()
-        private val pendKeys = new java.util.ArrayDeque[java.lang.Long]()
-        private val keyExpr = vfFuncs(0).key
-        private val vfCap = vfFuncs(0).cap
-        private val emptyK = new Array[Long](0)
-        private val emptyV = new Array[Any](0)
-        private var curKey = 0L
-        private var haveCur = false
-        // a pending row releases once the arrival is strictly beyond
-        // EVERY function's frame end for it (fixed: rk + f; monthly:
-        // add_months(rk, +f) — monotone over date keys)
-        private def releasable(cur: Long, rk: Long): Boolean = {
-          var p = 0
-          while (p < vfFuncs.length) {
-            if (!vfFuncs(p).beyond(cur, rk)) return false
-            p += 1
-          }
-          true
+      if (delayed.isEmpty) inner.asInstanceOf[Iterator[InternalRow]]
+      else new Iterator[InternalRow] {
+        // the PENDING QUEUE: each delayed function answers its rows in
+        // order as their frames complete (a ROWS frame once its last
+        // position arrives, a value frame once a key strictly beyond its
+        // end does, every frame at partition end once the later bands'
+        // leading entries arrive); a row leaves once all have answered
+        private val queue = new RunningWindow.Ring
+        private val cursor = new Array[Int](delayed.length)
+        private val last = new Array[Long](delayed.length)
+        private val cap = delayed.map(bound(_).cap).min
+        private var finished = false
+        private def keyAt(p: Int, pr: PendingRow): Long =
+          accs(delayed(p)).keyOf(pr.row, at(delayed(p), pr.ord, pr.grp))
+        private val fns = delayed.map(bound(_))
+        private val ends = fns.map(_.frame.hi.get)
+        private val ordinalEnd = fns.map(_.key == null)
+        private def complete(p: Int, k: Long): Boolean = {
+          val end = fns(p).frame.at(k, ends(p))
+          if (ordinalEnd(p)) last(p) >= end else fns(p).frame.before(end, last(p))
         }
-        private def release(atEndOfPartition: Boolean): InternalRow = {
-          val pr = pending.removeFirst()
-          val rk = pendKeys.removeFirst().longValue()
+        private def filled: Boolean = {
           var p = 0
-          while (p < vfIdxs.length) {
-            pr.vals(vfIdxs(p)) =
-              if (atEndOfPartition)
-                vfAccs(p).foldFor(rk, vfSuffix(p)._1, vfSuffix(p)._2)
-              else vfAccs(p).foldFor(rk, emptyK, emptyV)
-            p += 1
-          }
-          rows += 1
-          proj(joined(pr.row, pr.vals))
+          while (p < cursor.length && cursor(p) > 0) p += 1
+          p == cursor.length
         }
-        override def hasNext: Boolean = !pending.isEmpty || inner.hasNext
+        private def fill(p: Int): Unit = {
+          var go = true
+          while (go && cursor(p) < queue.size) {
+            val pr = queue(cursor(p)).asInstanceOf[PendingRow]
+            val k = keyAt(p, pr)
+            if (finished || complete(p, k)) {
+              pr.vals(delayed(p)) = accs(delayed(p)).value(k)
+              cursor(p) += 1
+            } else go = false
+          }
+        }
+        override def hasNext: Boolean = queue.size > 0 || inner.hasNext
         override def next(): InternalRow = {
           while (true) {
-            if (!pending.isEmpty && haveCur &&
-              releasable(curKey, pendKeys.peekFirst().longValue()))
-              return release(atEndOfPartition = false)
-            if (!inner.hasNext) {
-              if (pending.isEmpty) throw new NoSuchElementException
-              return release(atEndOfPartition = true)
+            if (queue.size > 0 && filled) {
+              val pr = queue.pop().asInstanceOf[PendingRow]
+              var p = 0
+              while (p < cursor.length) { cursor(p) -= 1; p += 1 }
+              rows += 1
+              return proj(joined(pr.row, pr.vals))
             }
-            val pr = inner.next().asInstanceOf[RunningWindow.PendingRow]
-            val k = keyExpr.eval(pr.row).asInstanceOf[Number].longValue()
-            pending.addLast(pr)
-            pendKeys.addLast(java.lang.Long.valueOf(k))
-            if (pending.size > vfCap)
-              throw new org.apache.spark.SparkException(
-                s"graft range-following pending queue exceeds $vfCap " +
-                  "rows; raise spark.graft.window.maxRangeFrameRows or " +
-                  "let Spark's spillable window plan this frame")
-            val low = pendKeys.peekFirst().longValue()
-            var p = 0
-            while (p < vfIdxs.length) {
-              vfAccs(p).arrive(k, vfFuncs(p).input.eval(pr.row), low)
-              p += 1
-            }
-            curKey = k
-            haveCur = true
+            if (inner.hasNext) {
+              val pr = inner.next().asInstanceOf[PendingRow]
+              queue.push(0L, pr)
+              if (queue.size > cap) throw new org.apache.spark.SparkException(
+                s"graft band-window pending queue exceeds $cap rows; raise " +
+                  "spark.graft.window.maxRangeFrameRows or let Spark's " +
+                  "spillable window plan this frame")
+              var p = 0
+              while (p < delayed.length) {
+                val k = keyAt(p, pr)
+                accs(delayed(p)).arrive(pr.row, k,
+                  keyAt(p, queue(cursor(p)).asInstanceOf[PendingRow]))
+                last(p) = k
+                fill(p)
+                p += 1
+              }
+            } else if (!finished && queue.size > 0) {
+              finished = true
+              delayed.indices.foreach { p =>
+                accs(delayed(p)).finish(suffixes(i)(delayed(p)))
+                fill(p)
+              }
+            } else throw new NoSuchElementException
           }
           throw new IllegalStateException("unreachable")
-        }
-      }
-      else new Iterator[InternalRow] {
-        // the deep-lead DELAY RING: a row emits when the row nMax
-        // positions ahead arrives (func j's slot was filled when row
-        // +n_j arrived — n_j ≤ nMax, so a popped row is complete), or at
-        // partition end from the suffix. A slot's source row is still in
-        // the ring (or a driver-held suffix constant) at projection
-        // time, so its buffer-backed values are valid until the
-        // projection copies them.
-        private val nMax = (deepFuncs.map(_.n) ++ fwdFuncs.map(_.m)).max
-        private val cap = nMax + 1
-        private val ring = new Array[RunningWindow.PendingRow](cap)
-        private var start = 0
-        private var count = 0
-        private var flushPos = -1
-
-        private def emitRow(pr: RunningWindow.PendingRow): InternalRow = {
-          rows += 1
-          proj(joined(pr.row, pr.vals))
-        }
-
-        override def hasNext: Boolean = count > 0 || inner.hasNext
-
-        override def next(): InternalRow = {
-          while (flushPos < 0 && inner.hasNext) {
-            val pr = inner.next().asInstanceOf[RunningWindow.PendingRow]
-            ring((start + count) % cap) = pr
-            count += 1
-            // the new arrival is func j's source for the row n_j back
-            var p = 0
-            while (p < deepIdxs.length) {
-              val off = count - 1 - deepFuncs(p).n
-              if (off >= 0)
-                ring((start + off) % cap).vals(deepIdxs(p)) =
-                  deepFuncs(p).input.eval(pr.row)
-              p += 1
-            }
-            // …and COMPLETES the frame of the row m_j back for every
-            // FOLLOWING-frame func: the acc's deque (updated by this
-            // arrival already) is exactly that row's frame
-            p = 0
-            while (p < fwdIdxs.length) {
-              val off = count - 1 - fwdFuncs(p).m
-              if (off >= 0)
-                ring((start + off) % cap).vals(fwdIdxs(p)) =
-                  fwdAccs(p).foldFill()
-              p += 1
-            }
-            if (count == cap) {
-              val out = ring(start)
-              ring(start) = null
-              start = (start + 1) % cap
-              count -= 1
-              return emitRow(out)
-            }
-          }
-          // partition exhausted: flush the ≤ nMax delayed rows; slots
-          // whose source never arrived (n_j rows past the end) read the
-          // suffix — later bands' first values, default-padded
-          if (count == 0) throw new NoSuchElementException
-          if (flushPos < 0) flushPos = 0
-          val pr = ring((start + flushPos) % cap)
-          val d = count - 1 - flushPos // rows after this one
-          var p = 0
-          while (p < deepIdxs.length) {
-            val n = deepFuncs(p).n
-            if (n > d) pr.vals(deepIdxs(p)) = deepSuffix(p)(n - d - 1)
-            p += 1
-          }
-          // FOLLOWING-frame rows whose +m row never arrived fold their
-          // in-partition tail plus the forward suffix
-          p = 0
-          while (p < fwdIdxs.length) {
-            if (fwdFuncs(p).m > d)
-              pr.vals(fwdIdxs(p)) = fwdAccs(p).foldFlush(d, fwdSuffix(p))
-            p += 1
-          }
-          flushPos += 1
-          val out = emitRow(pr)
-          if (flushPos >= count) count = 0
-          out
         }
       }
     }

@@ -44,78 +44,16 @@ import graft.ingest.v2.{ExtJsonScan, FilterEval, ZoneMaps}
   *    order-free).
   *
   * Supported functions — the family whose value at a row depends only
-  * on a bounded neighborhood of it in window order:
-  *
-  *  - `row_number()`, `rank()` (ties never straddle bands: the first
-  *    key strictly differs across groups, so local rank + prefix row
-  *    count is the GLOBAL rank), `dense_rank` (per-band distinct-key
-  *    counts — disjointness makes them additive), and the size-based
-  *    family `percent_rank` / `cume_dist` / `ntile` (dividing by the
-  *    global N the exec folds from the per-band totals);
-  *  - non-distinct `count` / `sum` / `min` / `max` / `avg` over the
-  *    default cumulative frame (`RANGE UNBOUNDED PRECEDING..CURRENT
-  *    ROW` — tie groups share the value), the explicit cumulative
-  *    `ROWS` form, the SUFFIX frame `CURRENT ROW AND UNBOUNDED
-  *    FOLLOWING` for count, exact-invertible sums (grand − prefix;
-  *    ANSI long and double sums refuse — subtraction can't reproduce a
-  *    refold's overflow/ulp behavior; metadata answers the totals with
-  *    zero passes), avg over integral children (exact-sum inversion ÷
-  *    count), min/max (partition-buffered backward fold), and
-  *    `last_value` (the global last — a constant through the grand
-  *    fold; IGNORE NULLS refuses), the bounded sliding `ROWS BETWEEN n PRECEDING AND
-  *    CURRENT ROW`, the bounded FOLLOWING `ROWS BETWEEN n
-  *    PRECEDING|CURRENT ROW AND m FOLLOWING` (the centered moving
-  *    average — emission delays behind an m-slot ring; the cross-band
-  *    suffix is the next bands' first m values, the global end just
-  *    clips) (n, m ≤ 65,536 — the prefix is the earlier bands' last
-  *    n values), and the VALUE-based `RANGE BETWEEN d PRECEDING AND
-  *    [CURRENT ROW | d2 PRECEDING]` over an integral key, a DATE key
-  *    with whole-day `INTERVAL 'd' DAY` or calendar `INTERVAL 'm'
-  *    MONTH`/YEAR boundaries (month distance is monotone in the key —
-  *    the bound is `add_months(current, -m)` with Spark's month-end
-  *    clamping), a TIMESTAMP key with calendar MONTH/YEAR boundaries
-  *    (session-timezone wall-clock month adds —
-  *    `timestampAddMonths(current, -m, tz)`, Spark's own
-  *    TimestampAddYMInterval arithmetic with its forward-only
-  *    frame-head semantics on clamp-plateau inversions; single-bound
-  *    frames only, NTZ keys pin UTC — see MonthTsDist), or a
-  *    TIMESTAMP key with any day-time interval (the
-  *    7-day-mean, 3-month-rolling-mean, 15-minute-event-window, and
-  *    lagged dual-bound shapes; the buffer holds the frame's live
-  *    (key, value) pairs, evicted by key distance, population-bounded
-  *    at plan time from the sidecar and capped at runtime —
-  *    `spark.graft.window.maxRangeFrameRows` — where no plan bound
-  *    applies; frames denser than the cap refuse to Spark's spillable
-  *    window), and the ±FOLLOWING value frame `RANGE BETWEEN d1
-  *    PRECEDING|CURRENT ROW AND f FOLLOWING` (fixed kinds, or MONTH
-  *    bounds over DATE keys — `add_months(rk, +m)` is non-strictly
-  *    monotone over dates, so each pending row's precomputed release
-  *    bound is a valid per-arrival release test; month-forward over
-  *    TIMESTAMP keys refuses — the ts clamp plateau inverts with
-  *    time-of-day, see MonthTsDist. Rows release from a key-ordered
-  *    pending queue once an arrival passes their frame-end bound,
-  *    with the next bands' leading entries as the forward suffix; a
-  *    node mixing this key-released queue with the row-count delay
-  *    ring refuses whole);
-  *  - the ORDER-SENSITIVE carries, whose computed-totals pass runs over
-  *    the SORTED stream: `last(x, ignoreNulls)` (forward-fill / as-of),
-  *    `first_value(x[, ignoreNulls])` and `nth_value(x, n[,
-  *    ignoreNulls])` (earliest-band-wins firsts), `max_by` / `min_by`
-  *    (the argmax carry, stream-first-wins on ordering ties),
-  *    `lag(x, n[, default])` (n ≤ 65,536 — n = 1 as a single-value
-  *    carry, deeper on the ring), `lag(x, n[, default]) IGNORE NULLS`
-  *    (the previous-known-value deque), `lead(x, n[, default])`
-  *    (n = 1 by one-row lookahead with a cross-band SUFFIX, deeper by
-  *    delaying emission behind an n-slot ring), and `lead(x, n[,
-  *    default]) IGNORE NULLS` (no bounded ring form exists — a null
-  *    run defers the lookahead unboundedly — so the exec buffers the
-  *    partition, rows spillable + values cap-guarded, and answers by
-  *    index into the non-null list; the same population Spark's own
-  *    UnboundedFollowing frame buffers) — constant defaults only.
-  *
-  * Distinct or filtered aggregates, UNBOUNDED FOLLOWING frames, RANGE
-  * frames past the current row, expression (non-literal) offsets or
-  * defaults, and huge bounds fall through to Spark's ordinary window. EXACT — no opt-in conf; any
+  * on a bounded neighborhood of it in window order, or on the whole
+  * partition through an invertible or extreme fold — are parsed into
+  * [[RunningWindow.Fn]]s: a frame plus an accumulator kind (invertible:
+  * count, sum, avg, the rank family; monotone deque: min/max and the
+  * argmax carries; positional: lag, lead, first, last, nth). `parse`
+  * below is the single list of accepted shapes; everything else —
+  * distinct or filtered aggregates, UNBOUNDED FOLLOWING beyond the
+  * suffix frame, expression offsets or defaults, huge bounds, a node
+  * mixing a RANGE … FOLLOWING frame with a row-count forward frame —
+  * falls through to Spark's ordinary window. EXACT — no opt-in conf; any
   * unprovable layout falls through like the ordered scan does. A
   * `PARTITION BY` window never matches the decomposition (Spark's own
   * hash-partitioned WindowExec already scales that shape — the second
@@ -397,7 +335,7 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
     */
   private def parse(ne: NamedExpression,
       childOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
-      orderSpec: Seq[SortOrder]): Option[RunningFunc] = ne match {
+      orderSpec: Seq[SortOrder]): Option[Fn] = ne match {
     case Alias(we @ WindowExpression(fn, spec), _)
         if spec.partitionSpec.isEmpty &&
           fn.references.subsetOf(childOut) && fn.deterministic =>
@@ -412,11 +350,8 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
           case SpecifiedWindowFrame(RangeFrame, UnboundedPreceding, CurrentRow) =>
             Some(Right(false))
           case SpecifiedWindowFrame(RowFrame, Literal(lo: Int, _), CurrentRow)
-              // bounded: the accumulator pre-sizes a ring of n+1 slots
-              // per partition and folds O(n) per row — a huge frame
-              // must fall through to Spark's own window (which buffers
-              // actual rows) rather than pre-allocate per-band arrays
-              // or overflow n+1
+              // bounded: the frame's values live on the heap, so a huge
+              // frame falls through to Spark's own (spilling) window
               if lo < 0 && lo >= -65536 => Some(Left(-lo))
           case _ => None
         }
@@ -435,7 +370,7 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
       // so the same front-eviction applies — the 3-month rolling mean);
       // both bounds of a dual-bound frame must be the same kind (a
       // month lower against a day upper has no shared unit and refuses)
-      val rangeSlide: Option[RunningWindow.RangeDist] = {
+      val rangeSlide: Option[Frame] = {
         import org.apache.spark.sql.types.{DateType, DayTimeIntervalType, YearMonthIntervalType}
         val keyDt = orderSpec.head.child.dataType
         // one boundary expression → (kind, distance ≥ 0): kind 0 =
@@ -509,9 +444,11 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
                   // the CurrentRow upper (hi = 0) pairs with any kind;
                   // an explicit upper must match the lower's
                   if lo >= hi && (hi == 0L || loM == hiM) =>
+                val desc = orderSpec.head.direction == Descending
+                def fr(d: Dist) = Some(Frame(false, Some(-lo), Some(-hi), desc, d))
                 loM match {
-                  case 0 => Some(RunningWindow.FixedDist(lo, hi))
-                  case 1 => Some(RunningWindow.MonthDist(lo.toInt, hi.toInt))
+                  case 0 => fr(Linear)
+                  case 1 => fr(Months(None))
                   // ts-months: SINGLE-bound frames only (upper =
                   // CURRENT ROW). A dual-bound upper inverts on the
                   // clamp plateau like the lower does, and matching
@@ -519,11 +456,8 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
                   // running-max state carried across bands — refuse
                   // the lagged ts-month shape to Spark instead
                   case 2 if hi == 0L =>
-                    Some(RunningWindow.MonthTsDist(lo.toInt, hi.toInt,
-                      session.sessionState.conf.sessionLocalTimeZone))
-                  case 3 if hi == 0L =>
-                    Some(RunningWindow.MonthTsDist(lo.toInt, hi.toInt,
-                      "UTC"))
+                    fr(Months(Some(session.sessionState.conf.sessionLocalTimeZone)))
+                  case 3 if hi == 0L => fr(Months(Some("UTC")))
                   case _ => None
                 }
               case _ => None
@@ -540,8 +474,8 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
       // per-row release bound add_months(rk, +m) is a valid release
       // test; ASC only, and both explicit bounds must be months).
       // Month-forward over TIMESTAMP keys refuses (the ts clamp
-      // plateau inverts with time-of-day — see MonthTsDist)
-      val rangeFwd: Option[(Long, Long, Boolean)] =
+      // plateau inverts with time-of-day — see RunningWindow.Frame)
+      val rangeFwd: Option[Frame] =
         spec.frameSpecification match {
         case SpecifiedWindowFrame(RangeFrame, loE, hiE)
             if orderSpec.lengthCompare(1) == 0 =>
@@ -592,32 +526,31 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
                 // saturate the release and eviction arithmetic
                 if (k1 == -1 || k1 == k2) && k2 != -1 &&
                   (k2 == 1 || d1 < Long.MaxValue - f) =>
-              Some((d1, f, k2 == 1))
+              Some(Frame(false, Some(-d1), Some(f),
+                orderSpec.head.direction == Descending,
+                if (k2 == 1) Months(None) else Linear))
             case _ => None
           }
         case _ => None
       }
       // `ROWS BETWEEN n PRECEDING|CURRENT ROW AND m FOLLOWING` — the
-      // bounded FOLLOWING frame (the centered moving average): emission
-      // delays behind an m-slot ring (the row's frame completes when
-      // row +m arrives), the per-band total carries the band's last n
-      // values (next bands' preceding context) AND first m values
-      // (earlier bands' forward suffix); same 65,536 guard as the other
+      // bounded FOLLOWING frame (the centered moving average): a row
+      // waits until row +m arrives; same 65,536 guard as the other
       // bounded frames
-      val rowsFwd: Option[(Int, Int)] = spec.frameSpecification match {
+      val rowsFwd: Option[Frame] = spec.frameSpecification match {
         case SpecifiedWindowFrame(RowFrame, lo, Literal(m: Int, _))
             if m > 0 && m <= 65536 =>
           lo match {
-            case CurrentRow => Some((0, m))
+            case CurrentRow => Some(Frame(true, Some(0L), Some(m.toLong)))
             case Literal(l: Int, _) if l < 0 && l >= -65536 =>
-              Some((-l, m))
+              Some(Frame(true, Some(l.toLong), Some(m.toLong)))
             case _ => None
           }
         case _ => None
       }
       // `CURRENT ROW AND UNBOUNDED FOLLOWING` — the SUFFIX frame (the
       // "remaining total from here" shape): invertible aggregates
-      // derive it as grand − prefix (see RunSuffixCount and kin)
+      // derive it as grand − prefix (the Inv kind)
       val suffixFrame: Option[Boolean] = spec.frameSpecification match {
         case SpecifiedWindowFrame(RowFrame, CurrentRow,
             org.apache.spark.sql.catalyst.expressions.UnboundedFollowing) =>
@@ -627,271 +560,156 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
           Some(false)
         case _ => None
       }
+      val ansi = session.sessionState.conf.ansiEnabled
+      val cap = RangeWindowStrategy.maxRangeFrameRows(session)
+      val key = orderSpec.head.child
+      val desc = orderSpec.head.direction == Descending
+      def cumul(rows: Boolean) = Frame(rows, None, Some(0L))
+      def posFn(lg: Expression, input: Expression, ign: Boolean,
+          offset: Expression)(f: (Int, Any) => Option[Fn]) =
+        constDefault(lg, input.dataType).flatMap(d => offset match {
+          case Literal(k: Int, _) if k >= 1 && k <= 65536 => f(k, d)
+          case _ => None
+        })
+      // Pos(pick, fromEnd, ignoreNulls, default): lag reads the entry n
+      // rows back, lead n rows ahead; IGNORE NULLS admits non-nulls only,
+      // so lag reads the n-th most recent one and lead the n-th next
+      // (no bounded forward end: a null run defers it — the partition
+      // is buffered, spillable, its values cap-guarded). Constant
+      // defaults only (the analyzer coerces them to the input type).
       (fn, frame) match {
         case (ae: AggregateExpression, None)
             if suffixFrame.isDefined && !ae.isDistinct && ae.filter.isEmpty =>
+          val fr = Frame(suffixFrame.get, Some(0L), None)
           ae.aggregateFunction match {
             case c: Count if c.children.lengthCompare(1) == 0 =>
-              Some(RunSuffixCount(c.children.head, suffixFrame.get))
+              Some(Fn(Inv(Op.Count), c.children.head, fr))
+            // grand − prefix must equal the per-row refold: ANSI long sums
+            // refuse (a refold can overflow where the subtraction does
+            // not), doubles refuse (subtraction is not the refold's IEEE
+            // value); decimals and wrapping longs are exact
             case s: Sum => s.dataType match {
-              // ANSI long sums refuse: a per-row suffix refold can
-              // overflow where grand − prefix does not; doubles refuse:
-              // subtraction is not the refold's IEEE value
-              case LongType if !session.sessionState.conf.ansiEnabled =>
-                Some(RunSuffixSumLong(s.child, suffixFrame.get))
-              case d: DecimalType => Some(RunSuffixSumDecimal(s.child, d,
-                suffixFrame.get, session.sessionState.conf.ansiEnabled))
+              case LongType if !ansi => Some(Fn(Inv(Op.SumLong(false)), s.child, fr))
+              case d: DecimalType => Some(Fn(Inv(Op.SumDecimal(d, ansi)), s.child, fr))
               case _ => None
             }
-            // min/max aren't invertible: the partition-buffered
-            // backward fold (see RunSuffixMinMax)
-            case m: Min if orderable(m.dataType) =>
-              Some(RunSuffixMinMax(m.child, m.dataType, isMin = true,
-                suffixFrame.get,
-                RangeWindowStrategy.maxRangeFrameRows(session)))
-            case m: Max if orderable(m.dataType) =>
-              Some(RunSuffixMinMax(m.child, m.dataType, isMin = false,
-                suffixFrame.get,
-                RangeWindowStrategy.maxRangeFrameRows(session)))
-            // avg over an integral child: sum/count inversion composed
-            // (exact integer sum ÷ count); double children refuse per
-            // the family doc's IEEE posture
             case a: org.apache.spark.sql.catalyst.expressions.aggregate.Average
                 if a.dataType == DoubleType && integralVal(a.child.dataType) =>
-              Some(RunSuffixAvgLong(a.child, suffixFrame.get))
-            // last_value over the suffix frame = the GLOBAL last value —
-            // a constant through the grand fold; the IGNORE NULLS form
-            // is not constant (all-null tails) and refuses
+              Some(Fn(Inv(Op.AvgExact), a.child, fr))
+            // not invertible: the deque over the buffered partition,
+            // seeded with the later bands' fold
+            case m: Min if orderable(m.dataType) =>
+              Some(Fn(Mono(m.dataType, isMin = true), m.child, fr, cap = cap))
+            case m: Max if orderable(m.dataType) =>
+              Some(Fn(Mono(m.dataType, isMin = false), m.child, fr, cap = cap))
+            // the global last value (the grand fold); IGNORE NULLS is not
+            // constant over all-null tails and refuses
             case l: org.apache.spark.sql.catalyst.expressions.aggregate.Last
                 if !l.ignoreNulls && orderable(l.dataType) =>
-              Some(RunSuffixLast(l.child))
+              Some(Fn(Pos(0, fromEnd = true, ignoreNulls = false), l.child, fr))
             case _ => None
           }
-        case (_: RowNumber, Some(Right(true))) => Some(RunRowNumber())
-        case (_: Rank, Some(Right(true))) => Some(RunRank())
-        // the size-based rank family divides by the GLOBAL row count,
-        // which the exec folds from the per-band totals (free from the
-        // sidecar on the metadata path); their frames are the
-        // analyzer's rank-like/size-based shapes, not cumulative ones
+        case (_: RowNumber, Some(Right(true))) =>
+          Some(Fn(Inv(Op.RowNumber), null, cumul(true)))
+        case (_: Rank, Some(Right(true))) => Some(Fn(Inv(Op.Rank), null, cumul(false)))
+        // the size-based rank family divides by the GLOBAL row count (the
+        // grand fold); their frames are the analyzer's rank-like shapes
         case (_: org.apache.spark.sql.catalyst.expressions.DenseRank, _) =>
-          Some(RunDenseRank(orderSpec))
+          Some(Fn(Inv(Op.DenseRank(orderSpec)), null, cumul(false)))
         case (_: org.apache.spark.sql.catalyst.expressions.PercentRank, _) =>
-          Some(RunPercentRank())
+          Some(Fn(Inv(Op.PercentRank), null, cumul(false)))
         case (_: org.apache.spark.sql.catalyst.expressions.CumeDist, _) =>
-          Some(RunCumeDist())
+          Some(Fn(Inv(Op.CumeDist), null, cumul(false)))
         case (nt: org.apache.spark.sql.catalyst.expressions.NTile, _) =>
           nt.buckets match {
-            case Literal(b: Int, _) if b > 0 => Some(RunNTile(b))
+            case Literal(b: Int, _) if b > 0 => Some(Fn(Inv(Op.NTile(b)), null, cumul(true)))
             case _ => None
           }
-        // lag(x, n[, default]): the n-rows-back value in window order —
-        // its frame is the offset row, not a cumulative one, so it
-        // bypasses the frame gate. n = 1 keeps the single-value carry;
-        // bounded deeper offsets ride the sliding ring (prefix = the
-        // earlier bands' last n values); huge offsets fall through like
-        // huge sliding frames do. A CONSTANT default (the analyzer
-        // coerces it to the input type) only replaces the
-        // fell-off-the-start null — Literal values are immutable
-        // internal representations, safe to retain and ship
         case (lg: org.apache.spark.sql.catalyst.expressions.Lag, _)
-            if !lg.ignoreNulls && orderable(lg.input.dataType) =>
-          constDefault(lg.default, lg.input.dataType).flatMap { d =>
-            lg.inputOffset match {
-              case Literal(1, _) => Some(RunLag(lg.input, d))
-              case Literal(k: Int, _) if k > 1 && k <= 65536 =>
-                Some(RunSliding(lg.input, k,
-                  RunningWindow.SlideOp.LagN(k, d)))
-              case _ => None
-            }
+            if orderable(lg.input.dataType) =>
+          posFn(lg.default, lg.input, lg.ignoreNulls, lg.inputOffset) { (k, d) =>
+            Some(if (lg.ignoreNulls) Fn(Pos(k - 1, fromEnd = true, ignoreNulls = true, d),
+                lg.input, Frame(true, None, Some(-1L)))
+              else Fn(Pos(0, fromEnd = false, ignoreNulls = false, d), lg.input,
+                Frame(true, Some(-k.toLong), Some(-k.toLong))))
           }
-        // lag(x, n) IGNORE NULLS: the n-th most recent NON-NULL value
-        // among strictly preceding rows (the previous-known-value /
-        // forward-fill-excluding-self shape) — a bounded deque of the
-        // last n non-null values; the cross-band prefix is the earlier
-        // bands' last n non-nulls (lead IGNORE NULLS takes the
-        // partition-buffered path above instead — no bounded ring form)
-        case (lg: org.apache.spark.sql.catalyst.expressions.Lag, _)
-            if lg.ignoreNulls && orderable(lg.input.dataType) =>
-          constDefault(lg.default, lg.input.dataType).flatMap { d =>
-            lg.inputOffset match {
-              case Literal(k: Int, _) if k >= 1 && k <= 65536 =>
-                Some(RunLagNulls(lg.input, k, d))
-              case _ => None
-            }
-          }
-        // lead(x, n) IGNORE NULLS: the n-th NON-NULL value strictly
-        // after the row — no bounded ring form (a null run defers the
-        // lookahead unboundedly), so the exec buffers the partition and
-        // indexes its non-null value list (see RunLeadNulls); the
-        // runtime cap bounds the heap-held values where no plan-time
-        // sidecar bound applied
         case (ld: org.apache.spark.sql.catalyst.expressions.Lead, _)
-            if ld.ignoreNulls && orderable(ld.input.dataType) =>
-          constDefault(ld.default, ld.input.dataType).flatMap { d =>
-            ld.offset match {
-              case Literal(k: Int, _) if k >= 1 && k <= 65536 =>
-                Some(RunLeadNulls(ld.input, k, d,
-                  RangeWindowStrategy.maxRangeFrameRows(session)))
-              case _ => None
-            }
-          }
-        // lead(x, n[, default]): the value n rows AHEAD — the function
-        // family whose cross-band carry flows BACKWARD (the last rows of
-        // band i read band i+1's first rows), so a band's total is its
-        // FIRST n input values and the exec wires them as a SUFFIX.
-        // n = 1 keeps the one-row lookahead; deeper offsets delay
-        // emission behind an n-slot ring (the lag ring mirrored); the
-        // constant default replaces only the fell-off-the-END nulls
-        case (ld: org.apache.spark.sql.catalyst.expressions.Lead, _)
-            if !ld.ignoreNulls && orderable(ld.input.dataType) =>
-          constDefault(ld.default, ld.input.dataType).flatMap { d =>
-            ld.offset match {
-              case Literal(1, _) => Some(RunLead(ld.input, d))
-              case Literal(k: Int, _) if k > 1 && k <= 65536 =>
-                Some(RunLeadN(ld.input, k, d))
-              case _ => None
-            }
+            if orderable(ld.input.dataType) =>
+          posFn(ld.default, ld.input, ld.ignoreNulls, ld.offset) { (k, d) =>
+            Some(if (ld.ignoreNulls) Fn(Pos(k - 1, fromEnd = false, ignoreNulls = true, d),
+                ld.input, Frame(true, Some(1L), None), cap = cap)
+              else Fn(Pos(0, fromEnd = false, ignoreNulls = false, d), ld.input,
+                Frame(true, Some(k.toLong), Some(k.toLong))))
           }
         case (ae: AggregateExpression, Some(Right(rows)))
             if !ae.isDistinct && ae.filter.isEmpty =>
-          ae.aggregateFunction match {
-            case c: Count if c.children.lengthCompare(1) == 0 =>
-              Some(RunCount(c.children.head, rows))
-            case s: Sum => s.dataType match {
-              // overflow posture follows the SESSION's ANSI setting, so an
-              // accepted plan behaves exactly as WindowExec's Sum would:
-              // ANSI throws, default mode wraps longs / nulls decimals
-              case LongType => Some(RunSumLong(s.child, rows,
-                session.sessionState.conf.ansiEnabled))
-              case DoubleType => Some(RunSumDouble(s.child, rows))
-              case d: DecimalType => Some(RunSumDecimal(s.child, d, rows,
-                session.sessionState.conf.ansiEnabled))
+          slideOpFor(ae).map { case (in, k) => Fn(k, in, cumul(rows)) }.orElse(
+            ae.aggregateFunction match {
+              // the carries: last non-null, first (non-null) value, and
+              // the argmax (stream-first wins ordering ties, like Spark)
+              case l: org.apache.spark.sql.catalyst.expressions.aggregate.Last
+                  if l.ignoreNulls && orderable(l.dataType) =>
+                Some(Fn(Pos(0, fromEnd = true, ignoreNulls = true), l.child, cumul(rows)))
+              case f: org.apache.spark.sql.catalyst.expressions.aggregate.First
+                  if orderable(f.dataType) =>
+                Some(Fn(Pos(0, fromEnd = false, f.ignoreNulls), f.child, cumul(rows)))
+              case mb: org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy
+                  if orderable(mb.valueExpr.dataType) &&
+                    orderable(mb.orderingExpr.dataType) =>
+                Some(Fn(Mono(mb.orderingExpr.dataType, isMin = false, mb.orderingExpr),
+                  mb.valueExpr, cumul(rows)))
+              case mb: org.apache.spark.sql.catalyst.expressions.aggregate.MinBy
+                  if orderable(mb.valueExpr.dataType) &&
+                    orderable(mb.orderingExpr.dataType) =>
+                Some(Fn(Mono(mb.orderingExpr.dataType, isMin = true, mb.orderingExpr),
+                  mb.valueExpr, cumul(rows)))
               case _ => None
-            }
-            case a: org.apache.spark.sql.catalyst.expressions.aggregate.Average
-                if a.dataType == DoubleType =>
-              Some(RunAvgDouble(a.child, rows))
-            case m: Min if orderable(m.dataType) =>
-              Some(RunMinMax(m.child, m.dataType, isMin = true, rows))
-            case m: Max if orderable(m.dataType) =>
-              Some(RunMinMax(m.child, m.dataType, isMin = false, rows))
-            case l: org.apache.spark.sql.catalyst.expressions.aggregate.Last
-                if l.ignoreNulls && orderable(l.dataType) =>
-              Some(RunLastNonNull(l.child, rows))
-            // first_value(x[, ignoreNulls]): the stream's first
-            // (non-null) value — a backward carry: once set it never
-            // changes, and the earliest band's value wins the merge
-            case f: org.apache.spark.sql.catalyst.expressions.aggregate.First
-                if orderable(f.dataType) =>
-              Some(RunFirstValue(f.child, f.ignoreNulls, rows))
-            // max_by/min_by(v, o): the argmax carry — per-band best
-            // (ordering, value) pair, stream-first-wins on ties exactly
-            // like Spark's own strict-inequality update
-            case mb: org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy
-                if orderable(mb.valueExpr.dataType) &&
-                  orderable(mb.orderingExpr.dataType) =>
-              Some(RunMinMaxBy(mb.valueExpr, mb.orderingExpr,
-                mb.orderingExpr.dataType, isMax = true, rows))
-            case mb: org.apache.spark.sql.catalyst.expressions.aggregate.MinBy
-                if orderable(mb.valueExpr.dataType) &&
-                  orderable(mb.orderingExpr.dataType) =>
-              Some(RunMinMaxBy(mb.valueExpr, mb.orderingExpr,
-                mb.orderingExpr.dataType, isMax = false, rows))
-            case _ => None
-          }
-        // nth_value(x, n[, ignoreNulls]) over the cumulative frame: the
-        // n-th (non-null) value from the stream's start — the
-        // first_value carry generalized to a bounded FIRSTS window
-        // (null until n qualifying rows have arrived, constant after)
+            })
         case (nv: org.apache.spark.sql.catalyst.expressions.NthValue,
             Some(Right(rows))) if orderable(nv.input.dataType) =>
           nv.offset match {
             case Literal(k: Int, _) if k >= 1 && k <= 65536 =>
-              Some(RunNth(nv.input, k, nv.ignoreNulls, rows))
+              Some(Fn(Pos(k - 1, fromEnd = false, nv.ignoreNulls), nv.input, cumul(rows)))
             case _ => None
           }
-        // the bounded sliding frame: the per-band prefix is the LAST n
-        // input values of the earlier bands (bounded, order-sensitive —
-        // the lag(1) carry generalized), and each row's value folds its
-        // ≤ n+1 buffered frame values in stream order — the same
-        // re-evaluation Spark's own SlidingWindowFunctionFrame does,
-        // so double folds are bit-identical
-        case (ae: AggregateExpression, Some(Left(n)))
-            if !ae.isDistinct && ae.filter.isEmpty =>
-          slideOpFor(ae).map { case (in, op) => RunSliding(in, n, op) }
-        // the VALUE-based sliding frame: same fold ops, but the buffer
-        // retains (key, value) pairs and evicts by key distance — frame
-        // size is data-dependent (dense keys hold more rows), bounded by
-        // the frame's actual row population, the same rows Spark's own
-        // WindowExec would buffer WHOLE. RANGE CURRENT ROW includes the
-        // entire tie group, so the value is group-scoped (read at group
-        // end) — tie groups share the frame, exactly SQL's semantics.
-        // Requires the single integral order key the strategy already
-        // proved is the band key (nulls impossible: the layout proof is
-        // null-free)
-        // the bounded FOLLOWING frame: same fold ops, evaluated through
-        // the delay ring (see RunSlidingFwd)
-        case (ae: AggregateExpression, None)
-            if rowsFwd.isDefined && !ae.isDistinct && ae.filter.isEmpty =>
-          slideOpFor(ae).map { case (in, op) =>
-            RunSlidingFwd(in, rowsFwd.get._1, rowsFwd.get._2, op)
-          }
-        // the VALUE-based FOLLOWING frame: pending rows release by key
-        // distance (see RunRangeFwd)
-        case (ae: AggregateExpression, None)
-            if rangeFwd.isDefined && rangeSlide.isEmpty &&
-              !ae.isDistinct && ae.filter.isEmpty =>
-          slideOpFor(ae).map { case (in, op) =>
-            RunRangeFwd(orderSpec.head.child, in,
-              rangeFwd.get._1, rangeFwd.get._2,
-              orderSpec.head.direction == Descending, op,
-              RangeWindowStrategy.maxRangeFrameRows(session),
-              monthly = rangeFwd.get._3)
-          }
-        case (ae: AggregateExpression, None)
-            if rangeSlide.isDefined && !ae.isDistinct &&
-              ae.filter.isEmpty =>
-          // the key-type/boundary-type pairing (integral↔integral,
-          // date↔whole-day/month interval) was already settled by the
-          // rangeSlide extraction, in key units. The runtime cap bounds
-          // the live buffer where no plan-time sidecar bound applied
-          // (chain windows, filtered scans): past it the frame is one
-          // Spark's spillable WindowExec should run instead
-          slideOpFor(ae).map { case (in, op) =>
-            RunRangeSliding(orderSpec.head.child, in, rangeSlide.get,
-              orderSpec.head.direction == Descending, op,
-              RangeWindowStrategy.maxRangeFrameRows(session))
-          }
+        // bounded ROWS frames (trailing, or FOLLOWING through the delay)
+        // and value frames (trailing, lagged, or ±FOLLOWING), one fold
+        // set; value frames carry the key and the runtime cap
+        case (ae: AggregateExpression, _)
+            if !ae.isDistinct && ae.filter.isEmpty => (frame match {
+              case Some(Left(n)) => Some(Frame(true, Some(-n.toLong), Some(0L)))
+              case _ => rowsFwd
+            }).map(f => (f, false)).orElse(rangeSlide.orElse(rangeFwd).map(f => (f, true)))
+            .flatMap { case (fr, keyed) =>
+              slideOpFor(ae).map { case (in, k) =>
+                if (keyed) Fn(k, in, fr, key, cap) else Fn(k, in, fr)
+              }
+            }
         case _ => None
       }
     case _ => None
   }
 
-  /** The sliding-frame aggregate set shared by the ROWS and RANGE
-    * bounded forms: (input expression, fold op), or None for anything
-    * outside the count/sum/avg/min/max family.
+  /** The aggregate folds shared by every bounded frame: (input, kind),
+    * or None outside count/sum/avg/min/max. Overflow follows the
+    * session's ANSI setting, exactly as WindowExec's Sum would.
     */
-  private def slideOpFor(ae: AggregateExpression)
-      : Option[(Expression, RunningWindow.SlideOp)] = {
-    import RunningWindow.SlideOp
+  private def slideOpFor(ae: AggregateExpression): Option[(Expression, Kind)] = {
+    val ansi = session.sessionState.conf.ansiEnabled
     ae.aggregateFunction match {
       case c: Count if c.children.lengthCompare(1) == 0 =>
-        Some((c.children.head, SlideOp.Count))
+        Some((c.children.head, Inv(Op.Count)))
       case s: Sum => s.dataType match {
-        case LongType => Some((s.child,
-          SlideOp.SumLong(session.sessionState.conf.ansiEnabled)))
-        case DoubleType => Some((s.child, SlideOp.SumDouble))
-        case d: DecimalType => Some((s.child,
-          SlideOp.SumDecimal(d, session.sessionState.conf.ansiEnabled)))
+        case LongType => Some((s.child, Inv(Op.SumLong(ansi))))
+        case DoubleType => Some((s.child, Inv(Op.SumDouble)))
+        case d: DecimalType => Some((s.child, Inv(Op.SumDecimal(d, ansi))))
         case _ => None
       }
       case a: org.apache.spark.sql.catalyst.expressions.aggregate.Average
           if a.dataType == DoubleType =>
-        Some((a.child, SlideOp.AvgDouble))
-      case m: Min if orderable(m.dataType) =>
-        Some((m.child, SlideOp.MinMax(m.dataType, isMin = true)))
-      case m: Max if orderable(m.dataType) =>
-        Some((m.child, SlideOp.MinMax(m.dataType, isMin = false)))
+        Some((a.child, Inv(Op.AvgDouble)))
+      case m: Min if orderable(m.dataType) => Some((m.child, Mono(m.dataType, isMin = true)))
+      case m: Max if orderable(m.dataType) => Some((m.child, Mono(m.dataType, isMin = false)))
       case _ => None
     }
   }
@@ -948,7 +766,7 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
     * outcome.
     */
   private def metadataTotals(scan: ExtJsonScan, relOutput: Seq[Attribute],
-      keyCol: String, funcs: Seq[RunningFunc],
+      keyCol: String, funcs: Seq[Fn],
       desc: Boolean): Option[Seq[Array[Any]]] = {
     def scanCol(e: Expression): Option[String] = e match {
       case a: AttributeReference
@@ -959,165 +777,64 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
       val groups = if (desc) groups0.reverse else groups0
       val out = groups.map { files =>
         val rows = files.map(_.cols(keyCol).rows).sum
-        val totals = funcs.map {
-          case _: RunRowNumber | _: RunRank | _: RunPercentRank |
-              _: RunCumeDist | _: RunNTile =>
-            Some(java.lang.Long.valueOf(rows))
-          case RunCount(input, _) => input match {
-            case l: Literal =>
-              Some(java.lang.Long.valueOf(if (l.value == null) 0L else rows))
-            case _ => scanCol(input).flatMap(n =>
-              colTotals(files, n).map(cs =>
-                java.lang.Long.valueOf(cs.map(c => c.rows - c.nulls).sum)))
-          }
-          // the suffix family's totals are the same sidecar counts and
-          // exact sums, shaped as the accs carry them
-          case RunSuffixCount(input, _) => input match {
-            case l: Literal =>
-              Some(java.lang.Long.valueOf(if (l.value == null) 0L else rows))
-            case _ => scanCol(input).flatMap(n =>
-              colTotals(files, n).map(cs =>
-                java.lang.Long.valueOf(cs.map(c => c.rows - c.nulls).sum)))
-          }
-          case RunSuffixSumLong(input, _) => scanCol(input) match {
-            case Some(n) =>
-              colTotals(files, n).flatMap { cs =>
-                if (cs.exists(_.sum.isEmpty)) None
-                else {
-                  // wrap mode only (ANSI refused at parse): low 64 bits
-                  // of the exact sum, plus the non-null count
-                  val exact = cs.flatMap(_.sum)
-                    .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
-                  Some(Array[Any](
-                    java.lang.Long.valueOf(exact.toBigInteger.longValue()),
-                    java.lang.Long.valueOf(
-                      cs.map(c => c.rows - c.nulls).sum)))
-                }
+        def stats(input: Expression) =
+          scanCol(input).flatMap(colTotals(files, _))
+        def nonNull(cs: Seq[ZoneMaps.ColStats]) = cs.map(c => c.rows - c.nulls).sum
+        // exact sums when every file records one
+        def exact(cs: Seq[ZoneMaps.ColStats]) =
+          if (cs.exists(_.sum.isEmpty)) None
+          else Some(cs.flatMap(_.sum).foldLeft(java.math.BigDecimal.ZERO)(_.add(_)))
+        // summary totals only: buffered frames and order-dependent folds
+        // (doubles, carries, positions) have no sidecar form
+        val totals = funcs.map { f =>
+          f.kind match {
+            case Inv(op) if !f.buffered => op match {
+              case _ if op.rowsOnly => Some(Tot(rows, null))
+              case Op.Count => f.input match {
+                case l: Literal => Some(Tot(if (l.value == null) 0L else rows, null))
+                case in => stats(in).map(cs => Tot(nonNull(cs), null))
               }
-            case _ => None
-          }
-          case RunSuffixSumDecimal(input, _, _, _) => scanCol(input) match {
-            case Some(n) =>
-              colTotals(files, n).flatMap { cs =>
-                if (cs.exists(_.sum.isEmpty)) None
-                else Some(Array[Any](
-                  cs.flatMap(_.sum)
-                    .foldLeft(java.math.BigDecimal.ZERO)(_.add(_)),
-                  java.lang.Long.valueOf(
-                    cs.map(c => c.rows - c.nulls).sum)))
-              }
-            case _ => None
-          }
-          // suffix avg's totals are the same (exact sum, count) pair
-          case RunSuffixAvgLong(input, _) => scanCol(input) match {
-            case Some(n) =>
-              colTotals(files, n).flatMap { cs =>
-                if (cs.exists(_.sum.isEmpty)) None
-                else Some(Array[Any](
-                  cs.flatMap(_.sum)
-                    .foldLeft(java.math.BigDecimal.ZERO)(_.add(_)),
-                  java.lang.Long.valueOf(
-                    cs.map(c => c.rows - c.nulls).sum)))
-              }
-            case _ => None
-          }
-          case _: RunSuffixLast => None // order-dependent: no sidecar form
-          case RunSumLong(input, _, ansi) => scanCol(input) match {
-            case Some(n) =>
-              colTotals(files, n).flatMap { cs =>
-                if (cs.exists(_.sum.isEmpty)) None
-                else if (cs.forall(c => c.rows == c.nulls)) Some(null)
-                else {
-                  val exact = cs.flatMap(_.sum)
-                    .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
-                  if (ansi) {
-                    // ANSI: an overflowing band total would have thrown
-                    // in the data pass — refuse the metadata shortcut
-                    // rather than silently differ (computed pass throws)
-                    try Some(java.lang.Long.valueOf(exact.longValueExact()))
-                    catch { case _: ArithmeticException => None }
-                  } else
-                    // default mode WRAPS: low 64 bits of the exact sum —
-                    // identical to folding the band's values with
-                    // wrap-around addition (associative mod 2^64)
-                    Some(java.lang.Long.valueOf(
-                      exact.toBigInteger.longValue()))
-                }
-              }
-            case _ => None
-          }
-          case RunSumDecimal(input, _, _, _) => scanCol(input) match {
-            case Some(n) =>
-              colTotals(files, n).flatMap { cs =>
-                if (cs.exists(_.sum.isEmpty)) None
-                else if (cs.forall(c => c.rows == c.nulls)) Some(null)
-                else Some(cs.flatMap(_.sum)
-                  .foldLeft(java.math.BigDecimal.ZERO)(_.add(_)))
-              }
-            case _ => None
-          }
-          case _: RunSumDouble => None // doubles carry no exact sidecar sum
-          case _: RunAvgDouble => None // its double sum prefix likewise
-          case _: RunLastNonNull => None // order-dependent: no sidecar form
-          case _: RunFirstValue => None // order-dependent: no sidecar form
-          case _: RunNth => None // order-dependent: no sidecar form
-          case _: RunMinMaxBy => None // tie-order-dependent: no sidecar form
-          case _: RunLag => None // order-dependent: no sidecar form
-          case _: RunLagNulls => None // order-dependent: no sidecar form
-          case _: RunLead => None // order-dependent: no sidecar form
-          case _: RunLeadN => None // order-dependent: no sidecar form
-          case _: RunLeadNulls => None // order-dependent: no sidecar form
-          case _: RunSliding => None // order-dependent: no sidecar form
-          case _: RunSlidingFwd => None // order-dependent: no sidecar form
-          case _: RunRangeSliding => None // order-dependent: no sidecar form
-          case _: RunRangeFwd => None // order-dependent: no sidecar form
-          // dense_rank's prefix is the earlier bands' DISTINCT-KEY
-          // count — the v4 sidecar records exact per-file distincts for
-          // monotone columns, and strict band disjointness makes them
-          // additive ACROSS groups; valid only when the window orders
-          // by exactly the band key (a tiebreak column would split tie
-          // groups the key-only count can't see). Within a multi-file
-          // group the per-file counts CHAIN-fold when the files touch
-          // in at most single boundary values (the post-append,
-          // pre-compact layout); genuine overlap refuses
-          case RunDenseRank(order) =>
-            val keyOnly = order.lengthCompare(1) == 0 &&
-              (order.head.child match {
-                case a: AttributeReference => a.name == keyCol &&
-                  relOutput.exists(_.exprId == a.exprId)
-                case _ => false
+              case Op.SumLong(ansi) => stats(f.input).flatMap(cs => exact(cs).flatMap { s =>
+                // ANSI: an overflowing band total would have thrown in
+                // the data pass — refuse the shortcut rather than differ;
+                // default mode WRAPS: the low 64 bits of the exact sum
+                val l = if (ansi) try Some(s.longValueExact())
+                  catch { case _: ArithmeticException => None }
+                  else Some(s.toBigInteger.longValue())
+                l.map(v => Tot(nonNull(cs), java.lang.Long.valueOf(v)))
               })
-            if (keyOnly)
-              relOutput.find(_.name == keyCol)
-                .flatMap(a => chainDistinct(files, keyCol, a.dataType))
-            else None
-          case RunMinMax(input, dt, isMin, _) => scanCol(input) match {
-            case Some(n) =>
-              colTotals(files, n).flatMap { cs =>
-                val vals = cs.flatMap(c => if (isMin) c.min else c.max)
-                // a stats row exists for every file; empty min/max means
-                // an all-null column in that file — neutral, skip it
-                if (vals.isEmpty) Some(null)
-                else Some(vals.reduce((x, y) =>
-                  if ((FilterEval.compareInternal(dt, x, y) < 0) == isMin) x
-                  else y))
-              }
-            case _ => None
-          }
-          // the suffix min/max's band total is the same sidecar fold
-          case RunSuffixMinMax(input, dt, isMin, _, _) =>
-            scanCol(input) match {
-              case Some(n) =>
-                colTotals(files, n).flatMap { cs =>
-                  val vals = cs.flatMap(c => if (isMin) c.min else c.max)
-                  if (vals.isEmpty) Some(null)
-                  else Some(vals.reduce((x, y) =>
-                    if ((FilterEval.compareInternal(dt, x, y) < 0) == isMin)
-                      x
-                    else y))
-                }
+              case _: Op.SumDecimal | Op.AvgExact =>
+                stats(f.input).flatMap(cs => exact(cs).map(Tot(nonNull(cs), _)))
+              // dense_rank's prefix is the earlier bands' DISTINCT-KEY
+              // count — the v4 sidecar records exact per-file distincts
+              // for monotone columns, and strict band disjointness makes
+              // them additive ACROSS groups; valid only when the window
+              // orders by exactly the band key (a tiebreak column would
+              // split tie groups the key-only count can't see)
+              case Op.DenseRank(order) =>
+                val keyOnly = order.lengthCompare(1) == 0 &&
+                  (order.head.child match {
+                    case a: AttributeReference => a.name == keyCol &&
+                      relOutput.exists(_.exprId == a.exprId)
+                    case _ => false
+                  })
+                if (!keyOnly) None
+                else relOutput.find(_.name == keyCol)
+                  .flatMap(a => chainDistinct(files, keyCol, a.dataType))
+                  .map(d => Tot(d.longValue(), null))
               case _ => None
             }
+            // min/max (cumulative or suffix): a stats row exists for
+            // every file; empty min/max means an all-null file — neutral
+            case Mono(dt, isMin, null) if !f.buffered || f.frame.hi.isEmpty =>
+              stats(f.input).map { cs =>
+                val vals = cs.flatMap(c => if (isMin) c.min else c.max)
+                if (vals.isEmpty) null
+                else vals.reduce((x, y) =>
+                  if ((FilterEval.compareInternal(dt, x, y) < 0) == isMin) x else y)
+              }
+            case _ => None
+          }
         }
         if (totals.exists(_.isEmpty)) None
         else Some(totals.map(_.get.asInstanceOf[Any]).toArray)
@@ -1181,31 +898,29 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
     * underivable.
     */
   private def rangeFramesBounded(scan: ExtJsonScan, keyCol: String,
-      funcs: Seq[RunningFunc]): Boolean = {
-    import RunningWindow.{FixedDist, MonthDist, MonthTsDist, RunLeadNulls, RunRangeFwd, RunRangeSliding, RunSuffixMinMax}
+      funcs: Seq[Fn]): Boolean = {
     // frame widths whose window population the sweep must bound: the
     // PRECEDING width for trailing frames, d1+f for ±FOLLOWING frames
     // (the buffer plus the pending queue both live inside that window)
     val MicrosPerDay = 86400L * 1000000L
-    val widths = funcs.collect {
-      case r: RunRangeSliding => r.dist match {
-        case FixedDist(l, _) => l
-        // months → conservative day width (31 days each + slack)
-        case MonthDist(l, _) => 31L * l + 3L
-        // …and the same conservative width in micros over ts keys
-        // (saturating: a frame of ~3.4M+ months overflows the multiply)
-        case MonthTsDist(l, _, _) =>
-          val days = 31L * l + 3L
+    val widths = funcs.filter(_.key != null).map { f =>
+      val d1 = -f.frame.lo.get
+      val fw = math.max(0L, f.frame.hi.get)
+      f.frame.dist match {
+        // months → conservative day width (31 days each + slack), in
+        // micros over ts keys (saturating: ~3.4M+ months overflow)
+        case Months(None) => if (fw > 0) 31L * (d1 + fw) + 6L else 31L * d1 + 3L
+        case Months(Some(_)) =>
+          val days = 31L * d1 + 3L
           if (days > Long.MaxValue / MicrosPerDay) Long.MaxValue - 1
           else days * MicrosPerDay
+        case Linear =>
+          if (fw == 0L) d1
+          else if (d1 > Long.MaxValue - fw - 1) Long.MaxValue - 1
+          else d1 + fw + 1
       }
-      case r: RunRangeFwd =>
-        if (r.monthly) 31L * (r.d1 + r.f) + 6L // months → day width
-        else if (r.d1 > Long.MaxValue - r.f - 1) Long.MaxValue - 1
-        else r.d1 + r.f + 1
     }
-    val wholeBand = funcs.exists(f => f.isInstanceOf[RunLeadNulls] ||
-      f.isInstanceOf[RunSuffixMinMax])
+    val wholeBand = funcs.exists(_.whole)
     if (widths.isEmpty && !wholeBand) return true
     val cap = RangeWindowStrategy.maxRangeFrameRows(session)
     scan.orderedBandFileStats(keyCol) match {

@@ -1,36 +1,42 @@
 package graft.plans
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, BindReferences, CurrentRow, Descending, Expression, GenericInternalRow, JoinedRow, Literal, NamedExpression, NullsFirst, RangeFrame, Rank, RowFrame, RowNumber, SortOrder, SpecifiedWindowFrame, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, GenericInternalRow, SortOrder, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
-import org.apache.spark.sql.catalyst.plans.physical.Partitioning
-import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{ExternalAppendOnlyUnsafeRowArray, SortExec, SparkPlan, SparkStrategy, UnaryExecNode, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, TypeUtils}
+import org.apache.spark.sql.types.{DataType, Decimal, DecimalType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.ingest.v2.{ExtJsonScan, FilterEval, ZoneMaps}
-
-/** The running-function specs and their per-partition accumulators.
-  * Each accumulator is a small monoid: `update(row)` folds one row in,
-  * `total()` snapshots the partition's contribution in a driver-portable
-  * form, `mergeTotal(t)` folds a snapshot in (the driver's prefix scan
-  * AND the executor's prefix load are the same operation), `value()`
-  * renders the current state in the function's result type.
+/** The band running window's one frame driver. Every supported window
+  * function is a [[Fn]]: a [[Frame]] (where it reads, relative to the
+  * current row) plus one of three accumulator [[Kind]]s (how it folds
+  * what the frame holds):
+  *
+  *  - [[Inv]] — invertible: count, long/decimal sums, avg and the rank
+  *    family. Add on admission, subtract on eviction; the suffix frame
+  *    reads grand − prefix. Double sums (and an ANSI long sum whose live
+  *    frame could overflow) re-fold the frame in stream order instead.
+  *  - [[Mono]] — the monotone deque: min, max, min_by/max_by. Its
+  *    front is the frame's extreme, so sliding frames cost O(1)
+  *    amortized per row.
+  *  - [[Pos]] — positional: lag, lead, first, last and nth. IGNORE
+  *    NULLS filters what the frame admits; the value is one entry
+  *    picked from either end of the frame.
+  *
+  * [[Acc]] runs one function over one band: the live entries of its
+  * frame (window + not-yet-admitted arrivals), the band protocol
+  * (`total()` snapshots what neighbouring bands need, `mergeTotal(t)`
+  * folds an earlier band's snapshot in — the driver's prefix scan and
+  * the executor's prefix load are the same operation) and `finish`,
+  * which appends the later bands' leading entries at partition end.
   */
 private[plans] object RunningWindow {
 
-  /** One delayed output row of the deep-lead ring: the copied input row
-    * and its window values (the lead slots fill in as their source rows
-    * arrive, up to n positions later).
+  /** One delayed output row: the copied input row, its window values
+    * (filled as each function's frame completes) and its positions.
     */
   private[plans] final class PendingRow(val row: UnsafeRow,
-      val vals: GenericInternalRow)
+      val vals: GenericInternalRow, val ord: Long, val grp: Long)
 
   /** Retain a value extracted from a TRANSIENT row (a reader's or
     * buffer's reused holder): UTF8Strings are cloned — they alias the
@@ -42,1808 +48,592 @@ private[plans] object RunningWindow {
     case other => other
   }
 
-  /** Emission-delay regimes cannot mix in one Window node: the
-    * row-count ring (deep leads, ROWS FOLLOWING) and the key-released
-    * pending queue (RANGE FOLLOWING) each own the partition's emission
-    * order — a node holding both refuses whole (partial acceleration
-    * would still leave Spark's single-partition WindowExec for the
-    * rest, gaining nothing).
-    */
-  private[plans] def delayCompatible(fs: Seq[RunningFunc]): Boolean =
-    !(fs.exists(_.isInstanceOf[RunRangeFwd]) &&
-      fs.exists(f => f.isInstanceOf[RunLeadN] ||
-        f.isInstanceOf[RunSlidingFwd]))
-
-  sealed trait RunAcc {
-    def update(row: InternalRow): Unit
-    def total(): Any
-    def mergeTotal(t: Any): Unit
-    def value(): Any
-  }
-
-  /** `rowsFrame = true`: the value changes per ROW (updated at emission,
-    * read after the update — `ROWS` frames and `row_number`). False: the
-    * value is constant over an order-ties group (`RANGE` frames, read at
-    * group end; `rank` reads the count at group START instead, see
-    * [[RunRank]]). `orderSensitive = true`: the per-partition TOTAL
-    * depends on row order (the carry functions), so the computed-prefix
-    * pass must run over the SORTED child, not below its sort.
-    */
-  sealed trait RunningFunc extends Serializable {
-    def rowsFrame: Boolean
-    def groupStart: Boolean = false
-    def orderSensitive: Boolean = false
-    def bound(input: Seq[Attribute]): RunningFunc
-    /** `grand`: the fold of EVERY partition's total — the global row
-      * count the size-based rank family (percent_rank, cume_dist, ntile)
-      * divides by; null on the driver's prefix scan, where only
-      * total()/mergeTotal() run.
-      */
-    def newAcc(grand: Any = null): RunAcc
-  }
-
-  private final class CountingAcc(render: Long => Any) extends RunAcc {
-    var n = 0L
-    override def update(row: InternalRow): Unit = n += 1
-    override def total(): Any = java.lang.Long.valueOf(n)
-    override def mergeTotal(t: Any): Unit =
-      if (t != null) n += t.asInstanceOf[java.lang.Long].longValue()
-    override def value(): Any = render(n)
-  }
-
-  final case class RunRowNumber() extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def bound(input: Seq[Attribute]): RunningFunc = this
-    // value read AFTER the row's update: n IS the 1-based row number
-    override def newAcc(grand: Any): RunAcc = new CountingAcc(n => n.toInt)
-  }
-
-  /** Ties never straddle band groups (strict key disjointness), so the
-    * group-START row count + 1 is the global rank of every row in the
-    * tie group — `rank()`'s exact semantics.
-    */
-  final case class RunRank() extends RunningFunc {
-    override def rowsFrame: Boolean = false
-    override def groupStart: Boolean = true
-    override def bound(input: Seq[Attribute]): RunningFunc = this
-    override def newAcc(grand: Any): RunAcc = new CountingAcc(n => (n + 1).toInt)
-  }
-
-  final case class RunCount(input: Expression, rowsFrame: Boolean)
-      extends RunningFunc {
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      var n = 0L
-      override def update(row: InternalRow): Unit =
-        if (input.eval(row) != null) n += 1
-      override def total(): Any = java.lang.Long.valueOf(n)
-      override def mergeTotal(t: Any): Unit =
-        if (t != null) n += t.asInstanceOf[java.lang.Long].longValue()
-      override def value(): Any = n
-    }
-  }
-
-  /** `ansi = true`: overflow throws (Math.addExact — ANSI Sum's
-    * posture). `ansi = false`: overflow WRAPS silently, matching
-    * WindowExec's default-mode running Sum — and wrap-around addition is
-    * associative mod 2^64, so the per-band prefix decomposition stays
-    * exact in either mode.
-    */
-  final case class RunSumLong(input: Expression, rowsFrame: Boolean,
-      ansi: Boolean) extends RunningFunc {
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      var s = 0L
-      var any = false
-      private def add(v: Long): Unit =
-        s = if (ansi) Math.addExact(s, v) else s + v
-      override def update(row: InternalRow): Unit = {
-        val v = input.eval(row)
-        if (v != null) {
-          add(v.asInstanceOf[Number].longValue())
-          any = true
-        }
-      }
-      override def total(): Any =
-        if (any) java.lang.Long.valueOf(s) else null
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        add(t.asInstanceOf[java.lang.Long].longValue())
-        any = true
-      }
-      override def value(): Any = if (any) s else null
-    }
-  }
-
-  /** Running double sums reassociate: (band₀ subtotal) + x is not
-    * bit-identical to WindowExec's strict left fold — the SAME last-ulp
-    * caveat every distributed double aggregation (Spark's own partial
-    * GROUP BY sums included) carries. Exact for the house oracle rule
-    * (never hash-check SUM(double); q-queries sum integers/decimals).
-    */
-  final case class RunSumDouble(input: Expression, rowsFrame: Boolean)
-      extends RunningFunc {
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      var s = 0.0
-      var any = false
-      override def update(row: InternalRow): Unit = {
-        val v = input.eval(row)
-        if (v != null) { s += v.asInstanceOf[Number].doubleValue(); any = true }
-      }
-      override def total(): Any =
-        if (any) java.lang.Double.valueOf(s) else null
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        s += t.asInstanceOf[java.lang.Double].doubleValue(); any = true
-      }
-      override def value(): Any = if (any) s else null
-    }
-  }
-
-  /** The intermediate fold is an unbounded BigDecimal — exact regardless
-    * of mode; only the RENDER checks the result precision, which is
-    * exactly CheckOverflow's placement in Spark's own Sum: `ansi = true`
-    * throws on overflow, `ansi = false` returns null for the overflowing
-    * rows (and values back in range render normally again).
-    */
-  final case class RunSumDecimal(input: Expression, resultType: DecimalType,
-      rowsFrame: Boolean, ansi: Boolean) extends RunningFunc {
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      var s: java.math.BigDecimal = null
-      override def update(row: InternalRow): Unit = {
-        val v = input.eval(row)
-        if (v != null) {
-          val d = v.asInstanceOf[Decimal].toJavaBigDecimal
-          s = if (s == null) d else s.add(d)
-        }
-      }
-      override def total(): Any = s
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        val d = t.asInstanceOf[java.math.BigDecimal]
-        s = if (s == null) d else s.add(d)
-      }
-      override def value(): Any =
-        if (s == null) null
-        else {
-          val d = Decimal(s)
-          if (d.changePrecision(resultType.precision, resultType.scale)) d
-          else if (ansi) throw new ArithmeticException(
-            s"running sum overflows ${resultType.simpleString}")
-          else null
-        }
-    }
-  }
-
-  /** SUFFIX aggregates — `count(x)` / `sum(x)` `OVER (ORDER BY k
-    * ROWS|RANGE BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)`: the
-    * "remaining total from here" shape (corpus packing's
-    * budget-remaining). The suffix fold inverts from the GRAND fold
-    * minus the prefix — exact for counts, for wrap-mode long sums
-    * (mod-2^64 arithmetic is associative and invertible), and for
-    * decimal sums (unbounded BigDecimal, render-checked like Sum
-    * itself); ANSI long sums REFUSE (a per-row suffix refold can
-    * overflow where grand − prefix does not — subtraction would
-    * silently differ from WindowExec's throw), and double sums/avgs
-    * REFUSE (subtraction is not the refold's IEEE value). RANGE form
-    * reads at group START (the whole tie group belongs to the suffix);
-    * ROWS form snapshots the prefix before the current row. Totals are
-    * order-free — the metadata path answers both from the sidecar with
-    * zero passes.
-    */
-  final case class RunSuffixCount(input: Expression, rowsFrame: Boolean)
-      extends RunningFunc {
-    override def groupStart: Boolean = !rowsFrame
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val g =
-        if (grand == null) 0L
-        else grand.asInstanceOf[java.lang.Long].longValue()
-      var n = 0L
-      var before = 0L
-      override def update(row: InternalRow): Unit = {
-        before = n
-        if (input.eval(row) != null) n += 1
-      }
-      override def total(): Any = java.lang.Long.valueOf(n)
-      override def mergeTotal(t: Any): Unit =
-        if (t != null) n += t.asInstanceOf[java.lang.Long].longValue()
-      override def value(): Any = if (rowsFrame) g - before else g - n
-    }
-  }
-
-  /** Suffix long sum — wrap (non-ANSI) mode only; see the family doc
-    * above. State carries (wrapped sum, non-null count): a zero
-    * remaining count renders SQL's empty-frame NULL.
-    */
-  final case class RunSuffixSumLong(input: Expression, rowsFrame: Boolean)
-      extends RunningFunc {
-    override def groupStart: Boolean = !rowsFrame
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val ga = grand.asInstanceOf[Array[Any]]
-      private val gs =
-        if (ga == null) 0L
-        else ga(0).asInstanceOf[java.lang.Long].longValue()
-      private val gn =
-        if (ga == null) 0L
-        else ga(1).asInstanceOf[java.lang.Long].longValue()
-      var s = 0L
-      var n = 0L
-      var sBefore = 0L
-      var nBefore = 0L
-      override def update(row: InternalRow): Unit = {
-        sBefore = s; nBefore = n
-        val v = input.eval(row)
-        if (v != null) { s += v.asInstanceOf[Number].longValue(); n += 1 }
-      }
-      override def total(): Any =
-        Array[Any](java.lang.Long.valueOf(s), java.lang.Long.valueOf(n))
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        val a = t.asInstanceOf[Array[Any]]
-        s += a(0).asInstanceOf[java.lang.Long].longValue()
-        n += a(1).asInstanceOf[java.lang.Long].longValue()
-      }
-      override def value(): Any = {
-        val rn = gn - (if (rowsFrame) nBefore else n)
-        if (rn == 0L) null
-        else java.lang.Long.valueOf(gs - (if (rowsFrame) sBefore else s))
-      }
-    }
-  }
-
-  /** Suffix decimal sum — exact unbounded BigDecimal inversion with
-    * Sum's own render posture (ANSI throws on result overflow, default
-    * nulls it); see the family doc above.
-    */
-  final case class RunSuffixSumDecimal(input: Expression,
-      resultType: DecimalType, rowsFrame: Boolean, ansi: Boolean)
-      extends RunningFunc {
-    override def groupStart: Boolean = !rowsFrame
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val ga = grand.asInstanceOf[Array[Any]]
-      private val gs =
-        if (ga == null || ga(0) == null) java.math.BigDecimal.ZERO
-        else ga(0).asInstanceOf[java.math.BigDecimal]
-      private val gn =
-        if (ga == null) 0L
-        else ga(1).asInstanceOf[java.lang.Long].longValue()
-      var s: java.math.BigDecimal = java.math.BigDecimal.ZERO
-      var n = 0L
-      var sBefore: java.math.BigDecimal = java.math.BigDecimal.ZERO
-      var nBefore = 0L
-      override def update(row: InternalRow): Unit = {
-        sBefore = s; nBefore = n
-        val v = input.eval(row)
-        if (v != null) {
-          s = s.add(v.asInstanceOf[Decimal].toJavaBigDecimal)
-          n += 1
-        }
-      }
-      override def total(): Any =
-        Array[Any](s, java.lang.Long.valueOf(n))
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        val a = t.asInstanceOf[Array[Any]]
-        if (a(0) != null) s = s.add(a(0).asInstanceOf[java.math.BigDecimal])
-        n += a(1).asInstanceOf[java.lang.Long].longValue()
-      }
-      override def value(): Any = {
-        val rn = gn - (if (rowsFrame) nBefore else n)
-        if (rn == 0L) null
-        else {
-          val rs = gs.subtract(if (rowsFrame) sBefore else s)
-          val d = Decimal(rs)
-          if (d.changePrecision(resultType.precision, resultType.scale)) d
-          else if (ansi) throw new ArithmeticException(
-            s"suffix sum overflows ${resultType.simpleString}")
-          else null
-        }
-      }
-    }
-  }
-
-  /** Suffix `last(x)` (ignoreNulls = false) — `last_value(x) OVER (…
-    * CURRENT ROW AND UNBOUNDED FOLLOWING)`: every row's frame ends at
-    * the partition's last row, so the answer is ONE constant — the
-    * global last value in window order — delivered through the grand
-    * fold (each band's total is its last value; the driver's band-order
-    * merge lets the latest band win). Order-sensitive: the totals pass
-    * must see the sorted stream. The IGNORE NULLS form is NOT constant
-    * (rows after the last non-null see an all-null suffix) and refuses.
-    */
-  final case class RunSuffixLast(input: Expression) extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val g: Any = grand match {
-        case a: Array[Any]
-            if a(1).asInstanceOf[java.lang.Boolean].booleanValue() => a(0)
-        case _ => null
-      }
-      var cur: Any = null
-      var sawRows = false
-      override def update(row: InternalRow): Unit = {
-        cur = retain(input.eval(row)); sawRows = true
-      }
-      override def total(): Any =
-        Array[Any](cur, java.lang.Boolean.valueOf(sawRows))
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        val a = t.asInstanceOf[Array[Any]]
-        if (a(1).asInstanceOf[java.lang.Boolean].booleanValue()) {
-          cur = a(0); sawRows = true
-        }
-      }
-      override def value(): Any = g
-    }
-  }
-
-  /** Suffix `avg(x)` over an INTEGRAL child — sum/count inversion
-    * composed: the suffix's EXACT integer sum (unbounded BigDecimal,
-    * like the decimal suffix sum) and non-null count both invert from
-    * grand − prefix, and the render is one IEEE division
-    * `exactSum.toDouble / count`. Agrees bit-for-bit with WindowExec's
-    * per-row refold whenever every suffix partial sum stays within
-    * double's 2^53 integer-exact range (the refold's left-fold is then
-    * exact too); beyond it this value is the mathematically exact one
-    * where the refold has accumulated rounding. Double/float children
-    * refuse (subtraction is not the refold's IEEE value — the suffix
-    * family doc's posture); an all-null suffix renders SQL NULL.
-    * Totals are order-free — the metadata path answers them from the
-    * sidecar's exact sums with zero passes.
-    */
-  final case class RunSuffixAvgLong(input: Expression, rowsFrame: Boolean)
-      extends RunningFunc {
-    override def groupStart: Boolean = !rowsFrame
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val ga = grand.asInstanceOf[Array[Any]]
-      private val gs =
-        if (ga == null || ga(0) == null) java.math.BigDecimal.ZERO
-        else ga(0).asInstanceOf[java.math.BigDecimal]
-      private val gn =
-        if (ga == null) 0L
-        else ga(1).asInstanceOf[java.lang.Long].longValue()
-      var s: java.math.BigDecimal = java.math.BigDecimal.ZERO
-      var n = 0L
-      var sBefore: java.math.BigDecimal = java.math.BigDecimal.ZERO
-      var nBefore = 0L
-      override def update(row: InternalRow): Unit = {
-        sBefore = s; nBefore = n
-        val v = input.eval(row)
-        if (v != null) {
-          s = s.add(java.math.BigDecimal.valueOf(
-            v.asInstanceOf[Number].longValue()))
-          n += 1
-        }
-      }
-      override def total(): Any =
-        Array[Any](s, java.lang.Long.valueOf(n))
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        val a = t.asInstanceOf[Array[Any]]
-        if (a(0) != null) s = s.add(a(0).asInstanceOf[java.math.BigDecimal])
-        n += a(1).asInstanceOf[java.lang.Long].longValue()
-      }
-      override def value(): Any = {
-        val rn = gn - (if (rowsFrame) nBefore else n)
-        if (rn == 0L) null
-        else {
-          val rs = gs.subtract(if (rowsFrame) sBefore else s)
-          java.lang.Double.valueOf(rs.doubleValue() / rn.toDouble)
-        }
-      }
-    }
-  }
-
-  /** Suffix `min(x)` / `max(x)` — not invertible from the grand fold,
-    * so the exec buffers the PARTITION (rows in the spillable window
-    * buffer, this function's values on the heap, cap-guarded — the
-    * RunLeadNulls posture) and precomputes the right-to-left fold
-    * array seeded with the LATER bands' fold (a scalar per partition,
-    * assembled driver-side from the per-band min/max totals — which
-    * the sidecar answers with zero passes). ROWS form reads the fold
-    * at the row's own index; RANGE form at its tie group's first index
-    * (the whole group belongs to the suffix). `value()` is never read —
-    * the accumulator only carries the band total.
-    */
-  final case class RunSuffixMinMax(input: Expression, dt: DataType,
-      isMin: Boolean, rowsForm: Boolean, cap: Long = Long.MaxValue)
-      extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val ord = TypeUtils.getInterpretedOrdering(dt)
-      var cur: Any = null
-      private def fold(v: Any): Unit =
-        if (cur == null || (ord.compare(v, cur) < 0) == isMin)
-          cur = retain(v)
-      override def update(row: InternalRow): Unit = {
-        val v = input.eval(row)
-        if (v != null) fold(v)
-      }
-      override def total(): Any = cur
-      override def mergeTotal(t: Any): Unit = if (t != null) fold(t)
-      override def value(): Any = null
-    }
-  }
-
-  /** `dense_rank()` — distinct order-key tuples at-or-before the row:
-    * the per-band total is the band's DISTINCT-KEY COUNT (counted by
-    * watching tie boundaries in the sorted stream — order-sensitive, so
-    * the totals pass runs over the sort), and strict band disjointness
-    * means no key straddles a boundary: prefix counts simply ADD. The
-    * only rank-family member with no metadata form (the sidecar has no
-    * distinct counts).
-    */
-  final case class RunDenseRank(order: Seq[SortOrder]) extends RunningFunc {
-    override def rowsFrame: Boolean = false
-    override def groupStart: Boolean = true
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(order = order.map(o =>
-        o.copy(child = BindReferences.bindReference(o.child, in))))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val ord = new LazilyGeneratedOrdering(order)
-      private var prev: InternalRow = _
-      var nd = 0L
-      override def update(row: InternalRow): Unit =
-        if (prev == null || ord.compare(prev, row) != 0) {
-          nd += 1
-          prev = row.asInstanceOf[UnsafeRow].copy()
-        }
-      override def total(): Any = java.lang.Long.valueOf(nd)
-      override def mergeTotal(t: Any): Unit =
-        if (t != null) nd += t.asInstanceOf[java.lang.Long].longValue()
-      override def value(): Any = (nd + 1).toInt
-    }
-  }
-
-  /** `percent_rank()` — `(rank − 1) / (N − 1)` (0 when N = 1): the
-    * size-based twin of rank; the global N is the fold of every band's
-    * total, which the metadata path reads off the sidecar for free.
-    */
-  final case class RunPercentRank() extends RunningFunc {
-    override def rowsFrame: Boolean = false
-    override def groupStart: Boolean = true
-    override def bound(input: Seq[Attribute]): RunningFunc = this
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val n =
-        if (grand == null) 0L
-        else grand.asInstanceOf[java.lang.Long].longValue()
-      var rows = 0L
-      override def update(row: InternalRow): Unit = rows += 1
-      override def total(): Any = java.lang.Long.valueOf(rows)
-      override def mergeTotal(t: Any): Unit =
-        if (t != null) rows += t.asInstanceOf[java.lang.Long].longValue()
-      override def value(): Any =
-        if (n <= 1L) 0.0 else rows.toDouble / (n - 1).toDouble
-    }
-  }
-
-  /** `cume_dist()` — rows at-or-before the tie group, over N. */
-  final case class RunCumeDist() extends RunningFunc {
-    override def rowsFrame: Boolean = false
-    override def bound(input: Seq[Attribute]): RunningFunc = this
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val n =
-        if (grand == null) 0L
-        else grand.asInstanceOf[java.lang.Long].longValue()
-      var rows = 0L
-      override def update(row: InternalRow): Unit = rows += 1
-      override def total(): Any = java.lang.Long.valueOf(rows)
-      override def mergeTotal(t: Any): Unit =
-        if (t != null) rows += t.asInstanceOf[java.lang.Long].longValue()
-      override def value(): Any = rows.toDouble / n.toDouble
-    }
-  }
-
-  /** `ntile(b)` — Spark's bucketing: the first `N mod b` buckets hold
-    * `N/b + 1` rows, the rest `N/b`; the bucket is a pure function of
-    * (row number, N, b), so the per-band prefix is just the row count.
-    */
-  final case class RunNTile(buckets: Int) extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def bound(input: Seq[Attribute]): RunningFunc = this
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val n =
-        if (grand == null) 0L
-        else grand.asInstanceOf[java.lang.Long].longValue()
-      private val base = if (n > 0) n / buckets else 0L
-      private val rem = if (n > 0) (n % buckets).toInt else 0
-      private val cut = rem.toLong * (base + 1)
-      var rows = 0L
-      override def update(row: InternalRow): Unit = rows += 1
-      override def total(): Any = java.lang.Long.valueOf(rows)
-      override def mergeTotal(t: Any): Unit =
-        if (t != null) rows += t.asInstanceOf[java.lang.Long].longValue()
-      override def value(): Any = {
-        val rn = rows // 1-based after the update
-        if (rn <= cut) ((rn - 1) / (base + 1)).toInt + 1
-        else rem + ((rn - 1 - cut) / math.max(1L, base)).toInt + 1
-      }
-    }
-  }
-
-  /** Running `avg(x)` — sum/count over the cumulative frame, rendered
-    * as their IEEE quotient exactly like Spark's Average (whose sum
-    * buffer is a DOUBLE for every non-decimal input, so the same
-    * reassociation caveat as [[RunSumDouble]] applies to the sum; the
-    * count is exact). No metadata form — the sidecar's exact integer
-    * sums cannot reproduce the double fold.
-    */
-  final case class RunAvgDouble(input: Expression, rowsFrame: Boolean)
-      extends RunningFunc {
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      var s = 0.0
-      var n = 0L
-      override def update(row: InternalRow): Unit = {
-        val v = input.eval(row)
-        if (v != null) { s += v.asInstanceOf[Number].doubleValue(); n += 1 }
-      }
-      override def total(): Any =
-        Array[Any](java.lang.Double.valueOf(s), java.lang.Long.valueOf(n))
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        val a = t.asInstanceOf[Array[Any]]
-        s += a(0).asInstanceOf[java.lang.Double].doubleValue()
-        n += a(1).asInstanceOf[java.lang.Long].longValue()
-      }
-      override def value(): Any = if (n == 0L) null else s / n
-    }
-  }
-
-  /** `lead(x, 1[, default])` — the NEXT row's value in window order
-    * (the constant default at the very last row): lag's mirror. Its
-    * accumulator serves only the totals pass (the band's FIRST input
-    * value, order-sensitive); the exec evaluates the function itself
-    * with a one-row lookahead over the buffered stream and wires each
-    * band's last row to the next band's first value as a SUFFIX — the
-    * backward-flowing carry of the family. Deterministic under the same
-    * unique-order-key caveat as lag.
-    */
-  final case class RunLead(input: Expression, default: Any = null)
-      extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      var first: Any = null
-      var sawRows = false
-      override def update(row: InternalRow): Unit =
-        if (!sawRows) { first = retain(input.eval(row)); sawRows = true }
-      override def total(): Any =
-        Array[Any](first, java.lang.Boolean.valueOf(sawRows))
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        // driver prefix folds run in band order: the FIRST band's first
-        // value wins (later bands only fill an empty state)
-        val a = t.asInstanceOf[Array[Any]]
-        if (!sawRows && a(1).asInstanceOf[java.lang.Boolean].booleanValue()) {
-          first = a(0); sawRows = true
-        }
-      }
-      override def value(): Any = first
-    }
-  }
-
-  /** `lead(x, n[, default])` for n ≥ 2 — the lag ring MIRRORED: the
-    * exec delays each row's emission behind an n-slot ring (the value
-    * arrives with the row n positions ahead), and the per-band total is
-    * the band's FIRST n input values — the bounded backward carry the
-    * lead(1) suffix generalizes to. The accumulator serves only the
-    * totals pass; `value()` is never read (the exec fills lead slots at
-    * ring push / flush time). O(n) memory per partition, same 65,536
-    * guard as the sliding frames.
-    */
-  final case class RunLeadN(input: Expression, n: Int, default: Any)
-      extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val firsts =
-        new scala.collection.mutable.ArrayBuffer[Any](math.min(n, 64))
-      override def update(row: InternalRow): Unit =
-        if (firsts.length < n) firsts += retain(input.eval(row))
-      override def total(): Any = firsts.toArray[Any]
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        // band-order fold: an earlier band's firsts take precedence;
-        // later bands only top the window up to n values
-        val a = t.asInstanceOf[Array[Any]]
+  /** A growable FIFO of (key, value) entries with index access. */
+  private[plans] final class Ring {
+    private var ks = new Array[Long](16)
+    private var vs = new Array[Any](16)
+    private var h = 0
+    var size = 0
+    def key(i: Int): Long = ks((h + i) & (ks.length - 1))
+    def apply(i: Int): Any = vs((h + i) & (vs.length - 1))
+    def push(k: Long, v: Any): Unit = {
+      if (size == ks.length) {
+        val (k2, v2) = (new Array[Long](size * 2), new Array[Any](size * 2))
         var i = 0
-        while (firsts.length < n && i < a.length) { firsts += a(i); i += 1 }
+        while (i < size) { k2(i) = key(i); v2(i) = apply(i); i += 1 }
+        ks = k2; vs = v2; h = 0
       }
-      override def value(): Any = null
+      val j = (h + size) & (ks.length - 1)
+      ks(j) = k; vs(j) = v; size += 1
     }
+    def pop(): Any = {
+      val v = vs(h); vs(h) = null
+      h = (h + 1) & (ks.length - 1); size -= 1; v
+    }
+    def popLast(): Unit = { size -= 1; vs((h + size) & (vs.length - 1)) = null }
   }
 
-  /** The bounded sliding aggregate ops — each folds the ≤ n+1 buffered
-    * frame values IN STREAM ORDER, the same per-frame re-evaluation
-    * Spark's SlidingWindowFunctionFrame performs, so double sums are
-    * bit-identical to WindowExec's.
+  /** RANGE distance units: linear key arithmetic (integral keys, days
+    * over DATE keys, micros over TIMESTAMP keys), or calendar months —
+    * `add_months` with LocalDate's month-end clamping over DATE keys
+    * (`zone` None; Spark's DateAddYMInterval), session-zone wall-clock
+    * month adds over TIMESTAMP keys (Spark's TimestampAddYMInterval).
     */
-  sealed trait SlideOp extends Serializable {
-    def fold(values: Iterator[Any]): Any
+  sealed trait Dist extends Serializable
+  case object Linear extends Dist
+  final case class Months(zone: Option[String]) extends Dist
+
+  /** Frame bounds as signed offsets from the current row (negative =
+    * preceding, None = unbounded): ROWS count positions; RANGE counts
+    * key distance in `dist` units when the function carries a key, and
+    * whole tie groups otherwise (a frame with no value offset). `desc`
+    * mirrors the key direction. Every test is against a BOUND computed
+    * from the current key: linear adds saturate, which makes them exact
+    * even across 2^63-wide key spans. Timestamp month bounds are not
+    * monotone in the key (the clamp plateau follows time-of-day);
+    * eviction by each row's bound keeps "entries at or past every bound
+    * so far" — Spark's forward-only frame-head pointer — so the
+    * strategy plans them single-bound only.
+    */
+  final case class Frame(rows: Boolean, lo: Option[Long], hi: Option[Long],
+      desc: Boolean = false, dist: Dist = Linear) {
+    @transient private lazy val zoneId = dist match {
+      case Months(Some(z)) => DateTimeUtils.getZoneId(z)
+      case _ => java.time.ZoneOffset.UTC
+    }
+    def at(k: Long, d0: Long): Long = {
+      val d = if (desc) -d0 else d0
+      if (d == 0L) k
+      else dist match {
+        case Linear =>
+          val r = k + d
+          if (((k ^ r) & (d ^ r)) < 0) (if (d > 0) Long.MaxValue else Long.MinValue)
+          else r
+        case Months(None) =>
+          java.time.LocalDate.ofEpochDay(k).plusMonths(d).toEpochDay
+        case Months(Some(_)) =>
+          DateTimeUtils.timestampAddMonths(k, d.toInt, zoneId)
+      }
+    }
+    /** `a` strictly precedes `b` in stream order. */
+    def before(a: Long, b: Long): Boolean = if (desc) a > b else a < b
   }
-  object SlideOp {
-    case object Count extends SlideOp {
-      override def fold(values: Iterator[Any]): Any =
-        values.count(_ != null).toLong
+
+  sealed trait Kind extends Serializable
+  final case class Inv(op: Op) extends Kind
+  /** `by` (min_by/max_by): the ordering expression; the input is then
+    * the carried value. Cumulative frames only for `by`.
+    */
+  final case class Mono(dt: DataType, isMin: Boolean,
+      by: Expression = null) extends Kind
+  /** The entry `pick` places from the frame's lo end (or hi end). */
+  final case class Pos(pick: Int, fromEnd: Boolean, ignoreNulls: Boolean,
+      default: Any = null) extends Kind
+
+  /** An invertible op over the (count, sum) state. `sum`: 'n' none,
+    * 'l' long (wrapping, or Math.addExact under ANSI), 'd' double, 'b'
+    * exact BigDecimal. `rowsOnly`: counts rows (no input). `excl`: read
+    * before the row/group joins the state (rank's group START).
+    */
+  sealed abstract class Op(val sum: Char, val rowsOnly: Boolean = false,
+      val excl: Boolean = false) extends Serializable {
+    /** `gn`: the grand row count (the size-based rank family's N). */
+    def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal,
+        gn: Long): Any
+  }
+  object Op {
+    case object RowNumber extends Op('n', rowsOnly = true) {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any = n.toInt
     }
-    final case class SumLong(ansi: Boolean) extends SlideOp {
-      override def fold(values: Iterator[Any]): Any = {
-        var s = 0L; var any = false
-        values.foreach { v =>
-          if (v != null) {
-            val x = v.asInstanceOf[Number].longValue()
-            s = if (ansi) Math.addExact(s, x) else s + x
-            any = true
-          }
-        }
-        if (any) s else null
+    /** Ties never straddle bands, so rows-before-the-group + 1 is rank. */
+    case object Rank extends Op('n', rowsOnly = true, excl = true) {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any = (n + 1).toInt
+    }
+    case object PercentRank extends Op('n', rowsOnly = true, excl = true) {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any =
+        if (gn <= 1L) 0.0 else n.toDouble / (gn - 1).toDouble
+    }
+    case object CumeDist extends Op('n', rowsOnly = true) {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any =
+        n.toDouble / gn.toDouble
+    }
+    /** Spark's bucketing: the first `N mod b` buckets hold `N/b + 1`. */
+    final case class NTile(buckets: Int) extends Op('n', rowsOnly = true) {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any = {
+        val base = if (gn > 0) gn / buckets else 0L
+        val rem = if (gn > 0) (gn % buckets).toInt else 0
+        val cut = rem.toLong * (base + 1)
+        if (n <= cut) ((n - 1) / (base + 1)).toInt + 1
+        else rem + ((n - 1 - cut) / math.max(1L, base)).toInt + 1
       }
     }
-    case object SumDouble extends SlideOp {
-      override def fold(values: Iterator[Any]): Any = {
-        var s = 0.0; var any = false
-        values.foreach { v =>
-          if (v != null) { s += v.asInstanceOf[Number].doubleValue(); any = true }
-        }
-        if (any) s else null
-      }
+    /** Distinct order-key tuples before the group (order-sensitive: the
+      * state watches tie boundaries; strict band disjointness makes the
+      * per-band counts additive).
+      */
+    final case class DenseRank(order: Seq[SortOrder]) extends Op('n', excl = true) {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any = (n + 1).toInt
     }
-    final case class SumDecimal(resultType: DecimalType, ansi: Boolean)
-        extends SlideOp {
-      override def fold(values: Iterator[Any]): Any = {
-        var s: java.math.BigDecimal = null
-        values.foreach { v =>
-          if (v != null) {
-            val d = v.asInstanceOf[Decimal].toJavaBigDecimal
-            s = if (s == null) d else s.add(d)
-          }
-        }
-        if (s == null) null
+    case object Count extends Op('n') {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any = n
+    }
+    /** ANSI throws on overflow (Sum's ANSI posture); default mode wraps,
+      * and wrapping addition is associative and invertible mod 2^64.
+      */
+    final case class SumLong(ansi: Boolean) extends Op('l') {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any =
+        if (n == 0L) null else l
+    }
+    /** Running double sums reassociate at band boundaries — the same
+      * last-ulp caveat as any distributed double aggregation; sliding
+      * frames re-fold in stream order and are bit-identical.
+      */
+    case object SumDouble extends Op('d') {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any =
+        if (n == 0L) null else d
+    }
+    case object AvgDouble extends Op('d') {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any =
+        if (n == 0L) null else d / n
+    }
+    /** The exact sum renders like CheckOverflow in Spark's own Sum: ANSI
+      * throws, default mode nulls the overflowing rows.
+      */
+    final case class SumDecimal(rt: DecimalType, ansi: Boolean) extends Op('b') {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any =
+        if (n == 0L) null
         else {
-          val d = Decimal(s)
-          if (d.changePrecision(resultType.precision, resultType.scale)) d
+          val v = Decimal(b)
+          if (v.changePrecision(rt.precision, rt.scale)) v
           else if (ansi) throw new ArithmeticException(
-            s"sliding sum overflows ${resultType.simpleString}")
+            s"window sum overflows ${rt.simpleString}")
           else null
         }
-      }
     }
-    case object AvgDouble extends SlideOp {
-      override def fold(values: Iterator[Any]): Any = {
-        var s = 0.0; var n = 0L
-        values.foreach { v =>
-          if (v != null) { s += v.asInstanceOf[Number].doubleValue(); n += 1 }
-        }
-        if (n == 0L) null else s / n
-      }
-    }
-    /** `lag(x, n[, default])` over the ring: the OLDEST buffered value
-      * when the ring holds exactly n+1 (the current row plus its n
-      * predecessors — positions count ROWS, so null values ride along),
-      * the constant default while the global position is still under n.
+    /** avg over an integral child from its exact sum: agrees with the
+      * per-row double re-fold while partial sums stay within 2^53.
       */
-    final case class LagN(n: Int, default: Any = null) extends SlideOp {
-      override def fold(values: Iterator[Any]): Any = {
-        var first: Any = null
-        var cnt = 0
-        values.foreach { v => if (cnt == 0) first = v; cnt += 1 }
-        if (cnt == n + 1) first else default
-      }
-    }
-
-    final case class MinMax(dt: DataType, isMin: Boolean) extends SlideOp {
-      @transient private lazy val ord = TypeUtils.getInterpretedOrdering(dt)
-      override def fold(values: Iterator[Any]): Any = {
-        var cur: Any = null
-        values.foreach { v =>
-          if (v != null &&
-            (cur == null || (ord.compare(v, cur) < 0) == isMin)) cur = v
-        }
-        cur
-      }
+    case object AvgExact extends Op('b') {
+      def render(n: Long, l: Long, d: Double, b: java.math.BigDecimal, gn: Long): Any =
+        if (n == 0L) null else java.lang.Double.valueOf(b.doubleValue() / n.toDouble)
     }
   }
 
-  /** O(1)-per-row running form of an INVERTIBLE [[SlideOp]] for frames
-    * that admit every retained entry (single-bound: `d PRECEDING AND
-    * CURRENT ROW`): add on admission, subtract on eviction. `value()`
-    * returns the frame aggregate, or the [[IncSlide.Refold]] sentinel
-    * when the incremental form cannot PROVE it matches a stream-order
-    * re-fold — the caller then re-folds the buffer, so every emitted
-    * value (and every ANSI overflow throw) is bit-identical to
-    * [[SlideOp.fold]] by construction:
-    *  - Count: non-null tally — always exact.
-    *  - SumLong non-ANSI: wrapping adds are associative/commutative mod
-    *    2⁶⁴, so add/subtract ≡ the buffer re-fold, always.
-    *  - SumLong ANSI: the re-fold throws iff some stream-order PREFIX of
-    *    the live buffer overflows. When `liveCount · maxAbsEver < 2⁶³`
-    *    no prefix can leave the Long range, so no throw is possible and
-    *    the running value is the fold value; past that bound (or on a
-    *    Long.MinValue input, whose |·| wraps) it refuses and the caller
-    *    re-folds — the conservative maxAbsEver never shrinks, trading
-    *    extra re-folds near the overflow regime for exactness.
-    *  - SumDecimal: java BigDecimal add/subtract is exact (arbitrary
-    *    precision), so the running sum equals the re-folded sum as a
-    *    number; intermediate SCALE may differ, but the final
-    *    `changePrecision(resultType)` renders both to the identical
-    *    Decimal (and the identical ANSI overflow throw, which tests the
-    *    RESULT only).
-    * Doubles (order-sensitive rounding), min/max and lag (not
-    * invertible) keep the re-fold.
+  /** Summary total of an [[Inv]]: count plus the boxed sum (null, Long,
+    * Double or BigDecimal by the op's `sum`).
     */
-  private[plans] sealed trait IncSlide {
-    def add(v: Any): Unit
-    def remove(v: Any): Unit
-    /** Frame aggregate, or [[IncSlide.Refold]] to demand a re-fold. */
-    def value(): Any
-  }
-  private[plans] object IncSlide {
-    /** Sentinel distinct from every legal aggregate value (incl. null). */
-    val Refold: AnyRef = new Object
-    /** The running form, or null when `op` must re-fold per row. */
-    def forOp(op: SlideOp): IncSlide = op match {
-      case SlideOp.Count => new IncCount
-      case SlideOp.SumLong(ansi) => new IncSumLong(ansi)
-      case SlideOp.SumDecimal(rt, ansi) => new IncSumDecimal(rt, ansi)
-      case _ => null
-    }
-  }
-  private final class IncCount extends IncSlide {
-    private var n = 0L
-    override def add(v: Any): Unit = if (v != null) n += 1
-    override def remove(v: Any): Unit = if (v != null) n -= 1
-    override def value(): Any = java.lang.Long.valueOf(n)
-  }
-  private final class IncSumLong(ansi: Boolean) extends IncSlide {
-    private var s = 0L
-    private var n = 0L
-    private var maxAbs = 0L
-    override def add(v: Any): Unit = if (v != null) {
-      val x = v.asInstanceOf[Number].longValue()
-      s += x; n += 1
-      val a = if (x == Long.MinValue) Long.MaxValue else math.abs(x)
-      if (a > maxAbs) maxAbs = a
-    }
-    override def remove(v: Any): Unit = if (v != null) {
-      s -= v.asInstanceOf[Number].longValue(); n -= 1
-    }
-    override def value(): Any =
-      if (n == 0L) null
-      else if (!ansi || maxAbs == 0L || n <= Long.MaxValue / maxAbs)
-        java.lang.Long.valueOf(s)
-      else IncSlide.Refold
-  }
-  private final class IncSumDecimal(resultType: DecimalType, ansi: Boolean)
-      extends IncSlide {
-    private var s = java.math.BigDecimal.ZERO
-    private var n = 0L
-    override def add(v: Any): Unit = if (v != null) {
-      s = s.add(v.asInstanceOf[Decimal].toJavaBigDecimal); n += 1
-    }
-    override def remove(v: Any): Unit = if (v != null) {
-      s = s.subtract(v.asInstanceOf[Decimal].toJavaBigDecimal); n -= 1
-    }
-    override def value(): Any =
-      if (n == 0L) null
-      else {
-        val d = Decimal(s)
-        if (d.changePrecision(resultType.precision, resultType.scale)) d
-        else if (ansi) throw new ArithmeticException(
-          s"sliding sum overflows ${resultType.simpleString}")
-        else null
-      }
-  }
+  final case class Tot(n: Long, s: Any)
 
-  /** `agg(x) OVER (ORDER BY k ROWS BETWEEN n PRECEDING AND CURRENT
-    * ROW)` — the bounded sliding frame: the accumulator keeps a ring of
-    * the last ≤ n+1 evaluated input values (retained — UTF8Strings
-    * cloned), each row's value folds the ring in stream order, and the
-    * per-band TOTAL is the band's last ≤ n values — the bounded,
-    * order-sensitive carry the lag(1) prefix generalizes to. Prefix
-    * merge is `(earlier ++ later).takeRight(n)`, associative by
-    * construction. O(n) per row — exactly the re-evaluation Spark's own
-    * sliding frame pays, minus its single-partition collapse.
+  /** Entry total of a buffered function: the band's trailing entries (a
+    * later band's prefix) and leading entries (an earlier band's forward
+    * suffix), keys alongside, and the band's last key for the suffix
+    * assembly's reach.
     */
-  final case class RunSliding(input: Expression, n: Int, op: SlideOp)
-      extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val ring = new java.util.ArrayDeque[AnyRef](n + 1)
-      private val NullToken: AnyRef = RunSliding.NullToken
-      private def push(v: Any, cap: Int): Unit = {
-        ring.addLast(if (v == null) NullToken else v.asInstanceOf[AnyRef])
-        while (ring.size > cap) ring.removeFirst()
-      }
-      override def update(row: InternalRow): Unit =
-        push(retain(input.eval(row)), n + 1)
-      override def total(): Any = {
-        val vals = ring.toArray
-        val keep = vals.drop(math.max(0, vals.length - n))
-        val out = new Array[Any](keep.length)
-        var i = 0
-        while (i < keep.length) {
-          out(i) = if (keep(i) eq NullToken) null else keep(i)
-          i += 1
-        }
-        out
-      }
-      override def mergeTotal(t: Any): Unit = if (t != null)
-        // band-order fold: later values append after earlier ones, the
-        // ring trims to the last n (a prefix can never exceed n values)
-        t.asInstanceOf[Array[Any]].foreach(push(_, n))
-      override def value(): Any = op match {
-        // lag is O(1) on the ring: size and oldest element are direct
-        // deque queries — no per-row scan of up-to-n values (Spark's own
-        // OffsetWindowFunctionFrame is O(1) per row too)
-        case SlideOp.LagN(k, d) =>
-          if (ring.size == k + 1) {
-            val v = ring.peekFirst()
-            if (v eq NullToken) null else v
-          } else d
-        case _ =>
-          val it = ring.iterator()
-          op.fold(new Iterator[Any] {
-            override def hasNext: Boolean = it.hasNext
-            override def next(): Any = {
-              val v = it.next()
-              if (v eq NullToken) null else v
-            }
-          })
-      }
-    }
-  }
+  final case class Ent(tk: Array[Long], tv: Array[Any], lk: Array[Long],
+      lv: Array[Any], last: Long, any: Boolean)
 
-  object RunSliding {
-    /** ArrayDeque rejects nulls; legitimate null inputs ride as this
-      * sentinel and unwrap at fold/snapshot time.
-      */
-    private[RunningWindow] val NullToken: AnyRef = new java.io.Serializable {
-      override def toString: String = "<null>"
-    }
-  }
-
-  /** `agg(x) OVER (ORDER BY k ROWS BETWEEN n PRECEDING|CURRENT ROW AND
-    * m FOLLOWING)` — the bounded FOLLOWING frame (the centered moving
-    * average): row i's frame is values [i−n .. i+m], complete only when
-    * row i+m arrives, so the exec DELAYS emission behind the m-slot
-    * ring it already runs for deep leads and fills each row's slot from
-    * [[FwdAcc.foldFill]] when its +m row lands (the deque then holds
-    * exactly the frame: last ≤ n+m+1 values ending at i+m, clipped at
-    * the global start by construction). At partition end the ≤ m
-    * still-delayed rows read [[FwdAcc.foldFlush]] — the deque's last
-    * n+1+d in-partition values plus the next bands' first m−d values
-    * (the forward SUFFIX, default-free: past the global end the frame
-    * just clips). The per-band total carries (last ≤ n values, first
-    * ≤ m values) — the preceding context the NEXT band's early rows
-    * seed from, and the forward suffix the PREVIOUS band's late rows
-    * read. O(n+m) memory per function per partition; fold order is
-    * stream order, so double sums are bit-identical to Spark's
-    * SlidingWindowFunctionFrame.
+  /** One node emits in one delay order: a key-released value frame
+    * (RANGE … FOLLOWING) cannot share it with a row-count forward frame
+    * (lead beyond 1, ROWS … FOLLOWING) — such a node refuses whole.
     */
-  final case class RunSlidingFwd(input: Expression, n: Int, m: Int,
-      op: SlideOp) extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new FwdAcc(input, n, m, op)
-  }
+  private[plans] def delayCompatible(fs: Seq[Fn]): Boolean =
+    !(fs.exists(f => f.delayed && f.key != null) && fs.exists(f =>
+      f.delayed && f.key == null && f.frame != Frame(true, Some(1L), Some(1L))))
 
-  private[plans] final class FwdAcc(input: Expression, n: Int, m: Int,
-      op: SlideOp) extends RunAcc {
-    private val NullToken: AnyRef = RunSliding.NullToken
-    private val cap = n + m + 1
-    private val ring = new java.util.ArrayDeque[AnyRef](math.min(cap, 4096))
-    private val firsts =
-      new scala.collection.mutable.ArrayBuffer[Any](math.min(m, 64))
-    private def push(v: Any, c: Int): Unit = {
-      ring.addLast(if (v == null) NullToken else v.asInstanceOf[AnyRef])
-      while (ring.size > c) ring.removeFirst()
-    }
-    override def update(row: InternalRow): Unit = {
-      val v = retain(input.eval(row))
-      if (firsts.length < m) firsts += v
-      push(v, cap)
-    }
-    /** (band's last ≤ n values, band's first ≤ m values). */
-    override def total(): Any = {
-      val vals = ring.toArray
-      val keep = vals.drop(math.max(0, vals.length - n))
-      val lastN = new Array[Any](keep.length)
-      var i = 0
-      while (i < keep.length) {
-        lastN(i) = if (keep(i) eq NullToken) null else keep(i)
-        i += 1
-      }
-      Array[Any](lastN, firsts.toArray[Any])
-    }
-    /** Band-order fold of the PRECEDING context: later values append
-      * after earlier ones, trimmed to the last n (the only part a later
-      * band's early frames can reach).
+  /** One window function: a frame plus a kind. `key`: the order-key
+    * expression of a RANGE frame with value offsets (null otherwise —
+    * positions then count rows or tie groups). `cap`: the live-entry
+    * cap (`spark.graft.window.maxRangeFrameRows`) for frames whose
+    * population only the data bounds.
+    */
+  final case class Fn(kind: Kind, input: Expression, frame: Frame,
+      key: Expression = null, cap: Long = Long.MaxValue) {
+    private def fromEnd = kind match { case p: Pos => p.fromEnd; case _ => false }
+    /** Retains frame entries: bounded invertible frames, deques with a
+      * lower bound, every positional.
       */
-    override def mergeTotal(t: Any): Unit = if (t != null)
-      t.asInstanceOf[Array[Any]](0).asInstanceOf[Array[Any]]
-        .foreach(push(_, math.max(n, 0)))
-    /** Never the emitted value — the exec fills slots at ring time. */
-    override def value(): Any = null
-    private def unwrapped(a: Array[AnyRef], from: Int): Iterator[Any] =
-      new Iterator[Any] {
-        private var i = from
-        override def hasNext: Boolean = i < a.length
-        override def next(): Any = {
-          val v = a(i); i += 1
-          if (v eq NullToken) null else v
-        }
-      }
-    /** Frame fold at FILL time (row i's +m row just updated): the whole
-      * deque IS the frame — last min(seen, n+m+1) values ending at i+m.
+    def buffered: Boolean = kind match {
+      case _: Inv => frame.lo.isDefined && frame.hi.isDefined
+      case _: Mono => frame.lo.isDefined
+      case _: Pos => true
+    }
+    /** Reads past the current row: emission waits for the frame end. */
+    def delayed: Boolean = buffered && frame.hi.exists(_ > 0)
+    /** Unbounded forward end read per row: the whole partition arrives
+      * before the first read (suffix deques, lead IGNORE NULLS).
       */
-    private[plans] def foldFill(): Any = {
-      val it = ring.iterator()
-      op.fold(new Iterator[Any] {
-        override def hasNext: Boolean = it.hasNext
-        override def next(): Any = {
-          val v = it.next()
-          if (v eq NullToken) null else v
-        }
+    def whole: Boolean = buffered && frame.hi.isEmpty && !fromEnd
+    /** Read before the row (group) joins the state. */
+    def excl: Boolean = kind match {
+      case Inv(op) => op.excl || frame.hi.isEmpty
+      case _ => false
+    }
+    /** Totals depend on row order: the totals pass must see the sort. */
+    def orderSensitive: Boolean = kind match {
+      case Inv(_: Op.DenseRank) => true
+      case Mono(_, _, by) => by != null || (buffered && frame.hi.isDefined)
+      case _ => buffered
+    }
+    def bound(in: Seq[Attribute]): Fn = {
+      def b(e: Expression) = if (e == null) null else BindReferences.bindReference(e, in)
+      copy(input = b(input), key = b(key), kind = kind match {
+        case Inv(Op.DenseRank(o)) =>
+          Inv(Op.DenseRank(o.map(s => s.copy(child = b(s.child)))))
+        case m: Mono => m.copy(by = b(m.by))
+        case other => other
       })
     }
-    /** Frame fold at FLUSH time (partition ended; this row has d < m
-      * rows after it in the partition): the deque's last n+1+d values
-      * (the in-partition frame part ending at the partition's last row)
-      * then the suffix's first m−d values (the next bands' firsts; the
-      * global end just clips).
-      */
-    private[plans] def foldFlush(d: Int, suffix: Array[Any]): Any = {
-      val vals = ring.toArray
-      val take = math.min(vals.length, n + 1 + d)
-      val inPart = unwrapped(vals, vals.length - take)
-      val sTake = math.min(suffix.length, m - d)
-      op.fold(inPart ++ suffix.iterator.take(sTake))
-    }
   }
 
-  /** The value-frame boundary pair, as distances ≥ 0 from the current
-    * key in the KEY's own units — `lo` is the far (eviction) bound,
-    * `hi` the near (admission) bound (0 = CURRENT ROW; `hi > 0` is the
-    * dual-bound lagged frame `lo PRECEDING AND hi PRECEDING`).
-    * [[FixedDist]] is linear key arithmetic (integral keys,
-    * day-intervals over DATE keys, day-time intervals over TIMESTAMP
-    * keys); [[MonthDist]] is calendar arithmetic over DATE keys — the
-    * bound is `add_months(current, -m)` with LocalDate's month-end
-    * clamping, bit-identical to Spark's own DateAddYMInterval boundary,
-    * and monotone in the key (so front-eviction stays valid).
+  /** The frame driver for one function over one band (see the object
+    * doc). Positions are keys: order keys for value frames, otherwise
+    * row or tie-group ordinals shifted past the merged prefix entries.
+    * The live entries split into the frame's window (admitted, not yet
+    * evicted) and the arrivals ahead of it.
     */
-  sealed trait RangeDist extends Serializable
-  final case class FixedDist(lo: Long, hi: Long) extends RangeDist
-  final case class MonthDist(lo: Int, hi: Int) extends RangeDist
-
-  /** Calendar months over a TIMESTAMP band key — single-bound frames
-    * (`m MONTH PRECEDING AND CURRENT ROW`) only: the bound is Spark's
-    * own `timestampAddMonths(current, −m, zone)` — wall-clock month
-    * arithmetic in the SESSION timezone with month-end clamping,
-    * bit-identical to the TimestampAddYMInterval boundary Spark's own
-    * WindowExec evaluates for this frame. UNLIKE the DATE form, the
-    * timestamp bound is NOT monotone in the key: clamping collapses a
-    * run of month-end days onto one target day, so within that plateau
-    * the bound follows TIME-OF-DAY against the key's date order
-    * (Mar 28 23:50 − 1 MONTH = Feb 28 23:50, but Mar 29 00:10 − 1
-    * MONTH = Feb 28 00:10 — the bound steps BACKWARD as the key
-    * advances). Spark's WindowExec resolves the inversion with its
-    * FORWARD-ONLY frame-head pointer: the effective frame start is the
-    * RUNNING MAX of the per-row bounds, never retreating — and
-    * eviction-by-current-bound reproduces exactly that (the retained
-    * set is "entries ≥ every bound seen so far", per band and across
-    * the prefix merge alike). An engine evaluating the exact per-row
-    * bound instead (DuckDB does) differs on precisely those plateau
-    * rows — an oracle must encode the running-max bound explicitly
-    * (q207 does). Dual-bound ts-month frames REFUSE: the upper bound
-    * inverts the same way, and matching Spark's forward-only upper
-    * pointer would need its running-max state carried across bands.
-    * TIMESTAMP_NTZ keys pin `zone` to UTC (zone-less local-calendar
-    * arithmetic).
-    */
-  final case class MonthTsDist(lo: Int, hi: Int, zone: String)
-      extends RangeDist
-
-  /** `agg(x) OVER (ORDER BY k RANGE BETWEEN d PRECEDING AND [CURRENT
-    * ROW | d2 PRECEDING])` — the VALUE-based sliding frame (the 7-day
-    * mean; the lagged "week ending 3 days ago"; the 3-MONTH rolling
-    * mean over a date key): the accumulator retains (key, value) pairs
-    * and EVICTS by key distance (past the lo bound from the current
-    * key — or the mirrored direction under DESC), so the buffer holds
-    * exactly the frame's live rows; each group-end value folds the
-    * buffered values that clear the hi (admission) bound, in stream
-    * order (RANGE CURRENT ROW spans the whole tie group, so the value
-    * is group-scoped — tie groups share the frame, SQL's peer
-    * semantics). The per-band TOTAL is the band's own trailing frame
-    * (entries within lo of its last key — every future row is farther
-    * out, so nothing else can matter), merged band-to-band with the
-    * same eviction. Memory is O(live frame rows) of (long, value)
-    * pairs — the SAME row population Spark's own WindowExec buffers as
-    * whole spillable rows for this frame, held smaller; each FUNCTION
-    * keeps its own buffer (n functions over one frame hold the live
-    * values n times — still value-sized). `cap` bounds the live buffer
-    * at runtime: where the strategy could not prove a plan-time bound
-    * from the sidecar (chain windows, filtered scans), a frame denser
-    * than the cap fails fast with the conf to raise instead of
-    * accreting toward an executor OOM — Spark's own WindowExec (which
-    * spills) is the right plan for those. The layout proof is
-    * null-free, so the key never needs a null peer group.
-    */
-  final case class RunRangeSliding(key: Expression, input: Expression,
-      dist: RangeDist, desc: Boolean, op: SlideOp,
-      cap: Long = Long.MaxValue) extends RunningFunc {
-    override def rowsFrame: Boolean = false
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(key = BindReferences.bindReference(key, in),
-        input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val NullToken: AnyRef = RunSliding.NullToken
-      private val keys = new java.util.ArrayDeque[java.lang.Long]()
-      private val vals = new java.util.ArrayDeque[AnyRef]()
-      // Single-bound frames (upper = CURRENT ROW) admit EVERY retained
-      // entry — the per-row fold over the live buffer is then
-      // O(frame rows) of pure re-summation (q207's 1-month ts frame
-      // re-folded ~1.8k entries per row: 270M iterations over 150k
-      // rows). Invertible ops keep a running aggregate instead —
-      // add on admission, subtract on eviction — made PROVABLY
-      // bit-identical to the stream-order re-fold by IncSlide's
-      // fallback contract (None ⇒ the caller re-folds; see IncSlide).
-      private val inc: IncSlide =
-        if (dist match {
-          case FixedDist(_, h) => h == 0L
-          case MonthDist(_, h) => h == 0L
-          case _: MonthTsDist => true
-        }) IncSlide.forOp(op) else null
-      // keep entry k for current key c: ASC → c - k ≤ lo (k can never
-      // exceed c in a sorted stream); DESC → k - c ≤ lo. The
-      // subtraction is always of (later − earlier) in stream order,
-      // hence mathematically ≥ 0 — a WRAPPED (negative) result means
-      // the true distance exceeds the Long range entirely, which is
-      // certainly > lo (64-bit hash-id keys can legitimately span that
-      // far). Admission mirrors it: distance ≥ hi.
-      private def wdist(later: Long, earlier: Long): Long = {
-        val r = later - earlier
-        if (r < 0) Long.MaxValue else r
-      }
-      // month bounds cache per current key: the calendar adds run once
-      // per row, not once per buffered entry. Eviction by the current
-      // row's bound implements Spark's own forward-only frame-head
-      // pointer EXACTLY: the retained set is "entries ≥ the running
-      // max of every bound so far", which is what WindowExec's
-      // non-retreating head produces on the timestamp clamp plateau's
-      // bound inversions (see MonthTsDist — dates are plateau-equal,
-      // so exact and running-max coincide there)
-      private var mFor = Long.MinValue
-      private var mHave = false
-      private var mEvict = 0L
-      private var mAdmit = 0L
-      private lazy val tsZone: java.time.ZoneId = dist match {
-        case MonthTsDist(_, _, z) =>
-          org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .getZoneId(z)
-        case _ => java.time.ZoneOffset.UTC
-      }
-      private def monthBounds(cur: Long, lo: Int, hi: Int): Unit =
-        if (!mHave || cur != mFor) {
-          dist match {
-            case _: MonthTsDist =>
-              import org.apache.spark.sql.catalyst.util.DateTimeUtils
-              if (desc) {
-                mEvict = DateTimeUtils.timestampAddMonths(cur, lo, tsZone)
-                mAdmit = DateTimeUtils.timestampAddMonths(cur, hi, tsZone)
-              } else {
-                mEvict = DateTimeUtils.timestampAddMonths(cur, -lo, tsZone)
-                mAdmit = DateTimeUtils.timestampAddMonths(cur, -hi, tsZone)
-              }
-            case _ =>
-              val ld = java.time.LocalDate.ofEpochDay(cur)
-              if (desc) {
-                mEvict = ld.plusMonths(lo.toLong).toEpochDay
-                mAdmit = ld.plusMonths(hi.toLong).toEpochDay
-              } else {
-                mEvict = ld.minusMonths(lo.toLong).toEpochDay
-                mAdmit = ld.minusMonths(hi.toLong).toEpochDay
-              }
-          }
-          mFor = cur; mHave = true
-        }
-      private def keep(cur: Long, k: Long): Boolean = dist match {
-        case FixedDist(lo, _) =>
-          (if (desc) wdist(k, cur) else wdist(cur, k)) <= lo
-        case MonthDist(lo, hi) =>
-          monthBounds(cur, lo, hi)
-          if (desc) k <= mEvict else k >= mEvict
-        case MonthTsDist(lo, hi, _) =>
-          monthBounds(cur, lo, hi)
-          if (desc) k <= mEvict else k >= mEvict
-      }
-      private def admit(cur: Long, k: Long): Boolean = dist match {
-        case FixedDist(_, hi) =>
-          hi == 0L || (if (desc) wdist(k, cur) else wdist(cur, k)) >= hi
-        case MonthDist(lo, hi) =>
-          monthBounds(cur, lo, hi)
-          if (desc) k >= mAdmit else k <= mAdmit
-        case MonthTsDist(_, _, _) =>
-          // ts-months plan single-bound only (upper = CURRENT ROW, so
-          // every retained entry is in frame): a dual-bound upper
-          // would need Spark's running-max pointer state carried
-          // across bands, and the strategy refuses that shape instead
-          true
-      }
-      private var curKey = 0L
-      private def evict(cur: Long): Unit = {
-        var go = true
-        while (go && !keys.isEmpty) {
-          val k = keys.peekFirst().longValue()
-          if (!keep(cur, k)) {
-            keys.removeFirst()
-            val v = vals.removeFirst()
-            if (inc != null) inc.remove(if (v eq NullToken) null else v)
-          } else go = false
-        }
-      }
-      override def update(row: InternalRow): Unit = {
-        val c = key.eval(row).asInstanceOf[Number].longValue()
-        curKey = c
-        evict(c)
-        keys.addLast(java.lang.Long.valueOf(c))
-        val v = retain(input.eval(row))
-        vals.addLast(if (v == null) NullToken else v.asInstanceOf[AnyRef])
-        if (inc != null) inc.add(v)
-        if (keys.size > cap) throw new org.apache.spark.SparkException(
-          s"graft range-window frame exceeds $cap live rows per " +
-            "function; raise spark.graft.window.maxRangeFrameRows or " +
-            "let Spark's spillable window plan this frame")
-      }
-      override def total(): Any = {
-        val ks = new Array[Any](keys.size)
-        val vs = new Array[Any](vals.size)
-        var i = 0
-        val ki = keys.iterator(); val vi = vals.iterator()
-        while (ki.hasNext) {
-          ks(i) = ki.next().longValue()
-          val v = vi.next()
-          vs(i) = if (v eq NullToken) null else v
-          i += 1
-        }
-        Array[Any](ks, vs)
-      }
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        val a = t.asInstanceOf[Array[Any]]
-        val ks = a(0).asInstanceOf[Array[Any]]
-        val vs = a(1).asInstanceOf[Array[Any]]
-        var i = 0
-        while (i < ks.length) {
-          keys.addLast(java.lang.Long.valueOf(ks(i).asInstanceOf[Long]))
-          vals.addLast(if (vs(i) == null) NullToken
-            else vs(i).asInstanceOf[AnyRef])
-          if (inc != null) inc.add(vs(i))
-          i += 1
-        }
-        // the merged band's own last key is the tightest future bound
-        if (!keys.isEmpty) evict(keys.peekLast().longValue())
-      }
-      override def value(): Any = {
-        if (inc != null) {
-          val fast = inc.value()
-          if (fast.asInstanceOf[AnyRef] ne IncSlide.Refold) return fast
-        }
-        val ki = keys.iterator(); val vi = vals.iterator()
-        op.fold(new Iterator[Any] {
-          private var nextV: Any = _
-          private var haveNext = false
-          private def advance(): Unit =
-            while (!haveNext && ki.hasNext) {
-              val k = ki.next().longValue()
-              val v = vi.next()
-              if (admit(curKey, k)) {
-                nextV = if (v eq NullToken) null else v
-                haveNext = true
-              }
-            }
-          override def hasNext: Boolean = { advance(); haveNext }
-          override def next(): Any = {
-            advance()
-            if (!haveNext) throw new NoSuchElementException
-            haveNext = false
-            nextV
-          }
-        })
-      }
-    }
-  }
-
-  /** `agg(x) OVER (ORDER BY k RANGE BETWEEN d1 PRECEDING|CURRENT ROW
-    * AND f FOLLOWING)` — the value-based FOLLOWING frame (the ±window
-    * around each event): row r's frame is every key in
-    * [r.key − d1, r.key + f] (stream-mirrored under DESC), complete
-    * only once a key strictly beyond r.key + f arrives — so the exec
-    * holds pending rows in a key-released queue and this accumulator
-    * is the live (key, value) buffer they fold from. Eviction keeps
-    * entries within d1 of the OLDEST pending key (not the current
-    * one — later pendings still need them); both the buffer and the
-    * queue are population-bounded by the d1+f-wide window, plan-bounded
-    * by the sidecar sweep and `cap`-guarded at runtime. Per-band totals
-    * carry the band's TRAILING entries (within d1 of its last key — the
-    * next band's preceding prefix, merged exactly like the trailing
-    * frame), its LEADING entries (within f of its first key — the
-    * previous band's forward suffix), and its first/last keys (the
-    * driver's suffix-assembly stop bound). Bound kinds: FIXED
-    * (integral / day / day-time — linear key distances), or MONTHLY
-    * over a DATE key (`monthly = true`: d1/f are MONTH counts and the
-    * bounds are `add_months(rk, ∓m)` with LocalDate's clamping —
-    * non-strictly monotone over dates since the clamp plateau carries
-    * no time-of-day, so each pending row's release bound
-    * `add_months(rk, +f)` IS a valid per-arrival release test; ASC
-    * only, enforced at parse). Month-forward over TIMESTAMP keys
-    * refuses: the ts clamp plateau inverts with time-of-day (see
-    * MonthTsDist) and the release/eviction tests would need Spark's
-    * forward-only pointer state.
-    */
-  final case class RunRangeFwd(key: Expression, input: Expression,
-      d1: Long, f: Long, desc: Boolean, op: SlideOp,
-      cap: Long = Long.MaxValue, monthly: Boolean = false)
-      extends RunningFunc {
-    override def rowsFrame: Boolean = false
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(key = BindReferences.bindReference(key, in),
-        input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new FwdRangeAcc(this)
-    /** `cur` is strictly beyond the frame end of a row keyed `rk` —
-      * the pending queue's release test.
-      */
-    private[plans] def beyond(cur: Long, rk: Long): Boolean =
-      if (monthly) cur > addMonthsDay(rk, f)
-      else {
-        val r = if (desc) rk - cur else cur - rk
-        (if (r < 0) Long.MaxValue else r) > f
-      }
-    /** `k` is at-or-after `anchor` in stream order and within the
-      * forward reach — the suffix-assembly walk's stop test.
-      */
-    private[plans] def withinFwdOf(anchor: Long, k: Long): Boolean =
-      if (monthly) k >= anchor && k <= addMonthsDay(anchor, f)
-      else {
-        val r = if (desc) anchor - k else k - anchor
-        r >= 0 && r <= f
-      }
-  }
-
-  /** `add_months` over an epoch-day key — LocalDate's month-end
-    * clamping, the same arithmetic Spark's DateAddYMInterval applies.
-    */
-  private[plans] def addMonthsDay(day: Long, m: Long): Long =
-    java.time.LocalDate.ofEpochDay(day).plusMonths(m).toEpochDay
-
-  /** The live buffer + totals accumulator of [[RunRangeFwd]]. Stream
-    * distance: `sd(later, earlier)` is the non-negative key distance in
-    * STREAM direction (ASC: later − earlier; DESC mirrored); a wrapped
-    * (negative) subtraction reads as "farther than any bound".
-    */
-  private[plans] final class FwdRangeAcc(spec: RunRangeFwd) extends RunAcc {
-    import spec.{cap, d1, desc, f, monthly, op}
-    private val NullToken: AnyRef = RunSliding.NullToken
-    private val keys = new java.util.ArrayDeque[java.lang.Long]()
-    private val vals = new java.util.ArrayDeque[AnyRef]()
-    // the band's first ≤f-window entries, for the totals' leading part
-    private val leadK = new scala.collection.mutable.ArrayBuffer[Long]()
-    private val leadV = new scala.collection.mutable.ArrayBuffer[Any]()
-    private var firstKey = 0L
+  private[plans] final class Acc(fn: Fn, grand: Any) {
+    import fn.{frame => fr, input}
+    private val buffered = fn.buffered
+    private val op: Op = fn.kind match { case Inv(o) => o; case _ => null }
+    private val mono: Mono = fn.kind match { case m: Mono => m; case _ => null }
+    private val pos: Pos = fn.kind match { case p: Pos => p; case _ => null }
+    private val live = new Ring
+    private var nWin = 0
+    private var popped = 0L
+    private var base = 0L
+    private var seeded = false
     private var lastKey = 0L
+    private var firstKey = 0L
     private var any = false
-    // set once mergeTotal seeds this acc (the EVAL pass): the leading
-    // buffers are only ever read from the totals pass's snapshots, so
-    // an eval-pass acc skips their accumulation entirely (mergeTotal
-    // seeds firstKey with the previous band's lastKey, which would
-    // otherwise anchor a dead, f-window-bounded append per partition)
-    private var prefixSeeded = false
-
-    // O(1)-per-release sliding aggregate for invertible ops (see
-    // [[IncSlide]]): the pending queue is FIFO over the sorted stream,
-    // so released keys are MONOTONE, and both frame bounds are monotone
-    // in the released key — the admitted window over the key-sorted
-    // buffer advances like a classic two-pointer sliding window, each
-    // entry entering and leaving the running aggregate exactly once.
-    // `winK/winV` hold the entries currently aggregated, `aheadK/aheadV`
-    // the arrived-but-not-yet-admitted tail (both alias the retained
-    // value objects — no extra retention). Folds that involve the
-    // cross-band SUFFIX (partition end) or that the incremental form
-    // refuses (ANSI overflow risk) fall back to the exact stream-order
-    // re-fold — bit-identical by IncSlide's contract. DISABLED unless
-    // the exec opts in ([[enableIncremental]], eval pass only): a
-    // totals-pass acc never folds, and tracking `ahead` there would hold
-    // the whole band instead of the window.
-    private var inc: IncSlide = null
-    private val winK = new java.util.ArrayDeque[java.lang.Long]()
-    private val winV = new java.util.ArrayDeque[AnyRef]()
-    private val aheadK = new java.util.ArrayDeque[java.lang.Long]()
-    private val aheadV = new java.util.ArrayDeque[AnyRef]()
-    private[plans] def enableIncremental(): Unit = {
-      inc = IncSlide.forOp(op)
-      if (inc != null) {
-        // backfill arrivals already seeded (the mergeTotal prefix)
-        val ki = keys.iterator(); val vi = vals.iterator()
-        while (ki.hasNext) { aheadK.addLast(ki.next()); aheadV.addLast(vi.next()) }
-      }
+    private var counter = 0L
+    private val lead = new Ring
+    private var leadOpen = true
+    // invertible state; `exact`: ANSI Math.addExact on every add
+    private var n = 0L
+    private var l = 0L
+    private var d = 0.0
+    private var b = java.math.BigDecimal.ZERO
+    private var prev: InternalRow = _
+    private val ansiSlide = op match { case Op.SumLong(a) => a && buffered; case _ => false }
+    private val exact = op match { case Op.SumLong(a) => a && !buffered; case _ => false }
+    private lazy val denseOrd = op match {
+      case Op.DenseRank(o) => new LazilyGeneratedOrdering(o)
+      case _ => null
+    }
+    private val gTot = grand match { case t: Tot => t; case _ => null }
+    // deques of absolute entry indices: the kind's extreme, and the
+    // live |x| bound that proves an ANSI long sum cannot overflow
+    private val dq, absDq = new Ring
+    private var bestO: Any = null
+    private var bestV: Any = null
+    private lazy val mOrd = TypeUtils.getInterpretedOrdering(mono.dt)
+    private def better(o: Any, cur: Any): Boolean = {
+      val c = mOrd.compare(o, cur)
+      if (mono.isMin) c < 0 else if (mono.by != null) c > 0 else c >= 0
+    }
+    private val ordinal = fn.key == null
+    private val (hasLo, lo) = (fr.lo.isDefined, fr.lo.getOrElse(0L))
+    private val (hasHi, hi) = (fr.hi.isDefined, fr.hi.getOrElse(0L))
+    private def valAt(abs: Long): Any = live((abs - popped).toInt)
+    private def absOf(v: Any): Long = {
+      val x = v.asInstanceOf[Number].longValue()
+      if (x == Long.MinValue) Long.MaxValue else math.abs(x)
+    }
+    private def big(v: Any): java.math.BigDecimal = v match {
+      case x: Decimal => x.toJavaBigDecimal
+      case x => java.math.BigDecimal.valueOf(x.asInstanceOf[Number].longValue())
     }
 
-    private def sd(later: Long, earlier: Long): Long = {
-      val r = if (desc) earlier - later else later - earlier
-      if (r < 0) Long.MaxValue else r
-    }
-    /** Evict entries farther than d1 BEFORE `low` (the oldest key any
-      * still-pending row's frame can reach back from). A wrapped
-      * (negative) distance of a stream-before entry means the true span
-      * exceeds the Long range — certainly > d1, evicted.
-      */
-    private[plans] def evictBefore(low: Long): Unit = {
-      val mLow = if (monthly) addMonthsDay(low, -d1) else 0L
-      var go = true
-      while (go && !keys.isEmpty) {
-        val k = keys.peekFirst().longValue()
-        val drop =
-          if (monthly) k < mLow
-          else {
-            val before = if (desc) k >= low else k <= low
-            val dist = if (desc) k - low else low - k
-            before && (dist < 0 || dist > d1)
-          }
-        if (drop) {
-          keys.removeFirst(); vals.removeFirst()
-        } else go = false
+    private def add(v: Any): Unit = if (v != null) {
+      n += 1
+      op.sum match {
+        case 'l' =>
+          val x = v.asInstanceOf[Number].longValue()
+          l = if (exact) Math.addExact(l, x) else l + x
+        case 'd' => d += v.asInstanceOf[Number].doubleValue()
+        case 'b' => b = b.add(big(v))
+        case _ =>
       }
     }
-    /** One arriving row's (key, value); `low` = oldest pending key.
-      * Values are retained here (the consumer evals them from pending
-      * rows whose buffers the buffer entries outlive).
-      */
-    private[plans] def arrive(k: Long, v: Any, low: Long): Unit = {
-      evictBefore(low)
-      val rv = retain(v)
-      keys.addLast(java.lang.Long.valueOf(k))
-      vals.addLast(if (rv == null) NullToken else rv.asInstanceOf[AnyRef])
-      if (inc != null) {
-        aheadK.addLast(java.lang.Long.valueOf(k))
-        aheadV.addLast(if (rv == null) NullToken else rv.asInstanceOf[AnyRef])
+    private def remove(v: Any): Unit = if (v != null) {
+      n -= 1
+      op.sum match {
+        case 'l' => l -= v.asInstanceOf[Number].longValue()
+        case 'b' => b = b.subtract(big(v))
+        case _ =>
       }
+    }
+    /** Entry `i` enters the window; the deques drop every entry it
+      * dominates from their back.
+      */
+    private def enter(i: Int): Unit = {
+      val v = live(i)
+      val abs = popped + i
+      if (op != null) {
+        add(v)
+        if (ansiSlide && v != null) {
+          val a = absOf(v)
+          while (absDq.size > 0 && absOf(valAt(absDq.key(absDq.size - 1))) <= a)
+            absDq.popLast()
+          absDq.push(abs, null)
+        }
+      } else if (mono != null && v != null) {
+        while (dq.size > 0 && better(v, valAt(dq.key(dq.size - 1)))) dq.popLast()
+        dq.push(abs, null)
+      }
+    }
+    /** The front entry leaves the buffer (and the window, if inside). */
+    private def drop(): Unit = {
+      if (nWin > 0) {
+        if (op != null) remove(live(0))
+        if (dq.size > 0 && dq.key(0) == popped) dq.pop()
+        if (absDq.size > 0 && absDq.key(0) == popped) absDq.pop()
+        nWin -= 1
+      }
+      live.pop(); popped += 1
+    }
+    // ordinal keys ascend and never approach the Long range: plain adds
+    private def at(k: Long, d: Long): Long = if (ordinal) k + d else fr.at(k, d)
+    private def evict(low: Long): Unit = if (hasLo && !lastOnly) {
+      val bnd = at(low, lo)
+      if (ordinal) while (live.size > 0 && live.key(0) < bnd) drop()
+      else while (live.size > 0 && fr.before(live.key(0), bnd)) drop()
+    }
+    private def admit(k: Long): Unit =
+      if (!hasHi) while (nWin < live.size) { enter(nWin); nWin += 1 }
+      else {
+        val bnd = at(k, hi)
+        while (nWin < live.size && !fr.before(bnd, live.key(nWin))) {
+          enter(nWin); nWin += 1
+        }
+      }
+    /** Positional retention with an unbounded side: the first (or last)
+      * `pick + 1` admitted entries are all the function can ever read.
+      */
+    private val firstOnly = pos != null && !pos.fromEnd && fr.lo.isEmpty
+    private val lastOnly = pos != null && pos.fromEnd && (fr.lo.isEmpty || fr.hi.isEmpty)
+    private def push(k: Long, v: Any): Unit =
+      if (!(firstOnly && live.size > pos.pick)) {
+        live.push(k, v)
+        if (lastOnly) while (live.size > pos.pick + 2) drop()
+      }
+
+    def keyOf(row: InternalRow, at: Long): Long =
+      if (ordinal) at + base
+      else fn.key.eval(row).asInstanceOf[Number].longValue()
+
+    /** One arriving row at key `k`; `low`: the key of the oldest row this
+      * function has not answered yet (no entry it can reach is evicted).
+      */
+    def arrive(row: InternalRow, k: Long, low: Long): Unit = {
       if (!any) { firstKey = k; any = true }
       lastKey = k
-      if (!prefixSeeded && spec.withinFwdOf(firstKey, k)) {
-        leadK += k; leadV += rv
+      if (op != null && !buffered) {
+        if (op.rowsOnly) n += 1
+        else if (denseOrd != null) {
+          if (prev == null || denseOrd.compare(prev, row) != 0) {
+            n += 1; prev = row.asInstanceOf[UnsafeRow].copy()
+          }
+        } else add(input.eval(row))
+        return
       }
-      if (keys.size > cap) throw new org.apache.spark.SparkException(
-        s"graft range-following frame exceeds $cap live rows per " +
+      val v0 = input.eval(row)
+      if (mono != null) {
+        val o = if (mono.by == null) v0 else mono.by.eval(row)
+        if (o != null && (bestO == null || better(o, bestO))) {
+          bestV = retain(v0)
+          bestO = if (mono.by == null) bestV else retain(o)
+        }
+        if (!buffered) return
+      }
+      val v = retain(v0)
+      if (pos != null && pos.ignoreNulls && v == null) return
+      evict(low)
+      push(k, v)
+      if (!seeded && leadOpen) {
+        leadOpen = fr.hi match {
+          case Some(h) if h > 0 =>
+            !fr.before(fr.at(if (ordinal) firstKey - 1 else firstKey, h), k)
+          case None if pos != null && !pos.fromEnd => lead.size <= pos.pick
+          case _ => false
+        }
+        if (leadOpen) lead.push(k, v)
+      }
+      if (live.size > fn.cap) throw new org.apache.spark.SparkException(
+        s"graft band-window frame exceeds ${fn.cap} live rows per " +
           "function; raise spark.graft.window.maxRangeFrameRows or let " +
           "Spark's spillable window plan this frame")
     }
-    /** Frame fold for the pending row at `rk`: buffered entries within
-      * the frame, then suffix entries (all strictly after the band)
-      * within f.
-      */
-    private[plans] def foldFor(rk: Long, sufK: Array[Long],
-        sufV: Array[Any]): Any = {
-      // monthly frame bounds, computed once per pending row
-      val mLo = if (monthly) addMonthsDay(rk, -d1) else 0L
-      val mHi = if (monthly) addMonthsDay(rk, f) else 0L
-      if (inc != null && sufK.length == 0) {
-        // two-pointer advance. Head: admit arrivals in or before the
-        // frame (an entry at-or-before rk in stream order is admitted —
-        // the tail test below settles whether it stays; admitting then
-        // dropping within one call nets to zero in an invertible op).
-        // Tail: drop entries strictly stream-before rk and beyond d1 —
-        // the same wrapped-distance reading as inFrame/evictBefore.
-        var go = true
-        while (go && !aheadK.isEmpty) {
-          val k = aheadK.peekFirst().longValue()
-          val admit =
-            if (monthly) k <= mHi
-            else (if (desc) k >= rk else k <= rk) || sd(k, rk) <= f
-          if (admit) {
-            winK.addLast(aheadK.removeFirst())
-            val v = aheadV.removeFirst()
-            winV.addLast(v)
-            inc.add(if (v eq NullToken) null else v)
-          } else go = false
-        }
-        go = true
-        while (go && !winK.isEmpty) {
-          val k = winK.peekFirst().longValue()
-          val drop =
-            if (monthly) k < mLo
-            else (if (desc) k > rk else k < rk) && sd(rk, k) > d1
-          if (drop) {
-            winK.removeFirst()
-            val v = winV.removeFirst()
-            inc.remove(if (v eq NullToken) null else v)
-          } else go = false
-        }
-        val fast = inc.value()
-        if (fast.asInstanceOf[AnyRef] ne IncSlide.Refold) return fast
+
+    /** Totals pass: arrivals only, positions counted here. */
+    def update(row: InternalRow): Unit = {
+      val k = keyOf(row, counter)
+      counter += 1
+      arrive(row, k, k)
+    }
+
+    /** The function's value for the row (or tie group) at key `k`. */
+    def value(k: Long): Any = {
+      if (op != null && !buffered) {
+        val gn = if (gTot == null) 0L else gTot.n
+        if (hasHi) return op.render(n, l, d, b, gn)
+        // the suffix frame: grand − prefix (exact for counts, wrapping
+        // longs and BigDecimal sums — the only sums it plans for)
+        val gs = gTot.s
+        return op.render(gn - n,
+          if (op.sum == 'l') gs.asInstanceOf[Long] - l else 0L, 0.0,
+          if (op.sum == 'b') gs.asInstanceOf[java.math.BigDecimal].subtract(b) else null,
+          gn)
       }
-      val ki = keys.iterator(); val vi = vals.iterator()
-      op.fold(new Iterator[Any] {
-        private var si = 0
-        private var nextV: Any = _
-        private var haveNext = false
-        private def inFrame(k: Long): Boolean =
-          if (monthly) k >= mLo && k <= mHi
-          else {
-            // entry before-or-at rk ⇒ within d1; after ⇒ within f
-            val back = sd(rk, k)
-            if (back != Long.MaxValue) back <= d1 || sd(k, rk) <= f
-            else sd(k, rk) <= f
-          }
-        private def advance(): Unit = {
-          while (!haveNext && ki.hasNext) {
-            val k = ki.next().longValue()
-            val v = vi.next()
-            if (inFrame(k)) {
-              nextV = if (v eq NullToken) null else v
-              haveNext = true
-            }
-          }
-          while (!haveNext && si < sufK.length) {
-            val k = sufK(si); val v = sufV(si); si += 1
-            val in = if (monthly) k <= mHi else sd(k, rk) <= f
-            if (in) { nextV = v; haveNext = true }
-          }
-        }
-        override def hasNext: Boolean = { advance(); haveNext }
-        override def next(): Any = {
-          advance()
-          if (!haveNext) throw new NoSuchElementException
-          haveNext = false
-          nextV
-        }
-      })
-    }
-    override def update(row: InternalRow): Unit = {
-      // totals-pass form: no pending queue exists — the oldest key a
-      // future row can reach back from is the current key itself
-      val k = spec.key.eval(row).asInstanceOf[Number].longValue()
-      arrive(k, spec.input.eval(row), k)
-    }
-    /** (trailing keys, trailing vals, leading keys, leading vals,
-      * lastKey | null, firstKey | null).
-      */
-    override def total(): Any = {
-      val tk = new scala.collection.mutable.ArrayBuffer[Any]()
-      val tv = new scala.collection.mutable.ArrayBuffer[Any]()
-      val mTrail = if (monthly && any) addMonthsDay(lastKey, -d1) else 0L
-      val ki = keys.iterator(); val vi = vals.iterator()
-      while (ki.hasNext) {
-        val k = ki.next().longValue(); val v = vi.next()
-        val trail =
-          if (monthly) any && k >= mTrail
-          else any && sd(lastKey, k) <= d1
-        if (trail) {
-          tk += k
-          tv += (if (v eq NullToken) null else v)
-        }
+      if (mono != null && !buffered) return bestV
+      if (lastOnly && !hasHi) return grand match {
+        case e: Ent if e.tv.nonEmpty => e.tv.last
+        case _ => null
       }
-      Array[Any](tk.toArray[Any], tv.toArray[Any],
-        leadK.toArray[Any], leadV.toArray[Any],
-        if (any) java.lang.Long.valueOf(lastKey) else null,
-        if (any) java.lang.Long.valueOf(firstKey) else null)
+      evict(k); admit(k)
+      if (op != null) {
+        val unsafe = ansiSlide && n > 0 && {
+          val m = absOf(valAt(absDq.key(0)))
+          m > 0 && n > Long.MaxValue / m
+        }
+        if (op.sum == 'd' || unsafe) refold() else op.render(n, l, d, b, 0L)
+      } else if (mono != null) { if (dq.size == 0) null else valAt(dq.key(0)) }
+      else {
+        if (lastOnly) while (nWin > pos.pick + 1) drop()
+        val i = if (pos.fromEnd) nWin - 1 - pos.pick else pos.pick
+        if (i >= 0 && i < nWin) live(i) else pos.default
+      }
     }
-    /** Prefix fold: the earlier bands' trailing entries seed the buffer
-      * (band order); leading parts are consumed by the driver's suffix
-      * assembly, not here.
+
+    /** Stream-order re-fold of the window: bit-identical double sums and
+      * the ANSI throw exactly where a prefix of the frame overflows.
       */
-    override def mergeTotal(t: Any): Unit = if (t != null) {
-      prefixSeeded = true
-      val a = t.asInstanceOf[Array[Any]]
-      val tk = a(0).asInstanceOf[Array[Any]]
-      val tv = a(1).asInstanceOf[Array[Any]]
-      var i = 0
-      while (i < tk.length) {
-        keys.addLast(java.lang.Long.valueOf(tk(i).asInstanceOf[Long]))
-        vals.addLast(if (tv(i) == null) NullToken
-          else tv(i).asInstanceOf[AnyRef])
-        if (inc != null) {
-          // a merge after enableIncremental must reach the two-pointer
-          // queues too (the current exec enables only after seeding, in
-          // which case enableIncremental's backfill covered these rows)
-          aheadK.addLast(keys.peekLast())
-          aheadV.addLast(vals.peekLast())
+    private def refold(): Any = {
+      var cn = 0L; var cl = 0L; var cd = 0.0; var i = 0
+      while (i < nWin) {
+        val v = live(i)
+        if (v != null) {
+          cn += 1
+          if (op.sum == 'l') cl = Math.addExact(cl, v.asInstanceOf[Number].longValue())
+          else cd += v.asInstanceOf[Number].doubleValue()
         }
         i += 1
       }
-      if (a(4) != null) {
-        val lk = a(4).asInstanceOf[java.lang.Long].longValue()
-        if (!any) { firstKey = lk; any = true } // prefix only seeds keys
-        lastKey = lk
-        evictBefore(lk)
-      }
+      op.render(cn, cl, cd, null, 0L)
     }
-    override def value(): Any = null
-  }
 
-  /** `lag(x, 1[, default])` — the previous row's value in window order
-    * (the constant default at the very first row): the global delta /
-    * time-series step shape.
-    * Order-sensitive; the prefix is the PRECEDING band's last row value,
-    * carried as a (value, sawRows) pair so an earlier band's legitimate
-    * null value is distinguishable from an empty prefix and still
-    * overrides. Like Spark's own lag, the value among equal order keys
-    * follows stream order — deterministic only when the order key is
-    * unique (the landing's tiebreak makes the STREAM deterministic, but
-    * the assignment within ties is layout-defined, exactly as WindowExec's
-    * is partition-defined).
-    */
-  final case class RunLag(input: Expression, default: Any = null)
-      extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      var prev: Any = null
-      var sawRows = false
-      var emitVal: Any = null
-      override def update(row: InternalRow): Unit = {
-        emitVal = if (sawRows) prev else default
-        prev = retain(input.eval(row))
-        sawRows = true
-      }
-      override def total(): Any =
-        Array[Any](prev, java.lang.Boolean.valueOf(sawRows))
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        val a = t.asInstanceOf[Array[Any]]
-        if (a(1).asInstanceOf[java.lang.Boolean].booleanValue()) {
-          prev = a(0); sawRows = true
-        }
-      }
-      override def value(): Any = emitVal
-    }
-  }
-
-  /** `lag(x, n[, default]) IGNORE NULLS` — the n-th most recent
-    * NON-NULL value among strictly preceding rows: a deque of the last
-    * ≤ n non-null values (nulls never enter), with the emitted value
-    * snapshotted BEFORE the current row folds in. The per-band total is
-    * the band's last ≤ n non-nulls; prefix merges append in band order
-    * and trim from the front — the lag ring's null-skipping twin.
-    */
-  final case class RunLagNulls(input: Expression, n: Int, default: Any)
-      extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val buf = new java.util.ArrayDeque[AnyRef](n)
-      private var emitVal: Any = default
-      private def push(v: Any): Unit = {
-        buf.addLast(v.asInstanceOf[AnyRef])
-        if (buf.size > n) buf.removeFirst()
-      }
-      override def update(row: InternalRow): Unit = {
-        emitVal = if (buf.size == n) buf.peekFirst() else default
-        val v = input.eval(row)
-        if (v != null) push(retain(v))
-      }
-      override def total(): Any = {
-        val out = new Array[Any](buf.size)
-        val it = buf.iterator()
+    /** The later bands' leading entries (or their fold, for a suffix
+      * deque) arrive at partition end.
+      */
+    def finish(suffix: Any): Unit = suffix match {
+      case null =>
+      case e: Ent =>
         var i = 0
-        while (it.hasNext) { out(i) = it.next(); i += 1 }
-        out
-      }
-      override def mergeTotal(t: Any): Unit = if (t != null)
-        t.asInstanceOf[Array[Any]].foreach(push)
-      override def value(): Any = emitVal
-    }
-  }
-
-  /** `lead(x, n[, default]) IGNORE NULLS` — the n-th NON-NULL value
-    * strictly after the row: a null run defers the lookahead
-    * unboundedly, so no bounded ring evaluates it; instead the exec
-    * buffers the PARTITION (rows in the spillable window buffer — the
-    * same population Spark's own UnboundedFollowing frame buffers —
-    * plus this function's non-null values on the heap, `cap`-guarded)
-    * and answers each row by INDEX into the partition's non-null value
-    * list: the n-th non-null after row i is global non-null index
-    * c_i + n − 1, where c_i counts non-nulls at-or-before i — a
-    * two-pointer second pass, O(rows) total. The cross-band SUFFIX is
-    * the later bands' first ≤ n non-nulls (this accumulator's total;
-    * the totals pass runs over the sorted stream); past the global end
-    * the constant default applies. The accumulator never evaluates the
-    * function — `value()` is never read.
-    */
-  final case class RunLeadNulls(input: Expression, n: Int, default: Any,
-      cap: Long = Long.MaxValue) extends RunningFunc {
-    override def rowsFrame: Boolean = true
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val firsts =
-        new scala.collection.mutable.ArrayBuffer[Any](math.min(n, 64))
-      override def update(row: InternalRow): Unit =
-        if (firsts.length < n) {
-          val v = input.eval(row)
-          if (v != null) firsts += retain(v)
+        while (i < e.lk.length) {
+          live.push(if (ordinal) lastKey + 1 + i else e.lk(i), e.lv(i))
+          i += 1
         }
-      override def total(): Any = firsts.toArray[Any]
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        // driver prefix-scan fold only — evaluation never reads these
-        // offsets; band order tops the window up like the deep-lead one
-        val a = t.asInstanceOf[Array[Any]]
-        var i = 0
-        while (firsts.length < n && i < a.length) { firsts += a(i); i += 1 }
+      case v => live.push(lastKey + 1, v)
+    }
+
+    def total(): Any =
+      if (op != null && !buffered)
+        Tot(n, op.sum match {
+          case 'l' => java.lang.Long.valueOf(l)
+          case 'd' => java.lang.Double.valueOf(d)
+          case 'b' => b
+          case _ => null
+        })
+      else if (mono != null && (!buffered || fr.hi.isEmpty))
+        if (mono.by == null) bestO else Array[Any](bestO, bestV)
+      else {
+        val from =
+          if (firstOnly) 0
+          else if (lastOnly) math.max(0, live.size - pos.pick - 1)
+          else {
+            val bnd = fr.at(if (ordinal) lastKey + 1 else lastKey, lo)
+            var i = 0
+            while (i < live.size && fr.before(live.key(i), bnd)) i += 1
+            i
+          }
+        val to = if (firstOnly) math.min(live.size, pos.pick + 1) else live.size
+        Ent(Array.tabulate(to - from)(i => live.key(from + i)),
+          Array.tabulate(to - from)(i => live(from + i)),
+          Array.tabulate(lead.size)(lead.key), Array.tabulate(lead.size)(lead(_)),
+          lastKey, any)
       }
-      override def value(): Any = null
+
+    /** Folds an EARLIER band's total in (band order). */
+    def mergeTotal(t: Any): Unit = {
+      seeded = true
+      if (t != null) t match {
+        case Tot(tn, s) =>
+          n += tn
+          op.sum match {
+            case 'l' =>
+              val x = s.asInstanceOf[java.lang.Long].longValue()
+              l = if (exact) Math.addExact(l, x) else l + x
+            case 'd' => d += s.asInstanceOf[java.lang.Double].doubleValue()
+            case 'b' => b = b.add(s.asInstanceOf[java.math.BigDecimal])
+            case _ =>
+          }
+        case e: Ent if e.any =>
+          var i = 0
+          while (i < e.tk.length) {
+            push(if (ordinal) { base += 1; base - 1 } else e.tk(i), e.tv(i))
+            i += 1
+          }
+          if (!ordinal) lastKey = e.last
+          any = true
+          evict(if (ordinal) base else e.last)
+        case _: Ent =>
+        case a: Array[Any] if mono != null =>
+          if (a(0) != null && (bestO == null || better(a(0), bestO))) {
+            bestO = a(0); bestV = a(1)
+          }
+        case v if mono != null =>
+          if (bestO == null || better(v, bestO)) { bestO = v; bestV = v }
+      }
     }
   }
 
-  /** Running `last(x, ignoreNulls = true)` — the forward-fill / as-of
-    * CARRY: at each row, the most recent non-null value at-or-before it
-    * in the window order. Order-sensitive: a band's total is its LAST
-    * non-null in sorted order, and the prefix merge lets a later band's
-    * non-null total REPLACE an earlier one (nulls pass the carry
-    * through) — merged strictly in band order on the driver.
+  /** Per band, per function: what the band's rows read past its end —
+    * the later bands' leading entries within the frame's forward reach
+    * (a count for positions, a key bound for value frames), or the fold
+    * of the later bands' totals for a suffix deque. Null when the
+    * function reads nothing forward.
     */
-  final case class RunLastNonNull(input: Expression, rowsFrame: Boolean)
-      extends RunningFunc {
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      var cur: Any = null
-      override def update(row: InternalRow): Unit = {
-        val v = input.eval(row)
-        if (v != null) cur = retain(v)
-      }
-      override def total(): Any = cur
-      override def mergeTotal(t: Any): Unit = if (t != null) cur = t
-      override def value(): Any = cur
-    }
-  }
-
-  /** `first_value(x[, ignoreNulls])` — the stream's first (non-null)
-    * value: a backward carry that never changes once set. The prefix
-    * merge lets the EARLIEST band's set value win (the exec merges the
-    * offset before any row updates, so an earlier band's value blocks
-    * later ones — exactly stream order).
-    */
-  final case class RunFirstValue(input: Expression, ignoreNulls: Boolean,
-      rowsFrame: Boolean) extends RunningFunc {
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      var v: Any = null
-      var set = false
-      override def update(row: InternalRow): Unit = if (!set) {
-        val x = input.eval(row)
-        if (x != null || !ignoreNulls) { v = retain(x); set = true }
-      }
-      override def total(): Any =
-        Array[Any](v, java.lang.Boolean.valueOf(set))
-      override def mergeTotal(t: Any): Unit = if (t != null && !set) {
-        val a = t.asInstanceOf[Array[Any]]
-        if (a(1).asInstanceOf[java.lang.Boolean].booleanValue()) {
-          v = a(0); set = true
+  def suffixes(fns: Seq[Fn], totals: Seq[Array[Any]]): Array[Array[Any]] =
+    Array.tabulate(totals.length) { i =>
+      fns.indices.map { j =>
+        val fn = fns(j)
+        if (!fn.delayed && !fn.whole) null
+        else if (fn.kind.isInstanceOf[Mono] && fn.frame.hi.isEmpty) {
+          val a = new Acc(fn, null)
+          totals.drop(i + 1).foreach(t => a.mergeTotal(t(j)))
+          a.total()
+        } else {
+          val ks = new scala.collection.mutable.ArrayBuffer[Long]()
+          val vs = new scala.collection.mutable.ArrayBuffer[Any]()
+          val mine = totals(i)(j).asInstanceOf[Ent]
+          val reach: Long => Boolean = fn.frame.hi match {
+            case Some(h) if fn.key != null =>
+              k => !fn.frame.before(fn.frame.at(mine.last, h), k)
+            case Some(h) => _ => ks.length < h
+            case None => _ => ks.length <= fn.kind.asInstanceOf[Pos].pick
+          }
+          val it = totals.iterator.drop(i + 1).map(_(j).asInstanceOf[Ent])
+          var stop = false
+          while (!stop && it.hasNext) {
+            val e = it.next()
+            var q = 0
+            while (!stop && q < e.lk.length) {
+              if (reach(e.lk(q))) { ks += e.lk(q); vs += e.lv(q); q += 1 }
+              else stop = true
+            }
+          }
+          Ent(Array.empty, Array.empty, ks.toArray, vs.toArray, 0L, ks.nonEmpty)
         }
-      }
-      override def value(): Any = v
+      }.toArray[Any]
     }
-  }
-
-  /** `nth_value(x, n[, ignoreNulls])` over the cumulative frame — the
-    * n-th (non-null) value from the stream's start: null until n
-    * qualifying rows arrive, constant after. The prefix is the earlier
-    * bands' first ≤ n qualifying values, merged earliest-first.
-    */
-  final case class RunNth(input: Expression, n: Int, ignoreNulls: Boolean,
-      rowsFrame: Boolean) extends RunningFunc {
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val firsts =
-        new scala.collection.mutable.ArrayBuffer[Any](math.min(n, 64))
-      override def update(row: InternalRow): Unit =
-        if (firsts.length < n) {
-          val x = input.eval(row)
-          if (x != null || !ignoreNulls) firsts += retain(x)
-        }
-      override def total(): Any = firsts.toArray[Any]
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        val a = t.asInstanceOf[Array[Any]]
-        var i = 0
-        while (firsts.length < n && i < a.length) { firsts += a(i); i += 1 }
-      }
-      override def value(): Any =
-        if (firsts.length >= n) firsts(n - 1) else null
-    }
-  }
-
-  /** `max_by` / `min_by(value, ordering)` — the running ARGMAX carry:
-    * the value at the best non-null ordering seen so far. Strict
-    * comparison keeps the FIRST pair among ordering ties in stream
-    * order — Spark's own MaxBy/MinBy update posture — which also makes
-    * the band-order prefix merge exact (earlier bands merge first, and
-    * a later equal ordering never replaces). A null VALUE at the best
-    * ordering is a legitimate answer; only null orderings are skipped.
-    */
-  final case class RunMinMaxBy(valueExpr: Expression, ordExpr: Expression,
-      ordType: DataType, isMax: Boolean, rowsFrame: Boolean)
-      extends RunningFunc {
-    override def orderSensitive: Boolean = true
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(valueExpr = BindReferences.bindReference(valueExpr, in),
-        ordExpr = BindReferences.bindReference(ordExpr, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val ord = TypeUtils.getInterpretedOrdering(ordType)
-      var bestOrd: Any = null
-      var bestVal: Any = null
-      // STRICT inequality: an equal ordering never replaces — the first
-      // pair in stream order wins ties, like Spark's own update
-      private def better(o: Any): Boolean = bestOrd == null || {
-        val c = ord.compare(o, bestOrd)
-        if (isMax) c > 0 else c < 0
-      }
-      override def update(row: InternalRow): Unit = {
-        val o = ordExpr.eval(row)
-        if (o != null && better(o)) {
-          bestOrd = retain(o)
-          bestVal = retain(valueExpr.eval(row))
-        }
-      }
-      override def total(): Any = Array[Any](bestOrd, bestVal)
-      override def mergeTotal(t: Any): Unit = if (t != null) {
-        val a = t.asInstanceOf[Array[Any]]
-        if (a(0) != null && better(a(0))) {
-          bestOrd = a(0); bestVal = a(1)
-        }
-      }
-      override def value(): Any = bestVal
-    }
-  }
-
-  final case class RunMinMax(input: Expression, dt: DataType,
-      isMin: Boolean, rowsFrame: Boolean) extends RunningFunc {
-    override def bound(in: Seq[Attribute]): RunningFunc =
-      copy(input = BindReferences.bindReference(input, in))
-    override def newAcc(grand: Any): RunAcc = new RunAcc {
-      private val ord = TypeUtils.getInterpretedOrdering(dt)
-      var cur: Any = null
-      private def fold(v: Any): Unit =
-        if (cur == null || (ord.compare(v, cur) < 0) == isMin)
-          cur = retain(v)
-      override def update(row: InternalRow): Unit = {
-        val v = input.eval(row)
-        if (v != null) fold(v)
-      }
-      override def total(): Any = cur
-      override def mergeTotal(t: Any): Unit = if (t != null) fold(t)
-      override def value(): Any = cur
-    }
-  }
 }
-

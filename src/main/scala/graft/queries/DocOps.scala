@@ -1354,7 +1354,7 @@ object DocOps {
   /** GLOBAL delta — `lag(x, 1) OVER (ORDER BY key)` with no PARTITION BY,
     * the time-series step shape: the previous row's value crosses band
     * boundaries via the preceding band's last-row prefix
-    * ([[graft.plans.RunningWindow.RunLag]]), zero exchange. The unique
+    * ([[graft.plans.RunningWindow.Pos]]), zero exchange. The unique
     * oid key makes the pairing deterministic and oracle-checkable.
     */
   private def q178RangeLag(s: SparkSession, d: String): DataFrame = {
@@ -1712,7 +1712,7 @@ object DocOps {
     * user writes over a date column: the whole-day interval boundary
     * converts to the date key's own day units and the frame evicts by
     * day distance, zero exchange
-    * ([[graft.plans.RunningWindow.RunRangeSliding]]). Output projects
+    * ([[graft.plans.RunningWindow.Frame]]). Output projects
     * the day int (never a raw DATE in an oracle-checked result — the
     * house tz rule).
     */
@@ -1735,8 +1735,8 @@ object DocOps {
     * mean). Month distance is monotone in the key — the frame bound is
     * `add_months(current, -3)` with Spark's month-end clamping, so the
     * live-pair buffer evicts by the per-row calendar bound, zero
-    * exchange ([[graft.plans.RunningWindow.RunRangeSliding]] with
-    * [[graft.plans.RunningWindow.MonthDist]]). The avg rides as
+    * exchange ([[graft.plans.RunningWindow.Frame]] with
+    * [[graft.plans.RunningWindow.Months]]). The avg rides as
     * sum/count per the house oracle rule.
     */
   private def q199RangeMonthInterval(s: SparkSession, d: String): DataFrame =
@@ -1777,7 +1777,7 @@ object DocOps {
     * zero exchange: emission delays behind the m-slot ring, each row's
     * frame completes when its +m row arrives, and the cross-band
     * forward SUFFIX is the next bands' first m values
-    * ([[graft.plans.RunningWindow.RunSlidingFwd]]). Both frames share
+    * ([[graft.plans.RunningWindow.Frame]]). Both frames share
     * one Window node (the analyzer groups by ordering, not frame) and
     * one band exec. Unique oid keys make every ROWS frame
     * deterministic.
@@ -1877,7 +1877,7 @@ object DocOps {
     * Spark's own TimestampAddYMInterval boundary — still monotone in
     * the key, so the live-pair buffer evicts by the per-row calendar
     * bound with zero exchange
-    * ([[graft.plans.RunningWindow.MonthTsDist]]). The session tz is
+    * ([[graft.plans.RunningWindow.Months]]). The session tz is
     * UTC house-wide (GraftSession), where DuckDB's zone-less
     * `ts - INTERVAL 1 MONTH` agrees instant-for-instant, so the frame
     * is oracle-checkable; output projects epoch micros per the house
@@ -1903,9 +1903,9 @@ object DocOps {
     * own `add_months(key, +1)` — non-strictly monotone over DATE keys
     * (the clamp plateau carries no time-of-day), so the key-released
     * pending queue applies with zero exchange
-    * ([[graft.plans.RunningWindow.RunRangeFwd]] with `monthly`);
+    * ([[graft.plans.RunningWindow.Frame]] with `monthly`);
     * month-forward over TIMESTAMP keys refuses (plateau inversion —
-    * [[graft.plans.RunningWindow.MonthTsDist]]'s adjudication).
+    * [[graft.plans.RunningWindow.Months]]'s adjudication).
     * DuckDB agrees exactly over dates, so the frame is directly
     * oracle-checkable; output projects the day int per the house rule.
     */
@@ -1924,12 +1924,12 @@ object DocOps {
 
   /** SUFFIX family closure — the q206 remaining-budget shape extended
     * with `avg(v)` (exact-integer-sum inversion ÷ count,
-    * [[graft.plans.RunningWindow.RunSuffixAvgLong]] — the render is
+    * [[graft.plans.RunningWindow.Inv]] — the render is
     * one IEEE division of exact operands, so the oracle's
     * `CAST(sum AS DOUBLE)/count` matches bit-for-bit) and
     * `last_value(v)` (the GLOBAL last in window order — a constant
     * through the grand fold,
-    * [[graft.plans.RunningWindow.RunSuffixLast]]); zero exchange.
+    * [[graft.plans.RunningWindow.Pos]]); zero exchange.
     * This query's prefix pass COMPUTES (v is a derived alias — no
     * sidecar borrow — and the last-value carry is order-dependent);
     * PlanSpec pins the zero-pass metadata prefix for a suffix count
@@ -1954,11 +1954,11 @@ object DocOps {
     * UNBOUNDED FOLLOWING)` ("tokens left from this document onward" —
     * what corpus packing reads). The suffix inverts from the GRAND fold
     * minus the running prefix ([[graft.plans.RunningWindow
-    * .RunSuffixCount]] and kin) — zero exchange, zero extra state; the
+    * .Inv]] and kin) — zero exchange, zero extra state; the
     * decimal sum keeps ANSI-exact inversion (ANSI LONG suffix sums
     * refuse: subtraction can't reproduce a per-row refold's overflow);
     * the max rides the partition-buffered backward fold
-    * ([[graft.plans.RunningWindow.RunSuffixMinMax]]).
+    * ([[graft.plans.RunningWindow.Mono]]).
     */
   private def q206RangeRemainingBudget(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1982,7 +1982,7 @@ object DocOps {
     * key-ordered pending queue once an event strictly beyond its +15min
     * bound arrives (keys only ascend, so the frame is then provably
     * complete); the cross-band forward suffix is the next bands'
-    * leading entries ([[graft.plans.RunningWindow.RunRangeFwd]]) — zero
+    * leading entries ([[graft.plans.RunningWindow.Frame]]) — zero
     * exchange, buffers bounded by the 30-minute window population.
     */
   private def q204RangeEventContext(s: SparkSession, d: String): DataFrame =
@@ -2052,7 +2052,7 @@ object DocOps {
     * preceding rows, over a column that is null on every 7th cent
     * value. Bounded: a deque of the last n non-nulls per band, with
     * the earlier bands' trailing non-nulls as the prefix — zero
-    * exchange ([[graft.plans.RunningWindow.RunLagNulls]]); lead IGNORE
+    * exchange ([[graft.plans.RunningWindow.Pos]]); lead IGNORE
     * NULLS takes the partition-buffered index path instead (q202).
     */
   private def q197RangeLagIgnoreNulls(s: SparkSession, d: String): DataFrame = {
@@ -2075,7 +2075,7 @@ object DocOps {
     * values on the heap — and answers by INDEX into the non-null list,
     * with the later bands' first n non-nulls as the cross-band suffix:
     * still zero exchange, full band parallelism
-    * ([[graft.plans.RunningWindow.RunLeadNulls]]).
+    * ([[graft.plans.RunningWindow.Pos]]).
     */
   private def q202RangeLeadIgnoreNulls(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("oid"))
@@ -2165,7 +2165,7 @@ object DocOps {
     * WindowExec. The band strategy buffers only the frame's live
     * (key, value) pairs, evicting by key distance, with the trailing
     * frame carried across bands
-    * ([[graft.plans.RunningWindow.RunRangeSliding]]) — zero exchange.
+    * ([[graft.plans.RunningWindow.Frame]]) — zero exchange.
     * Duplicate days are peer groups sharing the frame (tie-deterministic,
     * so hash-checkable); the avg rides as sum/count, not a windowed
     * avg, per the house oracle rule.
@@ -2188,7 +2188,7 @@ object DocOps {
     * `lead(v, 1, -5)` over the range layout, zero exchange: deep lead
     * delays each row's emission behind a 3-slot ring whose cross-band
     * SUFFIX is the next bands' first values
-    * ([[graft.plans.RunningWindow.RunLeadN]]); lag(2, -1) rides the
+    * ([[graft.plans.RunningWindow.Pos]]); lag(2, -1) rides the
     * O(1) ring with the constant default replacing the
     * fell-off-the-start nulls; lead(1, -5) keeps the one-row lookahead
     * with a defaulted global last row. The unique oid key makes every

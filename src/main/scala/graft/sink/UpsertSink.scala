@@ -213,7 +213,7 @@ object UpsertSink {
           def flush(): Unit = if (pending.nonEmpty) {
             try { ps.executeBatch(); conn.commit() }
             catch {
-              case _: java.sql.SQLException if permissive =>
+              case e: java.sql.SQLException if permissive =>
                 // the reference's skip-bad-rows mode: undo the batch, then
                 // replay it row-wise, committing survivors and counting
                 // offenders (user_table.py:116-121). Only genuine row
@@ -221,8 +221,14 @@ object UpsertSink {
                 // transient failure mid-replay (deadlock, dropped
                 // connection) propagates out of the loop so the task fails
                 // and Spark retries, rather than being miscounted as N
-                // bad rows.
-                conn.rollback(); reprepare()
+                // bad rows. A rollback that fails too (08003 once the
+                // driver has closed the session) must not mask the batch's
+                // own error: that one propagates, the rollback's rides along.
+                try conn.rollback()
+                catch {
+                  case r: java.sql.SQLException => e.addSuppressed(r); throw e
+                }
+                reprepare()
                 pending.foreach { row =>
                   try { bind(ps, row, paramIdx); ps.executeUpdate(); conn.commit() }
                   catch {

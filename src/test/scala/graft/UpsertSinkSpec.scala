@@ -144,6 +144,69 @@ class UpsertSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!UpsertSink.isRowFault(new SQLException("no state", null: String)))
   }
 
+  test("permissive replay keeps the batch's root cause when the rollback fails too") {
+    import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
+    import java.sql.{Connection, PreparedStatement, SQLException}
+    clear()
+    // a driver whose batches fail with a non-row SQLSTATE and take the
+    // session down with them (Derby's behaviour after an internal error):
+    // the replay's rollback then sees 08003 on the closed connection
+    def proxy[T](cls: Class[T], target: AnyRef)(
+        hook: (Method, Array[AnyRef]) => Option[AnyRef]): T =
+      cls.cast(Proxy.newProxyInstance(getClass.getClassLoader,
+        Array[Class[_]](cls), new InvocationHandler {
+          override def invoke(p: AnyRef, m: Method, a: Array[AnyRef]): AnyRef =
+            hook(m, a).getOrElse {
+              try m.invoke(target, (if (a == null) Array.empty[AnyRef] else a): _*)
+              catch { case e: InvocationTargetException => throw e.getCause }
+            }
+        }))
+    val prefix = "jdbc:graftfault:"
+    val driver = new java.sql.Driver {
+      override def connect(u: String, info: java.util.Properties): Connection =
+        if (!acceptsURL(u)) null
+        else {
+          val real = DriverManager.getConnection(url)
+          proxy(classOf[Connection], real) { (m, a) =>
+            if (m.getName != "prepareStatement") None
+            else Some(proxy(classOf[PreparedStatement],
+                real.prepareStatement(a(0).asInstanceOf[String])) { (pm, _) =>
+              if (pm.getName != "executeBatch") None
+              else {
+                real.rollback(); real.close()
+                throw new SQLException("injected batch failure", "XJ001")
+              }
+            })
+          }
+        }
+      override def acceptsURL(u: String): Boolean = u.startsWith(prefix)
+      override def getPropertyInfo(u: String, info: java.util.Properties) =
+        Array.empty[java.sql.DriverPropertyInfo]
+      override def getMajorVersion: Int = 1
+      override def getMinorVersion: Int = 0
+      override def jdbcCompliant(): Boolean = false
+      override def getParentLogger = java.util.logging.Logger.getGlobal
+    }
+    DriverManager.registerDriver(driver)
+    try {
+      val batch = Seq((1, "a", "Alice", false)).toDF("id", "_id", "name", "deleted")
+      val e = intercept[org.apache.spark.SparkException] {
+        UpsertSink.upsert(batch, prefix + "grafttest", "users", update,
+          DerbyUpsertDialect, tolerance = WriteTolerance.Permissive)
+      }
+      val root = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq.last
+      assert(root.isInstanceOf[SQLException] &&
+        root.asInstanceOf[SQLException].getSQLState == "XJ001",
+        s"innermost cause must be the batch failure, not $root")
+      assert(root.getSuppressed.exists {
+        case s: SQLException => s.getSQLState == "08003"
+        case _ => false
+      }, "the failed rollback rides along as suppressed")
+    } finally DriverManager.deregisterDriver(driver)
+    assert(readAll().isEmpty)
+  }
+
   test("policy referencing an absent column is rejected eagerly") {
     val df = Seq((1, "a")).toDF("id", "_id")
     intercept[IllegalArgumentException] {

@@ -513,6 +513,100 @@ class WindowProps extends AnyFunSuite {
       .over(w.rowsBetween(-1000000, Window.currentRow)))
   }
 
+  test("sliding min/max whose extreme leaves the frame, and ANSI sums past a huge value, match WindowExec") {
+    import org.apache.spark.sql.types.StringType
+    val sSchema = StructType(Seq(StructField("k", LongType),
+      StructField("v", LongType), StructField("s", StringType)))
+    // per file, a sorted key run whose values fall then rise (the
+    // frame's extreme sits at its trailing edge and is evicted next),
+    // with nulls and repeated values; strings ride the same shape
+    def land(keys: Seq[Long], name: String): String = {
+      val root = Files.createTempDirectory(name).toString
+      keys.grouped(9).zipWithIndex.foreach { case (ks, f) =>
+        Files.write(Paths.get(root, f"f$f%02d.jsonl"), (ks.map { k =>
+          val v = math.abs((k % 13) - 6)
+          if (k % 7 == 3) s"""{"k": $k}"""
+          else s"""{"k": $k, "v": $v, "s": "s_${"%02d".format(v)}"}"""
+        }.mkString("\n") + "\n").getBytes("UTF-8"))
+      }
+      ZoneMaps.build(spark, root, sSchema, Seq("k"))
+      root
+    }
+    val uniq = land((0L until 40L), "graft_wprops_dq")
+    val ties = land((0L until 40L).map(_ / 3), "graft_wprops_dqt")
+    Seq(Window.orderBy(col("k")), Window.orderBy(col("k").desc)).foreach { w =>
+      // ROWS frames over UNIQUE keys (positional frames are only
+      // deterministic there), trailing and forward
+      sets(_.select(col("k"), col("v"), col("s"),
+        min(col("v")).over(w.rowsBetween(-3, 0)).as("a"),
+        max(col("v")).over(w.rowsBetween(-3, 0)).as("b"),
+        min(col("s")).over(w.rowsBetween(-2, 0)).as("c"),
+        max(col("s")).over(w.rowsBetween(-4, 0)).as("d")), uniq, sSchema)
+      sets(_.select(col("k"), col("v"), col("s"),
+        min(col("v")).over(w.rowsBetween(-2, 3)).as("e"),
+        max(col("s")).over(w.rowsBetween(0, 4)).as("f")), uniq, sSchema)
+      // RANGE frames over DUPLICATE keys: tie groups share the frame
+      sets(_.select(col("k"), col("v"), col("s"),
+        min(col("v")).over(w.rangeBetween(-2, 0)).as("g"),
+        max(col("v")).over(w.rangeBetween(-3, -1)).as("h"),
+        min(col("s")).over(w.rangeBetween(-1, 0)).as("i"),
+        max(col("s")).over(w.rangeBetween(-2, 0)).as("j")), ties, sSchema)
+      sets(_.select(col("k"), col("v"), col("s"),
+        max(col("v")).over(w.rangeBetween(-1, 2)).as("l"),
+        min(col("s")).over(w.rangeBetween(0, 3)).as("m")), ties, sSchema)
+    }
+    // ANSI long sums (the session default): a huge early value that
+    // LEAVES the frame must not make later frames throw, and frames
+    // whose live values overflow must throw exactly where WindowExec does
+    val big = Long.MaxValue - 100
+    def landBig(vs: Seq[Long], name: String): String = {
+      val root = Files.createTempDirectory(name).toString
+      vs.zipWithIndex.grouped(4).zipWithIndex.foreach { case (g, f) =>
+        Files.write(Paths.get(root, f"f$f%02d.jsonl"), (g.map { case (v, k) =>
+          s"""{"k": $k, "v": $v}"""
+        }.mkString("\n") + "\n").getBytes("UTF-8"))
+      }
+      ZoneMaps.build(spark, root, schema, Seq("k"))
+      root
+    }
+    val w = Window.orderBy(col("k"))
+    val leaves = landBig(Seq(big) ++ Seq.fill(15)(1L), "graft_wprops_big")
+    sets(_.select(col("k"), col("v"),
+      sum(col("v")).over(w.rowsBetween(-2, 0)).as("r"),
+      sum(col("v")).over(w.rowsBetween(-1, 2)).as("f"),
+      sum(col("v")).over(w.rangeBetween(-2, 0)).as("g")), leaves)
+    val overflows = landBig(Seq(1L, 2L, big, 3L, big, 5L, 6L, 7L), "graft_wprops_ovf2")
+    Seq(w.rowsBetween(-2, 0), w.rangeBetween(-3, 0), w.rowsBetween(-1, 1)).foreach { f =>
+      def q(src: DataFrame) = src.select(col("k"), sum(col("v")).over(f).as("x"))
+      val banded = q(ExtendedJson.read(spark, schema, overflows, Map("zoneMaps" -> "true")))
+      assert(TestPlans.executedNodes(banded).exists(_.isInstanceOf[BandRunningWindowExec]))
+      intercept[Exception](banded.collect())
+      intercept[Exception](q(ExtendedJson.read(spark, schema, overflows, Map.empty)).collect())
+    }
+  }
+
+  test("lag, lead and nth offsets across many small bands match WindowExec") {
+    (71 to 73).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      // up to 14 files over ~40 unique keys: bands of a few rows, so
+      // every offset below reaches across several band boundaries
+      val root = gen(rnd, keyPool = 30 + rnd.nextInt(15), maxFiles = 14,
+        uniqueKeys = true)
+      Seq(Window.orderBy(col("k")), Window.orderBy(col("k").desc)).foreach { w =>
+        sets(_.select(col("k"), col("v"),
+          lag(col("v"), 5).over(w).as("a"),
+          lead(col("v"), 7, -1L).over(w).as("b"),
+          lag(col("v"), 4, null, ignoreNulls = true).over(w).as("c"),
+          lead(col("v"), 6, null, ignoreNulls = true).over(w).as("d")), root)
+        sets(_.select(col("k"), col("v"),
+          nth_value(col("v"), 6).over(w).as("e"),
+          nth_value(col("v"), 9, ignoreNulls = true).over(w).as("f"),
+          lead(col("v"), 1).over(w).as("g"),
+          lag(col("v"), 1).over(w).as("h")), root)
+      }
+    }
+  }
+
   test("deep lead mixed with lead(1): string lookahead survives spilled tie groups") {
     import org.apache.spark.sql.types.StringType
     val sSchema = StructType(Seq(

@@ -12,10 +12,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class RangeFrameGuardSpec extends AnyFunSuite {
   import RunningWindow._
 
-  private def acc(dist: RangeDist, cap: Long) =
-    RunRangeSliding(BoundReference(0, LongType, nullable = false),
+  /** `count(v) OVER (ORDER BY k RANGE BETWEEN lo PRECEDING AND CURRENT
+    * ROW)`, `lo` in `dist` units; `value()` reads at the last key fed.
+    */
+  private final class Probe(lo: Long, dist: Dist, cap: Long) {
+    private val a = new Acc(Fn(Inv(Op.Count),
       BoundReference(1, LongType, nullable = true),
-      dist, desc = false, SlideOp.Count, cap).newAcc()
+      Frame(rows = false, Some(-lo), Some(0L), dist = dist),
+      BoundReference(0, LongType, nullable = false), cap), null)
+    private var last = 0L
+    def update(r: GenericInternalRow): Unit = { last = r.getLong(0); a.update(r) }
+    def value(): Any = a.value(last)
+  }
+  private def acc(dist: (Long, Dist), cap: Long) = new Probe(dist._1, dist._2, cap)
+  private def FixedDist(lo: Long, hi: Long) = (lo, Linear)
+  private def MonthDist(lo: Int, hi: Int) = (lo.toLong, Months(None))
 
   private def row(k: Long, v: Long): GenericInternalRow =
     new GenericInternalRow(Array[Any](k, v))
