@@ -92,13 +92,7 @@ case class BandRunningWindowExec(windowExprs: Seq[NamedExpression],
     case f: org.apache.spark.sql.execution.FilterExec =>
       narrowTotalsPlan(f.child, needed ++ f.condition.references)
         .map(org.apache.spark.sql.execution.FilterExec(f.condition, _))
-    case o: OrderedBandScanExec
-        if o.scan != null && o.scan.partCols.isEmpty &&
-          o.scan.pushedAggs.isEmpty &&
-          // a pushed sort/top-N could reference a column the pruning
-          // drops — the narrowed reader would then fail to bind its
-          // sort ordering; those modes run the unpruned plan instead
-          o.scan.pushedSorts.isEmpty && o.scan.pushedTopN < 0 =>
+    case o: OrderedBandScanExec if BandLayout.prunable(o.scan) =>
       val keep = needed ++
         org.apache.spark.sql.catalyst.expressions.AttributeSet(
           o.sortOrder.flatMap(_.references))

@@ -4,15 +4,14 @@ import org.apache.spark.{Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Descending, Literal, NullsFirst, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Descending, Literal, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.connector.read.PartitionReaderFactory
-import org.apache.spark.sql.execution.{FilterExec, LeafExecNode, ProjectExec, SortExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.aggregate.AggUtils
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.ingest.v2.{ExtJsonInputPartition, ExtJsonScan, OrderedBandGroup}
 
@@ -50,89 +49,22 @@ import graft.ingest.v2.{ExtJsonInputPartition, ExtJsonScan, OrderedBandGroup}
   * BY survives the append-mostly lifecycle of a real corpus.
   * `Sort + Limit` shapes never reach here — Spark's own
   * TakeOrderedAndProject plans them first, composing with the scan's
-  * pushed top-N and the sorted-scan early exit instead.
+  * pushed top-N and the sorted-scan early exit instead. The Sort
+  * matches its scan through the peel rule of [[BandLayout]], as the
+  * range aggregate and the band windows do.
   */
-object OrderedScanStrategy {
-
-  /** The operators a band-layout rewrite may be separated from its scan
-    * relation by without being defeated — both preserve in-partition row
-    * order and the band partitioning claim: an ALIAS-FREE Project (pure
-    * column selection/permutation — the shape V2ScanRelationPushDown
-    * leaves above a pruned scan when the SELECT order differs from the
-    * read-schema order; an aliasing Project would rebind exprIds the
-    * sort order references) and a deterministic residual Filter (removal
-    * never reorders; nondeterministic conditions are row-order-sensitive
-    * and must not be re-staged). SQL text (`SELECT b, a FROM t ORDER BY
-    * a`) routinely plans these intermediates where the DataFrame idiom
-    * `.orderBy(...).select(...)` does not — without the peel, the SQL
-    * twin of the same query silently pays the full range Exchange.
-    */
-  private[plans] def peel(p: LogicalPlan,
-      above: List[LogicalPlan]): Option[(DataSourceV2ScanRelation, List[LogicalPlan])] =
-    p match {
-      case rel: DataSourceV2ScanRelation => Some((rel, above))
-      case pr: Project
-          if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-        peel(pr.child, pr :: above)
-      case f: Filter if f.condition.deterministic =>
-        peel(f.child, f :: above)
-      case _ => None
-    }
-
-  /** Re-stage the peeled intermediates in their ORIGINAL nesting:
-    * `above` accumulates by prepending during the descent, so its HEAD
-    * is the innermost node — foldLeft wraps the base innermost-first,
-    * reproducing the logical chain exactly. (The former foldRight
-    * INVERTED the nesting: row content survived — attribute-only
-    * Projects and exprId binding keep the column sets honest — but a
-    * Filter hoisted above a Project that dropped one of its referenced
-    * columns failed to bind at execution: `SELECT b … WHERE <residual
-    * on a> ORDER BY b` with `a` pruned away.) Filter/Project over
-    * attributes preserve both ordering claims and the RangePartitioning
-    * in either nesting; the original one also always binds.
-    */
-  private[plans] def restage(above: List[LogicalPlan],
-      base: SparkPlan): SparkPlan =
-    above.foldLeft(base) {
-      case (child, pr: Project) => ProjectExec(pr.projectList, child)
-      case (child, f: Filter) => FilterExec(f.condition, child)
-      case (_, other) => throw new IllegalStateException(
-        s"unpeelable node ${other.nodeName}")
-    }
-}
-
 class OrderedScanStrategy(session: SparkSession) extends SparkStrategy {
-  import OrderedScanStrategy.{peel, restage}
+  import BandLayout.{BandRel, bandKey, bandScan, peel}
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case s: Sort if s.global && s.order.nonEmpty =>
-      (s.order.head, peel(s.child, Nil)) match {
-        case (first @ SortOrder(attr: AttributeReference,
-            Ascending | Descending, _, _), Some((rel, above))) =>
-          rel.scan match {
-            case scan: ExtJsonScan
-              if rel.output.exists(_.exprId == attr.exprId) &&
-                s.order.forall(_.references.subsetOf(s.child.outputSet)) =>
-              scan.orderedBandPartitions(attr.name) match {
-                case Some(bands) if bands.nonEmpty =>
-                  val desc = first.direction == Descending
-                  val ordered =
-                    OrderedBandScanExec(rel.output, s.order, scan,
-                      if (desc) bands.reverse else bands,
-                      // the read streams rows ASC in-band: only the
-                      // single-ASC-NULLS-FIRST shape may claim the
-                      // requested ordering verbatim (null ordering is
-                      // vacuous — the proof is null-free — but the
-                      // claim must still match the ask exactly)
-                      claimOrdering = !desc && s.order.length == 1 &&
-                        first.nullOrdering == NullsFirst)
-                  val chain = restage(above, ordered)
-                  if (ordered.claimOrdering) chain :: Nil
-                  else SortExec(s.order, global = false, chain) :: Nil
-                case _ => Nil
-              }
-            case _ => Nil
-          }
+    case s: Sort if s.global && s.order.nonEmpty &&
+        s.order.forall(_.references.subsetOf(s.child.outputSet)) =>
+      (s.order.head, peel(s.child)) match {
+        case (SortOrder(attr: AttributeReference, Ascending | Descending, _, _),
+            (BandRel(rel, scan), above)) =>
+          bandKey(rel, scan, Seq(attr)).map { case (_, groups) =>
+            bandScan(rel, scan, groups, s.order, above)
+          }.toList
         case _ => Nil
       }
     case _ => Nil
@@ -171,106 +103,84 @@ class OrderedScanStrategy(session: SparkSession) extends SparkStrategy {
   * equal keys (hence equal (key, x) pairs) never straddle bands.
   */
 class RangeAggStrategy(session: SparkSession) extends SparkStrategy {
-  import OrderedScanStrategy.{peel, restage}
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
+  import BandLayout.{BandRel, bandKey, bandScan, peel}
+  import org.apache.spark.sql.catalyst.expressions.{Alias, EqualTo, Expression, If, IsNaN, NamedExpression}
   import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
   import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
+  import org.apache.spark.sql.types._
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PhysicalAggregation(groupingExprs, aggExprs, resultExprs, child)
         if groupingExprs.nonEmpty &&
           aggExprs.forall(_.isInstanceOf[AggregateExpression]) =>
-      peel(child, Nil) match {
-        case Some((rel, above)) =>
-          rel.scan match {
-            case scan: ExtJsonScan if scan.rangeAggregation =>
-              // the band key: a grouping attribute whose layout the
-              // sidecar proves into strictly-disjoint sorted groups
-              val keyed = groupingExprs.collectFirst {
-                case a: AttributeReference
-                    if rel.output.exists(_.exprId == a.exprId) &&
-                      scan.orderedBandPartitions(a.name)
-                        .exists(_.nonEmpty) =>
-                  (a, scan.orderedBandPartitions(a.name).get)
-              }
-              keyed match {
-                case Some((k, groups)) =>
-                  val bands = OrderedBandScanExec(rel.output,
-                    Seq(SortOrder(k, Ascending)), scan, groups,
-                    claimOrdering = false)
-                  val aggs = aggExprs.map(_.asInstanceOf[AggregateExpression])
-                  val (distinct, plain) = aggs.partition(_.isDistinct)
-                  if (distinct.isEmpty)
-                    AggUtils.planAggregateWithoutDistinct(
-                      groupingExprs, aggs, resultExprs,
-                      restage(above, bands))
-                  else {
-                    // ONE distinct column set (several functions may
-                    // share it — the shape the optimizer's Expand
-                    // rewrite leaves single): the whole four-exec
-                    // distinct pipeline clusters on supersets of the
-                    // grouping, which the band claim satisfies — the
-                    // distinct rollup's BOTH exchanges are gone. More
-                    // than one distinct set never reaches a strategy.
-                    val sets = distinct.map(
-                      _.aggregateFunction.children.filterNot(_.foldable)
-                        .map(_.canonicalized)).distinct
-                    // normalize floats exactly where Spark's own
-                    // Aggregation strategy does: the partial group-by
-                    // keys on the distinct expressions, and without the
-                    // normalization 0.0/-0.0 (and NaN bit patterns)
-                    // would dedup as DISTINCT values — a silent
-                    // divergence from the engine's own answer. Nested
-                    // float-bearing distinct types refuse (Spark
-                    // normalizes them structurally; rare enough that
-    // falling back beats replicating that machinery).
-                    def floaty(dt: org.apache.spark.sql.types.DataType): Boolean = {
-                      import org.apache.spark.sql.types._
-                      dt match {
-                        case DoubleType | FloatType => true
-                        case st: StructType =>
-                          st.fields.exists(f => floaty(f.dataType))
-                        case at: ArrayType => floaty(at.elementType)
-                        case mt: MapType =>
-                          floaty(mt.keyType) || floaty(mt.valueType)
-                        case _ => false
-                      }
-                    }
-                    val distinctExprs = distinct.head.aggregateFunction
-                      .children.filterNot(_.foldable)
-                    if (sets.length != 1 || sets.head.isEmpty ||
-                      distinctExprs.exists(e => floaty(e.dataType) &&
-                        e.dataType != org.apache.spark.sql.types.DoubleType &&
-                        e.dataType != org.apache.spark.sql.types.FloatType))
-                      Nil
-                    else {
-                      import org.apache.spark.sql.catalyst.expressions.{EqualTo, If, IsNaN}
-                      def norm(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-                        e.dataType match {
-                          case org.apache.spark.sql.types.DoubleType =>
-                            If(IsNaN(e), Literal(Double.NaN),
-                              If(EqualTo(e, Literal(0.0d)), Literal(0.0d), e))
-                          case org.apache.spark.sql.types.FloatType =>
-                            If(IsNaN(e), Literal(Float.NaN),
-                              If(EqualTo(e, Literal(0.0f)), Literal(0.0f), e))
-                          case _ => e
-                        }
-                      val named = distinctExprs.map(e => norm(e) match {
-                        case ne: org.apache.spark.sql.catalyst.expressions.NamedExpression => ne
-                        case other =>
-                          org.apache.spark.sql.catalyst.expressions
-                            .Alias(other, e.toString)()
-                      })
-                      AggUtils.planAggregateWithOneDistinct(
-                        groupingExprs, distinct, plain, distinctExprs,
-                        named, resultExprs, restage(above, bands))
-                    }
+      peel(child) match {
+        // the band key: a grouping attribute whose layout the sidecar
+        // proves into strictly-disjoint sorted groups
+        case (BandRel(rel, scan), above) if scan.rangeAggregation =>
+          bandKey(rel, scan, groupingExprs) match {
+            case Some((k, groups)) =>
+              val bands = bandScan(rel, scan, groups,
+                Seq(SortOrder(k, Ascending)), above, sorted = false)
+              val aggs = aggExprs.map(_.asInstanceOf[AggregateExpression])
+              val (distinct, plain) = aggs.partition(_.isDistinct)
+              if (distinct.isEmpty)
+                AggUtils.planAggregateWithoutDistinct(
+                  groupingExprs, aggs, resultExprs, bands)
+              else {
+                // ONE distinct column set (several functions may share
+                // it — the shape the optimizer's Expand rewrite leaves
+                // single): the whole four-exec distinct pipeline
+                // clusters on supersets of the grouping, which the band
+                // claim satisfies — the distinct rollup's BOTH exchanges
+                // are gone. More than one distinct set never reaches a
+                // strategy.
+                val sets = distinct.map(
+                  _.aggregateFunction.children.filterNot(_.foldable)
+                    .map(_.canonicalized)).distinct
+                // normalize floats exactly where Spark's own Aggregation
+                // strategy does: the partial group-by keys on the
+                // distinct expressions, and without the normalization
+                // 0.0/-0.0 (and NaN bit patterns) would dedup as
+                // DISTINCT values — a silent divergence from the
+                // engine's own answer. Nested float-bearing distinct
+                // types refuse (Spark normalizes them structurally;
+                // rare enough that falling back beats replicating that
+                // machinery).
+                def floaty(dt: DataType): Boolean = dt match {
+                  case DoubleType | FloatType => true
+                  case st: StructType => st.fields.exists(f => floaty(f.dataType))
+                  case at: ArrayType => floaty(at.elementType)
+                  case mt: MapType => floaty(mt.keyType) || floaty(mt.valueType)
+                  case _ => false
+                }
+                val distinctExprs = distinct.head.aggregateFunction
+                  .children.filterNot(_.foldable)
+                if (sets.length != 1 || sets.head.isEmpty ||
+                  distinctExprs.exists(e => floaty(e.dataType) &&
+                    e.dataType != DoubleType && e.dataType != FloatType))
+                  Nil
+                else {
+                  def norm(e: Expression) = e.dataType match {
+                    case DoubleType =>
+                      If(IsNaN(e), Literal(Double.NaN),
+                        If(EqualTo(e, Literal(0.0d)), Literal(0.0d), e))
+                    case FloatType =>
+                      If(IsNaN(e), Literal(Float.NaN),
+                        If(EqualTo(e, Literal(0.0f)), Literal(0.0f), e))
+                    case _ => e
                   }
-                case None => Nil
+                  val named = distinctExprs.map(e => norm(e) match {
+                    case ne: NamedExpression => ne
+                    case other => Alias(other, e.toString)()
+                  })
+                  AggUtils.planAggregateWithOneDistinct(
+                    groupingExprs, distinct, plain, distinctExprs,
+                    named, resultExprs, bands)
+                }
               }
-            case _ => Nil
+            case None => Nil
           }
-        case None => Nil
+        case _ => Nil
       }
     case _ => Nil
   }
@@ -310,8 +220,7 @@ case class OrderedBandScanExec(output: Seq[Attribute],
       s", merged=${groups.count(_.files.lengthCompare(1) > 0)})"
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val schema = StructType(output.map(a =>
-      StructField(a.name, a.dataType, a.nullable)))
+    val schema = BandStreams.schemaOf(output)
     // the merge comparator, bound to the scan output — claimOrdering
     // implies a single ASC key, so the generated ordering IS the full
     // requested order
@@ -327,90 +236,6 @@ case class OrderedBandScanExec(output: Seq[Attribute],
 
 private final class BandPartition(override val index: Int,
     val files: Seq[Seq[ExtJsonInputPartition]]) extends Partition
-
-/** The two stream shapes every band consumer shares — the ordered scan's
-  * RDD and the range merge join's sides.
-  */
-private[plans] object BandStreams {
-
-  /** One file's rows in file order: its splits chained, each reader
-    * closed EAGERLY at exhaustion — a wide band chops into many splits
-    * and one open stream per split held to task completion would
-    * exhaust file descriptors; the completion listener stays as the
-    * failure-path (task-killed mid-band) safety net, and Hadoop stream
-    * close is idempotent.
-    */
-  def fileRows(factory: PartitionReaderFactory,
-      splits: Seq[ExtJsonInputPartition],
-      context: TaskContext): Iterator[InternalRow] =
-    splits.iterator.flatMap { p =>
-      val reader = factory.createReader(p)
-      var closed = false
-      def closeOnce(): Unit = if (!closed) { closed = true; reader.close() }
-      context.addTaskCompletionListener[Unit](_ => closeOnce())
-      new Iterator[InternalRow] {
-        private var ready = false
-        private var done = false
-        override def hasNext: Boolean = {
-          if (!ready && !done) {
-            ready = reader.next()
-            if (!ready) { done = true; closeOnce() }
-          }
-          ready
-        }
-        override def next(): InternalRow = {
-          if (!hasNext) throw new NoSuchElementException
-          ready = false
-          reader.get()
-        }
-      }
-    }
-
-  /** K-way merge of per-file sorted streams under `ord`. Each stream
-    * gets its OWN projection (projections reuse their target buffer)
-    * and every buffered head is a copy — one live copy per stream;
-    * rows come out as UnsafeRows in `schema` order.
-    */
-  def merged(factory: PartitionReaderFactory,
-      files: Seq[Seq[ExtJsonInputPartition]], schema: StructType,
-      ord: Ordering[InternalRow],
-      context: TaskContext): Iterator[InternalRow] = {
-    final class Stream(it: Iterator[InternalRow]) {
-      private val proj = UnsafeProjection.create(schema)
-      var head: InternalRow = _
-      def advance(): Boolean =
-        it.hasNext && { head = proj(it.next()).copy(); true }
-    }
-    val pq = new java.util.PriorityQueue[Stream](files.length,
-      (a: Stream, b: Stream) => ord.compare(a.head, b.head))
-    files.foreach { splits =>
-      val s = new Stream(fileRows(factory, splits, context))
-      if (s.advance()) pq.add(s)
-    }
-    new Iterator[InternalRow] {
-      override def hasNext: Boolean = !pq.isEmpty
-      override def next(): InternalRow = {
-        val s = pq.poll()
-        val r = s.head
-        if (s.advance()) pq.add(s)
-        r
-      }
-    }
-  }
-
-  /** One SIDE's globally key-sorted stream: its disjoint groups in min
-    * order, each group sequential (one file) or k-way merged (several).
-    */
-  def sideRows(factory: PartitionReaderFactory,
-      groups: Seq[OrderedBandGroup], schema: StructType,
-      ord: Ordering[InternalRow],
-      context: TaskContext): Iterator[InternalRow] =
-    groups.iterator.flatMap { g =>
-      if (g.files.lengthCompare(1) <= 0)
-        g.files.iterator.flatMap(fileRows(factory, _, context))
-      else merged(factory, g.files, schema, ord, context)
-    }
-}
 
 /** Reads each group's files; a file's splits stream SEQUENTIALLY in
   * offset order — byte order is row order for JSONL, so the

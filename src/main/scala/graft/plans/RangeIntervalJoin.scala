@@ -6,18 +6,16 @@ import org.apache.spark.{Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeReference, BasePredicate, BoundReference, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, JoinedRow, LessThan, LessThanOrEqual, Predicate, PredicateHelper, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeReference, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, JoinedRow, LessThan, LessThanOrEqual, Predicate, PredicateHelper, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.connector.read.PartitionReaderFactory
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.DataType
 
-import graft.ingest.v2.{ExtJsonScan, FilterEval, OrderedBandGroup}
+import graft.ingest.v2.{FilterEval, OrderedBandGroup}
 
 /** ZERO-exchange INTERVAL-OVERLAP join of range-landed drops — the
   * non-equi join users write right after the as-of: `iv.s <= p.k AND
@@ -53,11 +51,12 @@ import graft.ingest.v2.{ExtJsonScan, FilterEval, OrderedBandGroup}
   * shape — the cap re-checks at runtime regardless). INNER and LEFT
   * OUTER with the points side on the left (the preserved side);
   * residual conjuncts beyond the two range ones evaluate per
-  * candidate pair, Spark's ON semantics.
+  * candidate pair, Spark's ON semantics. Both sides match through the
+  * join-side peel of [[BandLayout]], like the merge join's.
   */
 class RangeIntervalJoinStrategy(session: SparkSession) extends SparkStrategy
     with PredicateHelper {
-  import RangeIntervalJoinStrategy._
+  import BandLayout.{Side, side}
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: Join => planJoin(j) match {
@@ -80,7 +79,7 @@ class RangeIntervalJoinStrategy(session: SparkSession) extends SparkStrategy
       if (!conjuncts.forall(c => c.deterministic && !c.exists(
         _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]])))
         return None
-      (peelSide(l), peelSide(r)) match {
+      (side(l), side(r)) match {
         case (Some(pSide), Some(iSide)) =>
           // normalize every inequality conjunct to lhs <(=) rhs
           def ineq(e: Expression)
@@ -96,26 +95,20 @@ class RangeIntervalJoinStrategy(session: SparkSession) extends SparkStrategy
                   b: AttributeReference) => Some((b, a, true))
               case _ => None
             }
-          def ofPoints(a: AttributeReference): Boolean =
-            pSide.output.exists(_.exprId == a.exprId)
-          def ofIntervals(a: AttributeReference): Boolean =
-            iSide.output.exists(_.exprId == a.exprId)
           val ineqs = conjuncts.flatMap(c => ineq(c).map(c -> _))
           // the pair: (s <= k) and (k <= e), s/e from the intervals
           // side, the SAME k from the points side
           val pair = (for {
             (c1, (s, k1, strictS)) <- ineqs.iterator
-            if ofIntervals(s) && ofPoints(k1)
+            if iSide.owns(s) && pSide.owns(k1)
             (c2, (k2, e, strictE)) <- ineqs.iterator
-            if !(c2 eq c1) && ofPoints(k2) && ofIntervals(e) &&
+            if !(c2 eq c1) && pSide.owns(k2) && iSide.owns(e) &&
               k2.exprId == k1.exprId
           } yield (c1, c2, s, e, k1, strictS, strictE)).nextOption()
           pair match {
             case Some((c1, c2, s, e, k, strictS, strictE))
                 if k.dataType == s.dataType && s.dataType == e.dataType &&
                   integralKey(k.dataType) &&
-                  pSide.rel.output.exists(_.exprId == k.exprId) &&
-                  iSide.rel.output.exists(_.exprId == s.exprId) &&
                   iSide.rel.output.exists(_.exprId == e.exprId) =>
               val residual = {
                 val rest = conjuncts.filterNot(c => (c eq c1) || (c eq c2))
@@ -137,10 +130,8 @@ class RangeIntervalJoinStrategy(session: SparkSession) extends SparkStrategy
       strictS: Boolean, strictE: Boolean,
       residual: Option[Expression]): Option[RangeIntervalJoinExec] = {
     val dt = k.dataType
-    val pGroups = pSide.scan.orderedBandPartitions(k.name)
-      .filter(_.nonEmpty).getOrElse(return None)
-    val iGroups = iSide.scan.orderedBandPartitions(s.name)
-      .filter(_.nonEmpty).getOrElse(return None)
+    val pGroups = pSide.groups(k).getOrElse(return None)
+    val iGroups = iSide.groups(s).getOrElse(return None)
     // per-group (sMin, sMax, eMax, rows) from the sidecar — refused
     // under pushed filters (stats are completeness-gated), and the
     // width bound is unknowable without e's stats
@@ -178,47 +169,10 @@ class RangeIntervalJoinStrategy(session: SparkSession) extends SparkStrategy
       (pg, rel)
     }
     val keyInOutput = output.find(_.exprId == k.exprId).getOrElse(k)
-    Some(RangeIntervalJoinExec(dt, output,
-      MergeSideExec(pSide.rel.output, pSide.output, pSide.filters,
-        pSide.rel.output.indexWhere(_.exprId == k.exprId),
-        pSide.output.indexWhere(_.exprId == k.exprId), pSide.scan),
-      MergeSideExec(iSide.rel.output, iSide.output, iSide.filters,
-        iSide.rel.output.indexWhere(_.exprId == s.exprId),
-        iSide.output.indexWhere(_.exprId == s.exprId), iSide.scan),
+    Some(RangeIntervalJoinExec(dt, output, pSide.exec(k), iSide.exec(s),
       iSide.output.indexWhere(_.exprId == e.exprId),
       strictS, strictE, outer, residual,
       SortOrder(keyInOutput, Ascending), cap, parts))
-  }
-
-  /** Alias-free Project / deterministic Filter peel down to an extjson
-    * scan (the RangeMergeJoinStrategy peel, minus its dynamic-pruning
-    * handling — DPP subscribes to equi-join keys, which this join has
-    * none of).
-    */
-  private def peelSide(p: LogicalPlan): Option[Side] = {
-    def peel(q: LogicalPlan): Option[LogicalPlan] = q match {
-      case pr: Project
-          if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-        peel(pr.child)
-      case f: Filter if f.condition.deterministic && !f.condition.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]) =>
-        peel(f.child)
-      case rel: DataSourceV2ScanRelation => Some(rel)
-      case _ => None
-    }
-    def filtersOf(q: LogicalPlan): Seq[Expression] = q match {
-      case pr: Project => filtersOf(pr.child)
-      case f: Filter => f.condition +: filtersOf(f.child)
-      case _ => Nil
-    }
-    peel(p).flatMap { rel =>
-      rel.asInstanceOf[DataSourceV2ScanRelation].scan match {
-        case sc: ExtJsonScan =>
-          Some(Side(rel.asInstanceOf[DataSourceV2ScanRelation], sc,
-            filtersOf(p), p.output))
-        case _ => None
-      }
-    }
   }
 
   private def integralKey(dt: DataType): Boolean = {
@@ -231,14 +185,6 @@ class RangeIntervalJoinStrategy(session: SparkSession) extends SparkStrategy
   }
 
   private def asLong(v: Any): Long = v.asInstanceOf[Number].longValue()
-}
-
-private[plans] object RangeIntervalJoinStrategy {
-  /** One peeled side: the scan relation, peeled residual filters (over
-    * the scan's raw output), and the side's logical output.
-    */
-  final case class Side(rel: DataSourceV2ScanRelation, scan: ExtJsonScan,
-      filters: Seq[Expression], output: Seq[Attribute])
 }
 
 /** One points band group = one partition; rows stream in point-key ASC
@@ -287,41 +233,16 @@ case class RangeIntervalJoinExec(keyType: DataType,
     * RangeMergeJoinExec posture): same partitions, same sweep keys and
     * bounds, but each side converts only `needed` plus the structural
     * set (point key, interval start/end, side filters, the residual).
-    * None for shapes the pruned reader can't mirror (partition
-    * columns, pushed aggregates/sorts/top-N) — the caller runs the
-    * unpruned plan, never wrong.
     */
   private[plans] def narrowForTotals(
       needed: org.apache.spark.sql.catalyst.expressions.AttributeSet)
       : Option[RangeIntervalJoinExec] = {
-    def prunable(s: MergeSideExec): Boolean =
-      s.scan != null && s.scan.partCols.isEmpty &&
-        s.scan.pushedAggs.isEmpty && s.scan.pushedSorts.isEmpty &&
-        s.scan.pushedTopN < 0
-    if (!prunable(points) || !prunable(intervals)) return None
-    val keep = scala.collection.mutable.Set.empty[
-      org.apache.spark.sql.catalyst.expressions.ExprId]
-    needed.foreach(a => keep += a.exprId)
-    keep += points.relOutput(points.relKeyOrdinal).exprId
-    keep += intervals.relOutput(intervals.relKeyOrdinal).exprId
-    val eId = intervals.output(eOrdinal).exprId
-    keep += eId
-    (points.filters ++ intervals.filters)
-      .foreach(_.references.foreach(keep += _.exprId))
-    residual.foreach(_.references.foreach(keep += _.exprId))
-    def prune(s: MergeSideExec): MergeSideExec = {
-      val keyId = s.relOutput(s.relKeyOrdinal).exprId
-      val relOut = s.relOutput.filter(a => keep(a.exprId))
-      val out = s.output.filter(a => keep(a.exprId))
-      MergeSideExec(relOut, out, s.filters,
-        relOut.indexWhere(_.exprId == keyId),
-        out.indexWhere(_.exprId == keyId),
-        s.scan.pruneTo(relOut.map(_.name)))
-    }
-    val nIv = prune(intervals)
-    Some(copy(output = output.filter(a => keep(a.exprId)),
-      points = prune(points), intervals = nIv,
-      eOrdinal = nIv.output.indexWhere(_.exprId == eId)))
+    val e = intervals.output(eOrdinal)
+    BandLayout.pruneSides(Seq(points, intervals), needed + e, residual.toSeq)
+      .map { case (keep, Seq(p, iv)) =>
+        copy(output = output.filter(a => keep(a.exprId)), points = p,
+          intervals = iv, eOrdinal = iv.output.indexWhere(_.exprId == e.exprId))
+      }
   }
 }
 
@@ -355,48 +276,23 @@ private final class RangeIntervalJoinRDD(
       new IntervalPartition(i, pg, igs)
     }.toArray
 
-  private def toStruct(attrs: Seq[Attribute]): StructType =
-    StructType(attrs.map(a => StructField(a.name, a.dataType, a.nullable)))
-
   private def cmp(a: Any, b: Any): Int =
     FilterEval.compareInternal(keyType, a, b)
-
-  private def sideStream(side: MergeSideExec,
-      factory: PartitionReaderFactory, groups: Seq[OrderedBandGroup],
-      context: TaskContext, pIdx: Int): Iterator[InternalRow] = {
-    val relSchema = toStruct(side.relOutput)
-    val ord: Ordering[InternalRow] = new LazilyGeneratedOrdering(Seq(
-      SortOrder(BoundReference(side.relKeyOrdinal, keyType,
-        nullable = false), Ascending)))
-    var it = BandStreams.sideRows(factory, groups, relSchema, ord, context)
-    if (side.filters.nonEmpty) {
-      val pred = Predicate.create(side.filters.reduce(And), side.relOutput)
-      pred.initialize(pIdx)
-      it = it.filter(pred.eval)
-    }
-    if (side.output.map(_.exprId) != side.relOutput.map(_.exprId)) {
-      val proj = UnsafeProjection.create(side.output.map { a =>
-        val ix = side.relOutput.indexWhere(_.exprId == a.exprId)
-        BoundReference(ix, a.dataType,
-          a.nullable || side.relOutput(ix).nullable): Expression
-      })
-      it = it.map(proj)
-    }
-    it
-  }
 
   override def compute(split: Partition,
       context: TaskContext): Iterator[InternalRow] = {
     val p = split.asInstanceOf[IntervalPartition]
-    val l = sideStream(points, pFactory, Seq(p.pGroup), context, p.index)
-    val r = sideStream(intervals, iFactory, p.iGroups, context, p.index)
+    val l = BandStreams.sideRows(points, pFactory, Seq(p.pGroup), keyType,
+      context, p.index)
+    val r = BandStreams.sideRows(intervals, iFactory, p.iGroups, keyType,
+      context, p.index)
     val kOrd = points.outKeyOrdinal
     val sOrd = intervals.outKeyOrdinal
     val iWidth = intervals.output.length
     val outA = points.output ++
       (if (outer) intervals.output.map(_.withNullability(true))
       else intervals.output)
-    val proj = UnsafeProjection.create(toStruct(outA))
+    val proj = UnsafeProjection.create(BandStreams.schemaOf(outA))
     val joined = new JoinedRow
     val nullRight = new GenericInternalRow(iWidth)
     val pred = residual.map { ex =>
@@ -494,16 +390,6 @@ private final class RangeIntervalJoinRDD(
     }
     // remap to the exec's declared output attribute order when the
     // stream layout differs (row-local; claims survive)
-    val mapped =
-      if (outA.map(_.exprId) == outAttrs.map(_.exprId)) base
-      else {
-        val proj2 = UnsafeProjection.create(outAttrs.map { a =>
-          val ix = outA.indexWhere(_.exprId == a.exprId)
-          BoundReference(ix, a.dataType,
-            a.nullable || outA(ix).nullable): Expression
-        })
-        base.map(proj2)
-      }
-    mapped.map { row => rowCount += 1; row }
+    BandStreams.remap(base, outA, outAttrs).map { row => rowCount += 1; row }
   }
 }

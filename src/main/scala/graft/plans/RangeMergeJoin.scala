@@ -6,18 +6,16 @@ import org.apache.spark.{Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeReference, BasePredicate, BoundReference, EqualTo, Expression, GenericInternalRow, JoinedRow, Predicate, PredicateHelper, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeReference, BasePredicate, EqualTo, Expression, GenericInternalRow, JoinedRow, Predicate, PredicateHelper, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.connector.read.PartitionReaderFactory
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.DataType
 
-import graft.ingest.v2.{ExtJsonScan, FilterEval, OrderedBandGroup}
+import graft.ingest.v2.{FilterEval, OrderedBandGroup}
 
 /** ZERO-exchange, ZERO-sort equi-join of RANGE-LANDED document drops
   * — the range-layout analogue of the storage-partitioned join: when the
@@ -50,12 +48,11 @@ import graft.ingest.v2.{ExtJsonScan, FilterEval, OrderedBandGroup}
   * The match admits the shapes real SQL leaves between a join and its
   * scans — none of which defeats the layout proof:
   *
-  *  - an ALIAS-FREE Project (pure column selection/permutation — the
-  *    residue V2ScanRelationPushDown leaves above a pruned scan) and a
-  *    deterministic residual Filter on EITHER side: a pushed-only
+  *  - the join-side peel of [[BandLayout]] on EITHER side: a pushed-only
   *    Filter preserves sortedness and band disjointness alike (the join
-  *    needs no completeness, unlike the window's metadata path), so
-  *    both re-stage INSIDE the merge partitions, before the merge;
+  *    needs no completeness, unlike the window's metadata path), so the
+  *    peeled Filters and Projects re-stage INSIDE the merge partitions,
+  *    before the merge;
   *  - a CONJUNCTIVE condition `l.k = r.k AND <residual>`: the merge
   *    runs on the provable band-key equality and evaluates the
   *    remaining conjuncts per candidate pair — TRUE joins, FALSE/NULL
@@ -66,8 +63,8 @@ import graft.ingest.v2.{ExtJsonScan, FilterEval, OrderedBandGroup}
   *    base left key (by exprId): the chained merge streams the inner
   *    join's key-ordered output straight into the next merge — N
   *    co-landed drops join end-to-end with ZERO exchanges, where the
-  *    ordinary plan pays a shuffle per hop. Alias-free Projects /
-  *    deterministic Filters between the joins re-stage between steps.
+  *    ordinary plan pays a shuffle per hop. The side peel's Filters and
+  *    Projects between the joins re-stage between steps.
   *
   * Partition construction is the cross-side overlap sweep over ALL
   * sides at once: every side's disjoint band groups, min-sorted
@@ -88,6 +85,7 @@ import graft.ingest.v2.{ExtJsonScan, FilterEval, OrderedBandGroup}
   */
 class RangeMergeJoinStrategy(session: SparkSession) extends SparkStrategy
     with PredicateHelper {
+  import BandLayout.{peel, side}
   import RangeMergeJoinStrategy._
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -106,47 +104,6 @@ class RangeMergeJoinStrategy(session: SparkSession) extends SparkStrategy
     */
   private[plans] def planChain(j: Join): Option[RangeMergeJoinExec] =
     matchChain(j).map(buildExec)
-
-  /** Peel the operators a merge side may be separated from its scan by:
-    * alias-free Projects and deterministic Filters (outermost-first in
-    * the returned list). DYNAMIC-PRUNING conjuncts (the runtime filters
-    * Spark injects expecting its own shuffle join) are DROPPED, not
-    * re-staged: they are pruning hints, semantically redundant by
-    * construction — Spark itself replaces an unusable one with `true`
-    * (PlanDynamicPruningFilters), and the band alignment already prunes
-    * one-sided ranges at plan time. Any OTHER plan-bearing expression
-    * (a subquery) refuses the peel — it cannot evaluate row-local.
-    */
-  private def peelOps(p: LogicalPlan,
-      acc: List[LogicalPlan]): (LogicalPlan, List[LogicalPlan]) = p match {
-    case pr: Project
-        if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      peelOps(pr.child, pr :: acc)
-    case f: Filter if f.condition.deterministic =>
-      val (dpp, rest) = splitConjunctivePredicates(f.condition)
-        .partition(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.expressions.DynamicPruning])
-      if (rest.exists(_.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]])))
-        (p, acc) // a true subquery: stop — the side will refuse
-      else if (rest.isEmpty) peelOps(f.child, acc)
-      else if (dpp.isEmpty) peelOps(f.child, f :: acc)
-      else peelOps(f.child, Filter(rest.reduce(And), f.child) :: acc)
-    case other => (other, acc)
-  }
-
-  private def peelSide(p: LogicalPlan): Option[Side] = {
-    val (core, ops) = peelOps(p, Nil)
-    core match {
-      case rel: DataSourceV2ScanRelation => rel.scan match {
-        case s: ExtJsonScan =>
-          Some(Side(rel, s,
-            ops.collect { case f: Filter => f.condition }, p.output))
-        case _ => None
-      }
-      case _ => None
-    }
-  }
 
   /** Match a join (possibly a left-deep chain of joins) over peelable
     * range-landed scans. Every join's condition must contain one
@@ -172,17 +129,15 @@ class RangeMergeJoinStrategy(session: SparkSession) extends SparkStrategy
       if (!conjuncts.forall(c => c.deterministic && !c.exists(
         _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]])))
         return None
-      peelSide(r).flatMap { rSide =>
-        val (lCore, lOps) = peelOps(l, Nil)
+      side(r).flatMap { rSide =>
+        val (lCore, lOps) = peel(l, joinSide = true)
         val lOut = l.outputSet
 
         def orient(e: Expression): Option[(AttributeReference, AttributeReference)] =
           e match {
             case EqualTo(a: AttributeReference, b: AttributeReference) =>
-              if (lOut.contains(a) && rSide.output.exists(_.exprId == b.exprId))
-                Some((a, b))
-              else if (lOut.contains(b) &&
-                rSide.output.exists(_.exprId == a.exprId)) Some((b, a))
+              if (lOut.contains(a) && rSide.owns(b)) Some((a, b))
+              else if (lOut.contains(b) && rSide.owns(a)) Some((b, a))
               else None
             case _ => None
           }
@@ -191,11 +146,6 @@ class RangeMergeJoinStrategy(session: SparkSession) extends SparkStrategy
           val rest = conjuncts.filterNot(_ eq chosen)
           if (rest.isEmpty) None else Some(rest.reduce(And))
         }
-
-        def rightGroups(rk: AttributeReference): Option[Seq[OrderedBandGroup]] =
-          if (rSide.rel.output.exists(_.exprId == rk.exprId))
-            rSide.scan.orderedBandPartitions(rk.name).filter(_.nonEmpty)
-          else None
 
         lCore match {
           case lj: Join =>
@@ -209,7 +159,7 @@ class RangeMergeJoinStrategy(session: SparkSession) extends SparkStrategy
                 orient(c).flatMap { case (lk, rk) =>
                   if (lk.exprId == inner.keyAttr.exprId &&
                     lk.dataType == rk.dataType)
-                    rightGroups(rk).map(g =>
+                    rSide.groups(rk).map(g =>
                       inner.copy(
                         steps = inner.steps :+ ChainStep(jt, rSide, g, rk,
                           residualOf(c), lOps),
@@ -219,22 +169,15 @@ class RangeMergeJoinStrategy(session: SparkSession) extends SparkStrategy
               }.nextOption()
             }
           case _ =>
-            peelSide(l).flatMap { lSide =>
+            side(l).flatMap { lSide =>
               conjuncts.iterator.flatMap { c =>
-                orient(c).flatMap { case (lk, rk) =>
-                  if (lk.dataType == rk.dataType &&
-                    lSide.rel.output.exists(_.exprId == lk.exprId))
-                    lSide.scan.orderedBandPartitions(lk.name)
-                      .filter(_.nonEmpty).flatMap { lg =>
-                        rightGroups(rk).map { rg =>
-                          Chain(lk.dataType, lk, lSide, lg,
-                            List(ChainStep(jt, rSide, rg, rk,
-                              residualOf(c), Nil)),
-                            j.output)
-                        }
-                      }
-                  else None
-                }
+                orient(c).filter { case (lk, rk) => lk.dataType == rk.dataType }
+                  .flatMap { case (lk, rk) =>
+                    for (lg <- lSide.groups(lk); rg <- rSide.groups(rk))
+                      yield Chain(lk.dataType, lk, lSide, lg,
+                        List(ChainStep(jt, rSide, rg, rk, residualOf(c), Nil)),
+                        j.output)
+                  }
               }.nextOption()
             }
         }
@@ -244,18 +187,12 @@ class RangeMergeJoinStrategy(session: SparkSession) extends SparkStrategy
 }
 
 private[plans] object RangeMergeJoinStrategy {
-
-  /** One relation side after peeling: the scan, the peeled residual
-    * filter conjuncts (over the scan's raw output), and the side's
-    * logical output (post alias-free projection).
-    */
-  final case class Side(rel: DataSourceV2ScanRelation,
-      scan: ExtJsonScan, filters: Seq[Expression], output: Seq[Attribute])
+  import BandLayout.Side
 
   /** One chained join step: its type, right side + proven groups, the
     * right key, the residual condition (over prev-output ++ right
     * output), and the interstitial ops peeled between this join and the
-    * previous one (outermost-first, as peeled).
+    * previous one (innermost-first, as peeled).
     */
   final case class ChainStep(joinType: JoinType, side: Side,
       groups: Seq[OrderedBandGroup], rightKey: AttributeReference,
@@ -266,14 +203,10 @@ private[plans] object RangeMergeJoinStrategy {
       steps: List[ChainStep], output: Seq[Attribute])
 
   private[plans] def buildExec(c: Chain): RangeMergeJoinExec = {
-    val sides = MergeSideExec(c.base, c.keyAttr) +:
-      c.steps.map(s => MergeSideExec(s.side, s.rightKey))
+    val sides = c.base.exec(c.keyAttr) +: c.steps.map(s => s.side.exec(s.rightKey))
     val steps = c.steps.map { s =>
       MergeStepExec(s.joinType, s.residual,
-        // peelOps accumulates by PREPENDING during the descent, so the
-        // list is already innermost-first — exactly the application
-        // order (a Filter below a Project must run before it, or its
-        // referenced-but-projected-away columns would fail to bind)
+        // the peel returns innermost-first — the application order
         s.pre.map {
           case pr: Project => StreamProject(
             pr.projectList.map(_.asInstanceOf[AttributeReference]))
@@ -297,23 +230,6 @@ private[plans] object RangeMergeJoinStrategy {
     RangeMergeJoinExec(c.keyType, c.output, sides, steps,
       SortOrder(keyInOutput, Ascending), parts)
   }
-}
-
-/** One merge side, serializable up to the transient scan: the scan's
-  * raw output, the peeled filters over it, the side's logical output,
-  * and the key's ordinal in both.
-  */
-final case class MergeSideExec(relOutput: Seq[Attribute],
-    output: Seq[Attribute], filters: Seq[Expression],
-    relKeyOrdinal: Int, outKeyOrdinal: Int,
-    @transient scan: ExtJsonScan)
-
-private[plans] object MergeSideExec {
-  def apply(s: RangeMergeJoinStrategy.Side,
-      key: AttributeReference): MergeSideExec =
-    MergeSideExec(s.rel.output, s.output, s.filters,
-      s.rel.output.indexWhere(_.exprId == key.exprId),
-      s.output.indexWhere(_.exprId == key.exprId), s.scan)
 }
 
 /** Interstitial stream ops re-staged between chained merge steps —
@@ -426,47 +342,22 @@ case class RangeMergeJoinExec(keyType: DataType,
     * streams the same partitions and merges on the same keys, but every
     * side reads only the columns the pass folds — `needed` plus the
     * structural set (side keys, side filters, residuals, interstitial
-    * stream filters). None when a side carries partition columns (the
-    * reader's schema then stops mirroring the side output) — the caller
-    * falls back to the full chain, never wrong.
+    * stream filters). None when a side's reader cannot mirror a pruned
+    * output ([[BandLayout.prunable]]) — the caller falls back to the
+    * full chain, never wrong.
     */
   private[plans] def narrowForTotals(
       needed: org.apache.spark.sql.catalyst.expressions.AttributeSet)
-      : Option[RangeMergeJoinExec] = {
-    if (sides.exists(s => s.scan == null || s.scan.partCols.nonEmpty))
-      return None
-    val keep = scala.collection.mutable.Set.empty[
-      org.apache.spark.sql.catalyst.expressions.ExprId]
-    needed.foreach(a => keep += a.exprId)
-    sides.foreach { s =>
-      keep += s.relOutput(s.relKeyOrdinal).exprId
-      s.filters.foreach(_.references.foreach(keep += _.exprId))
+      : Option[RangeMergeJoinExec] =
+    BandLayout.pruneSides(sides, needed, steps.flatMap(st =>
+      st.residual.toSeq ++ st.preOps.collect { case StreamFilter(c) => c })
+    ).map { case (keep, nSides) =>
+      copy(output = output.filter(a => keep(a.exprId)), sides = nSides,
+        steps = steps.map(st => st.copy(preOps = st.preOps.map {
+          case StreamProject(o) => StreamProject(o.filter(a => keep(a.exprId)))
+          case f => f
+        })))
     }
-    steps.foreach { st =>
-      st.residual.foreach(_.references.foreach(keep += _.exprId))
-      st.preOps.foreach {
-        case StreamFilter(c) => c.references.foreach(keep += _.exprId)
-        case _ => ()
-      }
-    }
-    val nSides = sides.map { s =>
-      val keyId = s.relOutput(s.relKeyOrdinal).exprId
-      val relOut = s.relOutput.filter(a => keep(a.exprId))
-      val out = s.output.filter(a => keep(a.exprId))
-      MergeSideExec(relOut, out, s.filters,
-        relOut.indexWhere(_.exprId == keyId),
-        out.indexWhere(_.exprId == keyId),
-        s.scan.pruneTo(relOut.map(_.name)))
-    }
-    val nSteps = steps.map { st =>
-      st.copy(preOps = st.preOps.map {
-        case StreamProject(o) => StreamProject(o.filter(a => keep(a.exprId)))
-        case f => f
-      })
-    }
-    Some(copy(output = output.filter(a => keep(a.exprId)),
-      sides = nSides, steps = nSteps))
-  }
 }
 
 private final class ChainPartition(override val index: Int,
@@ -500,39 +391,14 @@ private final class RangeMergeChainRDD(
   override protected def getPartitions: Array[Partition] =
     parts.indices.map(i => new ChainPartition(i, parts(i))).toArray
 
-  private def toStruct(attrs: Seq[Attribute]): StructType =
-    StructType(attrs.map(a => StructField(a.name, a.dataType, a.nullable)))
-
   private def cmpKeys(a: Any, b: Any): Int =
     FilterEval.compareInternal(keyType, a, b)
 
   override def compute(split: Partition,
       context: TaskContext): Iterator[InternalRow] = {
     val p = split.asInstanceOf[ChainPartition]
-
-    def sideStream(i: Int): Iterator[InternalRow] = {
-      val s = sides(i)
-      val relSchema = toStruct(s.relOutput)
-      val ord: Ordering[InternalRow] = new LazilyGeneratedOrdering(Seq(
-        SortOrder(BoundReference(s.relKeyOrdinal, keyType,
-          nullable = false), Ascending)))
-      var it = BandStreams.sideRows(factories(i), p.groups(i), relSchema,
-        ord, context)
-      if (s.filters.nonEmpty) {
-        val pred = Predicate.create(s.filters.reduce(And), s.relOutput)
-        pred.initialize(split.index)
-        it = it.filter(pred.eval)
-      }
-      if (s.output.map(_.exprId) != s.relOutput.map(_.exprId)) {
-        val proj = UnsafeProjection.create(s.output.map { a =>
-          val ix = s.relOutput.indexWhere(_.exprId == a.exprId)
-          BoundReference(ix, a.dataType,
-            a.nullable || s.relOutput(ix).nullable): Expression
-        })
-        it = it.map(proj)
-      }
-      it
-    }
+    def sideStream(i: Int) = BandStreams.sideRows(sides(i), factories(i),
+      p.groups(i), keyType, context, split.index)
 
     var cur = sideStream(0)
     var attrs = sides(0).output
@@ -545,361 +411,160 @@ private final class RangeMergeChainRDD(
           pred.initialize(split.index)
           cur = cur.filter(pred.eval)
         case StreamProject(out) =>
-          val in = attrs
-          val proj = UnsafeProjection.create(out.map { a =>
-            val ix = in.indexWhere(_.exprId == a.exprId)
-            BoundReference(ix, a.dataType,
-              a.nullable || in(ix).nullable): Expression
-          })
-          cur = cur.map(proj)
+          cur = BandStreams.remap(cur, attrs, out)
           attrs = out
           keyOrd = attrs.indexWhere(_.exprId == keyExprId)
       }
       val right = sides(k + 1)
-      val rs = sideStream(k + 1)
       val residual = st.residual.map { e =>
         val pr = Predicate.create(e, attrs ++ right.output)
         pr.initialize(split.index)
         pr
       }
-      st.joinType match {
-        case LeftSemi | LeftAnti =>
-          cur = new ExistenceIter(cur, rs, anti = st.joinType == LeftAnti,
-            keyOrd, right.outKeyOrdinal, residual,
-            UnsafeProjection.create(toStruct(attrs)))
-        case LeftOuter | Inner =>
-          val outer = st.joinType == LeftOuter
-          val outAttrs = attrs ++
-            (if (outer) right.output.map(_.withNullability(true))
-            else right.output)
-          cur = new MatchIter(cur, rs, outer, keyOrd, right.outKeyOrdinal,
-            right.output.length, residual,
-            UnsafeProjection.create(toStruct(outAttrs)))
-          attrs = outAttrs
-        case FullOuter =>
-          val outAttrs = attrs.map(_.withNullability(true)) ++
-            right.output.map(_.withNullability(true))
-          cur = new FullOuterIter(cur, rs, keyOrd, right.outKeyOrdinal,
-            attrs.length, right.output.length, residual,
-            UnsafeProjection.create(toStruct(outAttrs)))
-          attrs = outAttrs
+      val nullable = (as: Seq[Attribute]) => as.map(_.withNullability(true))
+      val outAttrs = st.joinType match {
+        case LeftSemi | LeftAnti => attrs
+        case Inner => attrs ++ right.output
+        case LeftOuter => attrs ++ nullable(right.output)
+        case FullOuter => nullable(attrs) ++ nullable(right.output)
         case other => throw new IllegalStateException(
           s"unplannable merge join type $other")
       }
+      cur = new MergeIter(cur, sideStream(k + 1), st.joinType, keyOrd,
+        right.outKeyOrdinal, attrs.length, right.output.length, residual,
+        UnsafeProjection.create(BandStreams.schemaOf(outAttrs)))
+      attrs = outAttrs
     }
     // a SWAPPED step (right outer planned as the mirrored left outer)
     // leaves the stream in swapped layout — remap to the exec's declared
     // output attribute order (row-local: every claim survives)
-    if (attrs.map(_.exprId) != outAttrs.map(_.exprId)) {
-      val in = attrs
-      val proj = UnsafeProjection.create(outAttrs.map { a =>
-        val ix = in.indexWhere(_.exprId == a.exprId)
-        BoundReference(ix, a.dataType,
-          a.nullable || in(ix).nullable): Expression
-      })
-      cur = cur.map(proj)
-    }
-    cur.map { row => rowCount += 1; row }
+    BandStreams.remap(cur, attrs, outAttrs).map { row => rowCount += 1; row }
   }
 
-  /** INNER / LEFT OUTER: the run-buffered streamed merge with optional
-    * per-pair residual. Only the CURRENT right-key run is materialized
-    * (copies — buffers must outlive their reader's advance); the left
-    * side streams row by row, never copied: the active left row is
-    * always consumed (projected) before its own stream advances.
-    * Residual semantics are the ON clause's: TRUE emits the pair,
-    * FALSE/NULL does not; OUTER emits (left, all-null right) for a
-    * left row none of whose key-equal pairs passed — including every
-    * row of left-only aligned components, whose right stream is empty.
+  /** The run-buffered streamed merge, every join type. Only the CURRENT
+    * right-key run is materialized — as copies: right rows come from
+    * buffer-reusing readers and must outlive their advance — with a
+    * matched flag per run row; the left side streams row by row, never
+    * copied, and each left row is projected before its stream advances.
+    * Residual semantics are the ON clause's: TRUE matches, FALSE/NULL
+    * does not. A left row none of whose key-equal pairs passed —
+    * including every row of a left-only aligned component — is
+    * match-less: OUTER emits it null-extended, ANTI emits it alone,
+    * SEMI emits a left row once, on its first passing pair. FULL OUTER
+    * (the snapshot-diff shape) also emits every right row below the
+    * current left key (null-left, in key position) and, when a run
+    * closes, each run row no pair of which passed; the exec drops the
+    * left-key ordering claim, since those rows carry a null left key.
+    * SEMI and ANTI without a residual buffer nothing: the right stream
+    * only advances to the first row at-or-past the left key, and
+    * duplicate left keys re-test that same row.
     */
-  private final class MatchIter(l: Iterator[InternalRow],
-      r: Iterator[InternalRow], outer: Boolean, lKey: Int, rKey: Int,
-      rWidth: Int, residual: Option[BasePredicate],
-      proj: UnsafeProjection) extends Iterator[InternalRow] {
-    private val joined = new JoinedRow
-    private val nullRight = new GenericInternalRow(rWidth)
-    private var lRow: InternalRow = if (l.hasNext) l.next() else null
-    private var rRow: InternalRow = if (r.hasNext) r.next() else null
-    private val run = new ArrayBuffer[InternalRow]
-    private var runKey: Any = null
-    private var runIdx = 0
-    private var lActive = false
-    private var anyMatch = false
-    private var emitNull = false
-    private var emitNullActive = false
-
-    private def pairOk(rr: InternalRow): Boolean =
-      residual.forall(_.eval(joined(lRow, rr)))
-
-    /** Advance the left row while a run is loaded: equal keys stay on
-      * the run (rescanning it), anything else releases it.
-      */
-    private def advanceWithinRun(): Unit = {
-      lRow = if (l.hasNext) l.next() else null
-      if (lRow != null && cmpKeys(lRow.get(lKey, keyType), runKey) == 0) {
-        runIdx = 0; anyMatch = false
-      } else { lActive = false; run.clear(); runKey = null }
-    }
-
-    private def findNext(): Boolean = {
-      while (true) {
-        if (emitNull || emitNullActive) return true
-        if (lActive) {
-          while (runIdx < run.length && !pairOk(run(runIdx))) runIdx += 1
-          if (runIdx < run.length) return true
-          // this left row exhausted the run; a residual may have failed
-          // every pair — outer still owes the null-extended row
-          if (outer && !anyMatch) { emitNullActive = true; return true }
-          advanceWithinRun()
-        } else if (lRow == null) return false
-        else if (rRow == null) {
-          // right exhausted: every remaining left row is match-less
-          if (outer) { emitNull = true; return true }
-          return false
-        } else {
-          val c = cmpKeys(lRow.get(lKey, keyType), rRow.get(rKey, keyType))
-          if (c < 0) {
-            if (outer) { emitNull = true; return true }
-            lRow = if (l.hasNext) l.next() else null
-          }
-          else if (c > 0) rRow = if (r.hasNext) r.next() else null
-          else {
-            // build the equal-key run: COPIES — right rows come from
-            // buffer-reusing readers and must outlive their advance
-            run.clear()
-            val first = rRow.copy()
-            run += first
-            runKey = first.get(rKey, keyType)
-            rRow = if (r.hasNext) r.next() else null
-            while (rRow != null &&
-              cmpKeys(rRow.get(rKey, keyType), runKey) == 0) {
-              run += rRow.copy()
-              rRow = if (r.hasNext) r.next() else null
-            }
-            runIdx = 0
-            lActive = true
-            anyMatch = false
-          }
-        }
-      }
-      false
-    }
-
-    override def hasNext: Boolean = findNext()
-
-    override def next(): InternalRow = {
-      if (!hasNext) throw new NoSuchElementException
-      if (emitNull) {
-        // project BEFORE advancing: the left stream may reuse its
-        // row buffer, and l.next() would overwrite the row `joined`
-        // still references
-        val out = proj(joined(lRow, nullRight))
-        emitNull = false
-        lRow = if (l.hasNext) l.next() else null
-        out
-      } else if (emitNullActive) {
-        val out = proj(joined(lRow, nullRight))
-        emitNullActive = false
-        advanceWithinRun()
-        out
-      } else {
-        anyMatch = true
-        val out = proj(joined(lRow, run(runIdx)))
-        runIdx += 1
-        out
-      }
-    }
-  }
-
-  /** FULL OUTER — the snapshot-diff shape: matched pairs stream like
-    * INNER, match-less LEFT rows emit (l, null-right) in key position,
-    * match-less RIGHT rows emit (null-left, r) in key position — both
-    * sides read once, in place, already ordered (the ordinary plan
-    * shuffles AND sorts both). With a residual, a pair failing it
-    * leaves BOTH sides unmatched-so-far (SQL FULL OUTER ON semantics):
-    * a left row none of whose key-equal pairs passed emits
-    * null-extended, and each buffered right-run row no pair of which
-    * passed emits null-extended when its run closes. Only the current
-    * right-key run is materialized (copies + matched flags); the
-    * output's left-key ordering claim is DROPPED by the exec —
-    * right-only rows carry a null left key.
-    */
-  private final class FullOuterIter(l: Iterator[InternalRow],
-      r: Iterator[InternalRow], lKey: Int, rKey: Int,
+  private final class MergeIter(l: Iterator[InternalRow],
+      r: Iterator[InternalRow], jt: JoinType, lKey: Int, rKey: Int,
       lWidth: Int, rWidth: Int, residual: Option[BasePredicate],
       proj: UnsafeProjection) extends Iterator[InternalRow] {
+    private val existence = jt == LeftSemi || jt == LeftAnti
+    private val full = jt == FullOuter
+    private val keepUnmatched = jt == LeftOuter || full || jt == LeftAnti
     private val joined = new JoinedRow
     private val nullLeft = new GenericInternalRow(lWidth)
     private val nullRight = new GenericInternalRow(rWidth)
-    private var lRow: InternalRow = if (l.hasNext) l.next() else null
-    private var rRow: InternalRow = if (r.hasNext) r.next() else null
     private val run = new ArrayBuffer[InternalRow]
     private var matched: Array[Boolean] = _
+    private var lRow = step(l)
+    private var rRow = step(r)
     private var runKey: Any = null
     private var runIdx = 0
-    private var lActive = false
+    private var inRun = false // lRow's key is runKey; it scans the run
     private var anyMatch = false
-    private var flushingRun = false
-    private var flushIdx = 0
-    // what the pending emission is: 0 none, 1 matched pair, 2 left-null
-    // for the ACTIVE left row (failed residuals, then advance within
-    // run), 3 left-null for the streaming left row, 4 right-null for
-    // the streaming right row, 5 right-null for run(flushIdx)
-    private var kind = 0
+    private var flushIdx = -1 // ≥ 0: the closed run's unmatched rows emit
+    private var out: InternalRow = _
 
-    private def pairOk(rr: InternalRow): Boolean =
-      residual.forall(_.eval(joined(lRow, rr)))
+    private def step(it: Iterator[InternalRow]) = if (it.hasNext) it.next() else null
+    private def key(row: InternalRow, ord: Int) = row.get(ord, keyType)
+    private def pairOk(rr: InternalRow) = residual.forall(_.eval(joined(lRow, rr)))
+    private def leftOnly() =
+      if (existence) proj(lRow) else proj(joined(lRow, nullRight))
 
-    private def advanceWithinRun(): Unit = {
-      lRow = if (l.hasNext) l.next() else null
-      if (lRow != null && cmpKeys(lRow.get(lKey, keyType), runKey) == 0) {
-        runIdx = 0; anyMatch = false
-      } else {
-        // leaving the run: its unmatched rows owe null-extended output
-        lActive = false
-        flushingRun = true
-        flushIdx = 0
+    /** The next left row: an equal key rescans the run, any other key
+      * closes it (FULL OUTER flushes it first).
+      */
+    private def nextLeft(): Unit = {
+      lRow = step(l)
+      if (inRun) {
+        if (lRow != null && cmpKeys(key(lRow, lKey), runKey) == 0) {
+          runIdx = 0; anyMatch = false
+        } else {
+          inRun = false
+          if (full) flushIdx = 0 else run.clear()
+        }
       }
     }
 
-    private def findNext(): Boolean = {
-      while (kind == 0) {
-        if (flushingRun) {
+    private def fetch(): Boolean = {
+      while (out == null) {
+        if (flushIdx >= 0) {
           while (flushIdx < run.length && matched(flushIdx)) flushIdx += 1
-          if (flushIdx < run.length) { kind = 5; return true }
-          flushingRun = false; run.clear(); runKey = null
-        } else if (lActive) {
+          if (flushIdx < run.length) {
+            out = proj(joined(nullLeft, run(flushIdx)))
+            flushIdx += 1
+          } else { flushIdx = -1; run.clear() }
+        } else if (inRun) {
           while (runIdx < run.length && !pairOk(run(runIdx))) runIdx += 1
-          if (runIdx < run.length) kind = 1
-          else if (!anyMatch) kind = 2
-          else advanceWithinRun()
+          if (runIdx == run.length) {
+            if (!anyMatch && keepUnmatched) out = leftOnly()
+            nextLeft()
+          } else if (existence) {
+            if (jt == LeftSemi) out = proj(lRow)
+            nextLeft()
+          } else {
+            anyMatch = true
+            if (full) matched(runIdx) = true
+            out = proj(joined(lRow, run(runIdx)))
+            runIdx += 1
+          }
         } else if (lRow == null) {
-          if (rRow == null) return false
-          kind = 4
-        } else if (rRow == null) {
-          kind = 3
+          if (!full || rRow == null) return false
+          out = proj(joined(nullLeft, rRow))
+          rRow = step(r)
         } else {
-          val c = cmpKeys(lRow.get(lKey, keyType), rRow.get(rKey, keyType))
-          if (c < 0) kind = 3
-          else if (c > 0) kind = 4
-          else {
+          val c = if (rRow == null) -1
+            else cmpKeys(key(lRow, lKey), key(rRow, rKey))
+          if (c < 0) {
+            if (keepUnmatched) out = leftOnly()
+            else if (rRow == null) return false
+            nextLeft()
+          } else if (c > 0) {
+            if (full) out = proj(joined(nullLeft, rRow))
+            rRow = step(r)
+          } else if (existence && residual.isEmpty) {
+            if (jt == LeftSemi) out = proj(lRow)
+            nextLeft()
+          } else {
+            // the key is read off the COPY: the reader reuses its buffer
             run.clear()
-            val first = rRow.copy()
-            run += first
-            runKey = first.get(rKey, keyType)
-            rRow = if (r.hasNext) r.next() else null
-            while (rRow != null &&
-              cmpKeys(rRow.get(rKey, keyType), runKey) == 0) {
+            run += rRow.copy()
+            runKey = key(run(0), rKey)
+            rRow = step(r)
+            while (rRow != null && cmpKeys(key(rRow, rKey), runKey) == 0) {
               run += rRow.copy()
-              rRow = if (r.hasNext) r.next() else null
+              rRow = step(r)
             }
-            matched = new Array[Boolean](run.length)
-            runIdx = 0
-            lActive = true
-            anyMatch = false
+            if (full) matched = new Array[Boolean](run.length)
+            runIdx = 0; anyMatch = false; inRun = true
           }
         }
       }
       true
     }
 
-    override def hasNext: Boolean = findNext()
+    override def hasNext: Boolean = out != null || fetch()
 
     override def next(): InternalRow = {
       if (!hasNext) throw new NoSuchElementException
-      val k = kind
-      kind = 0
-      k match {
-        case 1 =>
-          anyMatch = true
-          matched(runIdx) = true
-          val out = proj(joined(lRow, run(runIdx)))
-          runIdx += 1
-          out
-        case 2 =>
-          // project BEFORE advancing — the left stream may reuse its
-          // row buffer (the MatchIter contract)
-          val out = proj(joined(lRow, nullRight))
-          advanceWithinRun()
-          out
-        case 3 =>
-          val out = proj(joined(lRow, nullRight))
-          lRow = if (l.hasNext) l.next() else null
-          out
-        case 4 =>
-          val out = proj(joined(nullLeft, rRow))
-          rRow = if (r.hasNext) r.next() else null
-          out
-        case _ =>
-          val out = proj(joined(nullLeft, run(flushIdx)))
-          flushIdx += 1
-          out
-      }
-    }
-  }
-
-  /** LEFT SEMI / LEFT ANTI. Residual-free: no buffering at all — the
-    * right stream only ever advances to the first row at-or-past the
-    * current left key (duplicate left keys re-test the same right row),
-    * and the left row is emitted alone on existence (semi) or absence
-    * (anti) of a key match. With a residual: the key-equal right run
-    * buffers (copies) and the verdict is "any pair passes" — duplicate
-    * left keys re-test the same buffered run.
-    */
-  private final class ExistenceIter(l: Iterator[InternalRow],
-      r: Iterator[InternalRow], anti: Boolean, lKey: Int, rKey: Int,
-      residual: Option[BasePredicate],
-      proj: UnsafeProjection) extends Iterator[InternalRow] {
-    private val joined = new JoinedRow
-    private var lRow: InternalRow = if (l.hasNext) l.next() else null
-    private var rRow: InternalRow = if (r.hasNext) r.next() else null
-    private val run = new ArrayBuffer[InternalRow]
-    private var runKey: Any = null
-    private var ready = false
-
-    private def matchedFor(lk: Any): Boolean = residual match {
-      case None =>
-        while (rRow != null && cmpKeys(rRow.get(rKey, keyType), lk) < 0)
-          rRow = if (r.hasNext) r.next() else null
-        rRow != null && cmpKeys(rRow.get(rKey, keyType), lk) == 0
-      case Some(pred) =>
-        if (runKey == null || cmpKeys(runKey, lk) < 0) {
-          run.clear(); runKey = null
-          while (rRow != null && cmpKeys(rRow.get(rKey, keyType), lk) < 0)
-            rRow = if (r.hasNext) r.next() else null
-          if (rRow != null && cmpKeys(rRow.get(rKey, keyType), lk) == 0) {
-            val first = rRow.copy()
-            run += first
-            runKey = first.get(rKey, keyType)
-            rRow = if (r.hasNext) r.next() else null
-            while (rRow != null &&
-              cmpKeys(rRow.get(rKey, keyType), runKey) == 0) {
-              run += rRow.copy()
-              rRow = if (r.hasNext) r.next() else null
-            }
-          }
-        }
-        runKey != null && cmpKeys(runKey, lk) == 0 &&
-          run.exists(rr => pred.eval(joined(lRow, rr)))
-    }
-
-    private def findNext(): Boolean = {
-      while (!ready && lRow != null) {
-        val matched = matchedFor(lRow.get(lKey, keyType))
-        if (matched != anti) ready = true
-        else lRow = if (l.hasNext) l.next() else null
-      }
-      ready && lRow != null
-    }
-
-    override def hasNext: Boolean = findNext()
-
-    override def next(): InternalRow = {
-      if (!hasNext) throw new NoSuchElementException
-      val out = proj(lRow)
-      ready = false
-      lRow = if (l.hasNext) l.next() else null
-      out
+      val o = out
+      out = null
+      o
     }
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, BindReferences, CurrentRow, Descending, Expression, GenericInternalRow, JoinedRow, Literal, NamedExpression, NullsFirst, RangeFrame, Rank, RowFrame, RowNumber, SortOrder, SpecifiedWindowFrame, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{ExternalAppendOnlyUnsafeRowArray, SortExec, SparkPlan, SparkStrategy, UnaryExecNode, WholeStageCodegenExec}
@@ -60,202 +60,90 @@ import graft.ingest.v2.{ExtJsonScan, FilterEval, ZoneMaps}
   * rule below re-stages it over the band scan instead).
   */
 class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
-  import OrderedScanStrategy.restage
+  import BandLayout.{BandRel, bandKey, bandScan, peel, restage}
   import RunningWindow._
 
-  /** The merge-join matcher, for composing a running window over a
-    * provable join chain (its exec claims RangePartitioning + ordering
-    * on the band key — exactly the child contract the band window
-    * needs).
+  /** The merge-join and interval-sweep matchers, for composing a running
+    * window over a provable join chain: both execs claim ordering and
+    * RangePartitioning on their key — exactly the child contract the
+    * band window needs.
     */
   private lazy val mergeJoin = new RangeMergeJoinStrategy(session)
-
-  /** The interval-sweep matcher, same composition: its exec claims
-    * ordering + RangePartitioning on the POINT key, so a running
-    * window over the labeled stream decomposes over its partitions.
-    */
   private lazy val intervalJoin = new RangeIntervalJoinStrategy(session)
 
-  /** The window strategy's peel admits ALIASING Projects too (the
-    * analyzer extracts complex window inputs — `sum(cast(v)) OVER …` —
-    * into an aliased child Project): a deterministic row-local Project
-    * preserves row order, row count, and the band partitioning claim
-    * alike. The sort-order key itself still has to reach the SCAN
-    * unaliased (the band-key exprId check against `rel.output`), so an
-    * ORDER BY over a computed expression refuses as before.
-    */
-  private def peelW(p: LogicalPlan, above: List[LogicalPlan])
-      : Option[(org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation, List[LogicalPlan])] =
-    p match {
-      case rel: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        Some((rel, above))
-      case pr: org.apache.spark.sql.catalyst.plans.logical.Project
-          if pr.projectList.forall(_.deterministic) =>
-        peelW(pr.child, pr :: above)
-      case f: Filter if f.condition.deterministic =>
-        peelW(f.child, f :: above)
-      case _ => None
-    }
-
-  /** The peel with an inner WINDOW leaf — STACKED windows: a window
-    * whose inputs are another window's OUTPUTS analyzes as two Window
-    * nodes with a Project between (the sessionization idiom: flag the
-    * gaps with lag, then session-id = running SUM of the flags). A
-    * [[BandRunningWindowExec]] preserves its child's ordering and
-    * range-partitioning claims, so an outer window ordered the same
-    * way decomposes over the INNER band window's partitions exactly as
-    * over the scan's bands.
-    */
-  private def peelInnerW(p: LogicalPlan, above: List[LogicalPlan])
-      : Option[(Window, List[LogicalPlan])] =
-    p match {
-      case w: Window => Some((w, above))
-      case pr: org.apache.spark.sql.catalyst.plans.logical.Project
-          if pr.projectList.forall(_.deterministic) =>
-        peelInnerW(pr.child, pr :: above)
-      case f: Filter if f.condition.deterministic =>
-        peelInnerW(f.child, f :: above)
-      case _ => None
-    }
-
-  /** The same peel with a JOIN leaf — the window-over-merge-chain
-    * composition (`SUM(...) OVER (ORDER BY key)` above q185's
-    * enrich+decontaminate chain): deterministic row-local Projects and
-    * Filters preserve the chain exec's ordering and partitioning claims
-    * exactly as they preserve the scan's.
-    */
-  private def peelJ(p: LogicalPlan, above: List[LogicalPlan])
-      : Option[(org.apache.spark.sql.catalyst.plans.logical.Join, List[LogicalPlan])] =
-    p match {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
-        Some((j, above))
-      case pr: org.apache.spark.sql.catalyst.plans.logical.Project
-          if pr.projectList.forall(_.deterministic) =>
-        peelJ(pr.child, pr :: above)
-      case f: Filter if f.condition.deterministic =>
-        peelJ(f.child, f :: above)
-      case _ => None
-    }
-
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case w @ Window(windowExprs, Seq(), orderSpec, child, _)
-        if orderSpec.nonEmpty && windowExprs.nonEmpty =>
+    case Window(windowExprs, Seq(), orderSpec, child, _)
+        if orderSpec.nonEmpty && windowExprs.nonEmpty &&
+          orderSpec.forall(_.references.subsetOf(child.outputSet)) =>
       orderSpec.head match {
         case first @ SortOrder(attr: AttributeReference,
             Ascending | Descending, _, _) =>
-          peelW(child, Nil) match {
-            case Some((rel, above)) => rel.scan match {
-              case scan: ExtJsonScan
-                  if rel.output.exists(_.exprId == attr.exprId) &&
-                    orderSpec.forall(_.references.subsetOf(child.outputSet)) =>
-                val funcs = windowExprs.map(parse(_, child.outputSet, orderSpec))
-                if (funcs.exists(_.isEmpty)) return Nil
-                if (!RunningWindow.delayCompatible(funcs.map(_.get)))
-                  return Nil
-                // value-frame population bound: a RANGE frame denser
-                // than the configured cap must run on Spark's spillable
-                // WindowExec, not an in-memory deque
-                if (!rangeFramesBounded(scan, attr.name, funcs.map(_.get)))
-                  return Nil
-                scan.orderedBandPartitions(attr.name) match {
-                  case Some(bands) if bands.nonEmpty =>
-                    val desc = first.direction == Descending
-                    val ordered = OrderedBandScanExec(rel.output, orderSpec,
-                      scan, if (desc) bands.reverse else bands,
-                      claimOrdering = !desc && orderSpec.length == 1 &&
-                        first.nullOrdering == NullsFirst)
-                    val chain = restage(above, ordered)
-                    val sortedChild =
-                      if (ordered.claimOrdering) chain
-                      else SortExec(orderSpec, global = false, chain)
-                    // the metadata prefix is sound only when nothing
-                    // between the scan and the window drops rows: the scan
-                    // itself proves its side (orderedBandFileStats refuses
-                    // under any pushed filter/limit/agg mode), and a
-                    // peeled residual Filter above it must refuse too
-                    val metadata =
-                      if (above.exists(_.isInstanceOf[Filter])) None
-                      else metadataTotals(scan, rel.output, attr.name,
-                        funcs.map(_.get), desc)
-                    BandRunningWindowExec(windowExprs, funcs.map(_.get),
-                      orderSpec, metadata, sortedChild) :: Nil
-                  case _ => Nil
-                }
-              case _ => Nil
-            }
-            // no scan leaf: a running window OVER A MERGE-JOIN CHAIN —
-            // the chain exec already claims RangePartitioning + ordering
-            // on the band key, so the window decomposes over ITS
-            // partitions exactly as over the scan's bands (prefixes
-            // always computed: join output sizes have no sidecar form —
-            // the totals pass streams the chain once more, still zero
-            // exchange). ASC NULLS FIRST on the chain's own key only:
-            // the chain streams ASC and its partitions come in ASC band
-            // order, which a DESC window cannot reuse.
-            case None => peelJ(child, Nil) match {
-              case Some((join, above))
-                  if first.direction == Ascending &&
-                    first.nullOrdering == NullsFirst &&
-                    orderSpec.forall(_.references.subsetOf(child.outputSet)) =>
-                val funcs = windowExprs.map(parse(_, child.outputSet, orderSpec))
-                if (funcs.exists(_.isEmpty)) return Nil
-                if (!RunningWindow.delayCompatible(funcs.map(_.get)))
-                  return Nil
-                mergeJoin.planChain(join)
-                  .orElse(intervalJoin.planJoin(join)) match {
-                  case Some(exec)
-                      if exec.outputOrdering.headOption.exists(_.child match {
-                        case a: AttributeReference => a.exprId == attr.exprId
-                        case _ => false
-                      }) =>
-                    val chain = restage(above, exec)
-                    val sortedChild =
-                      if (orderSpec.length == 1) chain
-                      else SortExec(orderSpec, global = false, chain)
-                    BandRunningWindowExec(windowExprs, funcs.map(_.get),
-                      orderSpec, None, sortedChild) :: Nil
-                  case _ => Nil
-                }
-              // no join either: STACKED windows — a window over another
-              // window's OUTPUTS (the sessionization idiom: lag-flag the
-              // gaps, then session-id = running SUM of the flags; the
-              // analyzer stacks the nodes because the outer's inputs
-              // are the inner's outputs). Plan the inner window with
-              // THIS strategy recursively; a band-window result claims
-              // its child's ordering and range partitioning, so the
-              // outer decomposes over ITS partitions (prefixes always
-              // computed — the inner window re-executes for the totals
-              // pass; sequential zero-exchange streams, never a
-              // collapse). ASC NULLS FIRST on the same band key only.
-              case _ => peelInnerW(child, Nil) match {
-                case Some((w2, above))
-                    if first.direction == Ascending &&
-                      first.nullOrdering == NullsFirst &&
-                      orderSpec.forall(_.references.subsetOf(child.outputSet)) =>
-                  val funcs = windowExprs.map(parse(_, child.outputSet, orderSpec))
-                  if (funcs.exists(_.isEmpty)) return Nil
-                  if (!RunningWindow.delayCompatible(funcs.map(_.get)))
-                    return Nil
-                  apply(w2) match {
-                    case Seq(inner: BandRunningWindowExec)
-                        if inner.outputOrdering.headOption.exists(o =>
-                          o.direction == Ascending && (o.child match {
-                            case a: AttributeReference =>
-                              a.exprId == attr.exprId
-                            case _ => false
-                          })) =>
-                      val chain = restage(above, inner)
-                      val sortedChild =
-                        if (orderSpec.length == 1) chain
-                        else SortExec(orderSpec, global = false, chain)
-                      BandRunningWindowExec(windowExprs, funcs.map(_.get),
-                        orderSpec, None, sortedChild) :: Nil
-                    case _ => Nil
-                  }
-                case _ => Nil
-              }
-            }
+          val parsed = windowExprs.map(parse(_, child.outputSet, orderSpec))
+          if (parsed.exists(_.isEmpty)) return Nil
+          val funcs = parsed.map(_.get)
+          if (!RunningWindow.delayCompatible(funcs)) return Nil
+          // a join chain or an inner band window streams ASC on its own
+          // key, in ASC partition order: only ASC NULLS FIRST on that
+          // key reuses it (a local sort adds any tiebreak keys)
+          val asc = first.direction == Ascending && first.nullOrdering == NullsFirst
+          def onKey(ordering: Seq[SortOrder]) = ordering.headOption.exists(o =>
+            o.direction == Ascending && (o.child match {
+              case a: AttributeReference => a.exprId == attr.exprId
+              case _ => false
+            }))
+          def overChain(exec: SparkPlan, above: List[LogicalPlan]) = {
+            val chain = restage(above, exec)
+            if (orderSpec.length == 1) chain
+            else SortExec(orderSpec, global = false, chain)
           }
+          val planned: Option[(SparkPlan, Option[Seq[Array[Any]]])] =
+            peel(child) match {
+              case (BandRel(rel, scan), above)
+                  // value-frame population bound: a RANGE frame denser
+                  // than the configured cap must run on Spark's
+                  // spillable WindowExec, not an in-memory deque
+                  if rangeFramesBounded(scan, attr.name, funcs) =>
+                bandKey(rel, scan, Seq(attr)).map { case (_, groups) =>
+                  // the metadata prefix is sound only when nothing
+                  // between the scan and the window drops rows: the
+                  // scan itself proves its side (orderedBandFileStats
+                  // refuses under any pushed filter/limit/agg mode), and
+                  // a peeled residual Filter above it must refuse too
+                  (bandScan(rel, scan, groups, orderSpec, above),
+                    if (above.exists(_.isInstanceOf[Filter])) None
+                    else metadataTotals(scan, rel.output, attr.name, funcs,
+                      first.direction == Descending))
+                }
+              // a running window OVER A MERGE OR INTERVAL JOIN CHAIN: the
+              // window decomposes over the chain's partitions exactly as
+              // over the scan's bands (prefixes always computed — join
+              // output sizes have no sidecar form; the totals pass
+              // streams the chain once more, still zero exchange)
+              case (join: Join, above) if asc =>
+                mergeJoin.planChain(join).orElse(intervalJoin.planJoin(join))
+                  .filter(exec => onKey(exec.outputOrdering))
+                  .map(exec => (overChain(exec, above), None))
+              // STACKED windows — a window over another window's OUTPUTS
+              // (the sessionization idiom: lag-flag the gaps, then
+              // session-id = running SUM of the flags; the analyzer
+              // stacks the nodes because the outer's inputs are the
+              // inner's outputs). The inner plans with THIS strategy; a
+              // band-window result claims its child's ordering and range
+              // partitioning, so the outer decomposes over ITS partitions
+              // (prefixes computed — the inner window re-executes for
+              // the totals pass; never a collapse)
+              case (inner: Window, above) if asc =>
+                apply(inner) match {
+                  case Seq(exec: BandRunningWindowExec) if onKey(exec.outputOrdering) =>
+                    Some((overChain(exec, above), None))
+                  case _ => None
+                }
+              case _ => None
+            }
+          planned.map { case (sortedChild, metadata) =>
+            BandRunningWindowExec(windowExprs, funcs, orderSpec, metadata,
+              sortedChild)
+          }.toList
         case _ => Nil
       }
     // PARTITION BY containing the band key: Spark's OWN WindowExec runs
@@ -292,39 +180,19 @@ class RangeWindowStrategy(session: SparkSession) extends SparkStrategy {
           (Some(w), w.child)
         case other => (None, other)
       }
-      peelW(inner, Nil) match {
-        case Some((rel, above)) =>
-          rel.scan match {
-            case scan: ExtJsonScan =>
-              val keyed = partSpec.collectFirst {
-                case a: AttributeReference
-                    if rel.output.exists(_.exprId == a.exprId) &&
-                      scan.orderedBandPartitions(a.name)
-                        .exists(_.nonEmpty) =>
-                  (a, scan.orderedBandPartitions(a.name).get)
-              }
-              keyed match {
-                case Some((k, groups)) =>
-                  val bands = OrderedBandScanExec(rel.output,
-                    Seq(SortOrder(k, Ascending)), scan, groups,
-                    claimOrdering = false)
-                  val restaged = restage(above, bands)
-                  val limited = wgl match {
-                    case Some(w) =>
-                      org.apache.spark.sql.execution.window
-                        .WindowGroupLimitExec(w.partitionSpec,
-                          w.orderSpec, w.rankLikeFunction, w.limit,
-                          org.apache.spark.sql.execution.window.Final,
-                          restaged)
-                    case None => restaged
-                  }
-                  org.apache.spark.sql.execution.window.WindowExec(
-                    windowExprs, partSpec, orderSpec, limited) :: Nil
-                case None => Nil
-              }
-            case _ => Nil
-          }
-        case None => Nil
+      peel(inner) match {
+        case (BandRel(rel, scan), above) =>
+          bandKey(rel, scan, partSpec).map { case (k, groups) =>
+            val bands = bandScan(rel, scan, groups,
+              Seq(SortOrder(k, Ascending)), above, sorted = false)
+            val limited = wgl.fold(bands)(w =>
+              org.apache.spark.sql.execution.window.WindowGroupLimitExec(
+                w.partitionSpec, w.orderSpec, w.rankLikeFunction, w.limit,
+                org.apache.spark.sql.execution.window.Final, bands))
+            org.apache.spark.sql.execution.window.WindowExec(
+              windowExprs, partSpec, orderSpec, limited)
+          }.toList
+        case _ => Nil
       }
     case _ => Nil
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.QueryExecution
   * the bench or the oracle). Usage:
   *
   *   sbt "runMain graft.tools.Inspect plan <sfDir> <query>... [run] [out=<dir> suffix=<s>]"
-  *   sbt "runMain graft.tools.Inspect probe <sfDir> <query>..."
+  *   sbt "runMain graft.tools.Inspect probe <sfDir> <query>...|all"
   *   sbt "runMain graft.tools.Inspect profile <sfDir> <query>..."
   *
   *  - `plan`: the formatted physical plan, to stdout or, with `out=`, to
@@ -20,7 +20,8 @@ import org.apache.spark.sql.execution.QueryExecution
   *    understates.
   *  - `probe`: one `PROBE` line per query — shuffle-exchange count, join
   *    keys, and the graft exec nodes the plan uses (pin values for
-  *    PlanSpec, or the list of queries that reach an operator).
+  *    PlanSpec, or the list of queries that reach an operator); `all`
+  *    probes every registered query in sorted name order.
   *  - `profile`: runs each query once warm and once measured under a
   *    SparkListener and prints the per-JOB wall-time breakdown, so a
   *    query's wall time decomposes into its sequential driver actions.
@@ -32,7 +33,10 @@ object Inspect {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: Inspect plan|probe|profile <sfDir> <query> [query...] [options]")
-    val (opts, names) = args.drop(2).toSeq.partition(a => a == "run" || a.contains('='))
+    val (opts, given) = args.drop(2).toSeq.partition(a => a == "run" || a.contains('='))
+    val names =
+      if (given == Seq("all")) graft.SparkEntry.queries.keys.toSeq.sorted
+      else given
     val kv = opts.filter(_.contains('=')).map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()

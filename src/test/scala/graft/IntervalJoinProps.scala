@@ -160,6 +160,26 @@ class IntervalJoinProps extends AnyFunSuite {
       assert(goRes.sorted ==
         direct(_ <= _, _ <= _).filter(t => t._2 != t._5).sorted,
         s"$ctx residual multiset")
+
+      // each side read through an unpushable residual Filter and a
+      // column-permuting select: the join-side peel re-stages both
+      // inside the sweep
+      val pf = p.filter(col("k") % 3 =!= 0).select("pv", "k")
+      val ivf = iv.filter(col("s") % 2 === 0).select("iv", "e", "s")
+      val peeled = pf.join(ivf, ivf("s") <= pf("k") && pf("k") <= ivf("e"))
+      planIsSweep(peeled, s"$ctx peeled sides")
+      val sweep = TestPlans.executedNodes(peeled)
+        .collectFirst { case x: RangeIntervalJoinExec => x }.get
+      assert(Seq(sweep.points, sweep.intervals).forall(_.filters.exists(
+        _.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Remainder]))),
+        s"$ctx: both residual filters must run inside the sweep")
+      val goPeeled = peeled.collect().map(r => (r.getLong(1), r.getString(0),
+        r.getLong(4), r.getLong(3), r.getString(2))).toSeq
+      assert(goPeeled.map(_._1) == goPeeled.map(_._1).sorted,
+        s"$ctx peeled ordering")
+      assert(goPeeled.sorted == direct(_ <= _, _ <= _)
+        .filter(t => t._1 % 3 != 0 && t._3 % 2 == 0).sorted,
+        s"$ctx peeled multiset")
     }
   }
 

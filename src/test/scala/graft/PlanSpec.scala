@@ -1240,6 +1240,22 @@ class PlanSpec extends AnyFunSuite {
     assert(ns4.exists(_.isInstanceOf[graft.plans.BandRunningWindowExec]) &&
       !ns4.exists(_.isInstanceOf[ShuffleExchangeLike]),
       ns4.map(_.nodeName).mkString(", "))
+    // a COMPUTED output column puts an ALIASING Project between Sort and
+    // the scan: it keeps row order and the band claim, and the sort key
+    // still reaches the scan unaliased — the ordered scan peels it like
+    // the window strategy does
+    val df5 = spark.sql("SELECT o_totalprice, o_orderkey * 2 AS k2 " +
+      "FROM ordered_scan_sql_v ORDER BY o_totalprice")
+    val rows5 = df5.collect()
+    assert(rows5.length == 1500)
+    assert(rows5.map(_.getDouble(0)).sliding(2).forall(p => p(0) <= p(1)),
+      "computed-column rows must arrive globally sorted")
+    val ns5 = TestPlans.executedNodes(df5)
+    assert(ns5.exists(_.isInstanceOf[graft.plans.OrderedBandScanExec]),
+      ns5.map(_.nodeName).mkString(", "))
+    assert(!ns5.exists(_.isInstanceOf[SortExec]) &&
+      !ns5.exists(_.isInstanceOf[ShuffleExchangeLike]),
+      "an aliasing Project must not re-introduce the sort or the exchange")
   }
 
   test("q187 COUNT(DISTINCT key) answers from the sidecar's distinct counts") {
