@@ -1,25 +1,31 @@
 package graft.keys
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{LongType, StructField}
 import org.apache.spark.storage.StorageLevel
 
-/** Scalable global ordering index: assigns a contiguous 1-based position to
-  * every row of a DataFrame under a total order, without ever funnelling the
-  * data through a single partition.
+/** Scalable global ordering: a contiguous 1-based position
+  * ([[withGlobalIndex]]) or a running sum ([[withRunningSum]]) for every
+  * row of a DataFrame under a total order, without ever funnelling the data
+  * through a single partition. The registry's global-sort, epoch-order,
+  * interleave, running-total, packing and budget-mix queries use it; the
+  * pipelines' key numbering does not ([[SurrogateKeys]] numbers the bounded
+  * new-key subset with one window).
   *
-  * This is the scale-safe replacement for
-  * `row_number().over(Window.orderBy(...))`, whose unpartitioned window pulls
-  * the whole dataset into ONE task. Here the work is:
+  * This is the scale-safe replacement for an unpartitioned
+  * `Window.orderBy(...)`, which pulls the whole dataset into ONE task. One
+  * two-pass shape serves both:
   *
-  *   1. `repartitionByRange(sortCols)` — one shuffle; the range partitioner
-  *      gives globally ordered partitions,
-  *   2. `sortWithinPartitions` — per-partition sort, no further shuffle,
-  *   3. `zipWithIndex` — Spark's two-pass trick: one tiny job counts rows
-  *      per partition, then each partition stamps `partitionOffset + i`.
+  *   1. `repartitionByRange(sortCols)` + `sortWithinPartitions`, persisted —
+  *      one shuffle; the range partitioner gives globally ordered partitions,
+  *   2. a tiny first pass collecting ONE partial sum per partition but
+  *      the last (driver state = numPartitions longs, never row data),
+  *   3. a second pass stamping `partitionPrefix + runningWithinPartition`.
   *
-  * Total cost: one range shuffle + one count pass — the same shape a global
-  * `orderBy` already pays, so the index is effectively free on top of a sort.
+  * A position is the running sum of a constant 1. Total cost: one range
+  * shuffle + one partial-sum pass — the same shape a global `orderBy`
+  * already pays.
   *
   * The sort columns must form a total order (include a unique tiebreaker):
   * with duplicate sort keys the range partitioner may split ties across
@@ -28,25 +34,22 @@ import org.apache.spark.storage.StorageLevel
   */
 object GlobalIndex {
 
+  private val oneCol = "__graft_one"
+
   /** Append column `idxName` = offset + (1-based position of the row in the
-    * total order given by `sortCols`).
+    * total order given by `sortCols`): the running count.
     */
   def withGlobalIndex(
       df: DataFrame,
       sortCols: Seq[Column],
       idxName: String,
-      offset: Long = 0L): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = persistSorted(df, sortCols)
-    val indexed = sorted.zipWithIndex().map { case (row, i) =>
-      Row.fromSeq(row.toSeq :+ (offset + i + 1L))
-    }
-    val schema = df.schema.add(StructField(idxName, LongType, nullable = false))
-    spark.createDataFrame(indexed, schema)
-  }
+      offset: Long = 0L): DataFrame =
+    withRunningSum(df.withColumn(oneCol, lit(1L)), sortCols, oneCol, idxName)
+      .drop(oneCol)
+      .withColumn(idxName, col(idxName) + offset)
 
-  /** Range-shuffle + per-partition sort, PERSISTED: both callers run two
-    * passes over the sorted rows (a counting/partial-sum pass, then the
+  /** Range-shuffle + per-partition sort, PERSISTED: the running sum makes
+    * two passes over the sorted rows (the partial-sum pass, then the
     * stamping pass). Without the persist the shuffle files are reused but
     * the per-partition sort and the row decode re-execute for each pass —
     * ~2× the sort CPU on the full corpus. Memory-and-disk with lineage
@@ -61,17 +64,10 @@ object GlobalIndex {
 
   /** Append column `sumName` = running (inclusive) sum of LongType column
     * `valueCol` in the total order given by `sortCols` — the distributed
-    * prefix sum, by the same two-pass shape as [[withGlobalIndex]]:
+    * prefix sum (see the object doc for its two passes).
     *
-    *   1. range-repartition + per-partition sort (one shuffle),
-    *   2. a tiny first pass collecting ONE partial sum per partition
-    *     (driver state = numPartitions longs, never row data),
-    *   3. a second pass stamping `partitionPrefix + runningWithinPartition`.
-    *
-    * This replaces `sum().over(Window.orderBy(...))`, whose unpartitioned
-    * frame funnels the whole dataset through one task. Values must be
-    * integral (token counts, cents) — long addition is exact and
-    * order-independent within the fixed sorted order, so the result is
+    * Values must be integral (token counts, cents) — long addition is exact
+    * and order-independent within the fixed sorted order, so the result is
     * deterministic and cross-engine reproducible. Same total-order caveat
     * as [[withGlobalIndex]]: include a unique tiebreaker in `sortCols`.
     */
@@ -98,15 +94,13 @@ object GlobalIndex {
       r.getLong(vIdx)
     }
     val rdd = persistSorted(df, sortCols)
-    val partSums = rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var s = 0L
-        it.foreach(r => s += valueAt(r))
-        Iterator.single((pid, s))
-      }
-      .collect()
-      .sortBy(_._1)
-      .map(_._2)
+    // the last partition's sum is no partition's prefix, so only the first
+    // n-1 are summed: a one-partition input runs no partial-sum job
+    val partSums = spark.sparkContext.runJob(rdd, (it: Iterator[Row]) => {
+      var s = 0L
+      it.foreach(r => s += valueAt(r))
+      s
+    }, 0 until rdd.getNumPartitions - 1)
     val prefixes = partSums.scanLeft(0L)(_ + _) // exclusive prefix per partition
     val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
       var acc = prefixes(pid)

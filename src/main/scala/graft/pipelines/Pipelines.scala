@@ -59,6 +59,10 @@ final case class TargetDb(
   private[pipelines] def readKeys(spark: SparkSession, spec: TableSpec,
       key: String): DataFrame =
     readTable(spark, spec.table).select(col("id"), col(key))
+
+  /** Create `spec`'s table under this target's DDL dialect unless it exists. */
+  def ensureTable(spec: TableSpec): Unit =
+    Ddl.ensureTable(url, spec.ddl(sqlType, supportsIfNotExists, supportsForeignKeys), props)
 }
 
 /** The §3 lifecycles as plain Scala sequencing over the declarative layers:
@@ -77,9 +81,9 @@ object MigrationPipeline {
 
   /** Full load of one collection. Rerun-safe: ids are reconciled against
     * the live table (not blindly re-numbered like the reference's pandas
-    * index), and the conflict policy makes the write idempotent. Full loads
-    * have unbounded novelty, so new-key numbering goes through
-    * [[SurrogateKeys.reconcileAtScale]] — no single-task window anywhere.
+    * index), and the conflict policy makes the write idempotent. New keys
+    * are numbered by [[SurrogateKeys.reconcile]], the same path as the
+    * daily and snapshot updates.
     *
     * @return rows skipped by a Permissive-tolerance write (0 under Strict)
     */
@@ -95,9 +99,8 @@ object MigrationPipeline {
     */
   def runFrom(spark: SparkSession, spec: TableSpec, source: DocSource,
       db: TargetDb, staging: Option[String] = None): Long = {
-    Ddl.ensureTable(db.url, spec.ddl(db.sqlType, db.supportsIfNotExists, db.supportsForeignKeys), db.props)
-    load(spark, spec, spec.transform(source.read(spark, spec)), db, staging,
-      atScale = true)
+    db.ensureTable(spec)
+    load(spark, spec, spec.transform(source.read(spark, spec)), db, staging)
   }
 
   /** Migrate a set of collections IN THE GIVEN ORDER — which must be
@@ -145,9 +148,8 @@ object MigrationPipeline {
     *   the count; also returned for programmatic gating.
     */
   private[pipelines] def load(spark: SparkSession, spec: TableSpec,
-      flat: DataFrame, db: TargetDb, staging: Option[String],
-      atScale: Boolean = false): Long = {
-    val flatSchema = StructType(spec.targetSchema.filterNot(_.name == "id"))
+      flat: DataFrame, db: TargetDb, staging: Option[String]): Long = {
+    val flatSchema = spec.flatSchema
     val staged = staging match {
       case Some(dir) =>
         val path = s"$dir/${spec.table}"
@@ -157,10 +159,7 @@ object MigrationPipeline {
     }
     val key = reconcileKey(spec)
     val existing = db.readKeys(spark, spec, key)
-    val reconciled =
-      if (atScale) SurrogateKeys.reconcileAtScale(existing, staged, key)
-      else SurrogateKeys.reconcile(existing, staged, key)
-    val keyed = reconciled
+    val keyed = SurrogateKeys.reconcile(existing, staged, key)
       .select(("id" +: flatSchema.fieldNames.toSeq).map(col): _*)
     val skipped = UpsertSink.upsert(keyed, db.url, spec.table, spec.policy,
       db.dialect, connectionProps = db.props, tolerance = spec.tolerance)
@@ -187,13 +186,12 @@ object StreamingUpdatePipeline {
 
   def run(spark: SparkSession, spec: TableSpec, deltaDir: String,
       db: TargetDb, checkpointDir: String): Unit = {
-    Ddl.ensureTable(db.url, spec.ddl(db.sqlType, db.supportsIfNotExists, db.supportsForeignKeys), db.props)
-    val flatSchema = StructType(spec.targetSchema.filterNot(_.name == "id"))
+    db.ensureTable(spec)
     // Same option set as the batch staging reader (Staging.readOptions) —
     // notably multiLine, without which a quoted embedded newline in a delta
     // row splits the record and silently corrupts it on the streaming path.
     val stream = spark.readStream
-      .schema(flatSchema)
+      .schema(spec.flatSchema)
       .options(Staging.readOptions)
       .csv(deltaDir)
     val query = stream.writeStream
@@ -245,8 +243,8 @@ object SnapshotUpdatePipeline {
     */
   def run(spark: SparkSession, spec: TableSpec, snapshotPath: String,
       db: TargetDb, deleteVanished: Boolean = true): (Long, Long) = {
-    Ddl.ensureTable(db.url, spec.ddl(db.sqlType, db.supportsIfNotExists, db.supportsForeignKeys), db.props)
-    val flatSchema = StructType(spec.targetSchema.filterNot(_.name == "id"))
+    db.ensureTable(spec)
+    val flatSchema = spec.flatSchema
     val snapshot = Staging.read(spark, flatSchema, snapshotPath)
     val key = MigrationPipeline.reconcileKey(spec)
     val live = db.readTable(spark, spec.table)
@@ -298,12 +296,13 @@ object ResetPipeline {
 
 /** Daily incremental merge (SURVEY.md §3.2): probe the delta drop (Q9 —
   * absent file means the whole step no-ops), read with the explicit staging
-  * schema, reconcile surrogate keys against the live table (ONE broadcast
-  * join + window instead of the reference's 1+N round trips —
-  * `utils.py:27-37`), upsert, then archive the delta under a date stamp
-  * (S8). No explicit pre-sort: the reference's `sort_values('_id')` only
-  * exists to stabilize PK assignment, which `SurrogateKeys.reconcile`
-  * already orders internally.
+  * schema, reconcile surrogate keys against the live table through
+  * [[MigrationPipeline.load]] (ONE left-outer join + a window over the new
+  * keys instead of the reference's 1+N round trips — `utils.py:27-37`),
+  * upsert, then archive the delta under a date stamp (S8). No explicit
+  * pre-sort: the reference's `sort_values('_id')` only exists to stabilize
+  * PK assignment, which `SurrogateKeys.reconcile` already orders
+  * internally.
   */
 object DailyUpdatePipeline {
 
@@ -318,9 +317,8 @@ object DailyUpdatePipeline {
       secondaryArchiveDir: Option[String] = None): Boolean = {
     if (!Staging.exists(spark, deltaPath)) false
     else {
-      Ddl.ensureTable(db.url, spec.ddl(db.sqlType, db.supportsIfNotExists, db.supportsForeignKeys), db.props)
-      val flatSchema = StructType(spec.targetSchema.filterNot(_.name == "id"))
-      val delta = Staging.read(spark, flatSchema, deltaPath)
+      db.ensureTable(spec)
+      val delta = Staging.read(spark, spec.flatSchema, deltaPath)
       MigrationPipeline.load(spark, spec, delta, db, staging = None)
       Staging.archive(spark, deltaPath, archiveDir, stamp, secondaryArchiveDir)
       true

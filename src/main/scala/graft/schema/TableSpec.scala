@@ -56,6 +56,11 @@ final case class TableSpec(
     StructType(StructField("id", LongType, nullable = false) +:
       columns.map(c => StructField(c.name, c.dataType)))
 
+  /** [[targetSchema]] without the surrogate `id`: the staging, delta and
+    * snapshot layout the pipelines read before key reconcile.
+    */
+  def flatSchema: StructType = StructType(targetSchema.filterNot(_.name == "id"))
+
   /** `CREATE TABLE` DDL (SURVEY.md §2 S9) under a vendor type mapping, with
     * the serial-equivalent surrogate key and the unique business key the
     * conflict policy declares. `IF NOT EXISTS` is included only when the

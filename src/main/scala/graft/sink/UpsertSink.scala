@@ -189,72 +189,51 @@ object UpsertSink {
     val paramIdx = dialect.paramCols(cols, policy).map(cols.indexOf)
     val permissive = tolerance == WriteTolerance.Permissive
     val skipped = df.sparkSession.sparkContext.longAccumulator("graft_upsert_skipped")
-    val writers = math.max(1, math.min(maxConnections, deduped.rdd.getNumPartitions))
-    // repartition, NOT coalesce: coalesce's narrow dependency would cap the
-    // whole post-shuffle stage (the keep-first dedup window included) at
-    // `writers` tasks. The extra shuffle moves only the final bound rows;
-    // upstream compute stays at cluster parallelism and only the JDBC
-    // fan-in is bounded.
-    val sized =
-      if (deduped.rdd.getNumPartitions > writers) deduped.repartition(writers)
-      else deduped
-    sized.foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) {
-        val conn = DriverManager.getConnection(url, connectionProps)
-        try {
-          conn.setAutoCommit(false)
-          // `var` + re-prepare: Derby (at least) leaves a PreparedStatement
-          // unusable after a failed execution — the next execute re-throws
-          // the old error — so the permissive path replaces the statement
-          // after every failure.
-          var ps = conn.prepareStatement(sqlText)
-          def reprepare(): Unit = { ps.close(); ps = conn.prepareStatement(sqlText) }
-          val pending = scala.collection.mutable.ArrayBuffer.empty[Row]
-          def flush(): Unit = if (pending.nonEmpty) {
-            try { ps.executeBatch(); conn.commit() }
+    writePartitions(deduped, url, connectionProps, maxConnections) { (conn, rows) =>
+      // `var` + re-prepare: Derby (at least) leaves a PreparedStatement
+      // unusable after a failed execution — the next execute re-throws
+      // the old error — so the permissive path replaces the statement
+      // after every failure.
+      var ps = conn.prepareStatement(sqlText)
+      def reprepare(): Unit = { ps.close(); ps = conn.prepareStatement(sqlText) }
+      val pending = scala.collection.mutable.ArrayBuffer.empty[Row]
+      def flush(): Unit = if (pending.nonEmpty) {
+        try { ps.executeBatch(); conn.commit() }
+        catch {
+          case e: java.sql.SQLException if permissive =>
+            // the reference's skip-bad-rows mode: undo the batch, then
+            // replay it row-wise, committing survivors and counting
+            // offenders (user_table.py:116-121). Only genuine row
+            // faults (isRowFault: 22xxx/23xxx) are skipped — a
+            // transient failure mid-replay (deadlock, dropped
+            // connection) propagates out of the loop so the task fails
+            // and Spark retries, rather than being miscounted as N
+            // bad rows. A rollback that fails too (08003 once the
+            // driver has closed the session) must not mask the batch's
+            // own error: that one propagates, the rollback's rides along.
+            try conn.rollback()
             catch {
-              case e: java.sql.SQLException if permissive =>
-                // the reference's skip-bad-rows mode: undo the batch, then
-                // replay it row-wise, committing survivors and counting
-                // offenders (user_table.py:116-121). Only genuine row
-                // faults (isRowFault: 22xxx/23xxx) are skipped — a
-                // transient failure mid-replay (deadlock, dropped
-                // connection) propagates out of the loop so the task fails
-                // and Spark retries, rather than being miscounted as N
-                // bad rows. A rollback that fails too (08003 once the
-                // driver has closed the session) must not mask the batch's
-                // own error: that one propagates, the rollback's rides along.
-                try conn.rollback()
-                catch {
-                  case r: java.sql.SQLException => e.addSuppressed(r); throw e
-                }
-                reprepare()
-                pending.foreach { row =>
-                  try { bind(ps, row, paramIdx); ps.executeUpdate(); conn.commit() }
-                  catch {
-                    case e: java.sql.SQLException if isRowFault(e) =>
-                      conn.rollback(); reprepare(); skipped.add(1L)
-                  }
-                }
+              case r: java.sql.SQLException => e.addSuppressed(r); throw e
             }
-            pending.clear()
-          }
-          rows.foreach { row =>
-            bind(ps, row, paramIdx)
-            ps.addBatch()
-            pending += row
-            if (pending.length >= batchSize) flush()
-          }
-          flush()
-          ps.close()
-        } catch {
-          case t: Throwable =>
-            // a strict-mode batch failure must not leak an open transaction
-            // (held row locks outlive the task if close() can't end it)
-            try conn.rollback() catch { case _: java.sql.SQLException => () }
-            throw t
-        } finally conn.close()
+            reprepare()
+            pending.foreach { row =>
+              try { bind(ps, row, paramIdx); ps.executeUpdate(); conn.commit() }
+              catch {
+                case e: java.sql.SQLException if isRowFault(e) =>
+                  conn.rollback(); reprepare(); skipped.add(1L)
+              }
+            }
+        }
+        pending.clear()
       }
+      rows.foreach { row =>
+        bind(ps, row, paramIdx)
+        ps.addBatch()
+        pending += row
+        if (pending.length >= batchSize) flush()
+      }
+      flush()
+      ps.close()
     }
     skipped.value
   }
@@ -274,31 +253,54 @@ object UpsertSink {
       connectionProps: Properties = new Properties): Long = {
     val sqlText = "DELETE FROM \"" + table + "\" WHERE \"" + keyCol + "\" = ?"
     val deleted = keys.sparkSession.sparkContext.longAccumulator("graft_upsert_deleted")
-    val distinct = keys.select(keyCol).distinct()
-    val writers = math.max(1, math.min(maxConnections, distinct.rdd.getNumPartitions))
-    val sized =
-      if (distinct.rdd.getNumPartitions > writers) distinct.repartition(writers)
-      else distinct
-    sized.foreachPartition { rows: Iterator[Row] =>
+    writePartitions(keys.select(keyCol).distinct(), url, connectionProps,
+        maxConnections) { (conn, rows) =>
+      val ps = conn.prepareStatement(sqlText)
+      var pending = 0
+      def flush(): Unit = if (pending > 0) {
+        deleted.add(ps.executeBatch().map(math.max(0, _).toLong).sum)
+        conn.commit()
+        pending = 0
+      }
+      rows.foreach { row =>
+        ps.setObject(1, row.get(0))
+        ps.addBatch()
+        pending += 1
+        if (pending >= batchSize) flush()
+      }
+      flush()
+      ps.close()
+    }
+    deleted.value
+  }
+
+  /** The one JDBC partition writer behind [[upsert]] and [[deleteByKey]]:
+    * `write` runs once per non-empty writer partition over its own
+    * connection, autocommit off; any throwable rolls back before the
+    * close, so a failed batch never leaks an open transaction (held row
+    * locks outlive the task if close() can't end it).
+    *
+    * Writers = min(maxConnections, post-AQE partitions). Sizing and the
+    * write share ONE RDD (`Dataset.rdd` is a lazy val): a
+    * `Dataset.repartition` would be a new plan and run the whole input
+    * again — live-table reads, staging parse, numbering. `repartition`,
+    * NOT coalesce: coalesce's narrow dependency would cap the whole
+    * post-shuffle stage (the keep-first dedup window included) at
+    * `writers` tasks. The extra shuffle moves only the final rows;
+    * upstream compute stays at cluster parallelism and only the JDBC
+    * fan-in is bounded.
+    */
+  private def writePartitions(df: DataFrame, url: String, props: Properties,
+      maxConnections: Int)(write: (Connection, Iterator[Row]) => Unit): Unit = {
+    val rdd = df.rdd
+    val writers = math.max(1, math.min(maxConnections, rdd.getNumPartitions))
+    val sized = if (rdd.getNumPartitions > writers) rdd.repartition(writers) else rdd
+    sized.foreachPartition { rows =>
       if (rows.nonEmpty) {
-        val conn = DriverManager.getConnection(url, connectionProps)
+        val conn = DriverManager.getConnection(url, props)
         try {
           conn.setAutoCommit(false)
-          val ps = conn.prepareStatement(sqlText)
-          var pending = 0
-          def flush(): Unit = if (pending > 0) {
-            deleted.add(ps.executeBatch().map(math.max(0, _).toLong).sum)
-            conn.commit()
-            pending = 0
-          }
-          rows.foreach { row =>
-            ps.setObject(1, row.get(0))
-            ps.addBatch()
-            pending += 1
-            if (pending >= batchSize) flush()
-          }
-          flush()
-          ps.close()
+          write(conn, rows)
         } catch {
           case t: Throwable =>
             try conn.rollback() catch { case _: java.sql.SQLException => () }
@@ -306,7 +308,6 @@ object UpsertSink {
         } finally conn.close()
       }
     }
-    deleted.value
   }
 
   private def bind(ps: PreparedStatement, row: Row, paramIdx: Seq[Int]): Unit = {

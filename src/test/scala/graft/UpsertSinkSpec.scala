@@ -105,6 +105,59 @@ class UpsertSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_._1).toSet == (1 to n).toSet)
   }
 
+  test("an upsert above the writer cap reads its input once") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    clear()
+    val n = 2000
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_once").toString
+    (1 to n).map(i => (i, f"k$i%05d", s"name$i", i % 2 == 0))
+      .toDF("id", "_id", "name", "deleted").write.mode("overwrite").parquet(dir)
+    // source records read by every task between two marker jobs; listener
+    // delivery is async but in order, so the end marker's job start arrives
+    // after every task of the upsert
+    val marker = "graft.test.marker"
+    val recordsRead = new AtomicLong
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      private var counting = false
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(marker))) match {
+          case Some("start") => counting = true
+          case Some("end") => counting = false; drained.countDown()
+          case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (counting && e.taskMetrics != null)
+          recordsRead.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val sc = spark.sparkContext
+    def mark(m: String): Unit = {
+      sc.setLocalProperty(marker, m)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+    }
+    // without coalescing the keep-first dedup keeps all its shuffle
+    // partitions: more than the single writer, so the sink repartitions
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prevCoalesce = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    sc.addSparkListener(listener)
+    try {
+      mark("start")
+      UpsertSink.upsert(spark.read.parquet(dir), url, "users", update,
+        DerbyUpsertDialect, maxConnections = 1)
+      mark("end")
+      assert(drained.await(30, TimeUnit.SECONDS), "end marker never delivered")
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.conf.set(coalesce, prevCoalesce)
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt >= 2)
+    assert(recordsRead.get() == n, s"read ${recordsRead.get()} source records for $n rows")
+    assert(readAll().length == n)
+  }
+
   test("permissive tolerance skips poison rows and loads the rest; strict fails fast") {
     clear()
     val poison = "x" * 100 // overflows "name" VARCHAR(64)
