@@ -1948,7 +1948,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     *    fresh snapshot: taken after the missing-covered observation,
     *    it is guaranteed to hold every compact file.
     *
-    * One `exists` probe per listing in the common case (no manifest);
+    * One manifest probe per listing in the common case (no manifest);
     * O(covered) probes plus at most one re-list only during the
     * maintenance window itself. The manifest vanishing mid-check (the
     * fold just finished) simply un-pins — the finished layout is
@@ -1960,31 +1960,18 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
       depth: Int = 0): Seq[(FileStatus, Array[String])] = {
     val manifestPath =
       new Path(root, graft.sink.CorpusSink.CompactManifestRelPath)
-    // raw manifest TEXT (None = absent — unpinned), kept for the
-    // changed-since check below; damaged text also un-pins (the finish
-    // path validates by round-trip BEFORE any rename or delete, so a
-    // damaged manifest means the fold never acted and the raw listing
-    // IS the intact pre-fold generation). Genuine IO errors still
-    // propagate: silently unpinning on a transient read failure
-    // mid-fold could mix generations.
-    def readManifestText(): Option[String] =
-      try {
-        if (!fs.exists(manifestPath)) None
-        else {
-          val in = fs.open(manifestPath)
-          Some(try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8) finally in.close())
-        }
-      } catch {
-        case _: java.io.FileNotFoundException => None
-      }
-    val txt = readManifestText().getOrElse(return files)
-    val parsed =
-      try graft.sink.CorpusSink.parseCompactManifest(txt)
-      catch {
-        case _: IllegalStateException | _: IllegalArgumentException =>
-          return files
-      }
+    // the validated manifest (None = absent — unpinned), kept for the
+    // changed-since check below; a damaged one also un-pins (the finish
+    // path validates BEFORE any rename or delete, so a damaged manifest
+    // means the fold never acted and the raw listing IS the intact
+    // pre-fold generation). Genuine IO errors still propagate: silently
+    // unpinning on a transient read failure mid-fold could mix
+    // generations.
+    def readManifest(): Option[(String, Seq[String])] =
+      try graft.core.Generations.read(fs, manifestPath)
+        .map(graft.sink.CorpusSink.tagged)
+      catch { case _: IllegalStateException => None }
+    val parsed = readManifest().getOrElse(return files)
     val (tag, covered) = parsed
     val rootUri = root.toUri
     def rel(st: FileStatus): String =
@@ -2008,8 +1995,8 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
       // rather than risk a mixed-generation listing.
       val fresh = relist()
       val coveredSet = covered.toSet
-      readManifestText() match {
-        case Some(now) if now == txt =>
+      readManifest() match {
+        case Some(now) if now == parsed =>
           fresh.filterNot { case (st, _) => coveredSet.contains(rel(st)) }
         case _ if depth < 8 =>
           pinGeneration(fs, root, fresh, relist, depth + 1)

@@ -1178,10 +1178,8 @@ object ZoneMaps {
     }
   }
 
-  /** In-flight fold directory and its completion manifest. The fold is
-    * COMPLETE only once `_folded.json` (the list of covered generation
-    * directory names) exists — written after the parquet `_SUCCESS`, the
-    * [[graft.ops.ProductQuantize]] `_folded`-manifest discipline.
+  /** In-flight fold directory and its completion manifest (the covered
+    * generation names, a [[graft.core.Generations]] commit record).
     */
   private val FoldingDir = "_folding"
   private val FoldedManifest = "_folded.json"
@@ -1197,17 +1195,13 @@ object ZoneMaps {
     * zero document bytes read — so its cadence can be "every N appends"
     * at any corpus size.
     *
-    * Crash-idempotent: the fold lands in a hidden `_folding` staging dir
-    * (invisible to [[snapshot]]), is complete only once its manifest
-    * lands, inputs are deleted only after that, and the staging dir is
-    * renamed to `base` last. A replay after a crash anywhere in that
-    * sequence converges: an unmanifested staging dir is discarded and
-    * refolded from the (still intact) generations; a manifested one is
-    * finished — remaining covered inputs deleted, rename retried. A
-    * reader racing the window between input deletion and rename sees a
-    * reduced generation set — reduced stats only ever DISABLE pruning
-    * for the affected files, never mis-prune. Single writer assumed,
-    * like every artifact here.
+    * Crash-idempotent by the [[graft.core.Generations]] commit: the fold
+    * lands in a hidden `_folding` staging dir (invisible to [[snapshot]])
+    * committed by its manifest; unmanifested staging is discarded and
+    * refolded, manifested staging is finished (covered inputs deleted,
+    * then renamed to `base`). A reader racing the window between input
+    * deletion and rename sees a reduced generation set — reduced stats
+    * only ever DISABLE pruning for the affected files, never mis-prune.
     *
     * Returns the number of INPUT generation directories folded (base
     * included when present — a routine fold of base plus two appends
@@ -1222,15 +1216,8 @@ object ZoneMaps {
     val staging = new Path(sidecar, FoldingDir)
     val basePath = new Path(sidecar, "base")
 
-    def finishFold(): Long = {
-      val manifest = new Path(staging, FoldedManifest)
-      val covered: Seq[String] = {
-        val in = fs.open(manifest)
-        val txt = try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-        """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(txt)
-          .map(_.group(1)).toSeq
-      }
+    val manifest = new Path(staging, FoldedManifest)
+    def finishFold(covered: Seq[String]): Long = {
       covered.foreach { name =>
         val p = new Path(sidecar, name)
         if (fs.exists(p)) fs.delete(p, true)
@@ -1252,10 +1239,11 @@ object ZoneMaps {
       covered.size.toLong
     }
 
-    if (fs.exists(staging)) {
-      if (fs.exists(new Path(staging, FoldedManifest))) return finishFold()
-      // crashed mid-write: the inputs are intact — discard and refold
-      fs.delete(staging, true)
+    graft.core.Generations.read(fs, manifest) match {
+      case Some(m) => return finishFold(m.covered)
+      // crashed mid-write (or never staged): the inputs are intact —
+      // discard and refold
+      case None => fs.delete(staging, true)
     }
     val gens = fs.listStatus(sidecar).toSeq
       .filter(st => st.isDirectory && DocListing.visible(st))
@@ -1283,16 +1271,10 @@ object ZoneMaps {
       .select(statSchema.fieldNames.map(c): _*)
       .coalesce(sidecarParts(current.size))
       .write.mode("overwrite").parquet(staging.toString)
-    // completion manifest AFTER the parquet _SUCCESS: its existence is
-    // the one-bit commit record the replay path keys on
-    val json = gens.map(g => "\"" + g.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case ch => ch.toString
-    } + "\"").mkString("[", ",", "]")
-    val out = fs.create(new Path(staging, FoldedManifest), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    finishFold()
+    // completion manifest AFTER the parquet _SUCCESS: the commit record
+    // the replay path keys on
+    graft.core.Generations.commit(fs, manifest,
+      graft.core.Generations.Manifest(gens))
+    finishFold(gens)
   }
 }

@@ -450,63 +450,16 @@ object ProductQuantize {
 
   // ---- encoded-artifact lifecycle ------------------------------------
 
-  /** The appendable encoded-artifact layout under one root:
-    *
-    *   `path/gen=<n>/cell=<c>/…`      compacted generations
-    *   `path/batch=<tag>/cell=<c>/…`  incremental appends, one dir per tag
-    *
-    * A generation is COMPLETE only once its `_folded` manifest exists
-    * (written after the parquet `_SUCCESS`; the manifest is the
-    * cumulative set of batch tags the generation covers). Readers see
-    * the LAST complete generation plus every batch directory the
-    * manifest doesn't cover — so a crash anywhere in [[compactEncoded]]
-    * leaves the artifact readable and a rerun converges
-    * (the [[graft.pipelines.StreamingIvfIngest]] discipline, adapted to
-    * caller-supplied string tags). Single writer assumed, like every
-    * parquet artifact here.
+  /** The appendable encoded artifact is a [[graft.core.Generations]]
+    * layout under one root: `path/gen=<n>/cell=<c>/…` folded generations
+    * beside `path/batch=<tag>/cell=<c>/…` appends. Commit, read set and
+    * crash discipline are the module's. `writeCells` is the fold writer
+    * every cell-partitioned generation shares (the streaming IVF/PQ
+    * ingests' too).
     */
-  private val FoldedManifest = "_folded"
-
-  private def artifactFs(spark: org.apache.spark.sql.SparkSession,
-      path: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** COMPLETE (manifest-carrying) generation directories, ascending. */
-  private def generations(f: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("gen=") &&
-          f.exists(new org.apache.hadoop.fs.Path(st.getPath, FoldedManifest)) =>
-        st.getPath.getName.stripPrefix("gen=").toLong -> st.getPath
-    }.sortBy(_._1)
-
-  private def batchDirs(f: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(String, org.apache.hadoop.fs.Path)] =
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("batch=") =>
-        st.getPath.getName.stripPrefix("batch=") -> st.getPath
-    }
-
-  /** Cumulative folded-tag manifest of one complete generation. */
-  private def foldedTags(f: org.apache.hadoop.fs.FileSystem,
-      gen: org.apache.hadoop.fs.Path): Set[String] = {
-    val in = f.open(new org.apache.hadoop.fs.Path(gen, FoldedManifest))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toSet
-    finally in.close()
-  }
-
-  private def writeManifest(f: org.apache.hadoop.fs.FileSystem,
-      gen: org.apache.hadoop.fs.Path, tags: Set[String]): Unit = {
-    val out = f.create(new org.apache.hadoop.fs.Path(gen, FoldedManifest), true)
-    try out.write(tags.toSeq.sorted.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private[graft] def writeCells(df: DataFrame, target: String): Unit =
+    df.repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(target)
 
   /** Incremental encode-append for the PQ inverted file — FAISS's
     * add-with-existing-codebooks semantic, pairing with the float index's
@@ -573,75 +526,36 @@ object ProductQuantize {
     // engages by ESTIMATED SIZE — below one scan split the task count is
     // already bounded and the write stays map-side; compaction
     // ([[compactEncoded]]) re-clusters later regardless.
-    graft.core.Layout.clusterIfLarge(encoded, col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/gen=0")
-    val (f, root) = artifactFs(encoded.sparkSession, path)
-    writeManifest(f, new org.apache.hadoop.fs.Path(root, "gen=0"), Set.empty)
+    graft.core.Generations.saveBase(encoded.sparkSession, path) { target =>
+      graft.core.Layout.clusterIfLarge(encoded, col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(target)
+    }
   }
 
   /** Fold the appended `batch=` directories (plus the previous
     * generation) into the next generation — the LSM maintenance step a
     * long-lived appendable artifact needs (without it every append
     * leaves its own small per-cell files forever; one shuffle on `cell`
-    * re-bounds the file count). Crash-idempotent: the new generation is
-    * complete only once its cumulative `_folded` manifest lands (written
-    * after the parquet `_SUCCESS`), inputs are deleted only after that,
-    * and a batch directory re-created by a late replay of an
-    * already-folded tag is finish-cleaned on the next call, never
-    * re-folded. Returns the covering generation id, or None when the
-    * artifact holds nothing.
+    * re-bounds the file count). A [[graft.core.Generations.fold]]: a
+    * replayed tag that is already folded is deleted, never re-folded.
+    * Returns the covering generation id, or None when the artifact holds
+    * nothing.
     */
   def compactEncoded(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Long] = {
-    val (f, root) = artifactFs(spark, path)
-    val gens = generations(f, root)
-    val last = gens.lastOption
-    val folded = last.map { case (_, p) => foldedTags(f, p) }
-      .getOrElse(Set.empty[String])
-    val (covered, pending) = batchDirs(f, root)
-      .partition { case (tag, _) => folded(tag) }
-    // covered leftovers are a replay of an already-folded tag (or an
-    // interrupted cleanup): their rows are inside the generation already
-    covered.foreach { case (_, p) => f.delete(p, true) }
-    if (pending.isEmpty) {
-      // finish an interrupted cleanup: a crash between the manifest
-      // write and the deletes leaves superseded generations behind —
-      // readers ignore them, but the disk copy must not live forever
-      gens.dropRight(1).foreach { case (_, p) => f.delete(p, true) }
-      return last.map(_._1)
-    }
-    val newGen = last.map(_._1 + 1L).getOrElse(1L)
-    val target = new org.apache.hadoop.fs.Path(root, s"gen=$newGen")
-    val inputs = last.map(_._2.toString).toSeq ++ pending.map(_._2.toString)
-    inputs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(target.toString)
-    writeManifest(f, target, folded ++ pending.map(_._1))
-    pending.foreach { case (_, p) => f.delete(p, true) }
-    gens.foreach { case (_, p) => f.delete(p, true) }
-    Some(newGen)
-  }
+      path: String): Option[Long] =
+    graft.core.Generations.fold(spark, path, path)(writeCells).map(_.generation)
 
-  /** Read a [[saveEncoded]]/[[appendEncodedBatch]] artifact: the last
-    * complete generation plus every batch directory its manifest doesn't
-    * cover, each read as its own cell-partitioned tree (partition
-    * discovery recovers `cell` per root; a multi-root single read would
-    * need a common basePath these layouts don't share). The discovered
-    * `cell` column casts back to the int the searches join on.
+  /** Read a [[saveEncoded]]/[[appendEncodedBatch]] artifact: the
+    * [[graft.core.Generations.readSet]] (last complete generation plus
+    * every uncovered batch), each root read as its own cell-partitioned
+    * tree. The discovered `cell` column casts back to the int the
+    * searches join on.
     */
   def loadEncoded(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val (f, root) = artifactFs(spark, path)
-    val last = generations(f, root).lastOption
-    val folded = last.map { case (_, p) => foldedTags(f, p) }
-      .getOrElse(Set.empty[String])
-    val roots = last.map(_._2.toString).toSeq ++
-      batchDirs(f, root).collect { case (tag, p) if !folded(tag) =>
-        p.toString
-      }
+    val roots = graft.core.Generations.readSet(spark, path, path)
     require(roots.nonEmpty, s"no encoded inverted file under $path")
-    val df = roots.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+    val df = graft.core.Generations.union(spark, roots)
     df.select((df.columns.filterNot(_ == "cell").map(col) :+
       col("cell").cast("int").as("cell")).toIndexedSeq: _*)
   }
@@ -687,8 +601,11 @@ object ProductQuantize {
     ()
   }
 
-  private def rotationPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/rotation")
+  private def hasRotation(spark: org.apache.spark.sql.SparkSession,
+      path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/rotation")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   private def readBooks(spark: org.apache.spark.sql.SparkSession,
       path: String): PqCodebooks = {
@@ -709,8 +626,7 @@ object ProductQuantize {
     */
   def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
       path: String): PqCodebooks = {
-    val (f, _) = artifactFs(spark, path)
-    require(!f.exists(rotationPath(path)),
+    require(!hasRotation(spark, path),
       s"$path holds an OPQ-rotated quantizer (rotation present) — load " +
         "it with loadOpqCodebooks and rotate queries with the returned R")
     readBooks(spark, path)
@@ -723,8 +639,7 @@ object ProductQuantize {
     */
   def loadOpqCodebooks(spark: org.apache.spark.sql.SparkSession,
       path: String): (PqCodebooks, Array[Double], Int) = {
-    val (f, _) = artifactFs(spark, path)
-    require(f.exists(rotationPath(path)),
+    require(hasRotation(spark, path),
       s"$path holds no rotation — a plain PQ artifact loads with " +
         "loadCodebooks")
     // sibling single-file artifacts — read them concurrently (guide §2.6)

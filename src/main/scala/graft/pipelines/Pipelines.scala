@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.core.Generations
 import graft.ingest.{DocSource, ExtendedJsonDirSource, ExtendedJsonSource, Staging}
 import graft.keys.SurrogateKeys
 import graft.ops.Diff
@@ -361,35 +362,31 @@ object DailyUpdatePipeline {
   */
 private[pipelines] object CheckpointRunId {
 
-  private def markerPath(checkpointDir: String) =
-    new org.apache.hadoop.fs.Path(checkpointDir, "_graft_run_id")
-
-  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
-    finally in.close()
+  private def marker(spark: SparkSession, checkpointDir: String) = {
+    val p = new org.apache.hadoop.fs.Path(checkpointDir, "_graft_run_id")
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Read the checkpoint's run id, creating it on first use. */
-  def getOrCreate(spark: SparkSession, checkpointDir: String): String = {
-    val p = markerPath(checkpointDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) readMarker(fs, p)
-    else {
-      val id = java.util.UUID.randomUUID().toString.replace("-", "")
-      val out = fs.create(p, false)
-      try out.write(id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+  /** Read the checkpoint's run id, creating it (atomically) on first use. */
+  def getOrCreate(spark: SparkSession, checkpointDir: String): String =
+    get(spark, checkpointDir).getOrElse {
+      val (fs, p) = marker(spark, checkpointDir)
+      Generations.commitText(fs, p,
+        java.util.UUID.randomUUID().toString.replace("-", ""))
+      get(spark, checkpointDir).get
+    }
+
+  /** Read-only lookup — None when the checkpoint has never run. An empty
+    * marker is refused: it would put every run of the checkpoint under
+    * one `run=` namespace.
+    */
+  def get(spark: SparkSession, checkpointDir: String): Option[String] = {
+    val (fs, p) = marker(spark, checkpointDir)
+    Generations.readText(fs, p).map { text =>
+      val id = text.trim
+      require(id.nonEmpty, s"empty run-id marker $p")
       id
     }
-  }
-
-  /** Read-only lookup — None when the checkpoint has never run. */
-  def get(spark: SparkSession, checkpointDir: String): Option[String] = {
-    val p = markerPath(checkpointDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(readMarker(fs, p)) else None
   }
 }
 
@@ -459,157 +456,89 @@ object StreamingIvfIngest {
     Summary(batches.get(), w.exists(_.needsRebuild), w)
   }
 
-  /** One successful compaction: `foldedBatches` batch directories folded
-    * into the canonical cell-partitioned layout at `path` (generation =
-    * the highest micro-batch id it covers).
+  /** One compaction: `foldedBatches` batch directories folded into
+    * generation `generation` of the canonical cell-partitioned layout at
+    * `path` (0 = nothing new to fold).
     */
-  final case class Compaction(foldedBatches: Long, generation: Long,
-      path: String)
+  type Compaction = Generations.Fold
+  val Compaction = Generations.Fold
 
   private[pipelines] def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Generation directories under one run's compaction root that finished
-    * writing (Spark's `_SUCCESS` marker — a crashed write without it is
-    * invisible to readers and simply overwritten by the retry).
+  /** Pre-run-scoped top-level `gen=<n>` directories that finished writing
+    * (Spark's `_SUCCESS`), ascending: [[loadCompacted]] still reads the
+    * last one, [[compact]] refuses to extend them.
     */
-  private[pipelines] def generations(spark: SparkSession,
-      runCompactDir: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val f = fs(spark, runCompactDir)
-    if (!f.exists(runCompactDir)) Seq.empty
-    else f.listStatus(runCompactDir).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("gen=") &&
-          f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
-        st.getPath.getName.stripPrefix("gen=").toLong -> st.getPath
-    }.sortBy(_._1)
-  }
-
-  /** Every run's LAST completed generation under `compactedDir`
-    * (`run=<id>/gen=<n>` layout; a legacy top-level `gen=<n>` from the
-    * pre-run-scoped layout is read as its own pseudo-run so old data stays
-    * queryable — [[compact]] refuses to extend such a layout).
-    */
-  private[pipelines] def lastGenerations(spark: SparkSession,
+  private def legacyGenerations(spark: SparkSession,
       compactedDir: String): Seq[org.apache.hadoop.fs.Path] = {
     val root = new org.apache.hadoop.fs.Path(compactedDir)
     val f = fs(spark, root)
-    if (!f.exists(root)) return Seq.empty
-    val runRoots = f.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("run="))
-      .map(_.getPath)
-    val perRun = runRoots.flatMap(r => generations(spark, r).lastOption.map(_._2))
-    perRun ++ generations(spark, root).lastOption.map(_._2)
+    Generations.subdirs(f, root, "gen=").sortBy(_._1.toLong).map(_._2)
+      .filter(p => f.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
   }
 
   /** Latest compacted state as a queryable assigned corpus
     * ([[graft.ops.Similarity.ivfTopKWithAssigned]] input): the union of
-    * every run namespace's last generation — runs never fold each other's
-    * data (a foreign run may still be live), so "everything compacted" is
-    * this union by construction.
+    * every run namespace's last complete generation — runs never fold
+    * each other's data (a foreign run may still be live), so "everything
+    * compacted" is this union by construction.
     */
   def loadCompacted(spark: SparkSession, compactedDir: String): DataFrame = {
-    val gens = lastGenerations(spark, compactedDir)
+    val root = new org.apache.hadoop.fs.Path(compactedDir)
+    val gens = Generations.subdirs(fs(spark, root), root, "run=")
+      .flatMap { case (_, r) => Generations.latest(spark, r.toString) } ++
+      legacyGenerations(spark, compactedDir).lastOption.map(_.toString)
     require(gens.nonEmpty, s"no completed compaction under $compactedDir")
-    gens.map(p => spark.read.parquet(p.toString)).reduce(_.unionByName(_))
+    Generations.union(spark, gens)
   }
 
   /** Fold the streaming inverted file's `run=<id>/batch=<n>` directories
     * into the canonical cell-partitioned corpus layout
     * ([[graft.ops.Similarity.saveAssignedCorpus]] format) — the LSM-style
     * maintenance step a long-lived ingest needs: without it every
-    * micro-batch leaves its own small per-cell files forever.
+    * micro-batch leaves its own small per-cell files forever. One shuffle
+    * on `cell` bounds each cell's file count.
     *
-    * Replay-idempotency is preserved by folding ONLY micro-batches the
-    * checkpoint has COMMITTED (the `commits/` log): a batch that landed
-    * but crashed before its commit is left in place for the stream's own
-    * replay to overwrite — compacting it early would race that replay.
-    * Batches from OTHER run namespaces (lost-checkpoint re-ingests) are
-    * never touched: only the current checkpoint carries commit evidence,
-    * and whether a stale run's rows are duplicates is an operator call.
-    *
-    * The fold itself is crash-idempotent: the output generation is named
-    * by the highest batch id it covers, written with overwrite semantics,
-    * and inputs (folded batch dirs + superseded generations) are deleted
-    * only AFTER the `_SUCCESS`-marked write — a rerun after any crash
-    * point converges to the same state. Each compaction shuffles once on
-    * `cell`, so every cell lands as a bounded file count regardless of how
-    * many micro-batches fed it.
+    * A [[Generations.fold]] per run (`compactedDir/run=<id>/gen=<n>`)
+    * whose eligible batches are those the checkpoint has COMMITTED (the
+    * `commits/` log): a batch that landed but crashed before its commit is
+    * the stream's own replay to overwrite. Other runs' batches
+    * (lost-checkpoint re-ingests) are never touched — only the current
+    * checkpoint carries commit evidence.
     *
     * @return the covering compaction, or None when nothing is committed
     *   yet (no marker, no commits, or no landed batch directories)
     */
   def compact(spark: SparkSession, invertedDir: String, compactedDir: String,
       checkpointDir: String): Option[Compaction] = {
-    val runId = CheckpointRunId.get(spark, checkpointDir) match {
-      case Some(id) => id
-      case None => return None
-    }
-    val f = fs(spark, new org.apache.hadoop.fs.Path(checkpointDir))
-    // generations are SCOPED PER RUN: "batch id <= last generation" is only
-    // a coverage statement within one run's monotone batch numbering. A
-    // shared top-level generation would, after a checkpoint loss restarts
-    // batch ids at 0 under a new run id, classify the new run's batches
-    // 0..N as already-folded and delete them unfolded — silent data loss.
-    val legacy = generations(spark,
-      new org.apache.hadoop.fs.Path(compactedDir))
+    val legacy = legacyGenerations(spark, compactedDir)
     require(legacy.isEmpty,
       s"$compactedDir holds pre-run-scoped generations " +
-        s"(${legacy.map(_._2.getName).mkString(", ")}) whose covered-batch " +
+        s"(${legacy.map(_.getName).mkString(", ")}) whose covered-batch " +
         "provenance is ambiguous across runs; compact into a fresh " +
         "compactedDir (the old generations stay readable via loadCompacted)")
-    val landed = committedBatchDirs(spark, s"$invertedDir/run=$runId",
-      checkpointDir)
-    val runCompactRoot =
-      new org.apache.hadoop.fs.Path(s"$compactedDir/run=$runId")
-    val gens = generations(spark, runCompactRoot)
-    val lastGen = gens.lastOption.map(_._1)
-    // batch dirs at or below this RUN's last generation are ALREADY INSIDE
-    // it — a crash between the generation write and the dir cleanup left
-    // them behind. Finish the interrupted cleanup; NEVER re-fold them
-    // (reading them into a later fold beside the generation that contains
-    // them would duplicate their rows in every generation after).
-    val (covered, pending) =
-      landed.partition { case (id, _) => lastGen.exists(id <= _) }
-    covered.foreach { case (_, p) => f.delete(p, true) }
-    if (pending.isEmpty) return gens.lastOption.map { case (g, p) =>
-      Compaction(0L, g, p.toString)
-    }
-    val newGen = pending.map(_._1).max
-    val target = s"$runCompactRoot/gen=$newGen"
-    val inputs = gens.lastOption.map(_._2.toString).toSeq ++
-      pending.map(_._2.toString)
-    // per-root reads + unionByName: each root is its own cell-partitioned
-    // tree, so discovery recovers `cell` per root (a multi-root single
-    // read would need a common basePath these layouts don't share)
-    inputs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(target)
-    pending.foreach { case (_, p) => f.delete(p, true) }
-    generations(spark, runCompactRoot).filter(_._1 < newGen)
-      .foreach { case (_, p) => f.delete(p, true) }
-    Some(Compaction(pending.size.toLong, newGen, target))
+    foldRun(spark, invertedDir, compactedDir, checkpointDir)(
+      graft.ops.ProductQuantize.writeCells)
   }
 
-  /** This run's landed micro-batch directories that the checkpoint has
-    * COMMITTED (the `commits/` log), ascending by batch id — the only
-    * directories a compaction may fold (an uncommitted landing is the
-    * stream's to replay/overwrite).
+  /** Fold the current checkpoint's run: its COMMITTED `batchRoot/run=<id>`
+    * batches into `genRoot/run=<id>` generations. Generations are scoped
+    * PER RUN: a checkpoint loss restarts batch ids at 0 under a new run
+    * id, and a shared generation's manifest would already cover them.
     */
-  private[pipelines] def committedBatchDirs(spark: SparkSession,
-      runDir: String, checkpointDir: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val f = fs(spark, new org.apache.hadoop.fs.Path(checkpointDir))
-    val commitsDir = new org.apache.hadoop.fs.Path(checkpointDir, "commits")
-    val committed: Set[Long] =
-      if (!f.exists(commitsDir)) Set.empty
-      else f.listStatus(commitsDir).map(_.getPath.getName)
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).toSet
-    val rd = new org.apache.hadoop.fs.Path(runDir)
-    if (!f.exists(rd)) Seq.empty
-    else f.listStatus(rd).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("batch=") =>
-        st.getPath.getName.stripPrefix("batch=").toLong -> st.getPath
-    }.filter { case (id, _) => committed(id) }.sortBy(_._1)
-  }
+  private[pipelines] def foldRun(spark: SparkSession, batchRoot: String,
+      genRoot: String, checkpointDir: String)(
+      write: (DataFrame, String) => Unit): Option[Compaction] =
+    CheckpointRunId.get(spark, checkpointDir).flatMap { runId =>
+      val commits = new org.apache.hadoop.fs.Path(checkpointDir, "commits")
+      val f = fs(spark, commits)
+      val committed: Set[Long] =
+        if (!f.exists(commits)) Set.empty
+        else f.listStatus(commits).flatMap(_.getPath.getName.toLongOption).toSet
+      Generations.fold(spark, s"$genRoot/run=$runId", s"$batchRoot/run=$runId",
+        tag => tag.toLongOption.exists(committed))(write)
+    }
 }
 
 /** Streaming encode-append ingestion for the PQ inverted file — the
@@ -638,12 +567,9 @@ object StreamingIvfIngest {
   */
 object StreamingPqIngest {
 
-  /** @param batches NON-EMPTY micro-batches landed this invocation
-    * @param rebuildFlagged true if ANY batch tripped the drift gate
-    * @param worstDrift the lowest-scoring batch's gate result
-    */
-  final case class Summary(batches: Long, rebuildFlagged: Boolean,
-      worstDrift: Option[graft.ops.Similarity.IvfDrift])
+  /** The float ingest's summary: one ingest, one summary. */
+  type Summary = StreamingIvfIngest.Summary
+  val Summary = StreamingIvfIngest.Summary
 
   def run(spark: SparkSession, index: graft.ops.Similarity.IvfIndex,
       cb: graft.ops.ProductQuantize.PqCodebooks, batchDir: String,
@@ -653,11 +579,10 @@ object StreamingPqIngest {
     // (code column instead of the float vector) IS the float ingest —
     // checkpointing, drift gating, and the replay-idempotent landing
     // must never fork
-    val s = StreamingIvfIngest.run(spark, index, batchDir, schema, idCol,
+    StreamingIvfIngest.run(spark, index, batchDir, schema, idCol,
       vecCol, codesDir, checkpointDir, relTolerance,
       rowForm = assigned => assigned.select(col(idCol), col("cell"),
         graft.ops.ProductQuantize.encodeExpr(col(vecCol), cb).as("code")))
-    Summary(s.batches, s.rebuildFlagged, s.worstDrift)
   }
 }
 
@@ -712,28 +637,8 @@ object StreamingNearDupIngest {
     */
   def compactedDir(indexDir: String): String = s"$indexDir/_compacted"
 
-  /** Per-run covered-batch watermark of the compacted tree: run id → the
-    * highest batch id inside that run's last completed generation
-    * (generation number = watermark, the [[StreamingIvfIngest.compact]]
-    * convention — sound per run because batch numbering is monotone
-    * WITHIN a run, the exact scoping that makes "id <= gen" safe).
-    */
-  private def genWatermarks(spark: SparkSession,
-      indexDir: String): Map[String, (Long, org.apache.hadoop.fs.Path)] = {
-    val root = new org.apache.hadoop.fs.Path(compactedDir(indexDir))
-    val f = StreamingIvfIngest.fs(spark, root)
-    if (!f.exists(root)) return Map.empty
-    f.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("run="))
-      .flatMap { st =>
-        StreamingIvfIngest.generations(spark, st.getPath).lastOption
-          .map { case (g, p) => st.getPath.getName.stripPrefix("run=") -> (g, p) }
-      }.toMap
-  }
-
   /** Index directories readable as history for micro-batch `batchId` of
-    * run `runId`: every run's last compacted generation, plus every batch
-    * dir NOT yet folded into its run's generation — EXCEPT the current
+    * run `runId`: every run's [[Generations.readSet]] — EXCEPT the current
     * run's `batch >= batchId` (a replay must not see its own first
     * attempt; a generation can never contain it, because folds take only
     * COMMITTED batches and a replaying batch is by definition
@@ -742,69 +647,29 @@ object StreamingNearDupIngest {
     */
   private def historyDirs(spark: SparkSession, indexDir: String,
       runId: String, batchId: Long): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(root)) return Seq.empty
-    val marks = genWatermarks(spark, indexDir)
-    val gens = marks.values.map(_._2.toString).toSeq
-    val batches = for {
-      runSt <- f.listStatus(root).toSeq
-      if runSt.isDirectory && runSt.getPath.getName.startsWith("run=")
-      run = runSt.getPath.getName.stripPrefix("run=")
-      bSt <- f.listStatus(runSt.getPath).toSeq
-      if bSt.isDirectory && bSt.getPath.getName.startsWith("batch=")
-      b = bSt.getPath.getName.stripPrefix("batch=").toLong
-      if marks.get(run).forall { case (g, _) => b > g }
-      if run != runId || b < batchId
-    } yield bSt.getPath.toString
-    gens ++ batches
+    val f = StreamingIvfIngest.fs(spark, new org.apache.hadoop.fs.Path(indexDir))
+    val runs = Seq(indexDir, compactedDir(indexDir)).flatMap(d =>
+      Generations.subdirs(f, new org.apache.hadoop.fs.Path(d), "run=").map(_._1))
+    runs.distinct.flatMap(run => Generations.readSet(spark,
+      s"${compactedDir(indexDir)}/run=$run", s"$indexDir/run=$run",
+      keep = tag => run != runId || tag.toLong < batchId))
   }
 
   /** LSM fold of the shingle-index batch directories — the
-    * [[StreamingIvfIngest.compact]] twin for the near-dup ingest: without
-    * it [[historyDirs]] re-lists and re-unions EVERY `run=/batch=` dir on
-    * every micro-batch, a per-batch cost growing linearly in batch count
-    * over a long-lived ingest. Folds the current checkpoint's COMMITTED
-    * batch dirs (plus the run's previous generation) into
-    * `_compacted/run=<id>/gen=<maxBatch>`; crash-idempotent by the same
-    * contract (overwrite write, inputs deleted only after `_SUCCESS`,
-    * covered leftovers finished-cleaned, never re-folded). Foreign runs'
-    * directories are never touched — only the current checkpoint carries
-    * commit evidence.
+    * [[StreamingIvfIngest.compact]] twin for the near-dup ingest (the same
+    * per-run, commit-scoped [[Generations.fold]] into
+    * `_compacted/run=<id>/gen=<n>`): without it [[historyDirs]] re-lists
+    * and re-unions EVERY `run=/batch=` dir on every micro-batch, a
+    * per-batch cost growing linearly in batch count over a long-lived
+    * ingest.
     */
   def compact(spark: SparkSession, indexDir: String,
-      checkpointDir: String): Option[StreamingIvfIngest.Compaction] = {
-    val runId = CheckpointRunId.get(spark, checkpointDir) match {
-      case Some(id) => id
-      case None => return None
-    }
-    val f = StreamingIvfIngest.fs(spark, new org.apache.hadoop.fs.Path(indexDir))
-    val landed = StreamingIvfIngest.committedBatchDirs(spark,
-      s"$indexDir/run=$runId", checkpointDir)
-    val runCompactRoot =
-      new org.apache.hadoop.fs.Path(s"${compactedDir(indexDir)}/run=$runId")
-    val gens = StreamingIvfIngest.generations(spark, runCompactRoot)
-    val lastGen = gens.lastOption.map(_._1)
-    val (covered, pending) =
-      landed.partition { case (id, _) => lastGen.exists(id <= _) }
-    covered.foreach { case (_, p) => f.delete(p, true) }
-    if (pending.isEmpty) return gens.lastOption.map { case (g, p) =>
-      StreamingIvfIngest.Compaction(0L, g, p.toString)
-    }
-    val newGen = pending.map(_._1).max
-    val target = s"$runCompactRoot/gen=$newGen"
-    val inputs = gens.lastOption.map(_._2.toString).toSeq ++
-      pending.map(_._2.toString)
+      checkpointDir: String): Option[StreamingIvfIngest.Compaction] =
     // plain union write, no shuffle: the scan packs the many small batch
     // files into size-bounded partitions, so the generation's file count
     // is bounded by bytes/maxPartitionBytes regardless of batch count
-    inputs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(target)
-    pending.foreach { case (_, p) => f.delete(p, true) }
-    StreamingIvfIngest.generations(spark, runCompactRoot)
-      .filter(_._1 < newGen).foreach { case (_, p) => f.delete(p, true) }
-    Some(StreamingIvfIngest.Compaction(pending.size.toLong, newGen, target))
-  }
+    StreamingIvfIngest.foldRun(spark, indexDir, compactedDir(indexDir),
+      checkpointDir)((df, target) => df.write.mode("overwrite").parquet(target))
 
   /** Extra per-batch rejection gates, composed with the near-dup checks:
     * each maps the landed micro-batch frame to the id values it rejects

@@ -359,8 +359,8 @@ object CorpusSink extends org.apache.spark.internal.Logging {
     * the path migration: the compacted bands land inside the SAME drop
     * and the covered (overlapping) band files are superseded, so every
     * consumer keeps its path. The crash discipline is the sidecar
-    * fold's ([[graft.ingest.v2.ZoneMaps.compact]]'s `_folding`
-    * manifest), applied to data files:
+    * fold's (a [[graft.core.Generations]] commit record), applied to data
+    * files:
     *
     *  1. the merged stream (the exchange-free ordered scan — overlap
     *     groups heap-merge their proven sorted files; no range
@@ -429,27 +429,17 @@ object CorpusSink extends org.apache.spark.internal.Logging {
   private[graft] val CompactManifestRelPath: String =
     s"_compact/$CompactManifest"
 
-  /** Parse + validate the compact manifest — the one grammar both the
-    * fold's finish and the reader's generation pinning share. Validation
-    * is by RE-RENDER byte equality (no truncation or damage can slip
-    * past); throws on a damaged manifest — with the atomic temp+rename
-    * commit that cannot happen, and silently guessing would risk
-    * permanent duplicate rows.
+  /** The compact manifest's (tag, covered files) — the one reading both
+    * the fold's finish and the reader's generation pinning share. Throws
+    * on a damaged or untagged manifest ([[graft.core.Generations.parse]]
+    * validates by re-rendering).
     */
   private[graft] def parseCompactManifest(manifest: String)
-      : (String, Seq[String]) = {
-    val strings = "\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findAllMatchIn(manifest).map(m => junesc(m.group(1))).toList
-    val (tag, covered) = strings match {
-      case "tag" :: t :: "covered" :: files => (t, files)
-      case other => throw new IllegalStateException(
-        s"damaged compaction manifest: fields ${other.take(3)}")
-    }
-    require(renderCompactManifest(tag, covered) == manifest,
-      s"damaged compaction manifest (round-trip mismatch): " +
-        manifest.take(200))
-    (tag, covered)
-  }
+      : (String, Seq[String]) = tagged(graft.core.Generations.parse(manifest))
+
+  private[graft] def tagged(m: graft.core.Generations.Manifest)
+      : (String, Seq[String]) = m.tag.map(_ -> m.covered).getOrElse(
+    throw new IllegalStateException("damaged compaction manifest: no tag"))
 
   /** Visible nonempty data files under the drop, as (root-relative
     * path, length, mtime) — exactly the set the ordered read plans (the
@@ -502,29 +492,12 @@ object CorpusSink extends org.apache.spark.internal.Logging {
         org.apache.spark.sql.catalyst.expressions.XXH64
           .hashUnsafeBytes(s.getBaseObject, s.getBaseOffset,
             s.numBytes, 42L)))
-    val json = renderCompactManifest(tag, covered)
-    // ATOMIC commit: write to a hidden temp name, then rename — a crash
-    // mid-write must never leave a partial file AT the manifest path
-    // (the manifest's existence is the one-bit commit record, so a
-    // truncated one would replay a half-described fold)
-    val tmp = new org.apache.hadoop.fs.Path(staging, s".$CompactManifest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val target = new org.apache.hadoop.fs.Path(staging, CompactManifest)
-    require(fs.rename(tmp, target),
-      s"compaction manifest commit failed: $tmp -> $target")
+    // ATOMIC commit (temp + rename): the manifest's existence is the
+    // commit record, so a truncated one must never sit at its path
+    graft.core.Generations.commit(fs,
+      new org.apache.hadoop.fs.Path(staging, CompactManifest),
+      graft.core.Generations.Manifest(covered, Some(tag)))
   }
-
-  /** The in-place fold's manifest rendering — [[jesc]]/[[junesc]] are
-    * the one escape grammar this module uses, and the PARSE validates
-    * by re-rendering and comparing byte-for-byte (the one check no
-    * truncation or damage can slip past).
-    */
-  private def renderCompactManifest(tag: String,
-      covered: Seq[String]): String =
-    "{\"tag\":\"" + jesc(tag) + "\",\"covered\":[" +
-      covered.map(f => "\"" + jesc(f) + "\"").mkString(",") + "]}"
 
   /** Replay-convergent finish: rename staged files in, delete covered
     * files, index the fresh files, drop staging. Every step idempotent.
@@ -536,19 +509,12 @@ object CorpusSink extends org.apache.spark.internal.Logging {
       bloomCols: Seq[String], blockBytes: Long): Long = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new org.apache.hadoop.fs.Path(root, "_compact")
-    val manifestPath = new org.apache.hadoop.fs.Path(staging, CompactManifest)
-    val manifest = {
-      val in = fs.open(manifestPath)
-      try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
-    // the shared parse validates by round-trip re-render (see
-    // [[parseCompactManifest]]) — the failure mode to never have: a
-    // damaged manifest read as an empty/partial covered list, which
-    // would leave superseded files beside their compacted copies
-    val (tag, covered) = parseCompactManifest(manifest)
+    // validated read — the failure mode to never have: a damaged
+    // manifest read as an empty/partial covered list, which would leave
+    // superseded files beside their compacted copies
+    val manifest = new org.apache.hadoop.fs.Path(staging, CompactManifest)
+    val (tag, covered) = tagged(graft.core.Generations.read(fs, manifest)
+      .getOrElse(throw new IllegalStateException(s"no manifest $manifest")))
     val dataDir = new org.apache.hadoop.fs.Path(staging, "data")
     // zero-length staged part files (empty write partitions) are
     // dropped, not renamed in — reads skip empty files, so landing them
@@ -650,42 +616,11 @@ object CorpusSink extends org.apache.spark.internal.Logging {
       .sortBy(_.file).toSeq
   }
 
-  /** JSON string escaping for the manifest's `file` field — caller-provided
-    * layouts can contain characters (`"`, `\`) that would otherwise corrupt
-    * the hand-built entry and make [[verifyManifest]] silently mis-key a
-    * valid shard as "unexpected file".
+  /** The manifests' one escape grammar ([[graft.core.Generations.jesc]]
+    * / [[graft.core.Generations.junesc]]) for the `file` field.
     */
-  private[graft] def jesc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** Inverse of [[jesc]], CONSERVATIVE: only the three escape forms the
-    * writer produces (`\"`, `\\`, `\uXXXX`) are decoded; any other
-    * backslash stays literal — so a manifest written by the pre-escaping
-    * writer for a path containing a raw backslash still parses to the
-    * original name instead of spuriously failing verification.
-    */
-  private[graft] def junesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length &&
-              (2 to 5).forall(d => Character.digit(s.charAt(i + d), 16) >= 0) =>
-            b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case e @ ('"' | '\\') => b.append(e); i += 2
-          case _ => b.append(c); i += 1
-        }
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
+  private[graft] def jesc(s: String): String = graft.core.Generations.jesc(s)
+  private[graft] def junesc(s: String): String = graft.core.Generations.junesc(s)
 
   /** Write the corpus manifest beside the data (`_graft_manifest.json` —
     * leading underscore: invisible to Spark's file listing, so readers of

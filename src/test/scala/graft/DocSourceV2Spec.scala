@@ -2246,6 +2246,41 @@ class DocSourceV2Spec extends AnyFunSuite {
     assert(plannedFiles(src.filter(col("k") > 50L)) == Set("d.jsonl"))
   }
 
+  test("sidecar compaction crashed inside its commit leaves one generation on rerun") {
+    import graft.ingest.v2.ZoneMaps
+    val root = Files.createTempDirectory("graft_v2cmpcrash").toString
+    val schema = StructType(Seq(StructField("k", LongType)))
+    def land(name: String, range: Range): Unit =
+      Files.write(Paths.get(root, name),
+        range.map(i => s"""{"k": $i}""").mkString("\n").getBytes("UTF-8"))
+    land("a.jsonl", 1 to 10)
+    land("b.jsonl", 11 to 20)
+    ZoneMaps.build(spark, root, schema, Seq("k"))
+    land("c.jsonl", 21 to 30)
+    ZoneMaps.append(spark, root, schema, Seq("k"), "t1")
+    land("d.jsonl", 31 to 40)
+    ZoneMaps.append(spark, root, schema, Seq("k"), "t2")
+    val sidecar = new java.io.File(s"$root/${ZoneMaps.SidecarDir}")
+    def gens(): Set[String] =
+      sidecar.listFiles().filter(_.isDirectory).map(_.getName)
+        .filterNot(_.startsWith("_")).toSet
+    def rows(): Seq[Long] = ExtendedJson.read(spark, schema, root,
+      Map("zoneMaps" -> "true")).filter(col("k") > 25L)
+      .select("k").as[Long](org.apache.spark.sql.Encoders.scalaLong)
+      .collect().toSeq.sorted
+    val stats = ZoneMaps.loadStats(spark, root, schema)
+    val want = rows()
+    // the fold's data lands in staging, its manifest write dies midway
+    CrashFs.install(spark.sparkContext.hadoopConfiguration)
+    intercept[java.io.IOException](CrashFs.armed(".*_folded\\.json.*")(
+      ZoneMaps.compact(spark, CrashFs.path(root))))
+    assert(ZoneMaps.loadStats(spark, root, schema) == stats)
+    assert(ZoneMaps.compact(spark, CrashFs.path(root)) == 3L)
+    assert(gens() == Set("base"), s"one generation expected: ${gens()}")
+    assert(ZoneMaps.loadStats(spark, root, schema) == stats)
+    assert(rows() == want)
+  }
+
   test("storage-partitioned reads: co-partitioned drops join and aggregate with zero exchange") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     def shuffles(df: DataFrame): Seq[ShuffleExchangeLike] = {

@@ -684,6 +684,60 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!b0.exists(), "the leftover covered batch dir must be cleaned up")
   }
 
+  test("IVF compaction crashed inside its commit folds each batch exactly once on rerun") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    import graft.ops.Similarity
+    import graft.pipelines.StreamingIvfIngest
+    val rnd = new scala.util.Random(78)
+    val corpus = Seq.tabulate(40)(i =>
+      (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat).toSeq))
+      .toDF("vec_id", "embedding")
+    val index = Similarity.buildIvfIndex(corpus, "vec_id", "embedding",
+      numCentroids = 2)
+    val batchDir = s"$work/tc_batches"
+    val invDir = s"$work/tc_inverted"
+    val compDir = s"$work/tc_compacted"
+    val ckpt = s"$work/tc_ckpt"
+    Files.createDirectories(Paths.get(batchDir))
+    def ingest(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      df.coalesce(1).write.parquet(s"$batchDir/$name")
+      StreamingIvfIngest.run(spark, index, batchDir, corpus.schema,
+        "vec_id", "embedding", invDir, ckpt)
+      ()
+    }
+    def ids(): Seq[Long] = StreamingIvfIngest.loadCompacted(spark, compDir)
+      .select("vec_id").as[Long].collect().toSeq
+    ingest(corpus.limit(10), "b1")
+    assert(StreamingIvfIngest.compact(spark, invDir, compDir, ckpt).get
+      .foldedBatches == 1L)
+    ingest(corpus.filter(col("vec_id") >= 10).limit(5)
+      .select((col("vec_id") + 100L).as("vec_id"), col("embedding")), "b2")
+    // the next generation's data lands, its manifest write dies midway
+    CrashFs.install(spark.sparkContext.hadoopConfiguration)
+    intercept[java.io.IOException](CrashFs.armed(".*_folded.*")(
+      StreamingIvfIngest.compact(spark, CrashFs.path(invDir),
+        CrashFs.path(compDir), CrashFs.path(ckpt))))
+    assert(ids().size == 10, "readers must still see the committed generation")
+    val c = StreamingIvfIngest.compact(spark, invDir, compDir, ckpt).get
+    assert(c.foldedBatches == 1L)
+    val rows = ids()
+    assert(rows.size == 15 && rows.distinct.size == 15,
+      s"${rows.size} rows over ${rows.distinct.size} ids")
+    assert(StreamingIvfIngest.compact(spark, invDir, compDir, ckpt)
+      .exists(n => n.foldedBatches == 0L && n.generation == c.generation))
+  }
+
+  test("an empty run-id marker is refused, never read as one shared namespace") {
+    import graft.pipelines.StreamingIvfIngest
+    val ckpt = s"$work/em_ckpt"
+    Files.createDirectories(Paths.get(ckpt))
+    Files.write(Paths.get(ckpt, "_graft_run_id"), Array.emptyByteArray)
+    val e = intercept[IllegalArgumentException](StreamingIvfIngest.compact(
+      spark, s"$work/em_inverted", s"$work/em_compacted", ckpt))
+    assert(e.getMessage.contains("empty run-id marker"), e.getMessage)
+  }
+
   test("streaming near-dup ingest: intra-batch + vs-history rejection, incremental index") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._

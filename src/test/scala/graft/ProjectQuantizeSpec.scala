@@ -392,6 +392,14 @@ class ProjectQuantizeSpec extends AnyFunSuite {
         .collect().toSet
     val scratch = rows(ProductQuantize.encode(
       base.unionByName(batch), "vec_id", "embedding", index, cb))
+    // a Set compare alone passes duplicated rows: also pin the row COUNT
+    def load() = ProductQuantize.loadEncoded(spark, s"$dir/codes")
+    def assertExact(step: String): Unit = {
+      val df = load()
+      assert(rows(df) == scratch, s"$step: row set != union encode")
+      assert(df.count() == scratch.size.toLong,
+        s"$step: ${df.count()} rows for ${scratch.size} distinct")
+    }
 
     ProductQuantize.appendEncodedBatch(index, cb, batch, "vec_id",
       "embedding", s"$dir/codes", batchTag = "b1")
@@ -401,6 +409,7 @@ class ProjectQuantizeSpec extends AnyFunSuite {
       "embedding", s"$dir/codes", batchTag = "b1")
     val loaded = ProductQuantize.loadEncoded(spark, s"$dir/codes")
     assert(rows(loaded) == scratch, "appended artifact != union encode")
+    assertExact("replayed append")
 
     // search-after-append row-identical to searching the union encode
     val queries = base.filter(col("vec_id") < 6)
@@ -416,6 +425,7 @@ class ProjectQuantizeSpec extends AnyFunSuite {
     assert(ProductQuantize.compactEncoded(spark, s"$dir/codes")
       .contains(1L))
     assert(rows(ProductQuantize.loadEncoded(spark, s"$dir/codes")) == scratch)
+    assertExact("fold")
     assert(!new java.io.File(s"$dir/codes/batch=b1").exists())
 
     // a LATE replay of the already-folded tag re-creates the dir; the
@@ -424,10 +434,12 @@ class ProjectQuantizeSpec extends AnyFunSuite {
     ProductQuantize.appendEncodedBatch(index, cb, batch, "vec_id",
       "embedding", s"$dir/codes", batchTag = "b1")
     assert(rows(ProductQuantize.loadEncoded(spark, s"$dir/codes")) == scratch)
+    assertExact("late replay")
     assert(ProductQuantize.compactEncoded(spark, s"$dir/codes")
       .contains(1L))
     assert(!new java.io.File(s"$dir/codes/batch=b1").exists())
     assert(rows(ProductQuantize.loadEncoded(spark, s"$dir/codes")) == scratch)
+    assertExact("late-replay fold")
 
     // an EMPTY batch must leave NO row-less `batch=` directory behind —
     // one would break schema inference for every later read of the root
@@ -436,8 +448,43 @@ class ProjectQuantizeSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/codes/batch=b_empty").exists(),
       "empty append must not write a _SUCCESS-only batch directory")
     assert(rows(ProductQuantize.loadEncoded(spark, s"$dir/codes")) == scratch)
+    assertExact("empty append")
     assert(ProductQuantize.compactEncoded(spark, s"$dir/codes")
       .contains(1L))
+    assertExact("empty-append fold")
+  }
+
+  test("encoded fold crashed inside its commit reads and replays without duplicates") {
+    val dim = 16
+    val base = (0 until 60).map(i => (i.toLong, randVec(i, dim)))
+      .toDF("vec_id", "embedding")
+    val batch = (0 until 6).map(i => ((500 + i).toLong, randVec(i, dim)))
+      .toDF("vec_id", "embedding")
+    val index = Similarity.buildIvfIndex(base, "vec_id", "embedding",
+      numCentroids = 4, lloydIters = 1)
+    val cb = ProductQuantize.train(base, "vec_id", "embedding", dim,
+      m = 4, k = 4, iters = 1)
+    val dir = java.nio.file.Files.createTempDirectory("pqcrash").toString
+    val codes = s"$dir/codes"
+    ProductQuantize.saveEncoded(ProductQuantize.encode(
+      base, "vec_id", "embedding", index, cb), codes)
+    ProductQuantize.appendEncodedBatch(index, cb, batch, "vec_id",
+      "embedding", codes, batchTag = "b1")
+    def ids(): Seq[Long] = ProductQuantize.loadEncoded(spark, codes)
+      .select("vec_id").as[Long].collect().toSeq
+    assert(ids().size == 66)
+    CrashFs.install(spark.sparkContext.hadoopConfiguration)
+    // the new generation's data lands, its manifest write dies midway
+    intercept[java.io.IOException](CrashFs.armed(".*_folded.*")(
+      ProductQuantize.compactEncoded(spark, CrashFs.path(codes))))
+    assert(ids().size == 66, "a torn fold must not change what readers see")
+    // the replay converges: every row exactly once
+    assert(ProductQuantize.compactEncoded(spark, CrashFs.path(codes))
+      .contains(1L))
+    val after = ids()
+    assert(after.size == 66 && after.distinct.size == 66,
+      s"${after.size} rows over ${after.distinct.size} ids")
+    assert(!new java.io.File(s"$codes/batch=b1").exists())
   }
 
   test("appendEncodedBatch check-first mode skips the write when the gate trips") {
