@@ -2,7 +2,7 @@ package graft.core
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-safe generations for the engine's appendable artifacts — the
@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the zone-map sidecar fold and the in-place corpus compaction.
   *
   * Layout: `genRoot/gen=<n>/…` folded generations beside (or apart from)
-  * `batchRoot/batch=<tag>/…` appended batches.
+  * `batchRoot/batch=<tag>/…` appended batches, and a `_generations`
+  * format marker at `genRoot`, committed before anything is staged there.
   *
   *  - A generation is COMPLETE iff its `_folded` manifest exists; the
   *    manifest is the cumulative set of batch tags it covers.
@@ -27,16 +28,48 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    deletes covered batches and superseded generations. A rerun from any
   *    crash point converges; a batch re-created after its fold (a late
   *    replay) is deleted, never re-folded.
+  *  - A root holding `gen=` directories but no marker is the OLDER
+  *    streaming layout ([[legacy]]): generation `gen=<w>`, complete once
+  *    Spark's `_SUCCESS` exists, covers batch ids `0..w`. Such a root is
+  *    read, never folded, replaced or deleted; an older root whose
+  *    generations carry a `_folded` (the older PQ format) fails loudly.
   *
   * Single writer per root, like every artifact here.
   */
 object Generations {
 
-  /** One commit record: the entries it covers, plus an optional fold tag.
-    * Renders as a JSON string array, or `{"tag":…,"covered":[…]}` when
-    * tagged.
+  /** Covered tags in order, each ascending run of consecutive canonical
+    * integers held as ONE closed range: a stream fold's cumulative record
+    * grows with the gaps in its batch ids, not with their count.
     */
-  final case class Manifest(covered: Seq[String], tag: Option[String] = None)
+  final case class Covered(runs: Vector[Either[String, (Long, Long)]]) {
+    private lazy val names = runs.collect { case Left(s) => s }.toSet
+    def contains(tag: String): Boolean = names(tag) ||
+      num(tag).exists(n => runs.exists(_.exists { case (a, b) => a <= n && n <= b }))
+    def toSeq: Seq[String] =
+      runs.flatMap(_.fold(Seq(_), { case (a, b) => (a to b).map(_.toString) }))
+    def ++(tags: Seq[String]): Covered = Covered(tags.foldLeft(runs) { (rs, t) =>
+      (rs.lastOption, num(t)) match {
+        case (Some(Right((a, b))), Some(n)) if n == b + 1 => rs.init :+ Right((a, n))
+        case (Some(Left(s)), Some(n)) if num(s).contains(n - 1) =>
+          rs.init :+ Right((n - 1, n))
+        case _ => rs :+ Left(t)
+      }
+    })
+  }
+
+  object Covered { def of(tags: Seq[String]): Covered = Covered(Vector.empty) ++ tags }
+
+  /** A canonical non-negative integer tag (no sign, no leading zero). */
+  private def num(t: String): Option[Long] =
+    if (t.nonEmpty && t.length <= 18 && t.forall(c => c >= '0' && c <= '9') &&
+      (t.length == 1 || t.head != '0')) Some(t.toLong) else None
+
+  /** One commit record: the entries it covers, plus an optional fold tag.
+    * Renders as a JSON array of strings and `[a,b]` ranges, or
+    * `{"tag":…,"covered":[…]}` when tagged.
+    */
+  final case class Manifest(covered: Covered, tag: Option[String] = None)
 
   /** One fold's outcome: the covering generation and how many batches
     * this call folded into it (0 = nothing new).
@@ -44,20 +77,24 @@ object Generations {
   final case class Fold(foldedBatches: Long, generation: Long, path: String)
 
   val ManifestName = "_folded"
+  val FormatName = "_generations"
 
   def render(m: Manifest): String = {
     def str(s: String) = "\"" + jesc(s) + "\""
-    val covered = m.covered.map(str).mkString("[", ",", "]")
+    val covered = m.covered.runs.map(_.fold(str, { case (a, b) => s"[$a,$b]" }))
+      .mkString("[", ",", "]")
     m.tag.fold(covered)(t => s"""{"tag":${str(t)},"covered":$covered}""")
   }
 
   /** Parse a rendered manifest, validated by re-rendering byte-for-byte. */
   def parse(text: String): Manifest = {
-    val strings = "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(text)
-      .map(m => junesc(m.group(1))).toList
-    val m = (text.startsWith("{"), strings) match {
-      case (true, "tag" :: t :: "covered" :: covered) => Manifest(covered, Some(t))
-      case (false, covered) => Manifest(covered)
+    val tokens = "\"((?:[^\"\\\\]|\\\\.)*)\"|\\[(\\d{1,18}),(\\d{1,18})\\]".r
+      .findAllMatchIn(text).map(m => Option(m.group(1)).map(junesc)
+        .toLeft((m.group(2).toLong, m.group(3).toLong))).toVector
+    val m = (text.startsWith("{"), tokens) match {
+      case (true, Left("tag") +: Left(t) +: Left("covered") +: covered) =>
+        Manifest(Covered(covered), Some(t))
+      case (false, covered) => Manifest(Covered(covered))
       case (_, other) => throw new IllegalStateException(
         s"damaged manifest: fields ${other.take(3)}")
     }
@@ -67,13 +104,21 @@ object Generations {
   }
 
   /** Atomic write: a hidden temp file beside `path`, then rename — a crash
-    * never leaves a partial file AT `path`.
+    * never leaves a partial file AT `path`. With `replace = false` the
+    * first writer wins: a no-replace rename, false (and no change) when
+    * `path` already exists.
     */
-  def commitText(fs: FileSystem, path: Path, text: String): Unit = {
-    val tmp = new Path(path.getParent, s".${path.getName}.tmp")
+  def commitText(fs: FileSystem, path: Path, text: String,
+      replace: Boolean = true): Boolean = {
+    val tmp = new Path(path.getParent, s".${path.getName}" +
+      (if (replace) "" else s".${java.util.UUID.randomUUID}") + ".tmp")
     val out = fs.create(tmp, true)
     try out.write(text.getBytes(UTF_8)) finally out.close()
-    require(fs.rename(tmp, path), s"commit failed: $tmp -> $path")
+    if (replace) require(fs.rename(tmp, path), s"commit failed: $tmp -> $path")
+    else try FileContext.getFileContext(fs.getUri, fs.getConf)
+      .rename(tmp, path, Options.Rename.NONE)
+    catch { case _: FileAlreadyExistsException => fs.delete(tmp, false); return false }
+    true
   }
 
   def commit(fs: FileSystem, path: Path, m: Manifest): Unit =
@@ -101,11 +146,25 @@ object Generations {
   private def fsOf(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Complete generations under `genRoot`, ascending, with manifests. */
-  private def complete(fs: FileSystem, genRoot: String): Seq[(Long, Path, Manifest)] =
-    subdirs(fs, new Path(genRoot), "gen=").flatMap { case (n, p) =>
-      read(fs, new Path(p, ManifestName)).map((n.toLong, p, _))
+  /** True for a root of the older layout: `gen=` directories, no marker. */
+  def legacy(fs: FileSystem, genRoot: Path): Boolean =
+    !fs.exists(new Path(genRoot, FormatName)) && subdirs(fs, genRoot, "gen=").nonEmpty
+
+  /** Complete generations under `genRoot`, ascending, with manifests. In
+    * an older-layout root, `gen=<w>` is complete once Spark's `_SUCCESS`
+    * exists and covers batch ids `0..w`.
+    */
+  private def complete(fs: FileSystem, genRoot: String): Seq[(Long, Path, Manifest)] = {
+    val gens = subdirs(fs, new Path(genRoot), "gen=")
+    val old = gens.nonEmpty && !fs.exists(new Path(genRoot, FormatName))
+    gens.flatMap { case (n, p) =>
+      if (!old) read(fs, new Path(p, ManifestName)).map((n.toLong, p, _))
+      else if (fs.exists(new Path(p, ManifestName))) throw new IllegalStateException(
+        s"$p: a manifest of an older format (no $FormatName marker); rebuild the artifact")
+      else Option.when(fs.exists(new Path(p, "_SUCCESS")))(
+        (n.toLong, p, Manifest(Covered(Vector(Right((0L, n.toLong)))))))
     }.sortBy(_._1)
+  }
 
   /** The last complete generation's path, if any. */
   def latest(spark: SparkSession, genRoot: String): Option[String] =
@@ -118,9 +177,10 @@ object Generations {
       keep: String => Boolean = _ => true): Seq[String] = {
     val fs = fsOf(spark, genRoot)
     val last = complete(fs, genRoot).lastOption
-    val covered = last.fold(Set.empty[String])(_._3.covered.toSet)
     last.map(_._2.toString).toSeq ++ subdirs(fs, new Path(batchRoot), "batch=")
-      .collect { case (tag, p) if !covered(tag) && keep(tag) => p.toString }
+      .collect { case (tag, p) if !last.exists(_._3.covered.contains(tag)) && keep(tag) =>
+        p.toString
+      }
   }
 
   /** Per-root parquet reads unioned by name: each root is its own
@@ -130,42 +190,57 @@ object Generations {
   def union(spark: SparkSession, roots: Seq[String]): DataFrame =
     roots.map(spark.read.parquet(_)).reduce(_.unionByName(_))
 
+  /** Refuse an older-layout root; with `mark`, mark it ours (before
+    * anything is staged under it).
+    */
+  private def claim(fs: FileSystem, genRoot: Path, mark: Boolean = true): Unit = {
+    require(!legacy(fs, genRoot), s"$genRoot holds generations of an older " +
+      "layout: readable, but never folded, replaced or deleted here; fold into a fresh root")
+    if (mark && !fs.exists(new Path(genRoot, FormatName)))
+      commitText(fs, new Path(genRoot, FormatName), "1")
+  }
+
   /** Write `gen=0` (covering nothing) through `write` and commit it. */
   def saveBase(spark: SparkSession, genRoot: String)(write: String => Unit): Unit = {
+    val fs = fsOf(spark, genRoot)
+    claim(fs, new Path(genRoot))
     val target = new Path(genRoot, "gen=0")
     write(target.toString)
-    commit(fsOf(spark, genRoot), new Path(target, ManifestName), Manifest(Nil))
+    commit(fs, new Path(target, ManifestName), Manifest(Covered(Vector.empty)))
   }
 
   /** Fold generation n plus the `eligible` uncovered batches into
     * generation n+1 via `write(inputs, targetPath)`, then commit the
     * cumulative manifest, then delete what it supersedes. None when the
-    * artifact holds no generation and nothing to fold.
+    * artifact holds no generation and nothing to fold. Refuses (before
+    * touching anything) a root of the older layout.
     */
   def fold(spark: SparkSession, genRoot: String, batchRoot: String,
       eligible: String => Boolean = _ => true)(
       write: (DataFrame, String) => Unit): Option[Fold] = {
     val fs = fsOf(spark, genRoot)
+    claim(fs, new Path(genRoot), mark = false)
     val gens = complete(fs, genRoot)
     val last = gens.lastOption
-    val covered = last.fold(Set.empty[String])(_._3.covered.toSet)
+    val covered = last.fold(Covered(Vector.empty))(_._3.covered)
     val (done, pending) = subdirs(fs, new Path(batchRoot), "batch=")
-      .partition { case (tag, _) => covered(tag) }
+      .partition { case (tag, _) => covered.contains(tag) }
     // covered leftovers (an interrupted cleanup or a late replay of a
     // folded tag): their rows are inside the generation already
     done.foreach { case (_, p) => fs.delete(p, true) }
     val fresh = pending.filter { case (tag, _) => eligible(tag) }
+      .sortBy { case (tag, _) => (num(tag).getOrElse(Long.MaxValue), tag) }
     def at(n: Long) = new Path(genRoot, s"gen=$n")
     if (fresh.isEmpty) {
       gens.dropRight(1).foreach { case (_, p, _) => fs.delete(p, true) }
       return last.map { case (n, _, _) => Fold(0L, n, at(n).toString) }
     }
+    claim(fs, new Path(genRoot))
     val n = last.fold(0L)(_._1 + 1L)
     fs.delete(at(n), true) // a crashed earlier attempt's uncommitted output
     write(union(spark, (last.map(_._2) ++ fresh.map(_._2)).map(_.toString).toSeq),
       at(n).toString)
-    commit(fs, new Path(at(n), ManifestName),
-      Manifest((covered ++ fresh.map(_._1)).toSeq.sorted))
+    commit(fs, new Path(at(n), ManifestName), Manifest(covered ++ fresh.map(_._1)))
     fresh.foreach { case (_, p) => fs.delete(p, true) }
     gens.foreach { case (_, p, _) => fs.delete(p, true) }
     Some(Fold(fresh.size.toLong, n, at(n).toString))

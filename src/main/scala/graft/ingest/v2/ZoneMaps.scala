@@ -1240,7 +1240,7 @@ object ZoneMaps {
     }
 
     graft.core.Generations.read(fs, manifest) match {
-      case Some(m) => return finishFold(m.covered)
+      case Some(m) => return finishFold(m.covered.toSeq)
       // crashed mid-write (or never staged): the inputs are intact —
       // discard and refold
       case None => fs.delete(staging, true)
@@ -1274,7 +1274,7 @@ object ZoneMaps {
     // completion manifest AFTER the parquet _SUCCESS: the commit record
     // the replay path keys on
     graft.core.Generations.commit(fs, manifest,
-      graft.core.Generations.Manifest(gens))
+      graft.core.Generations.Manifest(graft.core.Generations.Covered.of(gens)))
     finishFold(gens)
   }
 }

@@ -367,12 +367,15 @@ private[pipelines] object CheckpointRunId {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Read the checkpoint's run id, creating it (atomically) on first use. */
+  /** Read the checkpoint's run id, creating it (atomically) on first use.
+    * First writer wins: a concurrent starter that loses the creation race
+    * adopts the winner's id.
+    */
   def getOrCreate(spark: SparkSession, checkpointDir: String): String =
     get(spark, checkpointDir).getOrElse {
       val (fs, p) = marker(spark, checkpointDir)
       Generations.commitText(fs, p,
-        java.util.UUID.randomUUID().toString.replace("-", ""))
+        java.util.UUID.randomUUID().toString.replace("-", ""), replace = false)
       get(spark, checkpointDir).get
     }
 
@@ -466,29 +469,18 @@ object StreamingIvfIngest {
   private[pipelines] def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Pre-run-scoped top-level `gen=<n>` directories that finished writing
-    * (Spark's `_SUCCESS`), ascending: [[loadCompacted]] still reads the
-    * last one, [[compact]] refuses to extend them.
-    */
-  private def legacyGenerations(spark: SparkSession,
-      compactedDir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val root = new org.apache.hadoop.fs.Path(compactedDir)
-    val f = fs(spark, root)
-    Generations.subdirs(f, root, "gen=").sortBy(_._1.toLong).map(_._2)
-      .filter(p => f.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-  }
-
   /** Latest compacted state as a queryable assigned corpus
     * ([[graft.ops.Similarity.ivfTopKWithAssigned]] input): the union of
     * every run namespace's last complete generation — runs never fold
     * each other's data (a foreign run may still be live), so "everything
-    * compacted" is this union by construction.
+    * compacted" is this union by construction. Roots of the older layouts
+    * (a pre-run-scoped top-level `gen=`, or a run root folded before
+    * generations carried manifests) read as [[Generations.legacy]] ones.
     */
   def loadCompacted(spark: SparkSession, compactedDir: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(compactedDir)
-    val gens = Generations.subdirs(fs(spark, root), root, "run=")
-      .flatMap { case (_, r) => Generations.latest(spark, r.toString) } ++
-      legacyGenerations(spark, compactedDir).lastOption.map(_.toString)
+    val gens = (root +: Generations.subdirs(fs(spark, root), root, "run=").map(_._2))
+      .flatMap(r => Generations.latest(spark, r.toString))
     require(gens.nonEmpty, s"no completed compaction under $compactedDir")
     Generations.union(spark, gens)
   }
@@ -512,10 +504,9 @@ object StreamingIvfIngest {
     */
   def compact(spark: SparkSession, invertedDir: String, compactedDir: String,
       checkpointDir: String): Option[Compaction] = {
-    val legacy = legacyGenerations(spark, compactedDir)
-    require(legacy.isEmpty,
-      s"$compactedDir holds pre-run-scoped generations " +
-        s"(${legacy.map(_.getName).mkString(", ")}) whose covered-batch " +
+    val root = new org.apache.hadoop.fs.Path(compactedDir)
+    require(!Generations.legacy(fs(spark, root), root),
+      s"$compactedDir holds pre-run-scoped generations whose covered-batch " +
         "provenance is ambiguous across runs; compact into a fresh " +
         "compactedDir (the old generations stay readable via loadCompacted)")
     foldRun(spark, invertedDir, compactedDir, checkpointDir)(
@@ -643,7 +634,9 @@ object StreamingNearDupIngest {
     * attempt; a generation can never contain it, because folds take only
     * COMMITTED batches and a replaying batch is by definition
     * uncommitted). Post-compaction the listing is bounded by
-    * (runs + batches-since-last-compact), not total batch count.
+    * (runs + batches-since-last-compact), not total batch count; each
+    * run's manifest holds its folded batch ids as ranges, so reading it
+    * costs the gaps in those ids, not their count.
     */
   private def historyDirs(spark: SparkSession, indexDir: String,
       runId: String, batchId: Long): Seq[String] = {

@@ -438,7 +438,7 @@ object CorpusSink extends org.apache.spark.internal.Logging {
       : (String, Seq[String]) = tagged(graft.core.Generations.parse(manifest))
 
   private[graft] def tagged(m: graft.core.Generations.Manifest)
-      : (String, Seq[String]) = m.tag.map(_ -> m.covered).getOrElse(
+      : (String, Seq[String]) = m.tag.map(_ -> m.covered.toSeq).getOrElse(
     throw new IllegalStateException("damaged compaction manifest: no tag"))
 
   /** Visible nonempty data files under the drop, as (root-relative
@@ -496,7 +496,8 @@ object CorpusSink extends org.apache.spark.internal.Logging {
     // commit record, so a truncated one must never sit at its path
     graft.core.Generations.commit(fs,
       new org.apache.hadoop.fs.Path(staging, CompactManifest),
-      graft.core.Generations.Manifest(covered, Some(tag)))
+      graft.core.Generations.Manifest(
+        graft.core.Generations.Covered.of(covered), Some(tag)))
   }
 
   /** Replay-convergent finish: rename staged files in, delete covered
@@ -616,12 +617,6 @@ object CorpusSink extends org.apache.spark.internal.Logging {
       .sortBy(_.file).toSeq
   }
 
-  /** The manifests' one escape grammar ([[graft.core.Generations.jesc]]
-    * / [[graft.core.Generations.junesc]]) for the `file` field.
-    */
-  private[graft] def jesc(s: String): String = graft.core.Generations.jesc(s)
-  private[graft] def junesc(s: String): String = graft.core.Generations.junesc(s)
-
   /** Write the corpus manifest beside the data (`_graft_manifest.json` —
     * leading underscore: invisible to Spark's file listing, so readers of
     * the corpus never see it as a shard).
@@ -629,9 +624,8 @@ object CorpusSink extends org.apache.spark.internal.Logging {
   def writeManifest(spark: org.apache.spark.sql.SparkSession, dir: String,
       format: String = "parquet"): Seq[ShardDigest] = {
     val digests = computeDigests(spark, dir, format)
-    val json = digests.map(d =>
-      s"""{"file":"${jesc(d.file)}","rows":${d.rows},"hash":${d.contentHash}}""")
-      .mkString("[", ",", "]")
+    val json = digests.map(d => s"""{"file":"${graft.core.Generations.jesc(d.file)}",""" +
+      s""""rows":${d.rows},"hash":${d.contentHash}}""").mkString("[", ",", "]")
     val p = new org.apache.hadoop.fs.Path(dir, "_graft_manifest.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
@@ -656,11 +650,11 @@ object CorpusSink extends org.apache.spark.internal.Logging {
       val txt = try new String(in.readAllBytes(),
         java.nio.charset.StandardCharsets.UTF_8) finally in.close()
       // escape-aware: the file group matches escaped pairs as units, then
-      // unescapes — the exact inverse of [[jesc]] at write time
+      // unescapes — the exact inverse of `Generations.jesc` at write time
       """\{"file":"((?:[^"\\]|\\.)*)","rows":(-?\d+),"hash":(-?\d+)\}""".r
         .findAllMatchIn(txt)
         .map { m =>
-          val f = junesc(m.group(1))
+          val f = graft.core.Generations.junesc(m.group(1))
           f -> ShardDigest(f, m.group(2).toLong, m.group(3).toLong)
         }
         .toMap

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Generations
 import graft.sink.CorpusSink
 
 /** The sharded-writer determinism contract: same input → same shard files,
@@ -726,18 +727,18 @@ class CorpusSinkSpec extends AnyFunSuite {
     val paths = Seq("""lang=we"ird/part-0.parquet""", """a\b/part-1.parquet""",
       "tab\there/p.parquet", "plain/part-2.parquet", """both\"mixed""")
     paths.foreach { p =>
-      val rt = CorpusSink.junesc(CorpusSink.jesc(p))
+      val rt = Generations.junesc(Generations.jesc(p))
       assert(rt == p, s"round-trip broke: $p -> $rt")
       // the escaped form parses as ONE entry under the verify regex
-      val entry = s"""{"file":"${CorpusSink.jesc(p)}","rows":1,"hash":-2}"""
+      val entry = s"""{"file":"${Generations.jesc(p)}","rows":1,"hash":-2}"""
       val m = """\{"file":"((?:[^"\\]|\\.)*)","rows":(-?\d+),"hash":(-?\d+)\}""".r
         .findAllMatchIn(entry).toSeq
-      assert(m.size == 1 && CorpusSink.junesc(m.head.group(1)) == p, entry)
+      assert(m.size == 1 && Generations.junesc(m.head.group(1)) == p, entry)
     }
     // conservative decode: a LEGACY manifest (pre-escaping writer) whose
     // file field carries a raw backslash must parse back unchanged — only
     // the writer's own three escape forms decode
-    assert(CorpusSink.junesc("""lang=a\b/part-0.parquet""") ==
+    assert(Generations.junesc("""lang=a\b/part-0.parquet""") ==
       """lang=a\b/part-0.parquet""")
     // a legacy raw backslash-u NOT followed by four hex digits stays
     // literal (no NumberFormatException); four-hex legacy paths are
@@ -745,9 +746,9 @@ class CorpusSinkSpec extends AnyFunSuite {
     // risk. (Built by concatenation: Scala's lexer would otherwise eat
     // the \-u sequence in the source literal itself.)
     val legacyU = "shard" + "\\" + "universe/p.parquet"
-    assert(CorpusSink.junesc(legacyU) == legacyU)
-    assert(CorpusSink.junesc("""a\\b""") == """a\b""")
-    assert(CorpusSink.junesc("""a\"b""") == """a"b""")
-    assert(CorpusSink.junesc("""t	b""") == "t\tb")
+    assert(Generations.junesc(legacyU) == legacyU)
+    assert(Generations.junesc("""a\\b""") == """a\b""")
+    assert(Generations.junesc("""a\"b""") == """a"b""")
+    assert(Generations.junesc("""t	b""") == "t\tb")
   }
 }

@@ -736,6 +736,60 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = intercept[IllegalArgumentException](StreamingIvfIngest.compact(
       spark, s"$work/em_inverted", s"$work/em_compacted", ckpt))
     assert(e.getMessage.contains("empty run-id marker"), e.getMessage)
+    // a starter that loses the creation race keeps the winner's id: the
+    // marker commit never replaces, and leaves no temp file behind
+    val fresh = new org.apache.hadoop.fs.Path(s"$work/em_ckpt2", "_graft_run_id")
+    val fs = fresh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(graft.core.Generations.commitText(fs, fresh, "first", replace = false))
+    assert(!graft.core.Generations.commitText(fs, fresh, "second", replace = false))
+    assert(graft.core.Generations.readText(fs, fresh).contains("first"))
+    assert(fs.listStatus(fresh.getParent).map(_.getPath.getName)
+      .forall(n => !n.endsWith(".tmp")))
+  }
+
+  test("an IVF run root folded before generations carried manifests stays readable, never folded over") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    import graft.ops.Similarity
+    import graft.pipelines.StreamingIvfIngest
+    val rnd = new scala.util.Random(79)
+    val corpus = Seq.tabulate(30)(i =>
+      (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat).toSeq))
+      .toDF("vec_id", "embedding")
+    val index = Similarity.buildIvfIndex(corpus, "vec_id", "embedding",
+      numCentroids = 2)
+    val batchDir = s"$work/ol_batches"
+    val invDir = s"$work/ol_inverted"
+    val compDir = s"$work/ol_compacted"
+    val ckpt = s"$work/ol_ckpt"
+    Files.createDirectories(Paths.get(batchDir))
+    def ingest(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      df.coalesce(1).write.parquet(s"$batchDir/$name")
+      StreamingIvfIngest.run(spark, index, batchDir, corpus.schema,
+        "vec_id", "embedding", invDir, ckpt)
+      ()
+    }
+    def ids(): Seq[Long] = StreamingIvfIngest.loadCompacted(spark, compDir)
+      .select("vec_id").as[Long].collect().toSeq
+    ingest(corpus.limit(10), "b1")
+    // the older fold: batch 0 rewritten as `gen=<highest batch id>` (done
+    // once Spark's _SUCCESS lands; no manifest, no format marker), then
+    // the batch dir deleted
+    val run = new java.io.File(invDir).listFiles()
+      .find(_.getName.startsWith("run=")).get.getName
+    val oldGen = new java.io.File(s"$compDir/$run/gen=0")
+    spark.read.parquet(s"$invDir/$run/batch=0").repartition(col("cell"))
+      .write.partitionBy("cell").parquet(oldGen.toString)
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$invDir/$run/batch=0"))
+    ingest(corpus.filter(col("vec_id") >= 10).limit(5), "b2")
+    assert(ids().sorted == (0L until 10L), "the older generation must stay readable")
+    val e = intercept[IllegalArgumentException](
+      StreamingIvfIngest.compact(spark, invDir, compDir, ckpt))
+    assert(e.getMessage.contains("older layout"), e.getMessage)
+    assert(oldGen.exists() && new java.io.File(s"$invDir/$run/batch=1").exists(),
+      "a refused fold must delete nothing")
+    assert(ids().sorted == (0L until 10L))
   }
 
   test("streaming near-dup ingest: intra-batch + vs-history rejection, incremental index") {
@@ -1046,6 +1100,40 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     new java.io.File(tampered, s".${victim.getName}.crc").delete()
     assert(graft.sink.CorpusSink.verifyManifest(spark, tampered.toString).isLeft,
       "tampered shard must fail manifest verification")
+  }
+
+  test("near-dup history reads a run root folded before generations carried manifests") {
+    import spark.implicits._
+    import graft.pipelines.StreamingNearDupIngest
+    val batchDir = s"$work/ndo_batches"
+    val idxDir = s"$work/ndo_index"
+    val accDir = s"$work/ndo_accepted"
+    val ckpt = s"$work/ndo_ckpt"
+    Files.createDirectories(Paths.get(batchDir))
+    val schema = Seq((0L, "x")).toDF("doc_id", "text").schema
+    Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (2L, "spark plans scans joins aggregates and shuffles data well"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$batchDir/b1")
+    assert(StreamingNearDupIngest.run(spark, batchDir, schema,
+      "doc_id", "text", n = 3, minJaccard = 0.8, idxDir, accDir, ckpt).accepted == 2L)
+    // the older fold: batch 0's postings moved to `_compacted/run=<id>/gen=0`
+    // (Spark's _SUCCESS inside; no manifest, no format marker)
+    val run = new java.io.File(idxDir).listFiles()
+      .find(_.getName.startsWith("run=")).get.getName
+    val oldGen = Paths.get(StreamingNearDupIngest.compactedDir(idxDir), run, "gen=0")
+    Files.createDirectories(oldGen.getParent)
+    Files.move(Paths.get(idxDir, run, "batch=0"), oldGen)
+    // doc 10 near-dups doc 2, whose postings live only in the older generation
+    Seq(
+      (10L, "spark plans scans joins aggregates and shuffles data well"),
+      (11L, "an entirely different subject matter appears in this line"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$batchDir/b2")
+    val s2 = StreamingNearDupIngest.run(spark, batchDir, schema,
+      "doc_id", "text", n = 3, minJaccard = 0.8, idxDir, accDir, ckpt)
+    assert(s2 == StreamingNearDupIngest.Summary(1L, 1L, 1L), s2.toString)
+    intercept[IllegalArgumentException](StreamingNearDupIngest.compact(spark, idxDir, ckpt))
+    assert(Files.exists(oldGen.resolve("_SUCCESS")))
   }
 
   test("streaming curation: near-dup + decontamination + classifier gates compose") {

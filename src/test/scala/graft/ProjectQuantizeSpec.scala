@@ -487,6 +487,31 @@ class ProjectQuantizeSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$codes/batch=b1").exists())
   }
 
+  test("an encoded artifact of the older manifest format fails loudly, never folded over") {
+    val dim = 16
+    val base = (0 until 40).map(i => (i.toLong, randVec(i, dim)))
+      .toDF("vec_id", "embedding")
+    val index = Similarity.buildIvfIndex(base, "vec_id", "embedding",
+      numCentroids = 4, lloydIters = 1)
+    val cb = ProductQuantize.train(base, "vec_id", "embedding", dim,
+      m = 4, k = 4, iters = 1)
+    val codes = java.nio.file.Files.createTempDirectory("pqold").toString
+    ProductQuantize.saveEncoded(ProductQuantize.encode(
+      base, "vec_id", "embedding", index, cb), codes)
+    ProductQuantize.appendEncodedBatch(index, cb, base.limit(4), "vec_id",
+      "embedding", codes, batchTag = "b1")
+    // the older format: no format marker, a newline-separated `_folded`
+    val root = java.nio.file.Paths.get(codes)
+    Seq("_generations", "._generations.crc", "gen=0/_folded", "gen=0/._folded.crc")
+      .foreach(n => java.nio.file.Files.deleteIfExists(root.resolve(n)))
+    java.nio.file.Files.write(root.resolve("gen=0/_folded"), Array.emptyByteArray)
+    val e = intercept[IllegalStateException](ProductQuantize.loadEncoded(spark, codes))
+    assert(e.getMessage.contains("older format"), e.getMessage)
+    intercept[IllegalArgumentException](ProductQuantize.compactEncoded(spark, codes))
+    assert(java.nio.file.Files.exists(root.resolve("gen=0/_SUCCESS")) &&
+      java.nio.file.Files.exists(root.resolve("batch=b1")))
+  }
+
   test("appendEncodedBatch check-first mode skips the write when the gate trips") {
     val dim = 16
     val rnd = new scala.util.Random(5)
