@@ -4,7 +4,11 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+
+import graft.ingest.v2.{ExtJsonInputPartition, ExtJsonScan, KeyedExtJsonInputPartition, OrderedBandGroup}
 
 /** One diagnostic entry point for registered queries (never invoked by
   * the bench or the oracle). Usage:
@@ -19,9 +23,12 @@ import org.apache.spark.sql.execution.QueryExecution
   *    conversions, coalesced partitions), which the static plan alone
   *    understates.
   *  - `probe`: one `PROBE` line per query — shuffle-exchange count, join
-  *    keys, and the graft exec nodes the plan uses (pin values for
-  *    PlanSpec, or the list of queries that reach an operator); `all`
-  *    probes every registered query in sorted name order.
+  *    keys, the graft exec nodes the plan uses (pin values for PlanSpec,
+  *    or the list of queries that reach an operator), and the planned
+  *    split count and bytes of every document-source scan (the batch
+  *    scans over the document source and the band-scan execs), so a plan
+  *    diff also sees files or blocks pruned; `all` probes every
+  *    registered query in sorted name order.
   *  - `profile`: runs each query once warm and once measured under a
   *    SparkListener and prints the per-JOB wall-time breakdown, so a
   *    query's wall time decomposes into its sequential driver actions.
@@ -77,14 +84,44 @@ object Inspect {
         val custom = q.sparkPlan.collect {
           case p if p.getClass.getName.startsWith("graft.") => p.nodeName
         }.distinct
+        val scans = q.sparkPlan.collect(Function.unlift(docScan)).map {
+          case (node, splits) =>
+            val bytes = splits.map {
+              case p: ExtJsonInputPartition => p.length
+              case k: KeyedExtJsonInputPartition => k.delegate.length
+              case _ => 0L
+            }.sum
+            s"$node(splits=${splits.size},bytes=$bytes)"
+        }
         println(s"PROBE $n shuffles=$s joins=[${joins.mkString(",")}] " +
-          s"graft=[${custom.mkString(",")}]")
+          s"graft=[${custom.mkString(",")}] scans=[${scans.mkString(",")}]")
         spark.catalog.clearCache()
       }
       case "profile" => names.foreach(n => profile(spark, n, () => df(n)))
       case other => sys.error(s"unknown subcommand $other")
     }
     spark.stop()
+  }
+
+  /** A document-source scan node and its planned splits: a batch scan
+    * over the document source, or a graft exec reading band groups.
+    */
+  private def docScan(p: SparkPlan): Option[(String, Seq[InputPartition])] = {
+    def groups(v: Any): Seq[OrderedBandGroup] = v match {
+      case g: OrderedBandGroup => Seq(g)
+      case s: Iterable[_] => s.toSeq.flatMap(groups)
+      case t: Product if t.productPrefix.startsWith("Tuple") =>
+        t.productIterator.toSeq.flatMap(groups)
+      case _ => Nil
+    }
+    p match {
+      case b: BatchScanExec if b.scan.isInstanceOf[ExtJsonScan] =>
+        Some(("BatchScan", b.inputPartitions))
+      case _ if p.getClass.getName.startsWith("graft.") =>
+        val gs = p.productIterator.toSeq.flatMap(groups)
+        Option.when(gs.nonEmpty)((p.nodeName, gs.flatMap(_.files.flatten)))
+      case _ => None
+    }
   }
 
   private final case class JobRow(id: Int, desc: String, start: Long,
