@@ -200,13 +200,30 @@ object Generations {
       commitText(fs, new Path(genRoot, FormatName), "1")
   }
 
-  /** Write `gen=0` (covering nothing) through `write` and commit it. */
-  def saveBase(spark: SparkSession, genRoot: String)(write: String => Unit): Unit = {
+  /** Replace the artifact with a fresh base: `write` lands it as the NEXT
+    * generation, whose manifest covers every batch present, so once
+    * committed it shadows everything older; only then are the older
+    * generations and those batches deleted. A crash before the commit
+    * leaves the old artifact readable, after it the new one. Like a
+    * folded tag, a tag the save covered is never read again under this
+    * generation. Nothing outside `gen=`/`batch=` is touched.
+    */
+  def saveBase(spark: SparkSession, genRoot: String, batchRoot: String)(
+      write: String => Unit): Unit = {
     val fs = fsOf(spark, genRoot)
     claim(fs, new Path(genRoot))
-    val target = new Path(genRoot, "gen=0")
+    val n = complete(fs, genRoot).lastOption.fold(0L)(_._1 + 1L)
+    val target = new Path(genRoot, s"gen=$n")
+    fs.delete(target, true) // a crashed earlier attempt's uncommitted output
+    val batches = subdirs(fs, new Path(batchRoot), "batch=")
     write(target.toString)
-    commit(fs, new Path(target, ManifestName), Manifest(Covered(Vector.empty)))
+    commit(fs, new Path(target, ManifestName),
+      Manifest(Covered.of(batches.map(_._1)
+        .sortBy(t => (num(t).getOrElse(Long.MaxValue), t)))))
+    batches.foreach { case (_, p) => fs.delete(p, true) }
+    subdirs(fs, new Path(genRoot), "gen=").foreach { case (g, p) =>
+      if (g != n.toString) fs.delete(p, true)
+    }
   }
 
   /** Fold generation n plus the `eligible` uncovered batches into

@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.spark.sql.SparkSession
+
 /** Harness-side scratch-directory lifecycle for bench/CI runs.
   *
   * Operators that materialize a layout ([[graft.ops.Bucketing.saveBucketed]])
@@ -22,6 +24,21 @@ object Scratch {
     deleteOnExit(dir)
     dir
   }
+
+  /** The registry's tag for one (scale-factor dir, application): the
+    * sfDir hash plus THIS application's id — two concurrent JVMs (bench
+    * alongside verify, parallel CI) never overwrite each other's landing
+    * mid-read, and the hash alone can collide across dirs.
+    */
+  def landingTag(spark: SparkSession, sfDir: String): String =
+    s"${sfDir.hashCode.toLong & 0x7fffffffL}_${spark.sparkContext.applicationId}"
+      .replaceAll("[^A-Za-z0-9_]", "_")
+
+  /** `name`'s scratch dir for one (scale-factor dir, application) —
+    * [[ephemeralDir]] of `<name>_<landingTag>`.
+    */
+  def landing(name: String, spark: SparkSession, sfDir: String): String =
+    ephemeralDir(s"${name}_${landingTag(spark, sfDir)}")
 
   /** The hook swallows traversal/deletion errors (a file vanishing or locked
     * mid-walk must not kill the hook and abandon the rest) and closes the

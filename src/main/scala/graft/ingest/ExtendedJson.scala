@@ -27,13 +27,15 @@ object ExtendedJson {
     *  - `partitionColumns` — hive-layout (`k=v` directories) drops whose
     *    partition values come from the PATH and prune directories at
     *    listing time;
-    *  - `zoneMaps=true` — consult the `_graft_zonemaps` sidecar for
-    *    file/block data skipping, metadata-only aggregates, top-N/LIMIT
-    *    pruning, sorted-scan early exit, and zone-aware planner stats;
     *  - `reportPartitioning=true` — report the hive layout as
     *    KeyGroupedPartitioning so co-partitioned drops join/aggregate
     *    with zero exchange (storage-partitioned reads);
     *  - `maxSplitBytes`, `maxPushedGroups` — split/pushdown tuning.
+    *
+    * A drop that carries a `_graft_zonemaps` sidecar is read with it,
+    * with or without options: file/block data skipping, metadata-only
+    * aggregates, top-N/LIMIT pruning, sorted-scan early exit, and
+    * zone-aware planner stats.
     */
   def read(spark: SparkSession, schema: StructType, path: String,
       options: Map[String, String]): DataFrame =

@@ -491,14 +491,11 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     */
   private var statsAnswer: Option[(Array[Array[String]], Array[String])] = None
 
-  /** The metadata-aggregate probe's FILE-level sidecar load (block rows
-    * are parquet-filtered out — the probe folds file stats only, and at
-    * block-indexed 100 TB the block rows dwarf the file rows). Shared
-    * with the scan unconditionally: the scan's own phase-1 load is
-    * file-level-only too (block rows arrive lazily in phase 1.5, scoped
-    * to min/max survivors), so the probe's map is exactly what the scan
-    * would load itself. A transient read failure caches nothing — the
-    * scan then retries with its own load.
+  /** The metadata-aggregate probe's phase-1 sidecar load
+    * ([[ZoneMaps.dropStats]], the scan's own load — block rows arrive
+    * lazily, scoped to min/max survivors), handed to the scan so it is
+    * paid once. A transient read failure caches nothing — the scan then
+    * retries with its own load.
     */
   @volatile private var sidecarLoaded:
       Option[Map[(String, Long, Long), ZoneMaps.FileStats]] = None
@@ -506,7 +503,7 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
   private def sidecarStats(
       spark: SparkSession): Map[(String, Long, Long), ZoneMaps.FileStats] =
     sidecarLoaded.getOrElse {
-      val m = ZoneMaps.loadStats(spark, path, fullSchema, withBlocks = false)
+      val m = ZoneMaps.dropStats(spark, path, fullSchema)
       sidecarLoaded = Some(m)
       m
     }
@@ -515,14 +512,14 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     * parquet-footer aggregate pushdown equivalent (Spark's own
     * `spark.sql.parquet.aggregatePushdown` answers these from row-group
     * statistics; a JSONL drop's footer is the `_graft_zonemaps` sidecar):
-    * when zone maps are enabled and EVERY listed file carries a
+    * when the drop has a sidecar and EVERY listed file carries a
     * length+mtime-matched stats row for every referenced column, the
     * answer is a fold over O(files) sidecar rows — the scan reads ZERO
     * data bytes at any corpus size. FILTERED shapes are accepted when
     * the pushed conjuncts are zone-DECIDABLE for every file: files where
     * some conjunct is provably all-false contribute nothing (exactly
     * what the scan would prune), and every surviving file must be
-    * provably ALL-TRUE ([[ZoneMaps.definitelyTrue]]) so its stats speak
+    * provably ALL-TRUE ([[ZoneMaps.Truth.all]]) so its stats speak
     * for its filtered rows — Iceberg's residual elimination applied to
     * aggregation. GROUPED shapes are accepted when every group-by column
     * is CONSTANT per file (min == max, no nulls — or all-null: the null
@@ -535,7 +532,6 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     */
   private def statsAggAnswer(
       aggregation: Aggregation): Option[(Array[Array[String]], Array[String])] = {
-    if (!Option(options.get("zoneMaps")).exists(_.toBoolean)) return None
     // the SAME translations pushAggregation registers, so the answer
     // rows align with the pushed layout (group columns first) by
     // construction; float/double sums refuse per-aggregate below
@@ -551,33 +547,25 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     val groupCols = groupParsed.flatten
     try {
       val spark = SparkSession.active
-      val root = new Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.getFileStatus(root).isDirectory) return None
       val stats = sidecarStats(spark)
       if (stats.isEmpty) return None
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val rootUri = fs.makeQualified(root).toUri
-      val files = DocListing.walkFiles(fs, fs.listStatus(root).toSeq)
       // every file must be covered by a fresh stats row — one gap and
-      // the metadata can't speak for the corpus
-      val all: Seq[Map[String, ZoneMaps.ColStats]] = files.map { st =>
-        val rel = rootUri.relativize(fs.makeQualified(st.getPath).toUri)
-          .getPath
-        stats.get((rel, st.getLen, st.getModificationTime)) match {
-          case Some(m) => m.cols
-          case None => return None
-        }
-      }
-      // zone-decide the pushed filter set per file: all-false files drop
-      // (they contribute no rows to the true answer either); anything
-      // kept must be all-TRUE or the stats can't speak for its subset of
-      // rows. Phase-1 stats carry no blooms — maybeTrue is then purely
+      // the metadata can't speak for the corpus. Then zone-decide the
+      // pushed filter set per file: all-false files drop (they
+      // contribute no rows to the true answer either); anything kept
+      // must be all-TRUE or the stats can't speak for its subset of
+      // rows. Phase-1 stats carry no blooms — `maybe` is then purely
       // min/max, which only costs refusals, never wrong answers.
-      val perFile = all.filter(m =>
-        pushed.forall(ZoneMaps.maybeTrue(_, m, fullSchema)))
-      if (!perFile.forall(m =>
-        pushed.forall(ZoneMaps.definitelyTrue(_, m, fullSchema))))
-        return None
+      val perFile = DocListing.walkFiles(fs, fs.listStatus(root).toSeq)
+        .flatMap { st =>
+          val m = stats.getOrElse(ZoneMaps.statsKey(rootUri, st),
+            return None).cols
+          val t = ZoneMaps.truth(pushed.toSeq, m, fullSchema)
+          if (!t.maybe) None else if (t.all) Some(m) else return None
+        }
       // group key per file: every group column must be provably
       // single-valued across the file — constant (min == max, no nulls)
       // or all-null (the SQL null group). Zero-row files join no group.
@@ -874,15 +862,11 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
       numericOption("maxPushedGroups", _.toInt).getOrElse(16384).max(1),
       partCols, completeCount = completeOffered && aggs.nonEmpty,
       arrayTrunc = arrayTrunc,
-      zoneMaps = Option(options.get("zoneMaps")).exists(_.toBoolean),
       statsAnswer = if (completeOffered && (aggs.nonEmpty || groups.nonEmpty))
         statsAnswer
       else None,
-      // the probe's FILE-only load stands in for the scan's phase-1
-      // stats whenever the probe actually loaded them — the scan's own
-      // phase-1 load is file-level-only too (block rows arrive lazily,
-      // scoped to survivors), so sharing is sound whether or not the
-      // metadata answer was planned, and saves a duplicate sidecar read
+      // the probe's load IS the scan's phase-1 load: sharing is sound
+      // whether or not the metadata answer was planned
       preloadedZoneStats = sidecarLoaded,
       reportPartitioning = reportPartitioningOn,
       rangeAggregation = rangeAggregationOn)
@@ -899,7 +883,6 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     val partCols: Array[String] = Array.empty,
     val completeCount: Boolean = false,
     val arrayTrunc: Map[String, Int] = Map.empty,
-    val zoneMaps: Boolean = false,
     val statsAnswer: Option[(Array[Array[String]], Array[String])] = None,
     preloadedZoneStats: Option[Map[(String, Long, Long), ZoneMaps.FileStats]] = None,
     val reportPartitioning: Boolean = false,
@@ -1052,7 +1035,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
       else "") +
       // reports only once planning has loaded the sidecar — description
       // must never force a sidecar read just to explain a plan
-      (if (zoneMaps) zoneStatsLoaded match {
+      (zoneStatsLoaded match {
         case Some(m) if m.nonEmpty =>
           s", ZoneMaps: ${m.size} files indexed, pruned $zonePrunedFiles" +
             (if (zonePrunedBlocks > 0) s" files, $zonePrunedBlocks blocks"
@@ -1067,9 +1050,8 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
             (if (limitPrunedFiles > 0 || limitPrunedBlocks > 0)
               s", Limit-covered: dropped $limitPrunedFiles files, $limitPrunedBlocks blocks"
             else "")
-        case Some(_) => ", ZoneMaps: absent"
-        case None => ""
-      } else "") +
+        case _ => ""
+      }) +
       (if (partCols.nonEmpty)
         s", PartitionColumns: [${partCols.zip(partTypes)
           .map { case (c, t) => s"$c ${t.simpleString}" }.mkString(", ")}]" +
@@ -1083,7 +1065,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
   /** Planner statistics ([[SupportsReportStatistics]]): real byte size
     * from the listing instead of the default-to-
     * spark.sql.defaultSizeInBytes guess a statless V2 relation gets —
-    * and, when zone maps are on, POST-PRUNE numbers: files the pushed
+    * and, when the drop has a sidecar, POST-PRUNE numbers: files the pushed
     * static filters provably empty (partition-path or zone-decided)
     * contribute neither bytes nor rows, and surviving indexed files
     * contribute their exact sidecar row counts. At 100 TB this is what
@@ -1107,17 +1089,16 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
         }
       val zoneFilters = pushed.filterNot(f =>
         f.references.exists(r => partCols.exists(_.equalsIgnoreCase(r))))
-      if (!zoneMaps || zoneStats.isEmpty)
+      if (zoneStats.isEmpty)
         (kept.map(_._1.getLen).sum, None)
       else {
         var b = 0L
         var r = 0L
         var complete = true
         kept.foreach { case (f, _) =>
-          val rel = zoneRootUri.relativize(f.getPath.toUri).getPath
-          zoneStats.get((rel, f.getLen, f.getModificationTime)) match {
+          statsOf(f) match {
             case Some(s)
-              if zoneFilters.forall(ZoneMaps.maybeTrue(_, s.cols, fullSchema)) =>
+              if ZoneMaps.truth(zoneFilters.toSeq, s.cols, fullSchema).maybe =>
               b += f.getLen
               s.cols.values.headOption match {
                 case Some(cs) => r += cs.rows
@@ -1233,43 +1214,44 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
 
   /** The loaded zone-map sidecar (PHASE 1: FILE-level min/max/null rows
     * only — block rows load lazily in phase 1.5, scoped to the min/max
-    * survivors, and bloom blobs in phase 2), keyed by (root-relative
-    * path, length, mtime) — empty when the option is off, the path is
-    * not a plain directory, or no sidecar exists (always fail-soft:
-    * absent stats cost speed, never rows). Loaded once per scan like the
-    * listing — or not at all, when the builder's metadata-aggregate
-    * probe already paid for it. At a block-indexed 100 TB drop the block
-    * rows are the sidecar's bulk (columns × blocks-per-file × files);
-    * collecting them here would make EVERY zone-mapped query pay
-    * O(corpus-metadata) driver work before one file is pruned.
+    * survivors, and bloom blobs in phase 2), read whenever the drop has
+    * one — empty when the path is not a plain directory or no sidecar
+    * exists (always fail-soft: absent stats cost speed, never rows).
+    * Loaded once per scan like the listing — or not at all, when the
+    * builder's metadata-aggregate probe already paid for it. At a
+    * block-indexed 100 TB drop the block rows are the sidecar's bulk
+    * (columns × blocks-per-file × files); collecting them here would make
+    * EVERY zone-mapped query pay O(corpus-metadata) driver work before
+    * one file is pruned.
     */
   @volatile private var zoneStatsLoaded:
-      Option[Map[(String, Long, Long), ZoneMaps.FileStats]] =
-    if (zoneMaps) preloadedZoneStats else None
+      Option[Map[(String, Long, Long), ZoneMaps.FileStats]] = preloadedZoneStats
 
   private def zoneStats: Map[(String, Long, Long), ZoneMaps.FileStats] =
     zoneStatsLoaded.getOrElse {
       val m: Map[(String, Long, Long), ZoneMaps.FileStats] =
-        if (!zoneMaps) Map.empty
-        else try {
-          val spark = SparkSession.active
-          val root = new Path(path)
-          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.getFileStatus(root).isDirectory) Map.empty
-          else ZoneMaps.loadStats(spark, path, fullSchema,
-            withBlocks = false)
-        } catch { case scala.util.control.NonFatal(_) => Map.empty }
+        try ZoneMaps.dropStats(SparkSession.active, path, fullSchema)
+        catch { case scala.util.control.NonFatal(_) => Map.empty }
       zoneStatsLoaded = Some(m)
       m
     }
 
-  /** Root-relative rendering matching [[ZoneMaps.build]]'s keys. */
   private lazy val zoneRootUri = {
     val root = new Path(path)
     val fs = root.getFileSystem(
       SparkSession.active.sparkContext.hadoopConfiguration)
     fs.makeQualified(root).toUri
   }
+
+  /** The sidecar key of a listed file ([[ZoneMaps.statsKey]]). */
+  private def zoneKey(f: FileStatus): (String, Long, Long) =
+    ZoneMaps.statsKey(zoneRootUri, f)
+
+  /** The ONE stats lookup: a listed file's phase-1 stats, None when it
+    * is stats-less or stale.
+    */
+  private def statsOf(f: FileStatus): Option[ZoneMaps.FileStats] =
+    zoneStats.get(zoneKey(f))
 
   @volatile private var zonePrunedFiles = 0
   @volatile private var zonePrunedBlocks = 0
@@ -1287,23 +1269,21 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     */
   @volatile private[graft] var blockRowsFetched = 0
 
-  private val keepAll = ZoneVerdict(allTrue = false, blocks = None)
-
   /** Zone-map pruning over the reader-side filter set, TWO-PHASE: files
     * are dropped when some pushed conjunct is PROVABLY false for every
-    * row under their min/max stats ([[ZoneMaps.maybeTrue]] is
-    * conservative; stats-less and length/mtime-changed files always
-    * survive); bloom blobs are then fetched ONLY for equality/IN-probed
-    * columns and ONLY for the min/max survivors — the lazy second read
-    * parquet gives bloom pages, so a range-only query never pays a blob
-    * byte and a point lookup pays survivors × probed columns. Runtime
-    * filters participate — a dimension join's observed keys can skip
-    * whole fact files mid-execution. Survivors carry a [[ZoneVerdict]]:
-    * per-block survival for split-level skipping, and all-TRUE proof for
-    * residual elimination.
+    * row under their min/max stats ([[ZoneMaps.truth]] is conservative;
+    * stats-less and length/mtime-changed files always survive); bloom
+    * blobs are then fetched ONLY for equality/IN-probed columns and ONLY
+    * for the min/max survivors — the lazy second read parquet gives bloom
+    * pages, so a range-only query never pays a blob byte and a point
+    * lookup pays survivors × probed columns. Runtime filters participate
+    * — a dimension join's observed keys can skip whole fact files
+    * mid-execution. Each survivor is a [[KeptFile]]: its stats, its
+    * surviving blocks for split-level skipping, and the all-rows-survive
+    * proof for residual elimination and top-N/LIMIT coverage.
     */
   private def zonePrune(
-      files: Seq[(FileStatus, Array[String])]): Seq[(FileStatus, Array[String], ZoneVerdict)] = {
+      files: Seq[(FileStatus, Array[String])]): Seq[KeptFile] = {
     // a filter touching ANY partition column is out of the zone algebra's
     // reach: partition values come from the PATH and the file bodies
     // parse them as null, so body stats would answer "no non-null
@@ -1312,7 +1292,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     // ones). Emptiness is checked before zoneStats so an unfiltered scan
     // never pays the sidecar load.
     val filters = readerFilters.filterNot(f =>
-      f.references.exists(r => partCols.exists(_.equalsIgnoreCase(r))))
+      f.references.exists(r => partCols.exists(_.equalsIgnoreCase(r)))).toSeq
     // top-N pruning applies even to UNFILTERED scans (ORDER BY key
     // LIMIT n over a clustered drop is the archive-probe shape); a
     // partition-column first key is path-decided and handled elsewhere
@@ -1326,20 +1306,25 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     topNPrunedBlocks = 0
     limitPrunedFiles = 0
     limitPrunedBlocks = 0
+    // every row of a zone survives when the readers evaluate nothing, or
+    // the zone algebra proved the WHOLE reader-side filter set true (a
+    // mixed partition/data filter is excluded above but still evaluated
+    // per row)
+    val noFilters = readerFilters.isEmpty
+    val sawAll = filters.nonEmpty && filters.length == readerFilters.length
+    def allRows(t: ZoneMaps.Truth): Boolean = noFilters || (sawAll && t.all)
     if ((filters.isEmpty && !wantTopN && !wantLimit) || zoneStats.isEmpty)
-      return files.map { case (f, v) => (f, v, keepAll) }
-    // all-TRUE may only be claimed when the zone algebra saw the WHOLE
-    // reader-side filter set (a mixed partition/data filter is excluded
-    // above but still evaluated per row)
-    val sawAll = filters.length == readerFilters.length
-    val candidates = files.map { case (f, vals) =>
-      val rel = zoneRootUri.relativize(f.getPath.toUri).getPath
-      (f, vals, zoneStats.get((rel, f.getLen, f.getModificationTime)), rel)
-    }
+      return files.map { case (f, v) => KeptFile(f, v, None, noFilters, None) }
     // phase 1: min/max/null (the loaded stats carry no blooms or blocks
     // yet — both load lazily below, scoped to this phase's survivors)
-    val phase1 = candidates.filter { case (_, _, st, _) =>
-      st.forall(s => filters.forall(ZoneMaps.maybeTrue(_, s.cols, fullSchema)))
+    val phase1 = files.flatMap { case (f, vals) =>
+      val key = zoneKey(f)
+      zoneStats.get(key) match {
+        case None => Some((f, vals, key, None))
+        case Some(s) =>
+          val t = ZoneMaps.truth(filters, s.cols, fullSchema)
+          if (t.maybe) Some((f, vals, key, Some((s, t)))) else None
+      }
     }
     // phase 1.5: block rows for the min/max SURVIVORS whose file-level
     // row says block stats exist (None = pre-v3 sidecar: probe anyway).
@@ -1347,7 +1332,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     // O(corpus · blocks): a query whose file pass keeps three files pays
     // three files' block rows however many the drop holds.
     val blockProbed = phase1.collect {
-      case (_, _, Some(s), rel) if s.blockRows.forall(_ > 0L) => rel
+      case (_, _, key, Some((s, _))) if s.blockRows.forall(_ > 0L) => key._1
     }.toSet
     val blockMap: Map[(String, Long, Long), Seq[ZoneMaps.BlockStats]] =
       if (blockProbed.isEmpty) Map.empty
@@ -1359,7 +1344,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     // phase 2: bloom membership for the survivors' equality/IN probes
     val eqCols = filters.flatMap(ZoneMaps.eqProbedCols).toSet
       .filter(c => FilterEval.resolve(c, fullSchema).isDefined)
-    val probed = phase1.collect { case (_, _, Some(_), rel) => rel }.toSet
+    val probed = phase1.collect { case (_, _, key, Some(_)) => key._1 }.toSet
     val blooms: Map[(String, Long, Long), Map[String, org.apache.spark.util.sketch.BloomFilter]] =
       if (eqCols.isEmpty || probed.isEmpty) Map.empty
       else try ZoneMaps.loadBlooms(SparkSession.active, path, fullSchema,
@@ -1374,53 +1359,41 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
       if (wantTopN && !pushedSorts.head.descending) Some(pushedSorts.head.field)
       else None
     var blocksDropped = 0
-    val kept: Seq[(FileStatus, Array[String], Option[ZoneMaps.FileStats], ZoneVerdict)] =
-      phase1.flatMap { case (f, vals, st, rel) =>
-        st match {
-          case None => Some((f, vals, None, keepAll))
-          case Some(s0) =>
-            val key = (rel, f.getLen, f.getModificationTime)
-            val s = s0.copy(blocks = blockMap.get(key))
-            val sortedAsc = sortKeyAsc.exists(k =>
-              s.cols.get(k).exists(_.sorted))
-            // only a bloom-augmented stats map can change the phase-1
-            // verdict — re-evaluating the filters against unchanged
-            // stats would double the planning-time zone work of every
-            // bloomless file on a large listing
-            val fetched = blooms.get(key)
-            val cols = fetched match {
-              case Some(bs) => s.cols.map { case (c, cs) =>
-                c -> bs.get(c).map(b => cs.copy(bloom = Some(b))).getOrElse(cs)
-              }
-              case None => s.cols
-            }
-            if (fetched.isDefined &&
-              !filters.forall(ZoneMaps.maybeTrue(_, cols, fullSchema))) None
-            else {
-              val allTrue = sawAll && filters.nonEmpty &&
-                filters.forall(ZoneMaps.definitelyTrue(_, s.cols, fullSchema))
-              // block verdicts: min/max only (blooms are file-level); a
-              // block the algebra can't bound survives, like a file
-              val blocks = s.blocks.map { bs =>
-                val surviving = bs.flatMap { b =>
-                  if (filters.forall(ZoneMaps.maybeTrue(_, b.cols, fullSchema)))
-                    Some((b.off, b.len, allTrue || (sawAll && filters.nonEmpty &&
-                      filters.forall(
-                        ZoneMaps.definitelyTrue(_, b.cols, fullSchema)))))
-                  else None
-                }
-                blocksDropped += bs.size - surviving.size
-                surviving
-              }
-              Some((f, vals, Some(s), ZoneVerdict(allTrue, blocks, sortedAsc)))
-            }
+    val kept = phase1.flatMap {
+      case (f, vals, _, None) => Some(KeptFile(f, vals, None, noFilters, None))
+      case (f, vals, key, Some((s, t))) =>
+        // only a bloom-augmented stats map can change the phase-1
+        // verdict (blooms inform `maybe` alone) — re-evaluating against
+        // unchanged stats would double the planning-time zone work of
+        // every bloomless file on a large listing
+        val dropped = blooms.get(key).exists { bs =>
+          val cols = s.cols.map { case (c, cs) =>
+            c -> bs.get(c).map(b => cs.copy(bloom = Some(b))).getOrElse(cs)
+          }
+          !ZoneMaps.truth(filters, cols, fullSchema).maybe
         }
-      }
+        if (dropped) None
+        else {
+          val all = allRows(t)
+          // block verdicts: min/max only (blooms are file-level); a
+          // block the algebra can't bound survives, like a file
+          val blocks = blockMap.get(key).map { bs =>
+            val surviving = bs.flatMap { b =>
+              val bt = ZoneMaps.truth(filters, b.cols, fullSchema)
+              Option.when(bt.maybe)((b, all || allRows(bt)))
+            }
+            blocksDropped += bs.size - surviving.size
+            surviving
+          }
+          Some(KeptFile(f, vals, Some(s), all, blocks,
+            sortKeyAsc.exists(k => s.cols.get(k).exists(_.sorted))))
+        }
+    }
     val narrowedTop = if (wantTopN) topNPrune(kept) else kept
     val narrowed = if (wantLimit) limitPrune(narrowedTop) else narrowedTop
     zonePrunedFiles = files.size - narrowed.size
     zonePrunedBlocks = blocksDropped
-    narrowed.map { case (f, v, _, verdict) => (f, v, verdict) }
+    narrowed
   }
 
   /** LIMIT coverage pruning: `LIMIT n` may return ANY n surviving rows,
@@ -1434,44 +1407,34 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     * guarantees keep everything, and non-guaranteed zones in the prefix
     * ride along untouched (they can only ADD surviving rows).
     */
-  private def limitPrune(
-      kept: Seq[(FileStatus, Array[String], Option[ZoneMaps.FileStats], ZoneVerdict)]): Seq[(FileStatus, Array[String], Option[ZoneMaps.FileStats], ZoneVerdict)] = {
-    val noFilters = readerFilters.isEmpty
+  private def limitPrune(kept: Seq[KeptFile]): Seq[KeptFile] = {
     var acc = 0L
     var covered = false
-    val out = Seq.newBuilder[(FileStatus, Array[String], Option[ZoneMaps.FileStats], ZoneVerdict)]
+    def count(all: Boolean, cols: Map[String, ZoneMaps.ColStats]): Unit =
+      if (all) cols.values.headOption.foreach { cs =>
+        acc += cs.rows
+        if (acc >= pushedLimit) covered = true
+      }
+    val out = Seq.newBuilder[KeptFile]
     var droppedFiles = 0
     var droppedBlocks = 0
-    kept.foreach { case tup @ (f, vals, st, verdict) =>
-      if (!covered) {
-        st match {
-          case Some(s) if s.blocks.isDefined && verdict.blocks.isDefined =>
-            // block-granular coverage: keep only the prefix of surviving
-            // blocks needed to finish the guarantee
-            val orig = s.blocks.get.map(b => b.off -> b).toMap
-            val taken = Seq.newBuilder[(Long, Long, Boolean)]
-            verdict.blocks.get.foreach { case b @ (off, _, cov) =>
-              if (!covered) {
-                taken += b
-                if (noFilters || verdict.allTrue || cov)
-                  orig.get(off).flatMap(_.cols.values.headOption)
-                    .foreach { cs =>
-                      acc += cs.rows
-                      if (acc >= pushedLimit) covered = true
-                    }
-              } else droppedBlocks += 1
-            }
-            out += ((f, vals, st, verdict.copy(blocks = Some(taken.result()))))
-          case Some(s) =>
-            out += tup
-            if (noFilters || verdict.allTrue)
-              s.cols.values.headOption.foreach { cs =>
-                acc += cs.rows
-                if (acc >= pushedLimit) covered = true
-              }
-          case None => out += tup // unknown rows: ride along
-        }
-      } else droppedFiles += 1
+    kept.foreach { k =>
+      if (covered) droppedFiles += 1
+      else k.blocks match {
+        case Some(bs) =>
+          // block-granular coverage: keep only the prefix of surviving
+          // blocks needed to finish the guarantee
+          val taken = Seq.newBuilder[(ZoneMaps.BlockStats, Boolean)]
+          bs.foreach { case z @ (b, all) =>
+            if (covered) droppedBlocks += 1
+            else { taken += z; count(all, b.cols) }
+          }
+          out += k.copy(blocks = Some(taken.result()))
+        case None =>
+          // stats-less files carry unknown rows: they ride along
+          out += k
+          k.stats.foreach(s => count(k.all, s.cols))
+      }
     }
     if (covered) {
       limitPrunedFiles = droppedFiles
@@ -1495,9 +1458,9 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     * whose BEST value is strictly worse than T can then never displace
     * them — strictness makes later tiebreak keys irrelevant. Soundness
     * details:
-    *  - guarantees come only from files whose rows ALL survive the
+    *  - guarantees come only from zones whose rows ALL survive the
     *    pushed filters (no filters, or zone-proved all-true) — a
-    *    partially filtered file's row count can't back the threshold;
+    *    partially filtered zone's row count can't back the threshold;
     *    PRUNING needs no such proof (dropping rows below n guaranteed
     *    rows is safe whatever the filters would have done to them);
     *  - accumulated guarantee files have bound ≥ T, so their own best
@@ -1508,43 +1471,30 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     *    NULLS LAST ranks them below everything — prunable alongside;
     *  - stats-less/stale files neither guarantee nor prune (kept).
     */
-  private def topNPrune(
-      kept: Seq[(FileStatus, Array[String], Option[ZoneMaps.FileStats], ZoneVerdict)]): Seq[(FileStatus, Array[String], Option[ZoneMaps.FileStats], ZoneVerdict)] = {
+  private def topNPrune(kept: Seq[KeptFile]): Seq[KeptFile] = {
     val s0 = pushedSorts.head
     val dt = FilterEval.resolve(s0.field, fullSchema)
       .map(_.leaf.dataType).getOrElse(return kept)
     if (!ZoneMaps.indexable(dt)) return kept
     val desc = s0.descending
     def cmp(a: Any, b: Any): Int = FilterEval.compareInternal(dt, a, b)
-    val noFilters = readerFilters.isEmpty
     // guarantee pass: bounds and counts of fully-surviving zones — at
     // BLOCK granularity when block stats exist (a single sorted file's
     // file-level bound is its global worst and guarantees nothing; its
     // tail block's bound is sharp), else the file as one zone
     var nullsTotal = 0L
     val bounds = scala.collection.mutable.ArrayBuffer.empty[(Any, Long)]
-    def addZone(cs: ZoneMaps.ColStats): Unit = {
-      if (s0.nullsFirst) nullsTotal += cs.nulls
-      val bound = if (desc) cs.min.orNull else cs.max.orNull
-      if (bound != null) bounds += ((bound, cs.rows - cs.nulls))
-    }
-    kept.foreach { case (_, _, st, verdict) =>
-      st.foreach { s =>
-        (s.blocks, verdict.blocks) match {
-          case (Some(orig), Some(surv)) =>
-            // a block counts when EVERY one of its rows survives the
-            // filters: no filters, the whole file proved all-true, or
-            // the block itself proved all-true
-            val allTrueOff = surv.collect {
-              case (off, _, cov) if cov => off
-            }.toSet
-            orig.foreach { b =>
-              if (noFilters || verdict.allTrue || allTrueOff(b.off))
-                b.cols.get(s0.field).foreach(addZone)
-            }
-          case _ =>
-            if (noFilters || verdict.allTrue)
-              s.cols.get(s0.field).foreach(addZone)
+    def addZone(all: Boolean, cols: Map[String, ZoneMaps.ColStats]): Unit =
+      if (all) cols.get(s0.field).foreach { cs =>
+        if (s0.nullsFirst) nullsTotal += cs.nulls
+        val bound = if (desc) cs.min.orNull else cs.max.orNull
+        if (bound != null) bounds += ((bound, cs.rows - cs.nulls))
+      }
+    kept.foreach { k =>
+      k.stats.foreach { s =>
+        k.blocks match {
+          case Some(bs) => bs.foreach { case (b, all) => addZone(all, b.cols) }
+          case None => addZone(k.all, s.cols)
         }
       }
     }
@@ -1577,31 +1527,19 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
           case None => true // null wall: any non-null zone is worse
         }
       }
-    kept.flatMap { case tup @ (f, vals, st, verdict) =>
-      st match {
-        case Some(s) =>
-          s.cols.get(s0.field) match {
-            case Some(cs) if prunable(cs) =>
-              topNPrunedFiles += 1
-              None
-            case Some(_) =>
-              val nv = (verdict.blocks, st.flatMap(_.blocks)) match {
-                case (Some(bs), Some(orig)) =>
-                  val byOff = orig.map(b => b.off -> b).toMap
-                  val filtered = bs.filter { case (off, _, _) =>
-                    byOff.get(off).flatMap(_.cols.get(s0.field)) match {
-                      case Some(bcs) => !prunable(bcs)
-                      case None => true
-                    }
-                  }
-                  topNPrunedBlocks += bs.size - filtered.size
-                  verdict.copy(blocks = Some(filtered))
-                case _ => verdict
-              }
-              Some((f, vals, st, nv))
-            case None => Some(tup)
+    kept.flatMap { k =>
+      k.stats.flatMap(_.cols.get(s0.field)) match {
+        case Some(cs) if prunable(cs) =>
+          topNPrunedFiles += 1
+          None
+        case Some(_) => Some(k.blocks.fold(k) { bs =>
+          val surviving = bs.filter { case (b, _) =>
+            b.cols.get(s0.field).forall(!prunable(_))
           }
-        case None => Some(tup)
+          topNPrunedBlocks += bs.size - surviving.size
+          k.copy(blocks = Some(surviving))
+        })
+        case None => Some(k)
       }
     }
   }
@@ -1637,8 +1575,14 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
         prunedFiles.set(listing.size - kept.size)
         kept
       }
-    val files = zonePrune(partKept)
-    val parts = files.flatMap { case (f, vals, verdict) =>
+    // residual elimination only where there is a filter to eliminate:
+    // partitions planned before runtime filters arrive must still
+    // evaluate them
+    val filtered = readerFilters.nonEmpty
+    val parts = zonePrune(partKept).flatMap { k =>
+      val f = k.file
+      val vals = k.partValues
+      val allTrue = k.all && filtered
       // a COMPRESSED file is never byte-split: a gzip stream has no
       // mid-file entry points, so a range split would decode garbage —
       // silent wrong results, the worst kind. One whole-file partition
@@ -1648,9 +1592,9 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
         // pass read the decoded lines in stream order, the same order
         // this reader will
         Seq(ExtJsonInputPartition(f.getPath.toString, 0L, f.getLen,
-          wholeFile = true, partValues = vals, allTrue = verdict.allTrue,
-          sortedAsc = verdict.sortedAsc))
-      else verdict.blocks match {
+          wholeFile = true, partValues = vals, allTrue = allTrue,
+          sortedAsc = k.sortedAsc))
+      else k.blocks match {
         case Some(blocks) =>
           // SPLIT-LEVEL skipping: plan only the surviving blocks —
           // adjacent survivors coalesce into runs (each run re-chopped
@@ -1664,7 +1608,8 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
           var runStart = -1L
           var runEnd = -1L
           var runCovered = true
-          blocks.foreach { case (off, len, covered) =>
+          blocks.foreach { case (b, all) =>
+            val (off, len, covered) = (b.off, b.len, all && filtered)
             if (runStart >= 0 && runEnd == off) {
               runEnd = off + len
               runCovered &&= covered
@@ -1680,16 +1625,14 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
             (s until e by maxSplit).map { off =>
               ExtJsonInputPartition(f.getPath.toString, off,
                 math.min(maxSplit, e - off), partValues = vals,
-                allTrue = verdict.allTrue || covered,
-                sortedAsc = verdict.sortedAsc)
+                allTrue = allTrue || covered, sortedAsc = k.sortedAsc)
             }
           }
         case None =>
           (0L until f.getLen by maxSplit).map { off =>
             ExtJsonInputPartition(f.getPath.toString, off,
               math.min(maxSplit, f.getLen - off),
-              partValues = vals, allTrue = verdict.allTrue,
-              sortedAsc = verdict.sortedAsc)
+              partValues = vals, allTrue = allTrue, sortedAsc = k.sortedAsc)
           }
       }
     }.toArray
@@ -1782,11 +1725,8 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
       val statusByPath = listing.map { case (f, _) =>
         f.getPath.toString -> f
       }.toMap
-      groups.map(_.files.map { splits =>
-        val st = statusByPath(splits.head.file)
-        val rel = zoneRootUri.relativize(st.getPath.toUri).getPath
-        zoneStats((rel, st.getLen, st.getModificationTime))
-      })
+      groups.map(_.files.map(splits =>
+        statsOf(statusByPath(splits.head.file)).get))
     }
   }
 
@@ -1797,7 +1737,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     */
   private def computeOrderedBands(
       colName: String): Option[Seq[OrderedBandGroup]] = {
-    if (!zoneMaps || statsAnswer.isDefined || reportPartitioning) return None
+    if (statsAnswer.isDefined || reportPartitioning) return None
     val dt = FilterEval.resolve(colName, fullSchema)
       .map(_.leaf.dataType).getOrElse(return None)
     if (!ZoneMaps.indexable(dt)) return None
@@ -1813,8 +1753,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     val maybeBands = splits.groupBy(_.file).toSeq.map { case (file, ps) =>
       for {
         st <- statusByPath.get(file)
-        rel = zoneRootUri.relativize(st.getPath.toUri).getPath
-        fs <- zoneStats.get((rel, st.getLen, st.getModificationTime))
+        fs <- statsOf(st)
         cs <- fs.cols.get(colName)
         if cs.sorted && cs.nulls == 0L && cs.rows > 0L &&
           cs.min.isDefined && cs.max.isDefined
@@ -2034,7 +1973,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
       StructType(required.fields.filter(f => keep(f.name))), pushed,
       maxSplitOverride, pushedLimit, pushedAggs, pushedSorts, pushedTopN,
       pushedGroups, maxPushedGroups, partCols, completeCount, arrayTrunc,
-      zoneMaps, statsAnswer, preloadedZoneStats, reportPartitioning,
+      statsAnswer, preloadedZoneStats, reportPartitioning,
       rangeAggregation)
   }
 }
@@ -2048,7 +1987,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
   *   converted to internal values reader-side by the shared
   *   [[PartitionValues]] rules.
   * @param allTrue zone maps PROVED every reader-side filter true for
-  *   every row of this split ([[ZoneMaps.definitelyTrue]]): its reader
+  *   every row of this split ([[ZoneMaps.Truth.all]]): its reader
   *   skips per-row filter evaluation — residual elimination, the dual
   *   of pruning.
   * @param sortedAsc zone maps PROVED the file null-free and
@@ -2083,18 +2022,20 @@ object ExtJsonScan {
 final case class OrderedBandGroup(files: Seq[Seq[ExtJsonInputPartition]],
     min: Any, max: Any)
 
-/** A kept file's zone verdict, beyond mere survival:
-  * `allTrue` — every reader-side conjunct is provably TRUE for every
-  * row, so its readers may skip per-row filter evaluation entirely;
-  * `blocks` — the SURVIVING blocks as (offset, length, allTrue)
-  * triples in offset order, when the file carries tiled block stats
-  * and some block was decidable (None ⇒ split by bytes as usual);
-  * `sortedAsc` — the sidecar proves the file null-free and
-  * non-decreasing on the pushed ASC top-N's first sort key, so readers
-  * may stop parsing once the n-th kept row's key is strictly exceeded.
+/** A file zone pruning kept, with what its splits and the top-N/LIMIT
+  * narrowing need: `stats` — its phase-1 sidecar stats (None:
+  * stats-less or stale); `all` — EVERY row of the file survives the
+  * reader-side filters (there are none, or the zone algebra proved them
+  * all true); `blocks` — the SURVIVING blocks with their stats and their
+  * own every-row-survives flag, in offset order, when the file carries
+  * tiled block stats (None ⇒ split by bytes as usual); `sortedAsc` — the
+  * sidecar proves the file null-free and non-decreasing on the pushed ASC
+  * top-N's first sort key, so readers may stop parsing once the n-th
+  * kept row's key is strictly exceeded.
   */
-private[v2] final case class ZoneVerdict(allTrue: Boolean,
-    blocks: Option[Seq[(Long, Long, Boolean)]],
+private[v2] final case class KeptFile(file: FileStatus,
+    partValues: Array[String], stats: Option[ZoneMaps.FileStats],
+    all: Boolean, blocks: Option[Seq[(ZoneMaps.BlockStats, Boolean)]],
     sortedAsc: Boolean = false)
 
 /** A split plus its partition-value KEY (internal form, `partCols`

@@ -48,7 +48,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Correctness posture — pruning may only REMOVE files/blocks whose
   * every row a residual filter would drop anyway:
-  *  - the evaluation is conservative three-valued ([[ZoneMaps.maybeTrue]]):
+  *  - the evaluation is conservative three-valued ([[ZoneMaps.truth]]):
   *    a file survives unless a pushed conjunct is definitely-not-true for
   *    all rows; unknown columns, unsupported shapes, and `Not`/string
   *    matches all answer "maybe";
@@ -66,7 +66,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    renderings, so "provably false" here means provably false under
   *    exactly the reader's comparison semantics.
   *
-  * The dual test [[definitelyTrue]] proves the opposite bound — a
+  * The same walk also proves the opposite bound ([[Truth.all]]) — a
   * conjunct TRUE for every row under the stats — enabling two
   * Iceberg-style residual eliminations: a reader whose file/block is
   * fully covered skips per-row filter evaluation, and a filtered
@@ -250,11 +250,20 @@ object ZoneMaps {
       s"zone maps index a document DIRECTORY, got $root")
     val rootUri = fs.makeQualified(root).toUri
     DocListing.walkFiles(fs, fs.listStatus(root).toSeq).map { st =>
-      val rel = rootUri.relativize(
-        fs.makeQualified(st.getPath).toUri).getPath
-      (st.getPath.toString, rel, st.getLen, st.getModificationTime)
+      val (rel, len, mtime) = statsKey(rootUri, st)
+      (st.getPath.toString, rel, len, mtime)
     }
   }
+
+  /** The sidecar stats KEY of a listed file under the (qualified) drop
+    * root: its root-relative path, length and modification time — the
+    * one rendering the writers index by and every planning lookup
+    * probes with. A file rewritten since indexing changes its length or
+    * mtime, misses, and falls back to scanning.
+    */
+  def statsKey(root: java.net.URI, st: FileStatus): (String, Long, Long) =
+    (root.relativize(st.getPath.toUri).getPath, st.getLen,
+      st.getModificationTime)
 
   /** Default byte size of one stats-build task. Files larger than this
     * index with SPLIT parallelism — the reader's own granularity — so a
@@ -826,6 +835,19 @@ object ZoneMaps {
       st.isFile && DocListing.visible(st))
   }
 
+  /** The PHASE-1 stats a document scan plans with: [[loadStats]]
+    * without block rows, read whenever the drop has a sidecar. Empty when
+    * `path` is not a directory — a single file or a glob carries no
+    * sidecar, and one status call says so.
+    */
+  def dropStats(spark: SparkSession, path: String,
+      schema: StructType): Map[(String, Long, Long), FileStats] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.getFileStatus(root).isDirectory) Map.empty
+    else loadStats(spark, path, schema, withBlocks = false)
+  }
+
   /** PHASE-1 load: min/max/null/rows per (file, column) — file-level and
     * block-level — decoded against the DECLARED schema, never touching
     * the bloom blob column (that's [[loadBlooms]], paid only for files
@@ -1063,120 +1085,98 @@ object ZoneMaps {
     case _ => Set.empty
   }
 
-  /** Conservative three-valued zone test: could `f` be TRUE for at least
-    * one row of a file/block with these stats? `false` ⇒ provably
-    * all-drop under this conjunct and may be skipped. Anything the zone
-    * algebra can't bound answers `true` (keep).
+  /** What a zone's stats prove about a filter: `maybe` — some row of
+    * the zone may satisfy it (false ⇒ no row does, so the zone may be
+    * skipped); `all` — every row satisfies it (per-row evaluation is
+    * redundant there — residual elimination, Iceberg-style — and a
+    * metadata-only aggregate may speak for the zone). A zero-row zone is
+    * vacuously `all`.
     */
-  def maybeTrue(f: Filter, stats: Map[String, ColStats],
-      schema: StructType): Boolean = {
-    def dtOf(a: String): Option[DataType] =
-      FilterEval.resolve(a, schema).map(_.leaf.dataType)
-    def cmp(a: String, v: Any)(test: (ColStats, Any, DataType) => Boolean): Boolean =
-      (stats.get(a), dtOf(a)) match {
+  final case class Truth(maybe: Boolean, all: Boolean) {
+    def and(o: Truth): Truth = Truth(maybe && o.maybe, all && o.all)
+    // `all` is sufficient, not necessary: one branch covering ALL rows
+    // covers the disjunction (a row-wise split between branches is
+    // invisible to min/max stats)
+    def or(o: Truth): Truth = Truth(maybe || o.maybe, all || o.all)
+  }
+
+  /** Anything the zone algebra cannot bound: keep, and evaluate per row. */
+  private val Unknown = Truth(maybe = true, all = false)
+
+  /** The ONE zone evaluator: what `stats` (a file's or a block's) prove
+    * about `f`, both answers from one walk of the filter tree. Each
+    * answer errs in its own safe direction — `maybe` towards keeping,
+    * `all` towards evaluating — so unknown columns, unconvertible
+    * literals, and `Not`/string matches answer [[Unknown]]. Blooms only
+    * ever inform `maybe`: membership proves possible presence, never
+    * universality.
+    */
+  def truth(f: Filter, stats: Map[String, ColStats],
+      schema: StructType): Truth = {
+    // a comparison leaf: (maybe, all) tests on the non-null bounds; a
+    // null row evaluates the predicate to NULL, not TRUE, so `all` also
+    // needs a null-free zone
+    def cmp(a: String, v: Any)(
+        test: (ColStats, Any, DataType) => (Boolean, Boolean)): Truth =
+      (stats.get(a), FilterEval.resolve(a, schema).map(_.leaf.dataType)) match {
         case (Some(s), Some(dt)) =>
-          if (s.min.isEmpty || s.max.isEmpty) false // no non-null values
+          val vacuous = s.rows == 0L
+          if (s.min.isEmpty || s.max.isEmpty) Truth(maybe = false, vacuous)
           else FilterEval.toInternal(v, dt) match {
-            case Some(iv) => test(s, iv, dt)
-            case None => true
+            case Some(iv) =>
+              val (maybe, all) = test(s, iv, dt)
+              Truth(maybe, vacuous || (s.nulls == 0L && all))
+            case None => Truth(maybe = true, vacuous)
           }
-        case _ => true
+        case _ => Unknown
       }
-    def eqMaybe(a: String, v: Any): Boolean =
-      cmp(a, v)((s, iv, dt) =>
-        FilterEval.compareInternal(dt, s.min.get, iv) <= 0 &&
-          FilterEval.compareInternal(dt, s.max.get, iv) >= 0 &&
-          s.bloom.forall(_.mightContainString(bloomKey(iv, dt))))
+    // `upward` (>, >=): a row may pass iff the max does, every row
+    // passes iff the min does; downward (<, <=) the other way round
+    def bound(a: String, v: Any, upward: Boolean)(pass: Int => Boolean): Truth =
+      cmp(a, v) { (s, iv, dt) =>
+        val (best, worst) =
+          if (upward) (s.max.get, s.min.get) else (s.min.get, s.max.get)
+        (pass(FilterEval.compareInternal(dt, best, iv)),
+          pass(FilterEval.compareInternal(dt, worst, iv)))
+      }
+    // ONE shared probe for both equality forms: `=` and a non-null `<=>`
+    // have identical zone semantics, and a separate code path is how the
+    // <=> branch once probed the un-normalized rendering and wrongly
+    // pruned a file of +0.0s for a pushed `col <=> -0.0`
+    def eq(a: String, v: Any): Truth = cmp(a, v) { (s, iv, dt) =>
+      val lo = FilterEval.compareInternal(dt, s.min.get, iv)
+      val hi = FilterEval.compareInternal(dt, s.max.get, iv)
+      (lo <= 0 && hi >= 0 && s.bloom.forall(_.mightContainString(bloomKey(iv, dt))),
+        lo == 0 && hi == 0)
+    }
+    def nulls(a: String, maybe: ColStats => Boolean, all: ColStats => Boolean) =
+      Truth(stats.get(a).forall(maybe), stats.get(a).exists(all))
     f match {
-      case And(l, r) =>
-        maybeTrue(l, stats, schema) && maybeTrue(r, stats, schema)
-      case Or(l, r) =>
-        maybeTrue(l, stats, schema) || maybeTrue(r, stats, schema)
-      // ONE shared probe for both equality forms: `=` and a non-null
-      // `<=>` have identical zone semantics, and a separate code path is
-      // how the <=> branch once probed the un-normalized rendering and
-      // wrongly pruned a file of +0.0s for a pushed `col <=> -0.0`
-      case EqualTo(a, v) => eqMaybe(a, v)
-      case EqualNullSafe(a, v) =>
-        if (v == null) stats.get(a).forall(_.nulls > 0)
-        else eqMaybe(a, v)
-      case GreaterThan(a, v) => cmp(a, v)((s, iv, dt) =>
-        FilterEval.compareInternal(dt, s.max.get, iv) > 0)
-      case GreaterThanOrEqual(a, v) => cmp(a, v)((s, iv, dt) =>
-        FilterEval.compareInternal(dt, s.max.get, iv) >= 0)
-      case LessThan(a, v) => cmp(a, v)((s, iv, dt) =>
-        FilterEval.compareInternal(dt, s.min.get, iv) < 0)
-      case LessThanOrEqual(a, v) => cmp(a, v)((s, iv, dt) =>
-        FilterEval.compareInternal(dt, s.min.get, iv) <= 0)
+      case And(l, r) => truth(l, stats, schema) and truth(r, stats, schema)
+      case Or(l, r) => truth(l, stats, schema) or truth(r, stats, schema)
+      case EqualTo(a, v) => eq(a, v)
+      case EqualNullSafe(a, null) => nulls(a, _.nulls > 0, s => s.nulls == s.rows)
+      case EqualNullSafe(a, v) => eq(a, v)
+      case GreaterThan(a, v) => bound(a, v, upward = true)(_ > 0)
+      case GreaterThanOrEqual(a, v) => bound(a, v, upward = true)(_ >= 0)
+      case LessThan(a, v) => bound(a, v, upward = false)(_ < 0)
+      case LessThanOrEqual(a, v) => bound(a, v, upward = false)(_ <= 0)
       case In(a, vs) =>
-        vs.isEmpty || vs.exists(v =>
-          maybeTrue(EqualTo(a, v), stats, schema))
-      case IsNull(a) => stats.get(a).forall(_.nulls > 0)
-      case IsNotNull(a) => stats.get(a).forall(s => s.nulls < s.rows)
-      // Not / string matches / anything else: the zone algebra answers
-      // "maybe" rather than risk a wrong prune
-      case _ => true
+        // `all` is provable only in the constant-column case: min == max
+        // == some listed value (null list entries can't cover anything)
+        Truth(vs.isEmpty || vs.exists(eq(a, _).maybe),
+          vs.exists(v => v != null && eq(a, v).all))
+      case IsNull(a) => nulls(a, _.nulls > 0, s => s.nulls == s.rows)
+      case IsNotNull(a) => nulls(a, s => s.nulls < s.rows, _.nulls == 0L)
+      case _ => Unknown
     }
   }
 
-  /** The DUAL zone test: is `f` provably TRUE for EVERY row of a
-    * file/block with these stats? `true` ⇒ per-row evaluation of this
-    * conjunct is redundant on that file/block (residual elimination,
-    * Iceberg-style), and a metadata-only aggregate may speak for it.
-    * Anything unprovable answers `false` (evaluate per row) — the
-    * conservative direction is the opposite of [[maybeTrue]]'s. A
-    * zero-row file is vacuously covered. Blooms never participate:
-    * membership proves possible presence, never universality.
-    */
-  def definitelyTrue(f: Filter, stats: Map[String, ColStats],
-      schema: StructType): Boolean = {
-    def dtOf(a: String): Option[DataType] =
-      FilterEval.resolve(a, schema).map(_.leaf.dataType)
-    def cmp(a: String, v: Any)(test: (ColStats, Any, DataType) => Boolean): Boolean =
-      (stats.get(a), dtOf(a)) match {
-        case (Some(s), Some(dt)) =>
-          if (s.rows == 0L) true // vacuous: no rows to violate
-          // a null row evaluates the predicate to NULL, not TRUE
-          else if (s.nulls > 0L || s.min.isEmpty || s.max.isEmpty) false
-          else FilterEval.toInternal(v, dt) match {
-            case Some(iv) => test(s, iv, dt)
-            case None => false
-          }
-        case _ => false
-      }
-    def eqAll(a: String, v: Any): Boolean =
-      cmp(a, v)((s, iv, dt) =>
-        FilterEval.compareInternal(dt, s.min.get, iv) == 0 &&
-          FilterEval.compareInternal(dt, s.max.get, iv) == 0)
-    f match {
-      case And(l, r) =>
-        definitelyTrue(l, stats, schema) && definitelyTrue(r, stats, schema)
-      // sufficient, not necessary: one branch covering ALL rows covers
-      // the disjunction (a row-wise split between branches is invisible
-      // to min/max stats)
-      case Or(l, r) =>
-        definitelyTrue(l, stats, schema) || definitelyTrue(r, stats, schema)
-      case EqualTo(a, v) => eqAll(a, v)
-      case EqualNullSafe(a, v) =>
-        if (v == null) stats.get(a).exists(s => s.nulls == s.rows)
-        else eqAll(a, v)
-      case GreaterThan(a, v) => cmp(a, v)((s, iv, dt) =>
-        FilterEval.compareInternal(dt, s.min.get, iv) > 0)
-      case GreaterThanOrEqual(a, v) => cmp(a, v)((s, iv, dt) =>
-        FilterEval.compareInternal(dt, s.min.get, iv) >= 0)
-      case LessThan(a, v) => cmp(a, v)((s, iv, dt) =>
-        FilterEval.compareInternal(dt, s.max.get, iv) < 0)
-      case LessThanOrEqual(a, v) => cmp(a, v)((s, iv, dt) =>
-        FilterEval.compareInternal(dt, s.max.get, iv) <= 0)
-      case In(a, vs) =>
-        // provable only in the constant-column case: min == max == some
-        // listed value (null list entries can't cover anything)
-        vs.exists(v => v != null && eqAll(a, v))
-      case IsNull(a) => stats.get(a).exists(s => s.nulls == s.rows)
-      case IsNotNull(a) => stats.get(a).exists(_.nulls == 0L)
-      case _ => false
-    }
-  }
+  /** [[truth]] of a conjunction: every filter in `filters` at once. */
+  def truth(filters: Seq[Filter], stats: Map[String, ColStats],
+      schema: StructType): Truth =
+    filters.foldLeft(Truth(maybe = true, all = true))(
+      _ and truth(_, stats, schema))
 
   /** In-flight fold directory and its completion manifest (the covered
     * generation names, a [[graft.core.Generations]] commit record).

@@ -195,8 +195,7 @@ object AsOfJoin {
       timeType: org.apache.spark.sql.types.DataType): DataFrame = {
     val combined = keyedLayoutSchema(keyCol, keyType, leftSchema,
       rightSchema, timeType)
-    val df = graft.ingest.ExtendedJson.read(spark, combined, dir,
-      Map("zoneMaps" -> "true"))
+    val df = graft.ingest.ExtendedJson.read(spark, combined, dir)
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col("asof_t"), col("asof_side"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -227,8 +226,7 @@ object AsOfJoin {
       rightSchema: org.apache.spark.sql.types.StructType,
       timeType: org.apache.spark.sql.types.DataType): DataFrame = {
     val combined = layoutSchema(leftSchema, rightSchema, timeType)
-    val df = graft.ingest.ExtendedJson.read(spark, combined, dir,
-      Map("zoneMaps" -> "true"))
+    val df = graft.ingest.ExtendedJson.read(spark, combined, dir)
     val w = Window.orderBy(col("asof_t"), col("asof_side"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     carryRight(df, rightSchema, w)

@@ -508,8 +508,9 @@ object ProductQuantize {
     } finally { assigned.unpersist(blocking = false); () }
   }
 
-  /** Persist the PQ-encoded inverted file as generation 0 of the
-    * appendable layout (parquet PARTITIONED BY CELL) — the
+  /** Persist the PQ-encoded inverted file as the base generation of the
+    * appendable layout (parquet PARTITIONED BY CELL), replacing whatever
+    * an earlier save, append or fold left at `path` — the
     * [[Similarity.saveAssignedCorpus]] twin for code space, and THE
     * artifact a billion-scale deployment queries: 16×-smaller rows, and a
     * probe of `nProbe` cells reads `nProbe` directories, not the corpus.
@@ -526,7 +527,7 @@ object ProductQuantize {
     // engages by ESTIMATED SIZE — below one scan split the task count is
     // already bounded and the write stays map-side; compaction
     // ([[compactEncoded]]) re-clusters later regardless.
-    graft.core.Generations.saveBase(encoded.sparkSession, path) { target =>
+    graft.core.Generations.saveBase(encoded.sparkSession, path, path) { target =>
       graft.core.Layout.clusterIfLarge(encoded, col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(target)
     }

@@ -146,8 +146,10 @@ object SpanDedup {
     // exploded EVERY token of EVERY document, anti-joined the covered
     // positions, and re-collected/sorted all tokens through a
     // corpus-sized shuffle — moving the heavy token payload twice to
-    // delete a few spans. Now the corpus is never shuffled: AQE
-    // broadcasts the interval table, clean documents short-circuit on the
+    // delete a few spans. Now the corpus is never shuffled — as long as
+    // AQE broadcasts the interval table; past the broadcast threshold the
+    // join sort-merges, shuffling the persisted base (`__txt` and token
+    // array both). Clean documents short-circuit on the
     // NULL interval list (split-on-space/join-by-space with every token
     // kept is the string identity, so emitting the original text is
     // exact), and only flagged documents pay the positional filter.

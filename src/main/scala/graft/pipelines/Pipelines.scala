@@ -726,8 +726,8 @@ object StreamingNearDupIngest {
     *   [[graft.ingest.v2.ZoneMaps.append]] indexes it in the same
     *   foreachBatch under the run/batch tag the layout already uses — so
     *   a streaming-built corpus is zone-skippable batch-by-batch from the
-    *   moment each batch is readable (read it back through the document
-    *   source with `zoneMaps=true`), never "unskippable until someone
+    *   moment each batch is readable (the document source reads the
+    *   sidecar whenever it exists), never "unskippable until someone
     *   runs a full build". A replayed batch overwrites both its data dir
     *   AND its `add_` sidecar generation (same deterministic tags), so
     *   replays converge. Parquet-landing mode (`zoneCols = Nil`, the
@@ -882,6 +882,5 @@ object StreamingNearDupIngest {
     */
   def loadAcceptedJsonl(spark: SparkSession, schema: StructType,
       acceptedDir: String): DataFrame =
-    graft.ingest.ExtendedJson.read(spark, schema, acceptedDir,
-      Map("zoneMaps" -> "true"))
+    graft.ingest.ExtendedJson.read(spark, schema, acceptedDir)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.ingest.ExtendedJson
 
 /** Oracle-checked queries through the DataSourceV2 extended-JSON document
@@ -27,14 +27,8 @@ object DocOps {
 
   private def ordersJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(d, _ => {
-      // the q44 tag convention: sfDir hash (basenames can repeat across
-      // dirs) + applicationId (concurrent Verify/Bench JVMs must never
-      // overwrite a directory the other is mid-scan), Scratch-owned so
-      // the drop is removed at JVM exit
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_$tag")}/orders"
+      // one landing per (scale factor, application), removed at JVM exit
+      val dir = s"${Scratch.landing("graft_extjson", s, d)}/orders"
       Tables.orders(s, d).select(to_json(struct(
         struct(lower(lpad(hex(col("o_orderkey")), 24, "0")).as("$oid")).as("_id"),
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -91,10 +85,7 @@ object DocOps {
 
   private def ordersPartJsonl(s: SparkSession, d: String): String =
     builtPart.computeIfAbsent(d, _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_part_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_part", s, d)}/orders"
       Tables.orders(s, d)
         .withColumn("py", year(col("o_orderdate")))
         .select(col("o_orderstatus").as("status"), col("py"),
@@ -159,10 +150,7 @@ object DocOps {
     */
   private def customersJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#customer", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_$tag")}/customer"
+      val dir = s"${Scratch.landing("graft_extjson", s, d)}/customer"
       Tables.customer(s, d).select(to_json(struct(
         struct(lower(lpad(hex(col("c_custkey")), 24, "0")).as("$oid")).as("_id"),
         col("c_custkey"), col("c_name"),
@@ -346,10 +334,7 @@ object DocOps {
     */
   private def ordersItemsJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#items", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_items_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_items", s, d)}/orders"
       // sort_array orders structs by field order — `line` first, unique
       // per order, so items[0] is deterministically line number 1
       val items = Tables.lineitem(s, d)
@@ -419,10 +404,7 @@ object DocOps {
     */
   private def ordersClusteredJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#clustered", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_zm_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_zm", s, d)}/orders"
       Tables.orders(s, d)
         .repartitionByRange(8, col("o_totalprice"))
         .sortWithinPartitions(col("o_totalprice"))
@@ -450,8 +432,7 @@ object DocOps {
     * pushed filter would empty anyway.
     */
   private def q148ZoneMapSkip(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered, ordersClusteredJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersClusteredJsonl(s, d))
       .filter(col("o_totalprice") > 450000.0)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
 
@@ -467,8 +448,7 @@ object DocOps {
     * a drop that changed under it.
     */
   private def q149MetadataAgg(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered, ordersClusteredJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersClusteredJsonl(s, d))
       .agg(min(col("o_totalprice")).as("min_price"),
         max(col("o_totalprice")).as("max_price"),
         count(col("o_totalprice")).as("n_priced"),
@@ -483,8 +463,7 @@ object DocOps {
     * bloom-filter capability, sidecar-form.
     */
   private def q150BloomPointLookup(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered, ordersClusteredJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersClusteredJsonl(s, d))
       .filter(col("o_orderkey").isin(1L, 7L, 38L))
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
 
@@ -499,10 +478,7 @@ object DocOps {
     */
   private def ordersAppendedJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#appended", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_zmapp_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_zmapp", s, d)}/orders"
       def land(df: DataFrame, bands: Int, mode: String): Unit =
         df.repartitionByRange(bands, col("o_totalprice"))
           .sortWithinPartitions(col("o_totalprice"))
@@ -528,8 +504,7 @@ object DocOps {
     * lifecycle step is result-neutral by construction.
     */
   private def q151ZoneMapAppend(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered, ordersAppendedJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersAppendedJsonl(s, d))
       .filter(col("o_totalprice") > 450000.0)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
 
@@ -540,10 +515,7 @@ object DocOps {
     */
   private def ordersSortedJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#sorted", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_zmblk_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_zmblk", s, d)}/orders"
       Tables.orders(s, d)
         .repartitionByRange(1, col("o_totalprice"))
         .sortWithinPartitions(col("o_totalprice"))
@@ -564,8 +536,7 @@ object DocOps {
     * single clustered file.
     */
   private def q152BlockSkip(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered, ordersSortedJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersSortedJsonl(s, d))
       .filter(col("o_totalprice") >= 300000.0 &&
         col("o_totalprice") < 360000.0)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -576,10 +547,7 @@ object DocOps {
     */
   private def ordersByStatusJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#bystatus", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_zmst_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_zmst", s, d)}/orders"
       val orders = Tables.orders(s, d)
       Seq("F", "O", "P").foreach { st =>
         orders.filter(col("o_orderstatus") === st)
@@ -598,13 +566,12 @@ object DocOps {
     * zone-decidable per file (non-matching status files are provably
     * all-false and contribute nothing; the matching file is provably
     * all-TRUE, so its stats speak for its filtered rows —
-    * [[graft.ingest.v2.ZoneMaps.definitelyTrue]]). Zero data bytes read
+    * [[graft.ingest.v2.ZoneMaps.Truth.all]]). Zero data bytes read
     * at any corpus size; one undecidable file and the scan refuses,
     * falling back to the parallel partial path (spec-pinned).
     */
   private def q153FilteredMetadataAgg(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered, ordersByStatusJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersByStatusJsonl(s, d))
       .filter(col("o_orderstatus") === "F")
       .agg(min(col("o_totalprice")).as("min_price"),
         max(col("o_totalprice")).as("max_price"),
@@ -622,10 +589,7 @@ object DocOps {
 
   private def ordersByStatusDecJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#bystatusdec", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_zmsum_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_zmsum", s, d)}/orders"
       val orders = Tables.orders(s, d)
       Seq("F", "O", "P").foreach { st =>
         orders.filter(col("o_orderstatus") === st)
@@ -649,7 +613,7 @@ object DocOps {
     */
   private def q154MetadataSum(s: SparkSession, d: String): DataFrame =
     ExtendedJson.read(s, decodedOrdersClusteredDec,
-      ordersByStatusDecJsonl(s, d), Map("zoneMaps" -> "true"))
+      ordersByStatusDecJsonl(s, d))
       .filter(col("o_orderstatus") === "F")
       .agg(sum(col("o_totalprice")).as("__t"),
         sum(col("o_orderkey")).as("sum_key"),
@@ -669,7 +633,7 @@ object DocOps {
     */
   private def q155GroupedMetadataAgg(s: SparkSession, d: String): DataFrame =
     ExtendedJson.read(s, decodedOrdersClusteredDec,
-      ordersByStatusDecJsonl(s, d), Map("zoneMaps" -> "true"))
+      ordersByStatusDecJsonl(s, d))
       .groupBy(col("o_orderstatus"))
       .agg(min(col("o_totalprice")).as("min_price"),
         max(col("o_totalprice")).as("max_price"),
@@ -691,8 +655,7 @@ object DocOps {
     * exists there), styled after Snowflake's top-k pruning.
     */
   private def q156TopNSkip(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered, ordersClusteredJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersClusteredJsonl(s, d))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       .limit(10)
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -704,8 +667,7 @@ object DocOps {
     * file-level stats are powerless.
     */
   private def q157TopNBlockSkip(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered, ordersSortedJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersSortedJsonl(s, d))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       .limit(5)
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -719,7 +681,7 @@ object DocOps {
     */
   private def q158MetadataDistinct(s: SparkSession, d: String): DataFrame =
     ExtendedJson.read(s, decodedOrdersClusteredDec,
-      ordersByStatusDecJsonl(s, d), Map("zoneMaps" -> "true"))
+      ordersByStatusDecJsonl(s, d))
       .select(col("o_orderstatus")).distinct()
 
   /** Metadata-only AVG — no engine change needed, the composition pays
@@ -732,7 +694,7 @@ object DocOps {
     */
   private def q159MetadataAvg(s: SparkSession, d: String): DataFrame =
     ExtendedJson.read(s, decodedOrdersClusteredDec,
-      ordersByStatusDecJsonl(s, d), Map("zoneMaps" -> "true"))
+      ordersByStatusDecJsonl(s, d))
       .filter(col("o_orderstatus") === "F")
       .agg(avg(col("o_orderkey")).as("avg_key"),
         count(lit(1)).as("n_f"))
@@ -745,10 +707,7 @@ object DocOps {
     */
   private def ordersShardedJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#sharded", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_shard_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_shard", s, d)}/orders"
       graft.sink.CorpusSink.landJsonlIndexed(
         Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice")),
@@ -768,8 +727,7 @@ object DocOps {
     * key keeps the row set oracle-deterministic (q156 convention).
     */
   private def q160SortedScan(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered, ordersShardedJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersShardedJsonl(s, d))
       .orderBy(col("o_orderkey").asc)
       .limit(20)
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -810,10 +768,7 @@ object DocOps {
     */
   private def ordersRangeLandedJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangeland", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgl_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_rgl", s, d)}/orders"
       graft.sink.CorpusSink.landJsonlRangeIndexed(
         Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice")),
@@ -843,8 +798,7 @@ object DocOps {
     */
   private[graft] def ordersRangeLandedSource(s: SparkSession,
       d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered, ordersRangeLandedJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersRangeLandedJsonl(s, d))
 
   /** One range-landed drop WITH a tagged append per (JVM, sfDir): the
     * base landing holds two thirds of orders, the appended batch the
@@ -855,10 +809,7 @@ object DocOps {
     */
   private def ordersRangeAppendedJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangeappend", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rga_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_rga", s, d)}/orders"
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_orderstatus"), col("o_totalprice"))
       graft.sink.CorpusSink.landJsonlRangeIndexed(
@@ -881,8 +832,7 @@ object DocOps {
     * keeps the exchange-free sort without periodic re-lands.
     */
   private def q165MergeReadOrderBy(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered,
-      ordersRangeAppendedJsonl(s, d), Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersRangeAppendedJsonl(s, d))
       .orderBy(col("o_totalprice"))
       .select(col("o_orderkey"), col("o_totalprice"))
 
@@ -929,10 +879,7 @@ object DocOps {
 
   private def ordersOidRangeJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangeoid", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgo_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_rgo", s, d)}/orders"
       graft.sink.CorpusSink.landJsonlRangeIndexed(
         Tables.orders(s, d).select(
           lower(lpad(hex(col("o_orderkey")), 24, "0")).as("oid"),
@@ -950,8 +897,7 @@ object DocOps {
     * Exchange (PlanSpec-pinned).
     */
   private def q166StringOrderedScan(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .orderBy(col("oid"))
       .select(col("oid"), col("o_totalprice"))
 
@@ -971,9 +917,7 @@ object DocOps {
 
   private def rangeJoinBase(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangejoin", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val base = graft.core.Scratch.ephemeralDir(s"graft_extjson_rgj_$tag")
+      val base = Scratch.landing("graft_extjson_rgj", s, d)
       val orders = Tables.orders(s, d)
       val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
       val bounds = Some((1 to 4).map(i => maxKey * i / 5): Seq[Any])
@@ -1002,10 +946,8 @@ object DocOps {
     */
   private def q167RangeMergeJoin(s: SparkSession, d: String): DataFrame = {
     val base = rangeJoinBase(s, d)
-    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders",
-      Map("zoneMaps" -> "true"))
-    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem",
-      Map("zoneMaps" -> "true"))
+    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders")
+    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem")
     o.join(li, o("o_orderkey") === li("l_orderkey"))
       .select(col("o_orderkey"), col("o_totalprice"),
         col("l_linenumber"), col("l_quantity"))
@@ -1021,10 +963,7 @@ object DocOps {
 
   private def contamJoinDir(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangecontam", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgc_$tag")}/contam"
+      val dir = s"${Scratch.landing("graft_extjson_rgc", s, d)}/contam"
       val orders = Tables.orders(s, d)
       val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
       val bounds = Some((1 to 4).map(i => maxKey * i / 5): Seq[Any])
@@ -1046,10 +985,7 @@ object DocOps {
     */
   private def diffJoinDir(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangediff", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgd_$tag")}/diff"
+      val dir = s"${Scratch.landing("graft_extjson_rgd", s, d)}/diff"
       val orders = Tables.orders(s, d)
       val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
       val bounds = Some((1 to 4).map(i => maxKey * i / 5): Seq[Any])
@@ -1071,10 +1007,8 @@ object DocOps {
     */
   private def q193RangeMergeFullOuter(s: SparkSession, d: String): DataFrame = {
     val base = rangeJoinBase(s, d)
-    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders",
-      Map("zoneMaps" -> "true"))
-    val dd = ExtendedJson.read(s, decodedDiffRj, diffJoinDir(s, d),
-      Map("zoneMaps" -> "true"))
+    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders")
+    val dd = ExtendedJson.read(s, decodedDiffRj, diffJoinDir(s, d))
     o.join(dd, o("o_orderkey") === dd("dk"), "full_outer")
       .select(col("o_orderkey"), col("o_totalprice"), col("dk"))
   }
@@ -1090,10 +1024,8 @@ object DocOps {
     */
   private def q198RangeMergeRightOuter(s: SparkSession, d: String): DataFrame = {
     val base = rangeJoinBase(s, d)
-    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders",
-      Map("zoneMaps" -> "true"))
-    val dd = ExtendedJson.read(s, decodedDiffRj, diffJoinDir(s, d),
-      Map("zoneMaps" -> "true"))
+    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders")
+    val dd = ExtendedJson.read(s, decodedDiffRj, diffJoinDir(s, d))
     o.join(dd, o("o_orderkey") === dd("dk"), "right_outer")
       .select(col("o_orderkey"), col("o_totalprice"), col("dk"))
   }
@@ -1103,15 +1035,13 @@ object DocOps {
     */
   private[graft] def rangeJoinLineitemSide(s: SparkSession,
       d: String): DataFrame =
-    ExtendedJson.read(s, decodedLineitemRj,
-      s"${rangeJoinBase(s, d)}/lineitem", Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedLineitemRj, s"${rangeJoinBase(s, d)}/lineitem")
 
   private[graft] def rangeJoinSides(s: SparkSession,
       d: String): (DataFrame, DataFrame) = {
     val o = ExtendedJson.read(s, decodedOrdersRj,
-      s"${rangeJoinBase(s, d)}/orders", Map("zoneMaps" -> "true"))
-    val c = ExtendedJson.read(s, decodedContamRj, contamJoinDir(s, d),
-      Map("zoneMaps" -> "true"))
+      s"${rangeJoinBase(s, d)}/orders")
+    val c = ExtendedJson.read(s, decodedContamRj, contamJoinDir(s, d))
     (o, c)
   }
 
@@ -1163,15 +1093,11 @@ object DocOps {
     */
   private[graft] def ordersDayRangeSource(s: SparkSession,
       d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d))
 
   private def ordersDayRangeJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangeday", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgd_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_rgd", s, d)}/orders"
       graft.sink.CorpusSink.landJsonlRangeIndexed(
         Tables.orders(s, d).select(
           datediff(col("o_orderdate"), to_date(lit("1970-01-01")))
@@ -1192,7 +1118,7 @@ object DocOps {
     */
   private def q171RangeAggRollup(s: SparkSession, d: String): DataFrame =
     ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true", "rangeAggregation" -> "true"))
+      Map("rangeAggregation" -> "true"))
       .groupBy(col("o_day"))
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_custkey")).as("__s"))
@@ -1229,8 +1155,7 @@ object DocOps {
     */
   private def q173RangeRowNumber(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("oid"))
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"), col("o_totalprice"),
         row_number().over(w).as("rn"),
         max(col("o_totalprice")).over(w).as("run_max"))
@@ -1249,7 +1174,7 @@ object DocOps {
     */
   private def q174RangeDistinctRollup(s: SparkSession, d: String): DataFrame =
     ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true", "rangeAggregation" -> "true"))
+      Map("rangeAggregation" -> "true"))
       .groupBy(col("o_day"))
       .agg(countDistinct(col("o_custkey")).as("nd_cust"),
         count(lit(1)).as("n_orders"))
@@ -1267,10 +1192,7 @@ object DocOps {
     // recursive update on the shared cache map (ConcurrentHashMap throws)
     val srcDir = ordersRangeAppendedJsonl(s, d)
     built.computeIfAbsent(s"$d#rangecompact", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgk_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_rgk", s, d)}/orders"
       graft.sink.CorpusSink.compactRangeIndexed(s, decodedOrdersClustered,
         srcDir, dir, "o_totalprice",
         zoneCols = Seq("o_totalprice", "o_orderkey"))
@@ -1288,7 +1210,7 @@ object DocOps {
     */
   private def q175RangeCompactedScan(s: SparkSession, d: String): DataFrame =
     ExtendedJson.read(s, decodedOrdersClustered,
-      ordersRangeCompactedJsonl(s, d), Map("zoneMaps" -> "true"))
+      ordersRangeCompactedJsonl(s, d))
       .orderBy(col("o_totalprice"))
       .select(col("o_orderkey"), col("o_totalprice"))
 
@@ -1318,10 +1240,7 @@ object DocOps {
     */
   private def ordersAsOfLayoutJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#asoflayout", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rga2_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_rga2", s, d)}/orders"
       val days = Tables.orders(s, d).select(
         datediff(col("o_orderdate"), to_date(lit("1970-01-01")))
           .as("o_day"),
@@ -1359,8 +1278,7 @@ object DocOps {
     */
   private def q178RangeLag(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("oid"))
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"), col("o_totalprice"),
         lag(col("o_totalprice"), 1).over(w).as("prev_price"))
   }
@@ -1377,8 +1295,7 @@ object DocOps {
     import org.apache.spark.sql.expressions.Window
     val wp = Window.partitionBy(col("o_day"))
     val wo = wp.orderBy(col("o_custkey"))
-    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d))
       .select(col("o_day"), col("o_custkey"),
         rank().over(wo).as("rk"),
         count(lit(1)).over(wo).as("run_n"),
@@ -1396,10 +1313,7 @@ object DocOps {
     */
   private def ordersKeyedAsOfJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#keyedasof", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rga3_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_rga3", s, d)}/orders"
       val o = Tables.orders(s, d).select(col("o_custkey"),
         datediff(col("o_orderdate"), to_date(lit("1970-01-01")))
           .as("o_day"),
@@ -1469,10 +1383,7 @@ object DocOps {
     */
   private def promoRangeJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangepromo", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgpr_$tag")}/promos"
+      val dir = s"${Scratch.landing("graft_extjson_rgpr", s, d)}/promos"
       val promos = Tables.orders(s, d)
         .select(datediff(col("o_orderdate").cast("date"),
           to_date(lit("1970-01-01"))).as("o_day"))
@@ -1498,10 +1409,8 @@ object DocOps {
     * claims, so windows and aggregates compose on top.
     */
   private def q211RangeIntervalJoin(s: SparkSession, d: String): DataFrame = {
-    val p = ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
-    val iv = ExtendedJson.read(s, decodedPromos, promoRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    val p = ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d))
+    val iv = ExtendedJson.read(s, decodedPromos, promoRangeJsonl(s, d))
     p.join(iv, iv("ps") <= p("o_day") && p("o_day") <= iv("pe"))
       .select(col("o_day"), col("o_custkey"), col("ps"), col("pe"),
         col("promo_id"))
@@ -1516,10 +1425,8 @@ object DocOps {
     */
   private def q212RangeIntervalLabel(s: SparkSession, d: String)
       : DataFrame = {
-    val p = ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
-    val iv = ExtendedJson.read(s, decodedPromos, promoRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    val p = ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d))
+    val iv = ExtendedJson.read(s, decodedPromos, promoRangeJsonl(s, d))
     p.join(iv, iv("ps") <= p("o_day") && p("o_day") <= iv("pe"),
       "left_outer")
       .select(col("o_day"), col("o_custkey"), col("promo_id"))
@@ -1538,10 +1445,8 @@ object DocOps {
   private def q213RangeIntervalWindow(s: SparkSession, d: String)
       : DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("o_day"))
-    val p = ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
-    val iv = ExtendedJson.read(s, decodedPromos, promoRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    val p = ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d))
+    val iv = ExtendedJson.read(s, decodedPromos, promoRangeJsonl(s, d))
     p.join(iv, iv("ps") <= p("o_day") && p("o_day") <= iv("pe"),
       "left_outer")
       .select(col("o_day"), col("o_custkey"), col("promo_id"))
@@ -1560,8 +1465,7 @@ object DocOps {
     */
   private def q181RangeRankFamily(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("oid"))
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"),
         percent_rank().over(w).as("pr"),
         cume_dist().over(w).as("cd"),
@@ -1576,8 +1480,7 @@ object DocOps {
     */
   private def q182RangeDenseRank(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("o_day"))
-    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d))
       .select(col("o_day"), col("o_custkey"),
         dense_rank().over(w).as("dr"))
   }
@@ -1595,8 +1498,7 @@ object DocOps {
   private def q189RangeGroupTopN(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("o_day")).orderBy(col("o_custkey"))
-    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d))
       .select(col("o_day"), col("o_custkey"), rank().over(w).as("rk"))
       .filter(col("rk") <= 2)
   }
@@ -1607,10 +1509,7 @@ object DocOps {
     */
   private def ordersRangeInPlaceJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangeinplace", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgq_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_rgq", s, d)}/orders"
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_orderstatus"), col("o_totalprice"))
       graft.sink.CorpusSink.landJsonlRangeIndexed(
@@ -1638,8 +1537,7 @@ object DocOps {
     */
   private def q188RangeInPlaceCompactedScan(s: SparkSession,
       d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersClustered,
-      ordersRangeInPlaceJsonl(s, d), Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersClustered, ordersRangeInPlaceJsonl(s, d))
       .orderBy(col("o_totalprice"))
       .select(col("o_orderkey"), col("o_totalprice"))
 
@@ -1672,8 +1570,7 @@ object DocOps {
   private def q186RangeSlidingLead(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("oid"))
     val ws = w.rowsBetween(-6, org.apache.spark.sql.expressions.Window.currentRow)
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"),
         round(col("o_totalprice") * 100).cast("long").as("v"))
       .select(col("oid"), col("v"),
@@ -1695,10 +1592,7 @@ object DocOps {
     */
   private def ordersDateRangeJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangedate", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgdt_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_rgdt", s, d)}/orders"
       graft.sink.CorpusSink.landJsonlRangeIndexed(
         Tables.orders(s, d).select(
           col("o_orderdate").cast("date").as("o_orderdate"),
@@ -1717,8 +1611,7 @@ object DocOps {
     * house tz rule).
     */
   private def q195RangeDateInterval(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersDate, ordersDateRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersDate, ordersDateRangeJsonl(s, d))
       .select(col("o_orderdate"), col("o_custkey"),
         expr("CAST(sum(o_custkey) OVER (ORDER BY o_orderdate " +
           "RANGE BETWEEN INTERVAL '6' DAY PRECEDING AND CURRENT ROW) " +
@@ -1740,8 +1633,7 @@ object DocOps {
     * sum/count per the house oracle rule.
     */
   private def q199RangeMonthInterval(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersDate, ordersDateRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersDate, ordersDateRangeJsonl(s, d))
       .select(col("o_orderdate"), col("o_custkey"),
         expr("CAST(sum(o_custkey) OVER (ORDER BY o_orderdate " +
           "RANGE BETWEEN INTERVAL '3' MONTH PRECEDING AND CURRENT ROW) " +
@@ -1763,8 +1655,7 @@ object DocOps {
   private def q200RangeLaggedWindow(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wl = Window.orderBy(col("o_day")).rangeBetween(-13, -7)
-    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d))
       .select(col("o_day"), col("o_custkey"),
         sum(col("o_custkey")).over(wl).as("lag7_sum"),
         count(lit(1)).over(wl).as("lag7_n"),
@@ -1787,8 +1678,7 @@ object DocOps {
     val w = Window.orderBy(col("oid"))
     val wc = w.rowsBetween(-3, 3)
     val wf = w.rowsBetween(Window.currentRow, 2)
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"),
         round(col("o_totalprice") * 100).cast("long").as("v"))
       .select(col("oid"), col("v"),
@@ -1810,10 +1700,7 @@ object DocOps {
     */
   private def eventsTsRangeJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangets", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgts_$tag")}/events"
+      val dir = s"${Scratch.landing("graft_extjson_rgts", s, d)}/events"
       graft.sink.CorpusSink.landJsonlRangeIndexed(
         Tables.events(s, d).select(
           date_trunc("millisecond", col("ts")).as("ts"),
@@ -1831,8 +1718,7 @@ object DocOps {
     * raw timestamps in oracle-checked results — the house tz rule).
     */
   private def q196RangeEventTimeWindow(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedEventsTs, eventsTsRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedEventsTs, eventsTsRangeJsonl(s, d))
       .select(col("ts"), col("user_id"),
         expr("CAST(sum(user_id) OVER (ORDER BY ts RANGE BETWEEN " +
           "INTERVAL '15' MINUTE PRECEDING AND CURRENT ROW) AS BIGINT)")
@@ -1851,10 +1737,7 @@ object DocOps {
     */
   private def ordersTsRangeJsonl(s: SparkSession, d: String): String =
     built.computeIfAbsent(s"$d#rangetsm", _ => {
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val dir =
-        s"${graft.core.Scratch.ephemeralDir(s"graft_extjson_rgtm_$tag")}/orders"
+      val dir = s"${Scratch.landing("graft_extjson_rgtm", s, d)}/orders"
       graft.sink.CorpusSink.landJsonlRangeIndexed(
         Tables.orders(s, d).select(
           expr("timestampadd(SECOND, CAST(o_custkey % 86400 AS INT), " +
@@ -1884,8 +1767,7 @@ object DocOps {
     * tz rule. The avg rides as sum/count.
     */
   private def q207RangeTsMonthWindow(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersTs, ordersTsRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersTs, ordersTsRangeJsonl(s, d))
       .select(col("o_ts"), col("o_custkey"),
         expr("CAST(sum(o_custkey) OVER (ORDER BY o_ts RANGE BETWEEN " +
           "INTERVAL '1' MONTH PRECEDING AND CURRENT ROW) AS BIGINT)")
@@ -1910,8 +1792,7 @@ object DocOps {
     * oracle-checkable; output projects the day int per the house rule.
     */
   private def q208RangeMonthAhead(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedOrdersDate, ordersDateRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersDate, ordersDateRangeJsonl(s, d))
       .select(col("o_orderdate"), col("o_custkey"),
         expr("CAST(sum(o_custkey) OVER (ORDER BY o_orderdate " +
           "RANGE BETWEEN CURRENT ROW AND INTERVAL '1' MONTH FOLLOWING) " +
@@ -1939,8 +1820,7 @@ object DocOps {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("oid"))
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"),
         round(col("o_totalprice") * 100).cast("long").as("v"))
       .select(col("oid"), col("v"),
@@ -1964,8 +1844,7 @@ object DocOps {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("oid"))
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"),
         round(col("o_totalprice") * 100).cast("long").as("v"))
       .select(col("oid"), col("v"),
@@ -1986,8 +1865,7 @@ object DocOps {
     * exchange, buffers bounded by the 30-minute window population.
     */
   private def q204RangeEventContext(s: SparkSession, d: String): DataFrame =
-    ExtendedJson.read(s, decodedEventsTs, eventsTsRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedEventsTs, eventsTsRangeJsonl(s, d))
       .select(col("ts"), col("user_id"),
         expr("CAST(sum(user_id) OVER (ORDER BY ts RANGE BETWEEN " +
           "INTERVAL '15' MINUTE PRECEDING AND INTERVAL '15' MINUTE " +
@@ -2014,8 +1892,7 @@ object DocOps {
     */
   private def q203RangeSessionize(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("ts"))
-    ExtendedJson.read(s, decodedEventsTs, eventsTsRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedEventsTs, eventsTsRangeJsonl(s, d))
       .select(col("ts"), col("user_id"),
         lag(col("ts"), 1).over(w).as("pts"))
       .select(col("ts"), col("user_id"),
@@ -2036,8 +1913,7 @@ object DocOps {
     */
   private def q194RangeArgCarry(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("oid"))
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"),
         round(col("o_totalprice") * 100).cast("long").as("v"))
       .select(col("oid"), col("v"),
@@ -2058,8 +1934,7 @@ object DocOps {
   private def q197RangeLagIgnoreNulls(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("oid"))
     val cents = round(col("o_totalprice") * 100).cast("long")
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"),
         when(cents % 7 === 0, lit(null)).otherwise(cents).as("v"))
       .select(col("oid"), col("v"),
@@ -2080,8 +1955,7 @@ object DocOps {
   private def q202RangeLeadIgnoreNulls(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("oid"))
     val cents = round(col("o_totalprice") * 100).cast("long")
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"),
         when(cents % 7 === 0, lit(null)).otherwise(cents).as("v"))
       .select(col("oid"), col("v"),
@@ -2116,12 +1990,9 @@ object DocOps {
     */
   private def q192RangeChainWindow(s: SparkSession, d: String): DataFrame = {
     val base = rangeJoinBase(s, d)
-    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders",
-      Map("zoneMaps" -> "true"))
-    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem",
-      Map("zoneMaps" -> "true"))
-    val c = ExtendedJson.read(s, decodedContamRj, contamJoinDir(s, d),
-      Map("zoneMaps" -> "true"))
+    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders")
+    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem")
+    val c = ExtendedJson.read(s, decodedContamRj, contamJoinDir(s, d))
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("o_orderkey"))
     o.join(li, o("o_orderkey") === li("l_orderkey"))
       .join(c, o("o_orderkey") === c("ck"), "left_anti")
@@ -2144,12 +2015,9 @@ object DocOps {
     */
   private def q205RangeChainAgg(s: SparkSession, d: String): DataFrame = {
     val base = rangeJoinBase(s, d)
-    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders",
-      Map("zoneMaps" -> "true"))
-    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem",
-      Map("zoneMaps" -> "true"))
-    val c = ExtendedJson.read(s, decodedContamRj, contamJoinDir(s, d),
-      Map("zoneMaps" -> "true"))
+    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders")
+    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem")
+    val c = ExtendedJson.read(s, decodedContamRj, contamJoinDir(s, d))
     o.join(li, o("o_orderkey") === li("l_orderkey"))
       .join(c, o("o_orderkey") === c("ck"), "left_anti")
       .groupBy(col("o_orderkey"))
@@ -2174,8 +2042,7 @@ object DocOps {
     import org.apache.spark.sql.expressions.Window
     val wv = Window.orderBy(col("o_day"))
       .rangeBetween(-6, Window.currentRow)
-    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersDay, ordersDayRangeJsonl(s, d))
       .select(col("o_day"), col("o_custkey"),
         sum(col("o_custkey")).over(wv).as("w7_sum"),
         count(lit(1)).over(wv).as("w7_n"),
@@ -2196,8 +2063,7 @@ object DocOps {
     */
   private def q190RangeDeepOffsets(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("oid"))
-    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d),
-      Map("zoneMaps" -> "true"))
+    ExtendedJson.read(s, decodedOrdersOid, ordersOidRangeJsonl(s, d))
       .select(col("oid"),
         round(col("o_totalprice") * 100).cast("long").as("v"))
       .select(col("oid"), col("v"),
@@ -2217,10 +2083,8 @@ object DocOps {
     */
   private def q183RangeMergeResidual(s: SparkSession, d: String): DataFrame = {
     val base = rangeJoinBase(s, d)
-    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders",
-      Map("zoneMaps" -> "true"))
-    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem",
-      Map("zoneMaps" -> "true"))
+    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders")
+    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem")
     o.join(li, o("o_orderkey") === li("l_orderkey") &&
         o("o_totalprice") > li("l_quantity") * lit(3000.0))
       .select(col("o_orderkey"), col("o_totalprice"),
@@ -2236,10 +2100,8 @@ object DocOps {
     */
   private def q184RangeMergeFiltered(s: SparkSession, d: String): DataFrame = {
     val base = rangeJoinBase(s, d)
-    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders",
-      Map("zoneMaps" -> "true"))
-    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem",
-      Map("zoneMaps" -> "true"))
+    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders")
+    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem")
       .filter(col("l_quantity") * lit(2.0) >= lit(60.0))
     o.join(li, o("o_orderkey") === li("l_orderkey"), "left_outer")
       .select(col("o_orderkey"), col("o_totalprice"),
@@ -2257,12 +2119,9 @@ object DocOps {
     */
   private def q185RangeMergeChain(s: SparkSession, d: String): DataFrame = {
     val base = rangeJoinBase(s, d)
-    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders",
-      Map("zoneMaps" -> "true"))
-    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem",
-      Map("zoneMaps" -> "true"))
-    val c = ExtendedJson.read(s, decodedContamRj, contamJoinDir(s, d),
-      Map("zoneMaps" -> "true"))
+    val o = ExtendedJson.read(s, decodedOrdersRj, s"$base/orders")
+    val li = ExtendedJson.read(s, decodedLineitemRj, s"$base/lineitem")
+    val c = ExtendedJson.read(s, decodedContamRj, contamJoinDir(s, d))
     o.join(li, o("o_orderkey") === li("l_orderkey"))
       .join(c, o("o_orderkey") === c("ck"), "left_anti")
       .select(col("o_orderkey"), col("o_totalprice"),

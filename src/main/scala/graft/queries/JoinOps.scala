@@ -24,11 +24,7 @@ object JoinOps {
     * the key is shuffle-free.
     */
   private def q44BucketedJoin(s: SparkSession, d: String): DataFrame = {
-    // tag = sfDir hash + THIS application's id: two concurrent JVMs (bench
-    // alongside verify, parallel CI) must never overwrite each other's
-    // bucket layout mid-read, and hashCode alone can collide across dirs
-    val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-      .replaceAll("[^A-Za-z0-9_]", "_")
+    val tag = graft.core.Scratch.landingTag(s, d)
     // layout lifetime is HARNESS-owned ([[graft.core.Scratch]] removes the
     // dir at JVM exit); a real deployment passes saveBucketed a warehouse
     // path it owns instead

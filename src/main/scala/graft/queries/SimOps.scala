@@ -220,9 +220,7 @@ object SimOps {
     */
   private def q130ContainmentIndex(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    val path = graft.core.Scratch.ephemeralDir(s"graft_probe_idx_$tag")
+    val path = graft.core.Scratch.landing("graft_probe_idx", s, d)
     NearDup.saveShingleIndex(docs.filter(col("doc_id") < 50),
       "doc_id", "text", nShingle, path)
     NearDup.containmentVsIndex(docs.filter(col("doc_id") >= 50),
@@ -505,9 +503,7 @@ object SimOps {
     val emb = Tables.embeddings(s, d)
     val corpus = exactPlantedCorpus(emb).persist()
     val queries = emb.filter(col("vec_id") < 20)
-    val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    val root = graft.core.Scratch.ephemeralDir(s"graft_pq_life_$tag")
+    val root = graft.core.Scratch.landing("graft_pq_life", s, d)
     // one Lloyd iteration: the artifact ROUND-TRIP is the subject, and
     // the planted-copy contract is codebook-independent. The coarse
     // build→save→load chain and the PQ train→save→load chain touch
@@ -586,9 +582,7 @@ object SimOps {
     val base = corpus.filter(!isLate)
     val batch = corpus.filter(isLate)
     val queries = emb.filter(col("vec_id") < 20)
-    val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    val root = graft.core.Scratch.ephemeralDir(s"graft_pq_append_$tag")
+    val root = graft.core.Scratch.landing("graft_pq_append", s, d)
     // coarse build ∥ PQ train over the same persisted base (guide §2.6)
     val (index, cb) = graft.core.Par.par2(
       Similarity.buildIvfIndex(base, "vec_id", "embedding"),
@@ -624,9 +618,7 @@ object SimOps {
     val corpus = raw.select(col("vec_id"),
       ProductQuantize.rotateExpr(col("embedding"), rot, 64).as("embedding"))
       .persist()
-    val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    val root = graft.core.Scratch.ephemeralDir(s"graft_opq_life_$tag")
+    val root = graft.core.Scratch.landing("graft_opq_life", s, d)
     // one Lloyd iteration: the artifact round-trip is the subject, and
     // the planted-copy contract is codebook-independent. Coarse
     // build→save→load ∥ PQ train→save→load: disjoint artifacts, shared
@@ -677,10 +669,8 @@ object SimOps {
     val base = corpus.filter(!isLate)
     val batch = corpus.filter(isLate)
     val queries = emb.filter(col("vec_id") < 20)
-    val tag = (s"${d.hashCode.toLong & 0x7fffffffL}_" +
-      s"${s.sparkContext.applicationId}_${q145Runs.incrementAndGet()}")
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    val root = graft.core.Scratch.ephemeralDir(s"graft_pq_stream_$tag")
+    val root = graft.core.Scratch.ephemeralDir(s"graft_pq_stream_" +
+      s"${graft.core.Scratch.landingTag(s, d)}_${q145Runs.incrementAndGet()}")
     // coarse build ∥ PQ train over the same persisted base (guide §2.6)
     val (index, cb) = graft.core.Par.par2(
       Similarity.buildIvfIndex(base, "vec_id", "embedding"),
@@ -779,9 +769,7 @@ object SimOps {
     val history = docs.filter(col("doc_id") >= 50)
     val batch = docs.filter(col("doc_id").between(50, 79))
       .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
-    val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    val path = graft.core.Scratch.ephemeralDir(s"graft_shingle_idx_$tag")
+    val path = graft.core.Scratch.landing("graft_shingle_idx", s, d)
     NearDup.saveShingleIndex(history, "doc_id", "text", nShingle, path)
     NearDup.incrementalNearDupPairs(batch,
       NearDup.loadShingleIndex(s, path), "doc_id", "text", nShingle, minJaccard)

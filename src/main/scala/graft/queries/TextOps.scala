@@ -632,12 +632,9 @@ object TextOps {
   private val knTableBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def knTablePath(s: SparkSession, d: String): String =
     knTableBuilt.computeIfAbsent(d, _ => {
-      // sfDir-hash + applicationId tag (the q44 convention), Scratch-owned:
-      // concurrent JVMs must not overwrite each other's table mid-read,
-      // and the artifact must not outlive the JVM
-      val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val path = graft.core.Scratch.ephemeralDir(s"graft_kn3_$tag")
+      // Scratch-owned: concurrent JVMs must not overwrite each other's
+      // table mid-read, and the artifact must not outlive the JVM
+      val path = graft.core.Scratch.landing("graft_kn3", s, d)
       graft.ops.Lm.saveTable(
         graft.ops.Lm.kneserNeyTrigramTable(
           Tables.documents(s, d).select("doc_id", "text"), "text",
@@ -726,9 +723,7 @@ object TextOps {
     val weights = graft.ops.Classifier.trainDiagRidge(
       docs.withColumn("__y", col("lang") === "en"),
       "doc_id", "text", "__y", buckets = 512, lambda = 1L)
-    val tag = s"${d.hashCode.toLong & 0x7fffffffL}_${s.sparkContext.applicationId}"
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    val path = s"${graft.core.Scratch.ephemeralDir(s"graft_clf_$tag")}/model"
+    val path = s"${graft.core.Scratch.landing("graft_clf", s, d)}/model"
     graft.ops.Classifier.saveModel(weights, path)
     graft.ops.Classifier.scoreWithTable(docs,
       graft.ops.Classifier.loadModel(s, path), "doc_id", "text", buckets = 512)

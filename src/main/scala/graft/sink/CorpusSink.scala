@@ -346,8 +346,7 @@ object CorpusSink extends org.apache.spark.internal.Logging {
       s"compaction must write a NEW directory outside the source tree " +
         s"(src=$srcQ, dst=$dstQ): the source is read lazily while the " +
         "destination lands, and overwrite deletes the destination tree")
-    graft.ingest.ExtendedJson.read(spark, schema, srcDir,
-      Map("zoneMaps" -> "true"))
+    graft.ingest.ExtendedJson.read(spark, schema, srcDir)
       .orderBy(col(sortCol))
       .select(to_json(struct(schema.fieldNames.map(col): _*)).as("value"))
       .write.mode("overwrite").text(dstDir)
@@ -472,8 +471,7 @@ object CorpusSink extends org.apache.spark.internal.Logging {
     val coveredStats = visibleDataFiles(fs, root)
     val covered = coveredStats.map(_._1)
     val staging = new org.apache.hadoop.fs.Path(root, "_compact")
-    graft.ingest.ExtendedJson.read(spark, schema, root.toString,
-      Map("zoneMaps" -> "true"))
+    graft.ingest.ExtendedJson.read(spark, schema, root.toString)
       .orderBy(col(sortCol))
       .select(to_json(struct(schema.fieldNames.map(col): _*)).as("value"))
       .write.mode("overwrite")

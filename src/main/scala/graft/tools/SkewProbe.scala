@@ -64,8 +64,7 @@ object SkewProbe {
       .select(col("k").as("dk"), (col("k") % 97).as("dv")), "skwd", "dk")
 
     def read(dir: String, sch: org.apache.spark.sql.types.StructType) =
-      graft.ingest.ExtendedJson.read(spark, sch, dir,
-        Map("zoneMaps" -> "true"))
+      graft.ingest.ExtendedJson.read(spark, sch, dir)
 
     def consume(df: DataFrame): Double = {
       val t0 = System.nanoTime()

@@ -61,8 +61,7 @@ class CorpusSinkSpec extends AnyFunSuite {
       zoneCols = Seq("doc_id")) == 3L)
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    def src = graft.ingest.ExtendedJson.read(spark, schema, dir,
-      Map("zoneMaps" -> "true"))
+    def src = graft.ingest.ExtendedJson.read(spark, schema, dir)
     assert(src.count() == 300L)
     // a later batch lands with appendTag: only ITS files are indexed
     // (one pass over the new shards, not the corpus), and the sidecar
@@ -140,8 +139,7 @@ class CorpusSinkSpec extends AnyFunSuite {
       s.cols("score").max.get.asInstanceOf[Double])).sortBy(_._1)
     assert(ranges.zip(ranges.tail).forall { case (a, b) => a._2 < b._1 },
       s"bands must own disjoint ranges: $ranges")
-    def src = graft.ingest.ExtendedJson.read(spark, schema, d1,
-      Map("zoneMaps" -> "true"))
+    def src = graft.ingest.ExtendedJson.read(spark, schema, d1)
     assert(src.count() == 400L)
     // a top-band range probe plans exactly one file
     val probe = src.filter(col("score") >= ranges.last._1)
@@ -225,8 +223,7 @@ class CorpusSinkSpec extends AnyFunSuite {
     // the exchange-free ordered scan composes on the string layout
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val src = graft.ingest.ExtendedJson.read(spark, schema, dir,
-      Map("zoneMaps" -> "true"))
+    val src = graft.ingest.ExtendedJson.read(spark, schema, dir)
     val sorted = src.orderBy(col("sk")).select(col("sk"), col("doc_id"))
     val got = sorted.collect().map(_.getString(0)).toSeq
     assert(got.length == 300)
@@ -267,8 +264,7 @@ class CorpusSinkSpec extends AnyFunSuite {
       maxSidecarGenerations = 2)
     assert(gens() == Set("base"), s"expected a self-compacted sidecar: ${gens()}")
     // the folded sidecar still prunes: the last batch's band plans alone
-    def src = graft.ingest.ExtendedJson.read(spark, schema, dir,
-      Map("zoneMaps" -> "true"))
+    def src = graft.ingest.ExtendedJson.read(spark, schema, dir)
     assert(src.count() == 300L)
     assert(ZoneMaps.loadStats(spark, dir, schema).size == 4)
     val hi = src.filter(col("doc_id") > 200L)
@@ -318,8 +314,7 @@ class CorpusSinkSpec extends AnyFunSuite {
         .map(_.asInstanceOf[ExtJsonInputPartition].file).distinct.toSeq,
         scan.bloomBlobsFetched)
     }
-    def src = graft.ingest.ExtendedJson.read(spark, schema, dir,
-      Map("zoneMaps" -> "true"))
+    def src = graft.ingest.ExtendedJson.read(spark, schema, dir)
     // bloom point lookup through the FOLDED sidecar: one surviving band
     // file, with its blob actually probed
     val (lookFiles, blobs) = plannedOf(src.filter(col("doc_id") === 1050L))
@@ -366,8 +361,7 @@ class CorpusSinkSpec extends AnyFunSuite {
       numBands = 2, zoneCols = Seq("score", "doc_id"),
       appendTag = Some("b2"))
     def orderedRead(dir: String) =
-      graft.ingest.ExtendedJson.read(spark, schema, dir,
-        Map("zoneMaps" -> "true")).orderBy(col("score"))
+      graft.ingest.ExtendedJson.read(spark, schema, dir).orderBy(col("score"))
     // the decayed layout merge-reads: some group holds >1 file
     val before = orderedRead(src)
     val beforeRows = before.collect()
@@ -461,8 +455,7 @@ class CorpusSinkSpec extends AnyFunSuite {
         appendTag = Some("b2"))
     }
     def orderedRead(dir: String) =
-      graft.ingest.ExtendedJson.read(spark, schema, dir,
-        Map("zoneMaps" -> "true")).orderBy(col("score"))
+      graft.ingest.ExtendedJson.read(spark, schema, dir).orderBy(col("score"))
     val dir = Files.createTempDirectory("graft_cmpip").toString + "/docs"
     land(dir)
     val before = orderedRead(dir)
@@ -612,8 +605,7 @@ class CorpusSinkSpec extends AnyFunSuite {
     CorpusSink.landJsonlRangeIndexed(batch(201 to 300), "score", dir,
       numBands = 2, zoneCols = Seq("score", "doc_id"),
       appendTag = Some("b1"))
-    def readAll() = graft.ingest.ExtendedJson.read(spark, schema, dir,
-      Map("zoneMaps" -> "true")).collect()
+    def readAll() = graft.ingest.ExtendedJson.read(spark, schema, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
     val want = readAll()
     val fs = new org.apache.hadoop.fs.Path(dir)

@@ -764,8 +764,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType)))
     assert(ZoneMaps.build(spark, root, schema, Seq("k", "v")) == 3L)
-    def src = ExtendedJson.read(spark, schema, root,
-      Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     def plannedFiles(df: DataFrame): Set[String] = {
       val scan = v2Scan(df)
       df.collect() // force planning through the real execution
@@ -823,8 +822,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     // double probes) — results stay correct off the full scan
     val intSchema = StructType(Seq(
       StructField("k", IntegerType), StructField("v", StringType)))
-    val drifted = ExtendedJson.read(spark, intSchema, root,
-      Map("zoneMaps" -> "true")).filter(col("k") === 15)
+    val drifted = ExtendedJson.read(spark, intSchema, root).filter(col("k") === 15)
     assert(drifted.collect().map(_.getInt(0)).toSet == Set(15))
     val dScan = v2Scan(drifted)
     drifted.collect()
@@ -842,6 +840,23 @@ class DocSourceV2Spec extends AnyFunSuite {
       "stale zone-map stats must never prune a changed file")
   }
 
+  test("a drop with a sidecar zone-prunes with no read options") {
+    import graft.ingest.v2.{ExtJsonInputPartition, ZoneMaps}
+    val root = Files.createTempDirectory("graft_v2zmdef").toString
+    Seq("a" -> (1 to 10), "b" -> (11 to 20), "c" -> (21 to 30)).foreach {
+      case (f, ks) => Files.write(Paths.get(root, s"$f.jsonl"),
+        ks.map(k => s"""{"k": $k}""").mkString("\n").getBytes("UTF-8"))
+    }
+    val schema = StructType(Seq(StructField("k", LongType)))
+    assert(ZoneMaps.build(spark, root, schema, Seq("k")) == 3L)
+    val hi = ExtendedJson.read(spark, schema, root).filter(col("k") > 20L)
+    assert(hi.collect().map(_.getLong(0)).toSet == (21L to 30L).toSet)
+    val planned = v2Scan(hi).planInputPartitions()
+      .map(_.asInstanceOf[ExtJsonInputPartition].file)
+    assert(planned.length == 1 && planned.head.endsWith("/c.jsonl"),
+      planned.mkString(", "))
+  }
+
   test("metadata-only aggregates answer from the sidecar, zero bytes read; gaps refuse") {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import graft.ingest.v2.{StatsAnswerPartition, ZoneMaps}
@@ -855,8 +870,8 @@ class DocSourceV2Spec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType)))
     ZoneMaps.build(spark, root, schema, Seq("k", "v"))
-    def agg(opts: Map[String, String]) =
-      ExtendedJson.read(spark, schema, root, opts)
+    def agg() =
+      ExtendedJson.read(spark, schema, root)
         .agg(min(col("k")).as("mn"), max(col("k")).as("mx"),
           count(col("v")).as("nv"), count(lit(1)).as("n"))
     // AQE holds stage plans as innerChildren — plain collect misses them
@@ -869,7 +884,7 @@ class DocSourceV2Spec extends AnyFunSuite {
         case b: BatchScanExec => Seq(b)
         case other => other.children.flatMap(scanExecs)
       }
-    val df = agg(Map("zoneMaps" -> "true"))
+    val df = agg()
     val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution
     val p = qe.sparkPlan
@@ -898,7 +913,7 @@ class DocSourceV2Spec extends AnyFunSuite {
         .getBytes("UTF-8"))
     val crc = Paths.get(root, ".b.jsonl.crc")
     if (Files.exists(crc)) Files.delete(crc)
-    val df2 = agg(Map("zoneMaps" -> "true"))
+    val df2 = agg()
     assert(df2.collect().toSeq.map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))) ==
       Seq((1L, 30L, 25L, 30L)),
@@ -921,7 +936,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       StructField("k", LongType), StructField("dt", StringType)))
     ZoneMaps.build(spark, root, schema, Seq("k", "dt"))
     val src = ExtendedJson.read(spark, schema, root,
-      Map("partitionColumns" -> "dt", "zoneMaps" -> "true"))
+      Map("partitionColumns" -> "dt"))
     val mixed = src.filter(col("dt") === "A" || col("k") > 15L)
     assert(mixed.collect().map(_.getLong(0)).toSet ==
       ((1 to 10) ++ (16 to 20)).map(_.toLong).toSet,
@@ -938,8 +953,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       """{"x": -0.0}""".getBytes("UTF-8"))
     val zschema = StructType(Seq(StructField("x", DoubleType)))
     ZoneMaps.build(spark, zroot, zschema, Seq("x"), bloomCols = Seq("x"))
-    val zsrc = ExtendedJson.read(spark, zschema, zroot,
-      Map("zoneMaps" -> "true"))
+    val zsrc = ExtendedJson.read(spark, zschema, zroot)
     assert(zsrc.filter(col("x") === 0.0).count() == 1L,
       "-0.0 must satisfy x = 0.0 through the bloom sidecar")
     // ...and BOTH equality forms: <=> is pushed like = for non-null
@@ -963,7 +977,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       (21 to 30).map(i => s"""{"k": $i}""").mkString("\n").getBytes("UTF-8"))
     val schema = StructType(Seq(StructField("k", LongType)))
     ZoneMaps.build(spark, root, schema, Seq("k"), bloomCols = Seq("k"))
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     def planned(df: DataFrame): (Set[String], Int) = {
       val scan = v2Scan(df)
       df.collect()
@@ -996,7 +1010,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     // until indexed...
     Files.write(Paths.get(root, "c.jsonl"),
       (21 to 30).map(i => s"""{"k": $i}""").mkString("\n").getBytes("UTF-8"))
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     def plannedFiles(df: DataFrame): Set[String] = {
       val scan = v2Scan(df)
       df.collect()
@@ -1043,7 +1057,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     assert(fileLen == 1200L)
     val schema = StructType(Seq(StructField("k", LongType)))
     ZoneMaps.build(spark, root, schema, Seq("k"), blockBytes = 120L)
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     def parts(df: DataFrame): Seq[ExtJsonInputPartition] = {
       val scan = v2Scan(df)
       df.collect()
@@ -1094,7 +1108,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("s", StringType), StructField("k", LongType)))
     ZoneMaps.build(spark, root, schema, Seq("s", "k"))
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     // RESIDUAL ELIMINATION, reader side: `s = 'F'` is provably true for
     // every row of the one surviving file, so its split is marked
     // all-true (per-row filter eval skipped); rows are identical either
@@ -1183,7 +1197,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("x", DoubleType), StructField("nul", LongType)))
     ZoneMaps.build(spark, root, schema, Seq("k", "x", "nul"))
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     // exact LONG sum answers from the sidecar: one metadata partition,
     // no aggregate node, zero parsed documents
     val ksum = src.agg(sum(col("k")).as("sk"), count(lit(1)).as("n"))
@@ -1209,8 +1223,7 @@ class DocSourceV2Spec extends AnyFunSuite {
         .getBytes("UTF-8"))
     val oschema = StructType(Seq(StructField("k", LongType)))
     ZoneMaps.build(spark, oroot, oschema, Seq("k"))
-    val osum = ExtendedJson.read(spark, oschema, oroot,
-      Map("zoneMaps" -> "true")).agg(sum(col("k")).as("sk"))
+    val osum = ExtendedJson.read(spark, oschema, oroot).agg(sum(col("k")).as("sk"))
     assert(scanOf(osum).statsAnswer.isEmpty,
       "an overflowing sidecar sum must refuse, not wrap")
   }
@@ -1249,7 +1262,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("g", StringType), StructField("k", LongType)))
     ZoneMaps.build(spark, root, schema, Seq("g", "k"))
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     val grouped = src.groupBy(col("g"))
       .agg(min(col("k")).as("mn"), max(col("k")).as("mx"),
         sum(col("k")).as("sk"), count(lit(1)).as("n"))
@@ -1301,7 +1314,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       Seq.fill(3)("""{"k": null}""").mkString("\n").getBytes("UTF-8"))
     val schema = StructType(Seq(StructField("k", LongType)))
     ZoneMaps.build(spark, root, schema, Seq("k"))
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     def planned(df: DataFrame): Set[String] = {
       val scan = v2Scan(df)
       df.collect()
@@ -1342,8 +1355,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     Files.write(Paths.get(broot, "sorted.jsonl"),
       (lines.mkString("\n") + "\n").getBytes("UTF-8"))
     ZoneMaps.build(spark, broot, schema, Seq("k"), blockBytes = 120L)
-    val bsrc = ExtendedJson.read(spark, schema, broot,
-      Map("zoneMaps" -> "true"))
+    val bsrc = ExtendedJson.read(spark, schema, broot)
     val btop = bsrc.orderBy(col("k").desc).limit(5)
     assert(btop.collect().map(_.getLong(0)).toSet == (1095L to 1099L).toSet)
     val bscan = v2Scan(btop)
@@ -1374,7 +1386,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       (21 to 30).map(i => s"""{"k": $i}""").mkString("\n").getBytes("UTF-8"))
     val schema = StructType(Seq(StructField("k", LongType)))
     ZoneMaps.build(spark, root, schema, Seq("k"))
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     def plannedOf(df: DataFrame): Seq[ExtJsonInputPartition] = {
       val scan = v2Scan(df)
       df.collect()
@@ -1419,8 +1431,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     Files.write(Paths.get(broot, "sorted.jsonl"),
       (lines.mkString("\n") + "\n").getBytes("UTF-8"))
     ZoneMaps.build(spark, broot, schema, Seq("k"), blockBytes = 120L)
-    val bsrc = ExtendedJson.read(spark, schema, broot,
-      Map("zoneMaps" -> "true"))
+    val bsrc = ExtendedJson.read(spark, schema, broot)
     val blim = bsrc.limit(5)
     assert(blim.collect().length == 5)
     val bparts = plannedOf(blim)
@@ -1619,8 +1630,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       .toDF("k", "tag").write.parquet(s"$root/_dim.parquet")
     val dim = spark.read.parquet(s"$root/_dim.parquet")
       .filter(col("tag") === "hot")
-    val fact = ExtendedJson.read(spark, schema, root,
-      Map("zoneMaps" -> "true"))
+    val fact = ExtendedJson.read(spark, schema, root)
     val joined = fact.join(dim, Seq("k"))
     // k=40 and k=55 each occur ~13x in f2's band
     assert(joined.collect().forall(r =>
@@ -1726,8 +1736,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       .toDF("dk", "tag").write.parquet(s"$root/_dim.parquet")
     val dim = spark.read.parquet(s"$root/_dim.parquet")
       .filter(col("tag") === "hot")
-    val fact = ExtendedJson.read(spark, schema, root,
-      Map("zoneMaps" -> "true"))
+    val fact = ExtendedJson.read(spark, schema, root)
     val joined = fact.join(dim, fact.col("p.k") === dim.col("dk"))
     assert(joined.collect().forall(r =>
       r.getStruct(0).getLong(0) == 42L || r.getStruct(0).getLong(0) == 57L))
@@ -1959,8 +1968,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       s"null-interleaved monotone: distinct valid, sorted not: $nullCs")
     // merged blooms answer like single-task blooms: a present key probes
     // true, pruning still drops the file for an absent one
-    val src = ExtendedJson.read(spark, schema, manyTasks,
-      Map("zoneMaps" -> "true"))
+    val src = ExtendedJson.read(spark, schema, manyTasks)
     assert(src.filter(col("k") === 1042L).count() == 1L)
     val miss = src.filter(col("k") === 1500L)
     miss.collect()
@@ -2059,7 +2067,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       scan.planInputPartitions()
       scan.blockRowsFetched
     }
-    val fsrc = ExtendedJson.read(spark, schema, flat, Map("zoneMaps" -> "true"))
+    val fsrc = ExtendedJson.read(spark, schema, flat)
     assert(fetched(fsrc.filter(col("k") > 15L)) == 0,
       "a file-level-only sidecar must never deserialize block rows")
     // drop WITH block stats on two one-block-band files: a filter that
@@ -2072,8 +2080,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     Files.write(Paths.get(blocky, "hi.jsonl"),
       ((100 until 200).map(fixed).mkString("\n") + "\n").getBytes("UTF-8"))
     ZoneMaps.build(spark, blocky, schema, Seq("k"), blockBytes = 120L)
-    val bsrc = ExtendedJson.read(spark, schema, blocky,
-      Map("zoneMaps" -> "true"))
+    val bsrc = ExtendedJson.read(spark, schema, blocky)
     // k in [1150, 1160): hi.jsonl survives (10 blocks fetched), lo.jsonl
     // dies at file level (its 10 block rows never leave the parquet)
     val mid = bsrc.filter(col("k") >= 1150L && col("k") < 1160L)
@@ -2101,7 +2108,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       (st.sizeInBytes().getAsLong,
         if (st.numRows().isPresent) Some(st.numRows().getAsLong) else None)
     }
-    val src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    val src = ExtendedJson.read(spark, schema, root)
     // unfiltered: full bytes, EXACT corpus row count from the sidecar —
     // "unknown rows" was the pre-v3 answer, and unknown means the
     // optimizer guesses at broadcast decisions
@@ -2117,7 +2124,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     Files.write(Paths.get(bare, "x.jsonl"),
       (1 to 5).map(i => s"""{"k": $i}""").mkString("\n").getBytes("UTF-8"))
     val (bareB, bareR) = statsOf(
-      ExtendedJson.read(spark, schema, bare, Map("zoneMaps" -> "true")))
+      ExtendedJson.read(spark, schema, bare))
     assert(bareB > 0L && bareR.isEmpty)
   }
 
@@ -2136,7 +2143,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       val rows = df.collect().map(_.getLong(0)).toSeq
       (rows, execs.head.metrics(graft.ingest.v2.ScanMetrics.ParsedDocs).value)
     }
-    val src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    val src = ExtendedJson.read(spark, schema, root)
     // ASC over the proven-sorted file: the reader banks 5 kept rows,
     // then the 6th row's strictly-greater key proves the rest of the
     // split irrelevant — 6 rows parsed, not 100
@@ -2161,8 +2168,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     val tschema = StructType(Seq(
       StructField("k", LongType), StructField("j", LongType)))
     ZoneMaps.build(spark, troot, tschema, Seq("k"))
-    val tsrc = ExtendedJson.read(spark, tschema, troot,
-      Map("zoneMaps" -> "true"))
+    val tsrc = ExtendedJson.read(spark, tschema, troot)
     val top = tsrc.orderBy(col("k").asc, col("j").asc).limit(3)
       .select(col("k"), col("j")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -2196,7 +2202,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     assert(gens() == Set("base", "add_t1", "add_t2"))
     val before = ZoneMaps.loadStats(spark, root, schema)
     assert(before.size == 4, "3 live files + 1 stale key for old b")
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     def plannedFiles(df: DataFrame): Set[String] = {
       val scan = v2Scan(df)
       df.collect()
@@ -2264,8 +2270,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     def gens(): Set[String] =
       sidecar.listFiles().filter(_.isDirectory).map(_.getName)
         .filterNot(_.startsWith("_")).toSet
-    def rows(): Seq[Long] = ExtendedJson.read(spark, schema, root,
-      Map("zoneMaps" -> "true")).filter(col("k") > 25L)
+    def rows(): Seq[Long] = ExtendedJson.read(spark, schema, root).filter(col("k") > 25L)
       .select("k").as[Long](org.apache.spark.sql.Encoders.scalaLong)
       .collect().toSeq.sorted
     val stats = ZoneMaps.loadStats(spark, root, schema)
@@ -2345,8 +2350,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       def readZ(root: String) = ExtendedJson.read(spark, schema, root,
-        Map("partitionColumns" -> "py", "reportPartitioning" -> "true",
-          "zoneMaps" -> "true"))
+        Map("partitionColumns" -> "py", "reportPartitioning" -> "true"))
       // dropA files hold k = 1000 + py + i (i in 1..10): k > 3007
       // exceeds py=1996's max (3006) and py=1997's max (3007), so zone
       // maps prune both files outright; only py=1998's tail row survives
@@ -2381,7 +2385,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("s", StringType)))
     ZoneMaps.build(spark, root, schema, Seq("k"))
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     // the global ASC sort IS the layout: OrderedBandScan plans, no
     // SortExec, no exchange of any kind, rows arrive globally ordered
     val sorted = src.orderBy(col("k"))
@@ -2424,8 +2428,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       """{"k": 5, "s": "a"}
 {"k": 2, "s": "b"}""".getBytes("UTF-8"))
     ZoneMaps.build(spark, uroot, schema, Seq("k"))
-    val usorted = ExtendedJson.read(spark, schema, uroot,
-      Map("zoneMaps" -> "true")).orderBy(col("k"))
+    val usorted = ExtendedJson.read(spark, schema, uroot).orderBy(col("k"))
     assert(usorted.collect().map(_.getLong(0)).toSeq == Seq(2L, 5L))
     assert(nodes(usorted).exists(_.isInstanceOf[SortExec]))
     // OVERLAPPING sorted files coalesce into one MERGE group: the k-way
@@ -2439,8 +2442,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       (10 to 30).map(i => s"""{"k": $i, "s": "y"}""").mkString("\n")
         .getBytes("UTF-8"))
     ZoneMaps.build(spark, oroot, schema, Seq("k"))
-    val osorted = ExtendedJson.read(spark, schema, oroot,
-      Map("zoneMaps" -> "true")).orderBy(col("k"))
+    val osorted = ExtendedJson.read(spark, schema, oroot).orderBy(col("k"))
     val orows = osorted.collect().map(r => (r.getLong(0), r.getString(1)))
     assert(orows.length == 41)
     assert(orows.map(_._1).toSeq == orows.map(_._1).sortBy(identity).toSeq,
@@ -2486,8 +2488,8 @@ class DocSourceV2Spec extends AnyFunSuite {
     write(rRoot, "r2.jsonl", (40L to 50L).map(k => k -> s"d$k"), "rv")
     ZoneMaps.build(spark, lRoot, lSchema, Seq("k"))
     ZoneMaps.build(spark, rRoot, rSchema, Seq("k"))
-    val l = ExtendedJson.read(spark, lSchema, lRoot, Map("zoneMaps" -> "true"))
-    val r = ExtendedJson.read(spark, rSchema, rRoot, Map("zoneMaps" -> "true"))
+    val l = ExtendedJson.read(spark, lSchema, lRoot)
+    val r = ExtendedJson.read(spark, rSchema, rRoot)
     val joined = l.join(r, l("k") === r("k"))
       .select(l("k").as("k"), col("lv"), col("rv"))
     val rows = joined.collect().map(x =>
@@ -2585,7 +2587,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     }
     ZoneMaps.build(spark, root, schema, Seq("k"))
     def src(ra: Boolean) = ExtendedJson.read(spark, schema, root,
-      Map("zoneMaps" -> "true", "rangeAggregation" -> ra.toString))
+      Map("rangeAggregation" -> ra.toString))
     val expected = (0 until 120).groupBy(_ / 10)
       .map { case (k, is) => (k.toLong, is.size.toLong, is.map(_.toLong).sum) }
       .toSet
@@ -2651,7 +2653,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       StructField("dv", DoubleType)))
     ZoneMaps.build(spark, fRoot, fSchema, Seq("k"))
     val fDist = ExtendedJson.read(spark, fSchema, fRoot,
-      Map("zoneMaps" -> "true", "rangeAggregation" -> "true"))
+      Map("rangeAggregation" -> "true"))
       .groupBy(col("k")).agg(countDistinct(col("dv")).as("nd"))
     val fRows = fDist.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(fRows == Map(1L -> 2L, 2L -> 2L),
@@ -2709,7 +2711,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     land("b.jsonl", 10 to 30, "b")
     land("c.jsonl", 50 to 60, "c")
     ZoneMaps.build(spark, root, schema, Seq("k"))
-    def src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    def src = ExtendedJson.read(spark, schema, root)
     val sorted = src.orderBy(col("k"))
     val collected = sorted.collect().map(r => (r.getLong(0), r.getString(1)))
     val got = collected.map(_._1).toSeq
@@ -2740,8 +2742,7 @@ class DocSourceV2Spec extends AnyFunSuite {
 {"k": 1000, "s": "z$i"}""".getBytes("UTF-8"))
     }
     ZoneMaps.build(spark, wroot, schema, Seq("k"))
-    val wide = ExtendedJson.read(spark, schema, wroot,
-      Map("zoneMaps" -> "true")).orderBy(col("k"))
+    val wide = ExtendedJson.read(spark, schema, wroot).orderBy(col("k"))
     assert(wide.collect().length == 2 * (ExtJsonScan.MaxMergeWidth + 1))
     assert(nodes(wide).exists(_.isInstanceOf[SortExec]),
       "an over-wide merge group must fall through to the real sort")
@@ -2782,7 +2783,7 @@ class DocSourceV2Spec extends AnyFunSuite {
             .mkString("\n") + "\n").getBytes("UTF-8"))
     }
     ZoneMaps.build(spark, root, schema, Seq("k", "v", "nv"))
-    val src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    val src = ExtendedJson.read(spark, schema, root)
     val w = Window.orderBy(col("k"))
     // 1. METADATA prefixes: every total (rows, exact long sums incl. an
     // all-null band, min/max) derives from the sidecar — zero extra pass
@@ -2948,8 +2949,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       .map(i => s"""{"k": $i, "g": 0, "v": $i, "nv": $i}""")
       .mkString("\n").getBytes("UTF-8"))
     ZoneMaps.build(spark, root2, schema, Seq("k"))
-    val merged = ExtendedJson.read(spark, schema, root2,
-      Map("zoneMaps" -> "true"))
+    val merged = ExtendedJson.read(spark, schema, root2)
       .select(col("k"), rank().over(w).as("rk"),
         count(lit(1)).over(w).as("rn"))
     val mRows = merged.collect()
@@ -3056,7 +3056,7 @@ class DocSourceV2Spec extends AnyFunSuite {
             .mkString("\n") + "\n").getBytes("UTF-8"))
     }
     ZoneMaps.build(spark, root, schema, Seq("k"))
-    val src = ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+    val src = ExtendedJson.read(spark, schema, root)
     // 120 rows of keys 0,0,…,11; position k = floor(q*119)
     val got = Quantiles.layoutQuantiles(src, "k",
       Seq(0.0, 0.25, 0.5, 0.75, 1.0))

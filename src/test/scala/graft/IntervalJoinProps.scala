@@ -96,10 +96,8 @@ class IntervalJoinProps extends AnyFunSuite {
       val (iDir, iRows) = genIntervals(rnd, s"i$seed", pool, 3, maxW)
       ZoneMaps.build(spark, pDir, pSchema, Seq("k"))
       ZoneMaps.build(spark, iDir, iSchema, Seq("s", "e"))
-      val p = ExtendedJson.read(spark, pSchema, pDir,
-        Map("zoneMaps" -> "true"))
-      val iv = ExtendedJson.read(spark, iSchema, iDir,
-        Map("zoneMaps" -> "true"))
+      val p = ExtendedJson.read(spark, pSchema, pDir)
+      val iv = ExtendedJson.read(spark, iSchema, iDir)
       val ctx = s"seed=$seed pool=$pool w=$maxW " +
         s"p=${pRows.size} i=${iRows.size}"
 
@@ -190,9 +188,8 @@ class IntervalJoinProps extends AnyFunSuite {
     ZoneMaps.build(spark, pDir, pSchema, Seq("k"))
     // e NOT zone-indexed: no width bound is provable — must refuse
     ZoneMaps.build(spark, iDir, iSchema, Seq("s"))
-    val p = ExtendedJson.read(spark, pSchema, pDir, Map("zoneMaps" -> "true"))
-    val iv = ExtendedJson.read(spark, iSchema, iDir,
-      Map("zoneMaps" -> "true"))
+    val p = ExtendedJson.read(spark, pSchema, pDir)
+    val iv = ExtendedJson.read(spark, iSchema, iDir)
     val df = p.join(iv, iv("s") <= p("k") && p("k") <= iv("e"))
     val ns = TestPlans.executedNodes(df)
     assert(!ns.exists(_.isInstanceOf[RangeIntervalJoinExec]) &&
@@ -203,8 +200,7 @@ class IntervalJoinProps extends AnyFunSuite {
     // indexed e but a cap smaller than the provable active set
     val (iDir2, _) = genIntervals(rnd, "ir2", 30, 2, 5)
     ZoneMaps.build(spark, iDir2, iSchema, Seq("s", "e"))
-    val iv2 = ExtendedJson.read(spark, iSchema, iDir2,
-      Map("zoneMaps" -> "true"))
+    val iv2 = ExtendedJson.read(spark, iSchema, iDir2)
     val capKey = graft.plans.RangeWindowStrategy.MaxRangeFrameRowsKey
     val prior = spark.conf.getOption(capKey)
     try {

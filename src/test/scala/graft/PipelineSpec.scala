@@ -1003,8 +1003,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cDir = s"$work/ndr_compacted"
     graft.sink.CorpusSink.compactRangeIndexed(spark, readSchema, accDir,
       cDir, "doc_id", zoneCols = Seq("doc_id"))
-    val compacted = graft.ingest.ExtendedJson.read(spark, readSchema, cDir,
-      Map("zoneMaps" -> "true")).orderBy(col("doc_id"))
+    val compacted = graft.ingest.ExtendedJson.read(spark, readSchema, cDir).orderBy(col("doc_id"))
     assert(compacted.select(col("doc_id")).as[Long].collect().toSeq ==
       Seq(1L, 2L, 5L, 6L, 9L, 10L))
     val cScans = TestPlans.executedNodes(compacted)

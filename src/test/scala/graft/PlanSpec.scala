@@ -1511,8 +1511,7 @@ class PlanSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("oid",
           org.apache.spark.sql.types.StringType))),
-      graft.queries.DocOps.oidLandingDir(spark, sf),
-      Map("zoneMaps" -> "true"))
+      graft.queries.DocOps.oidLandingDir(spark, sf))
     val metaDf = metaOnly.select(col("oid"),
       count(col("oid")).over(w).as("rn"))
     val mRows = metaDf.collect()
@@ -1973,14 +1972,14 @@ class PlanSpec extends AnyFunSuite {
     graft.ingest.v2.ZoneMaps.build(spark, root, mfSchema, Seq("k"))
     spark.catalog.clearCache()
     import org.apache.spark.sql.functions.{col, dense_rank}
-    def q(opts: Map[String, String]) = graft.ingest.ExtendedJson
-      .read(spark, mfSchema, root, opts)
+    def q(src: org.apache.spark.sql.DataFrame) = src
       .select(col("k"), dense_rank().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("k"))).as("dr"))
-    val banded = q(Map("zoneMaps" -> "true"))
+    val read = graft.ingest.ExtendedJson.read(spark, mfSchema, root)
+    val banded = q(read)
     val b = banded.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    val p = q(Map.empty).collect().map(r => (r.getLong(0), r.getInt(1)))
-      .sorted.toSeq
+    val p = q(read.localCheckpoint()).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(b == p, "chain-folded dense_rank must match Spark's own")
     val ns = TestPlans.executedNodes(banded)
     assert(ns.exists(_.isInstanceOf[graft.plans.BandRunningWindowExec]) &&

@@ -487,6 +487,43 @@ class ProjectQuantizeSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$codes/batch=b1").exists())
   }
 
+  test("a re-save replaces folded and appended generations; siblings stay") {
+    val dim = 16
+    val base = (0 until 60).map(i => (i.toLong, randVec(i, dim)))
+      .toDF("vec_id", "embedding")
+    val batch = (0 until 6).map(i => ((500 + i).toLong, randVec(i, dim)))
+      .toDF("vec_id", "embedding")
+    val fresh = (0 until 10).map(i => ((900 + i).toLong, randVec(100 + i, dim)))
+      .toDF("vec_id", "embedding")
+    val index = Similarity.buildIvfIndex(base, "vec_id", "embedding",
+      numCentroids = 4, lloydIters = 1)
+    val cb = ProductQuantize.train(base, "vec_id", "embedding", dim,
+      m = 4, k = 4, iters = 1)
+    val codes = java.nio.file.Files.createTempDirectory("pqresave").toString
+    def save(df: org.apache.spark.sql.DataFrame): Unit = ProductQuantize
+      .saveEncoded(ProductQuantize.encode(df, "vec_id", "embedding", index, cb), codes)
+    def ids(): Seq[Long] = ProductQuantize.loadEncoded(spark, codes)
+      .select("vec_id").as[Long].collect().toSeq.sorted
+    val sibling = java.nio.file.Paths.get(codes, "notes.txt")
+    java.nio.file.Files.write(sibling, "kept".getBytes("UTF-8"))
+    // save, append, fold, then save again: the new save is all there is
+    save(base)
+    ProductQuantize.appendEncodedBatch(index, cb, batch, "vec_id",
+      "embedding", codes, batchTag = "b1")
+    assert(ProductQuantize.compactEncoded(spark, codes).contains(1L))
+    assert(ids().size == 66)
+    save(fresh)
+    assert(ids() == (900L until 910L), "a folded generation shadowed the re-save")
+    // a save over an UNFOLDED append replaces the batch too
+    ProductQuantize.appendEncodedBatch(index, cb, batch, "vec_id",
+      "embedding", codes, batchTag = "b2")
+    assert(ids().size == 16)
+    save(base)
+    assert(ids() == (0L until 60L), "an appended batch outlived the re-save")
+    assert(!new java.io.File(s"$codes/batch=b2").exists())
+    assert(java.nio.file.Files.exists(sibling), "a save deleted a sibling")
+  }
+
   test("an encoded artifact of the older manifest format fails loudly, never folded over") {
     val dim = 16
     val base = (0 until 40).map(i => (i.toLong, randVec(i, dim)))

@@ -18,10 +18,11 @@ import graft.plans.BandRunningWindowExec
   * per-file sorted key runs (duplicate-dense pools, arbitrary overlap
   * across files, null-heavy values, single-row files) are landed and
   * indexed, then every window query runs TWICE over the same bytes —
-  * once through the band strategy (`zoneMaps=true`, plan-asserted to use
-  * [[BandRunningWindowExec]] with no exchange) and once through Spark's
-  * own single-partition WindowExec (`zoneMaps` off, plan-asserted to use
-  * it) — and the row MULTISETS must match exactly. Spark itself is the
+  * once through the band strategy (plan-asserted to use
+  * [[BandRunningWindowExec]] with no exchange) and once over the same
+  * read materialized with `localCheckpoint()` — a plan no graft strategy
+  * can claim, so Spark's own single-partition WindowExec answers
+  * (plan-asserted) — and the row MULTISETS must match exactly. Spark itself is the
   * ground truth, so a semantics drift in any accumulator, prefix merge,
   * tie-group boundary, or frame timing fails the sweep.
   *
@@ -66,9 +67,8 @@ class WindowProps extends AnyFunSuite {
 
   private def sets(q: DataFrame => DataFrame, root: String,
       sch: StructType = schema): Unit = {
-    val banded = q(ExtendedJson.read(spark, sch, root,
-      Map("zoneMaps" -> "true")))
-    val plain = q(ExtendedJson.read(spark, sch, root, Map.empty))
+    val banded = q(ExtendedJson.read(spark, sch, root))
+    val plain = q(ExtendedJson.read(spark, sch, root).localCheckpoint())
     spark.catalog.clearCache()
     val b = banded.collect().map(_.toSeq.toList).toSeq
     val p = plain.collect().map(_.toSeq.toList).toSeq
@@ -197,9 +197,8 @@ class WindowProps extends AnyFunSuite {
         // v may repeat within a key; RANGE default keeps ties shared
         sum(col("v")).over(wo).as("rs"),
         min(col("v")).over(wo.rowsBetween(-1, 1)).as("sl"))
-      val banded = q(ExtendedJson.read(spark, schema, root,
-        Map("zoneMaps" -> "true")))
-      val plain = q(ExtendedJson.read(spark, schema, root, Map.empty))
+      val banded = q(ExtendedJson.read(spark, schema, root))
+      val plain = q(ExtendedJson.read(spark, schema, root).localCheckpoint())
       spark.catalog.clearCache()
       val b = banded.collect().map(_.toSeq.toList).toSeq
       val p = plain.collect().map(_.toSeq.toList).toSeq
@@ -221,9 +220,8 @@ class WindowProps extends AnyFunSuite {
       def qt(src: DataFrame): DataFrame = src
         .select(col("k"), col("v"), rank().over(wo).as("rk"))
         .filter(col("rk") <= 2)
-      val bt = qt(ExtendedJson.read(spark, schema, root,
-        Map("zoneMaps" -> "true")))
-      val pt = qt(ExtendedJson.read(spark, schema, root, Map.empty))
+      val bt = qt(ExtendedJson.read(spark, schema, root))
+      val pt = qt(ExtendedJson.read(spark, schema, root).localCheckpoint())
       spark.catalog.clearCache()
       val btr = bt.collect().map(_.toSeq.toList).toSeq
       val ptr = pt.collect().map(_.toSeq.toList).toSeq
@@ -255,7 +253,7 @@ class WindowProps extends AnyFunSuite {
     // ANSI mode (Spark 4's default): overflow THROWS, exactly as
     // WindowExec's Sum would — never a silently wrapped value
     intercept[Exception] {
-      ExtendedJson.read(spark, schema, root, Map("zoneMaps" -> "true"))
+      ExtendedJson.read(spark, schema, root)
         .select(col("k"), sum(col("v")).over(w).as("sv")).collect()
     }
     val prior = spark.conf.get("spark.sql.ansi.enabled")
@@ -267,8 +265,7 @@ class WindowProps extends AnyFunSuite {
       // …and the METADATA-prefix path (v indexed: band totals come from
       // the sidecar's exact sums, wrapped to the long the wrapping fold
       // would have produced)
-      val banded = ExtendedJson.read(spark, schema, root2,
-        Map("zoneMaps" -> "true"))
+      val banded = ExtendedJson.read(spark, schema, root2)
         .select(col("k"), sum(col("v")).over(w).as("sv"))
       assert(banded.queryExecution.executedPlan.toString
         .contains("prefix=metadata"),
@@ -278,8 +275,7 @@ class WindowProps extends AnyFunSuite {
       // exact mod 2^64), and the indexed column answers from METADATA —
       // zero extra passes for the remaining-total shape
       val wsuf = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val sufDf = ExtendedJson.read(spark, schema, root2,
-        Map("zoneMaps" -> "true"))
+      val sufDf = ExtendedJson.read(spark, schema, root2)
         .select(col("k"), sum(col("v")).over(wsuf).as("rs"),
           count(col("v")).over(wsuf).as("rn"))
       assert(sufDf.queryExecution.executedPlan.toString
@@ -303,9 +299,8 @@ class WindowProps extends AnyFunSuite {
       ZoneMaps.build(spark, root3, dSchema, Seq("k"))
       def q(src: DataFrame): DataFrame =
         src.select(col("k"), sum(col("d")).over(w).as("sd"))
-      val b3 = q(ExtendedJson.read(spark, dSchema, root3,
-        Map("zoneMaps" -> "true")))
-      val p3 = q(ExtendedJson.read(spark, dSchema, root3, Map.empty))
+      val b3 = q(ExtendedJson.read(spark, dSchema, root3))
+      val p3 = q(ExtendedJson.read(spark, dSchema, root3).localCheckpoint())
       assert(TestPlans.executedNodes(b3)
         .exists(_.isInstanceOf[BandRunningWindowExec]))
       val got = b3.collect().map(r => (r.getLong(0), r.get(1))).toMap
@@ -475,8 +470,7 @@ class WindowProps extends AnyFunSuite {
     val root = gen(rnd, keyPool = 50, maxFiles = 3, uniqueKeys = true)
     val w = Window.orderBy(col("k"))
     def fallsThrough(c: org.apache.spark.sql.Column): Unit = {
-      val df = ExtendedJson.read(spark, schema, root,
-        Map("zoneMaps" -> "true")).select(col("k"), c.as("x"))
+      val df = ExtendedJson.read(spark, schema, root).select(col("k"), c.as("x"))
       val ns = TestPlans.executedNodes(df)
       assert(ns.exists(_.isInstanceOf[WindowExec]) &&
         !ns.exists(_.isInstanceOf[BandRunningWindowExec]),
@@ -578,10 +572,10 @@ class WindowProps extends AnyFunSuite {
     val overflows = landBig(Seq(1L, 2L, big, 3L, big, 5L, 6L, 7L), "graft_wprops_ovf2")
     Seq(w.rowsBetween(-2, 0), w.rangeBetween(-3, 0), w.rowsBetween(-1, 1)).foreach { f =>
       def q(src: DataFrame) = src.select(col("k"), sum(col("v")).over(f).as("x"))
-      val banded = q(ExtendedJson.read(spark, schema, overflows, Map("zoneMaps" -> "true")))
+      val banded = q(ExtendedJson.read(spark, schema, overflows))
       assert(TestPlans.executedNodes(banded).exists(_.isInstanceOf[BandRunningWindowExec]))
       intercept[Exception](banded.collect())
-      intercept[Exception](q(ExtendedJson.read(spark, schema, overflows, Map.empty)).collect())
+      intercept[Exception](q(ExtendedJson.read(spark, schema, overflows).localCheckpoint()).collect())
     }
   }
 
@@ -641,8 +635,7 @@ class WindowProps extends AnyFunSuite {
     try {
       spark.conf.set("spark.sql.windowExecBufferSpillThreshold", "2")
       spark.conf.set("spark.sql.windowExecBufferInMemoryThreshold", "2")
-      val df = ExtendedJson.read(spark, sSchema, root,
-        Map("zoneMaps" -> "true"))
+      val df = ExtendedJson.read(spark, sSchema, root)
         .select(col("k"), col("s"),
           lead(col("s"), 1).over(w).as("n1"),
           lead(col("s"), 7).over(w).as("n7"))
@@ -761,8 +754,7 @@ class WindowProps extends AnyFunSuite {
       count(col("v")).over(w.rangeBetween(-5L, 5L)).as("pc5")), root)
     // a d of exactly Long.MaxValue would tie the eviction's wrapped-
     // distance clamp — it must refuse to Spark's own window
-    val huge = ExtendedJson.read(spark, schema, root,
-      Map("zoneMaps" -> "true"))
+    val huge = ExtendedJson.read(spark, schema, root)
       .select(col("k"), sum(col("v"))
         .over(w.rangeBetween(-Long.MaxValue, Window.currentRow)).as("x"))
     val hns = TestPlans.executedNodes(huge)
@@ -985,8 +977,7 @@ class WindowProps extends AnyFunSuite {
     // DUAL-BOUND ts-month frames refuse (the upper bound inverts on
     // the clamp plateau too, and Spark's forward-only upper pointer
     // state has no cross-band carry here) — must fall through whole
-    val dual = ExtendedJson.read(spark, tcSchema, piRoot,
-      Map("zoneMaps" -> "true"))
+    val dual = ExtendedJson.read(spark, tcSchema, piRoot)
       .select(col("k"), expr("sum(v) OVER (ORDER BY k RANGE BETWEEN " +
         "INTERVAL '3' MONTH PRECEDING AND INTERVAL '1' MONTH " +
         "PRECEDING)").as("x"))
@@ -1017,9 +1008,8 @@ class WindowProps extends AnyFunSuite {
             .otherwise(0L).as("gap"))
         .select(col("k"), col("v"), col("gap"),
           sum(col("gap")).over(w).as("session_id"))
-      val banded = q(ExtendedJson.read(spark, schema, root,
-        Map("zoneMaps" -> "true")))
-      val plain = q(ExtendedJson.read(spark, schema, root, Map.empty))
+      val banded = q(ExtendedJson.read(spark, schema, root))
+      val plain = q(ExtendedJson.read(spark, schema, root).localCheckpoint())
       spark.catalog.clearCache()
       val b = banded.collect().map(_.toSeq.toList).toSeq
       val p = plain.collect().map(_.toSeq.toList).toSeq
@@ -1046,9 +1036,8 @@ class WindowProps extends AnyFunSuite {
           // cumulative max and row_number — queue + group machinery in
           // one node) over the band-window child chain
           sum(col("session_id")).over(w.rangeBetween(-2L, 2L)).as("vf"))
-      val b3 = q3(ExtendedJson.read(spark, schema, root,
-        Map("zoneMaps" -> "true")))
-      val p3 = q3(ExtendedJson.read(spark, schema, root, Map.empty))
+      val b3 = q3(ExtendedJson.read(spark, schema, root))
+      val p3 = q3(ExtendedJson.read(spark, schema, root).localCheckpoint())
       spark.catalog.clearCache()
       val b3r = b3.collect().map(_.toSeq.toList).toSeq
       val p3r = p3.collect().map(_.toSeq.toList).toSeq
@@ -1097,8 +1086,7 @@ class WindowProps extends AnyFunSuite {
       maxFiles = 2, uniqueKeys = true)
     def refuses(c: org.apache.spark.sql.Column, root: String,
         sch: StructType, what: String): Unit = {
-      val df = ExtendedJson.read(spark, sch, root,
-        Map("zoneMaps" -> "true")).select(col("k"), c.as("x"))
+      val df = ExtendedJson.read(spark, sch, root).select(col("k"), c.as("x"))
       val ns = TestPlans.executedNodes(df)
       assert(ns.exists(_.isInstanceOf[WindowExec]) &&
         !ns.exists(_.isInstanceOf[BandRunningWindowExec]),
@@ -1159,8 +1147,7 @@ class WindowProps extends AnyFunSuite {
     // the analyzer itself rejects SPECIFIED_WINDOW_FRAME_DIFF_TYPES)
     // mixed delay regimes: RANGE ±f + ROWS FOLLOWING in one node
     locally {
-      val df = ExtendedJson.read(spark, schema, root0,
-        Map("zoneMaps" -> "true")).select(col("k"), col("v"),
+      val df = ExtendedJson.read(spark, schema, root0).select(col("k"), col("v"),
         sum(col("v")).over(w0.rangeBetween(-3L, 3L)).as("a"),
         sum(col("v")).over(w0.rowsBetween(-1, 2)).as("b"))
       val ns = TestPlans.executedNodes(df)
@@ -1183,8 +1170,7 @@ class WindowProps extends AnyFunSuite {
     try {
       spark.conf.set(
         graft.plans.RangeWindowStrategy.MaxRangeFrameRowsKey, "4")
-      val capped = q(ExtendedJson.read(spark, schema, root,
-        Map("zoneMaps" -> "true")))
+      val capped = q(ExtendedJson.read(spark, schema, root))
       val cns = TestPlans.executedNodes(capped)
       assert(cns.exists(_.isInstanceOf[WindowExec]) &&
         !cns.exists(_.isInstanceOf[BandRunningWindowExec]),

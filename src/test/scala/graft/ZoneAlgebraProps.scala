@@ -13,10 +13,10 @@ import org.scalacheck.Prop.forAll
   * prune/skip in the engine rests on, checked over randomized rows and
   * filter trees (no Spark session; everything here is pure JVM):
   *
-  *  - `!maybeTrue(f, stats)` ⇒ NO row of the zone satisfies `f`
+  *  - `!truth(f, stats).maybe` ⇒ NO row of the zone satisfies `f`
   *    (a violated instance would be a wrong prune — silently dropped
   *    rows, the one forbidden outcome);
-  *  - `definitelyTrue(f, stats)` ⇒ EVERY row satisfies `f`
+  *  - `truth(f, stats).all` ⇒ EVERY row satisfies `f`
   *    (a violated instance would let residual elimination skip a filter
   *    that still drops rows, or a metadata aggregate answer for rows the
   *    real scan would reject).
@@ -25,7 +25,8 @@ import org.scalacheck.Prop.forAll
   * (same comparator, same bloom key normalization — signed zeros
   * included), and the value pools are deliberately collision-dense with
   * the nasty cases: -0.0 vs 0.0, NaN, ±Infinity, Long extremes, empty
-  * strings, null-heavy columns, nested And/Or trees.
+  * strings, null-heavy columns, nested And/Or trees, and `Not`/string
+  * prefix leaves the zone algebra cannot bound.
   */
 object ZoneAlgebraProps extends Properties("graft.zonealgebra") {
 
@@ -69,10 +70,15 @@ object ZoneAlgebraProps extends Properties("graft.zonealgebra") {
     Gen.const(IsNull(col)),
     Gen.const(IsNotNull(col)))
 
-  private val anyLeaf: Gen[Filter] = Gen.oneOf(
+  private val boundedLeaf: Gen[Filter] = Gen.oneOf(
     leafGen("k", longPool.map(x => x: Any)),
     leafGen("x", doublePool.map(x => x: Any)),
     leafGen("s", stringPool.map(x => x: Any)))
+
+  private val anyLeaf: Gen[Filter] = Gen.frequency(
+    6 -> boundedLeaf,
+    1 -> boundedLeaf.map(Not(_)),
+    1 -> stringPool.map(StringStartsWith("s", _)))
 
   private def filterGen(depth: Int): Gen[Filter] =
     if (depth <= 0) anyLeaf
@@ -124,8 +130,7 @@ object ZoneAlgebraProps extends Properties("graft.zonealgebra") {
             UTF8String.fromString(s): Any)), StringType))
         val keep = FilterEval.compile(Array(f), schema)
         val irs = rows.map(toIR)
-        val mt = ZoneMaps.maybeTrue(f, stats, schema)
-        val dt = ZoneMaps.definitelyTrue(f, stats, schema)
+        val ZoneMaps.Truth(mt, dt) = ZoneMaps.truth(f, stats, schema)
         // 1. a pruned zone may not contain a satisfying row
         val noWrongPrune = mt || !irs.exists(keep)
         // 2. a covered zone may not contain a rejected row
