@@ -23,6 +23,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    one fails loudly, never reads as a shorter covered set.
   *  - Readers see the last complete generation plus every batch its
   *    manifest does not cover.
+  *  - [[saveBase]] replaces the artifact the same way: its generation
+  *    shadows every batch present until they are deleted.
   *  - [[fold]] writes generation n+1 from generation n plus the eligible
   *    uncovered batches, commits the cumulative manifest, and only then
   *    deletes covered batches and superseded generations. A rerun from any
@@ -78,6 +80,10 @@ object Generations {
 
   val ManifestName = "_folded"
   val FormatName = "_generations"
+  /** Beside a save's manifest once the batches it covered are deleted:
+    * their tags are free again, so the generation covers nothing.
+    */
+  val ReleasedName = "_released"
 
   def render(m: Manifest): String = {
     def str(s: String) = "\"" + jesc(s) + "\""
@@ -158,7 +164,8 @@ object Generations {
     val gens = subdirs(fs, new Path(genRoot), "gen=")
     val old = gens.nonEmpty && !fs.exists(new Path(genRoot, FormatName))
     gens.flatMap { case (n, p) =>
-      if (!old) read(fs, new Path(p, ManifestName)).map((n.toLong, p, _))
+      if (!old) read(fs, new Path(p, ManifestName)).map(m => (n.toLong, p,
+        if (fs.exists(new Path(p, ReleasedName))) Manifest(Covered(Vector.empty)) else m))
       else if (fs.exists(new Path(p, ManifestName))) throw new IllegalStateException(
         s"$p: a manifest of an older format (no $FormatName marker); rebuild the artifact")
       else Option.when(fs.exists(new Path(p, "_SUCCESS")))(
@@ -203,10 +210,11 @@ object Generations {
   /** Replace the artifact with a fresh base: `write` lands it as the NEXT
     * generation, whose manifest covers every batch present, so once
     * committed it shadows everything older; only then are the older
-    * generations and those batches deleted. A crash before the commit
-    * leaves the old artifact readable, after it the new one. Like a
-    * folded tag, a tag the save covered is never read again under this
-    * generation. Nothing outside `gen=`/`batch=` is touched.
+    * generations and those batches deleted, and the generation marked
+    * [[ReleasedName]], so their tags are free for later appends. A crash
+    * before the commit leaves the old artifact readable, after it the new
+    * one; a crash before the mark leaves those tags covered until the
+    * next save. Nothing outside `gen=`/`batch=` is touched.
     */
   def saveBase(spark: SparkSession, genRoot: String, batchRoot: String)(
       write: String => Unit): Unit = {
@@ -218,12 +226,12 @@ object Generations {
     val batches = subdirs(fs, new Path(batchRoot), "batch=")
     write(target.toString)
     commit(fs, new Path(target, ManifestName),
-      Manifest(Covered.of(batches.map(_._1)
-        .sortBy(t => (num(t).getOrElse(Long.MaxValue), t)))))
+      Manifest(Covered.of(batches.map(_._1))))
     batches.foreach { case (_, p) => fs.delete(p, true) }
     subdirs(fs, new Path(genRoot), "gen=").foreach { case (g, p) =>
       if (g != n.toString) fs.delete(p, true)
     }
+    if (batches.nonEmpty) commitText(fs, new Path(target, ReleasedName), "1")
   }
 
   /** Fold generation n plus the `eligible` uncovered batches into

@@ -1672,7 +1672,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     * disjointness BETWEEN groups (`max(g) < min(g+1)`) is what makes the
     * physical RangePartitioning claim honest for CLUSTERED distributions
     * too: equal keys can never straddle groups. Refuses (None) on any
-    * gap: option off, metadata answer planned, storage-partitioned mode
+    * gap: no sidecar, metadata answer planned, storage-partitioned mode
     * (key-grouped wrappers), a stats-less/stale/unsorted/nullable file,
     * a zero-row file, or a group wider than [[ExtJsonScan.MaxMergeWidth]]
     * (a merge that wide means the layout has decayed to

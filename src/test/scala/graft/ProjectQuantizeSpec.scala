@@ -500,8 +500,9 @@ class ProjectQuantizeSpec extends AnyFunSuite {
     val cb = ProductQuantize.train(base, "vec_id", "embedding", dim,
       m = 4, k = 4, iters = 1)
     val codes = java.nio.file.Files.createTempDirectory("pqresave").toString
-    def save(df: org.apache.spark.sql.DataFrame): Unit = ProductQuantize
-      .saveEncoded(ProductQuantize.encode(df, "vec_id", "embedding", index, cb), codes)
+    def save(df: org.apache.spark.sql.DataFrame, root: String = codes): Unit =
+      ProductQuantize.saveEncoded(
+        ProductQuantize.encode(df, "vec_id", "embedding", index, cb), root)
     def ids(): Seq[Long] = ProductQuantize.loadEncoded(spark, codes)
       .select("vec_id").as[Long].collect().toSeq.sorted
     val sibling = java.nio.file.Paths.get(codes, "notes.txt")
@@ -522,6 +523,18 @@ class ProjectQuantizeSpec extends AnyFunSuite {
     assert(ids() == (0L until 60L), "an appended batch outlived the re-save")
     assert(!new java.io.File(s"$codes/batch=b2").exists())
     assert(java.nio.file.Files.exists(sibling), "a save deleted a sibling")
+    // the replaced batch's tag is free again: save-then-append reruns
+    ProductQuantize.appendEncodedBatch(index, cb, batch, "vec_id",
+      "embedding", codes, batchTag = "b2")
+    assert(ids().size == 66, "a re-save left its replaced tag covered")
+    // a save that dies inside its commit leaves the old artifact readable,
+    // and its rerun converges to the new one
+    CrashFs.install(spark.sparkContext.hadoopConfiguration)
+    intercept[java.io.IOException](CrashFs.armed(".*_folded.*")(
+      save(fresh, CrashFs.path(codes))))
+    assert(ids().size == 66, "a torn save changed what readers see")
+    save(fresh, CrashFs.path(codes))
+    assert(ids() == (900L until 910L))
   }
 
   test("an encoded artifact of the older manifest format fails loudly, never folded over") {
