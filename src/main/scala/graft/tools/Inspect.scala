@@ -25,10 +25,12 @@ import graft.ingest.v2.{ExtJsonInputPartition, ExtJsonScan, KeyedExtJsonInputPar
   *  - `probe`: one `PROBE` line per query — shuffle-exchange count, join
   *    keys, the graft exec nodes the plan uses (pin values for PlanSpec,
   *    or the list of queries that reach an operator), and the planned
-  *    split count and bytes of every document-source scan (the batch
+  *    split count, bytes and pushdowns (`push=[…]`: the aggregate mode,
+  *    then `limit`/`topN`) of every document-source scan (the batch
   *    scans over the document source and the band-scan execs), so a plan
-  *    diff also sees files or blocks pruned; `all` probes every
-  *    registered query in sorted name order.
+  *    diff also sees files or blocks pruned and a query falling from a
+  *    metadata or complete aggregate to a scanning one; `all` probes
+  *    every registered query in sorted name order.
   *  - `profile`: runs each query once warm and once measured under a
   *    SparkListener and prints the per-JOB wall-time breakdown, so a
   *    query's wall time decomposes into its sequential driver actions.
@@ -85,13 +87,13 @@ object Inspect {
           case p if p.getClass.getName.startsWith("graft.") => p.nodeName
         }.distinct
         val scans = q.sparkPlan.collect(Function.unlift(docScan)).map {
-          case (node, splits) =>
+          case (node, splits, push) =>
             val bytes = splits.map {
               case p: ExtJsonInputPartition => p.length
               case k: KeyedExtJsonInputPartition => k.delegate.length
               case _ => 0L
             }.sum
-            s"$node(splits=${splits.size},bytes=$bytes)"
+            s"$node(splits=${splits.size},bytes=$bytes,push=[${push.mkString(",")}])"
         }
         println(s"PROBE $n shuffles=$s joins=[${joins.mkString(",")}] " +
           s"graft=[${custom.mkString(",")}] scans=[${scans.mkString(",")}]")
@@ -103,10 +105,12 @@ object Inspect {
     spark.stop()
   }
 
-  /** A document-source scan node and its planned splits: a batch scan
-    * over the document source, or a graft exec reading band groups.
+  /** A document-source scan node, its planned splits and what its scans
+    * took over from the plan: a batch scan over the document source, or a
+    * graft exec reading band groups.
     */
-  private def docScan(p: SparkPlan): Option[(String, Seq[InputPartition])] = {
+  private def docScan(
+      p: SparkPlan): Option[(String, Seq[InputPartition], Seq[String])] = {
     def groups(v: Any): Seq[OrderedBandGroup] = v match {
       case g: OrderedBandGroup => Seq(g)
       case s: Iterable[_] => s.toSeq.flatMap(groups)
@@ -114,15 +118,38 @@ object Inspect {
         t.productIterator.toSeq.flatMap(groups)
       case _ => Nil
     }
+    // scans also sit inside a node's own non-plan fields (a join side)
+    def scans(v: Any): Seq[ExtJsonScan] = v match {
+      case s: ExtJsonScan => Seq(s)
+      case _: SparkPlan => Nil
+      case s: Iterable[_] => s.toSeq.flatMap(scans)
+      case t: Product if t.productPrefix.startsWith("Tuple") ||
+          t.getClass.getName.startsWith("graft.") =>
+        t.productIterator.toSeq.flatMap(scans)
+      case _ => Nil
+    }
     p match {
       case b: BatchScanExec if b.scan.isInstanceOf[ExtJsonScan] =>
-        Some(("BatchScan", b.inputPartitions))
+        Some(("BatchScan", b.inputPartitions,
+          pushOf(b.scan.asInstanceOf[ExtJsonScan])))
       case _ if p.getClass.getName.startsWith("graft.") =>
         val gs = p.productIterator.toSeq.flatMap(groups)
-        Option.when(gs.nonEmpty)((p.nodeName, gs.flatMap(_.files.flatten)))
+        Option.when(gs.nonEmpty)((p.nodeName, gs.flatMap(_.files.flatten),
+          p.productIterator.toSeq.flatMap(scans).flatMap(pushOf).distinct))
       case _ => None
     }
   }
+
+  /** The pushdowns a document scan took: its aggregate mode (`metadata`,
+    * `complete` or `partial`; none when no aggregate was pushed), then
+    * `limit` and `topN` when pushed.
+    */
+  private def pushOf(s: ExtJsonScan): Seq[String] =
+    Seq(Option.when(s.statsAnswer.isDefined)("metadata")
+      .orElse(Option.when(s.completeCount)("complete"))
+      .orElse(Option.when(s.aggPushed)("partial")),
+      Option.when(s.pushedLimit >= 0)("limit"),
+      Option.when(s.pushedTopN >= 0)("topN")).flatten
 
   private final case class JobRow(id: Int, desc: String, start: Long,
       var end: Long = 0L, var stages: Int = 0, var tasks: Int = 0)
