@@ -30,12 +30,17 @@ object ExtendedJson {
     *  - `reportPartitioning=true` — report the hive layout as
     *    KeyGroupedPartitioning so co-partitioned drops join/aggregate
     *    with zero exchange (storage-partitioned reads);
-    *  - `maxSplitBytes`, `maxPushedGroups` — split/pushdown tuning.
+    *  - `rangeAggregation=true` — keep grouped aggregates off the scan so
+    *    the range-layout strategy aggregates band-locally;
+    *  - `maxPushedGroups` — the per-split group cap of a pushed grouped
+    *    aggregate.
     *
-    * A drop that carries a `_graft_zonemaps` sidecar is read with it,
-    * with or without options: file/block data skipping, metadata-only
-    * aggregates, top-N/LIMIT pruning, sorted-scan early exit, and
-    * zone-aware planner stats.
+    * Splits are `spark.sql.files.maxPartitionBytes` long. A drop that
+    * carries a `_graft_zonemaps` sidecar is read with it, with or without
+    * options: file/block data skipping, metadata-only aggregates,
+    * top-N/LIMIT pruning, sorted-scan early exit, and zone-aware planner
+    * stats. Each read lists its drop, loads the sidecar and sizes its
+    * splits once, and plans and answers from that one snapshot.
     */
   def read(spark: SparkSession, schema: StructType, path: String,
       options: Map[String, String]): DataFrame =

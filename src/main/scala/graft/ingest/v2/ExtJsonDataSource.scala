@@ -457,7 +457,7 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     * scan's rows as the answer — is offered ONLY for the unfiltered,
     * ungrouped, all-COUNT(*) skim over an input that planInputPartitions
     * will plan as ONE split anyway (one nonempty visible file, within
-    * `maxSplitBytes` or compressed): the single split's partial row IS
+    * the split size or compressed): the single split's partial row IS
     * the merged row, so the merge node above it buys nothing. Beyond one
     * split the offer is REFUSED deliberately: complete pushdown would
     * force a single sequential reader over the whole drop, while the
@@ -491,22 +491,12 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     */
   private var statsAnswer: Option[(Array[Array[String]], Array[String])] = None
 
-  /** The metadata-aggregate probe's phase-1 sidecar load
-    * ([[ZoneMaps.dropStats]], the scan's own load — block rows arrive
-    * lazily, scoped to min/max survivors), handed to the scan so it is
-    * paid once. A transient read failure caches nothing — the scan then
-    * retries with its own load.
+  /** This read's [[DropSnapshot]], taken at the builder's first need and
+    * handed to the scan, so the probes below and the planned splits see
+    * the same files. Spark pushes filters before it offers aggregates,
+    * so the listing's directory pruning sees the final pushed set.
     */
-  @volatile private var sidecarLoaded:
-      Option[Map[(String, Long, Long), ZoneMaps.FileStats]] = None
-
-  private def sidecarStats(
-      spark: SparkSession): Map[(String, Long, Long), ZoneMaps.FileStats] =
-    sidecarLoaded.getOrElse {
-      val m = ZoneMaps.dropStats(spark, path, fullSchema)
-      sidecarLoaded = Some(m)
-      m
-    }
+  private lazy val snap = new DropSnapshot(path, fullSchema, partCols, pushed)
 
   /** MIN/MAX/COUNT/SUM answered ENTIRELY from the zone-map sidecar — the
     * parquet-footer aggregate pushdown equivalent (Spark's own
@@ -546,12 +536,7 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     if (groupParsed.exists(_.isEmpty)) return None
     val groupCols = groupParsed.flatten
     try {
-      val spark = SparkSession.active
-      val stats = sidecarStats(spark)
-      if (stats.isEmpty) return None
-      val root = new Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val rootUri = fs.makeQualified(root).toUri
+      if (snap.stats.isEmpty) return None
       // every file must be covered by a fresh stats row — one gap and
       // the metadata can't speak for the corpus. Then zone-decide the
       // pushed filter set per file: all-false files drop (they
@@ -559,13 +544,11 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
       // must be all-TRUE or the stats can't speak for its subset of
       // rows. Phase-1 stats carry no blooms — `maybe` is then purely
       // min/max, which only costs refusals, never wrong answers.
-      val perFile = DocListing.walkFiles(fs, fs.listStatus(root).toSeq)
-        .flatMap { st =>
-          val m = stats.getOrElse(ZoneMaps.statsKey(rootUri, st),
-            return None).cols
-          val t = ZoneMaps.truth(pushed.toSeq, m, fullSchema)
-          if (!t.maybe) None else if (t.all) Some(m) else return None
-        }
+      val perFile = snap.listing.flatMap { case (st, _) =>
+        val m = snap.statsOf(st).getOrElse(return None).cols
+        val t = ZoneMaps.truth(pushed.toSeq, m, fullSchema)
+        if (!t.maybe) None else if (t.all) Some(m) else return None
+      }
       // group key per file: every group column must be provably
       // single-valued across the file — constant (min == max, no nulls)
       // or all-null (the SQL null group). Zero-row files join no group.
@@ -732,33 +715,13 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     */
   private var completeOffered = false
 
-  /** Would the listing plan as exactly one split? Walks the glob with an
-    * EARLY EXIT on the second nonempty file — a 100 TB drop answers this
-    * probe after two listStatus results, never a full listing.
+  /** Does the snapshot plan as exactly one split: one nonempty file,
+    * within the split size or compressed? The scan plans from the same
+    * snapshot, so its single-partition `require` holds by construction.
     */
-  private lazy val singleSplitInput: Boolean = try {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val maxSplit = numericOption("maxSplitBytes", _.toLong).getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        SparkSession.active.conf
-          .get("spark.sql.files.maxPartitionBytes", "134217728"))).max(1L)
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val matches = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
-    val isGlob = path.exists("*?[{".contains(_))
-    val roots = if (isGlob) matches.filter(DocListing.visible) else matches
-    var found: FileStatus = null
-    def walk(st: FileStatus): Boolean = // false = bail out (second file)
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).toSeq.filter(DocListing.visible)
-          .forall(walk)
-      else if (!st.isFile || st.getLen == 0) true
-      else if (found == null) { found = st; true }
-      else false
-    val single = roots.forall(walk) && found != null
-    single && (found.getLen <= maxSplit ||
-      new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-        .getCodec(found.getPath) != null)
+  private def singleSplitInput: Boolean = try snap.listing match {
+    case Seq((f, _)) => f.getLen <= snap.maxSplit || snap.compressed(f)
+    case _ => false
   } catch { case scala.util.control.NonFatal(_) => false }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -856,68 +819,38 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     }
 
   override def build(): Scan =
-    new ExtJsonScan(path, fullSchema, required, pushed,
-      numericOption("maxSplitBytes", _.toLong), limit, aggs,
+    new ExtJsonScan(snap, required, pushed, limit, aggs,
       topSorts, topLimit, groups,
       numericOption("maxPushedGroups", _.toInt).getOrElse(16384).max(1),
-      partCols, completeCount = completeOffered && aggs.nonEmpty,
+      completeCount = completeOffered && aggs.nonEmpty,
       arrayTrunc = arrayTrunc,
       statsAnswer = if (completeOffered && (aggs.nonEmpty || groups.nonEmpty))
         statsAnswer
       else None,
-      // the probe's load IS the scan's phase-1 load: sharing is sound
-      // whether or not the metadata answer was planned
-      preloadedZoneStats = sidecarLoaded,
       reportPartitioning = reportPartitioningOn,
       rangeAggregation = rangeAggregationOn)
 }
 
-final class ExtJsonScan(path: String, fullSchema: StructType,
+final class ExtJsonScan(snap: DropSnapshot,
     required: StructType, val pushed: Array[Filter],
-    maxSplitOverride: Option[Long], val pushedLimit: Int = -1,
+    val pushedLimit: Int = -1,
     val pushedAggs: Array[PushedAgg] = Array.empty,
     val pushedSorts: Array[PushedSort] = Array.empty,
     val pushedTopN: Int = -1,
     val pushedGroups: Array[String] = Array.empty,
     maxPushedGroups: Int = 16384,
-    val partCols: Array[String] = Array.empty,
     val completeCount: Boolean = false,
     val arrayTrunc: Map[String, Int] = Map.empty,
     val statsAnswer: Option[(Array[Array[String]], Array[String])] = None,
-    preloadedZoneStats: Option[Map[(String, Long, Long), ZoneMaps.FileStats]] = None,
     val reportPartitioning: Boolean = false,
     val rangeAggregation: Boolean = false)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning {
 
-  /** Declared types of the partition columns, in `partCols` order. */
-  private val partTypes: Array[org.apache.spark.sql.types.DataType] =
-    partCols.map(c => fullSchema.fields.find(_.name.equalsIgnoreCase(c)).get
-      .dataType)
+  import snap.{fullSchema, listing, partRow, partSchema, partTypes,
+    partitionOnly, path, statsOf}
 
-  /** A filter whose every reference is a partition column: fully decided
-    * by the file's path, so it prunes directories/files at planning and
-    * never reaches a reader. A filter mixing partition and data columns
-    * (one `Or`, say) can't prune — it evaluates per row against the
-    * spliced-in constants instead.
-    */
-  private def partitionOnly(f: Filter): Boolean = {
-    val refs = f.references
-    refs.nonEmpty && refs.forall(r => partCols.exists(_.equalsIgnoreCase(r)))
-  }
-
-  /** The one-row evaluation frame for partition-only filters: the filter
-    * machinery is exactly [[FilterEval]], over a schema of just the
-    * partition columns.
-    */
-  private val partSchema = StructType(partCols.zip(partTypes).map {
-    case (c, t) => StructField(c, t, nullable = true)
-  })
-
-  private def partRow(vals: Array[String], where: String): InternalRow =
-    new GenericInternalRow(partCols.indices.map(i =>
-      PartitionValues.toInternal(
-        if (i < vals.length) vals(i) else null, partTypes(i), where)).toArray)
+  val partCols: Array[String] = snap.partCols
 
   /** RUNTIME filters (dynamic pruning): Spark derives them from a join's
     * build side after it materializes — e.g. `k IN (join keys actually
@@ -1035,7 +968,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
       else "") +
       // reports only once planning has loaded the sidecar — description
       // must never force a sidecar read just to explain a plan
-      (zoneStatsLoaded match {
+      (snap.loadedStats match {
         case Some(m) if m.nonEmpty =>
           s", ZoneMaps: ${m.size} files indexed, pruned $zonePrunedFiles" +
             (if (zonePrunedBlocks > 0) s" files, $zonePrunedBlocks blocks"
@@ -1057,8 +990,8 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
           .map { case (c, t) => s"$c ${t.simpleString}" }.mkString(", ")}]" +
           // counts only once the walk has happened — description must
           // never FORCE a listing just to explain a plan
-          (if (listed)
-            s", PartitionPruning: ${prunedDirs.get} dirs, ${prunedFiles.get} files"
+          (if (snap.listed)
+            s", PartitionPruning: ${snap.prunedDirs.get} dirs, ${prunedFiles.get} files"
           else "")
       else "")
 
@@ -1089,7 +1022,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
         }
       val zoneFilters = pushed.filterNot(f =>
         f.references.exists(r => partCols.exists(_.equalsIgnoreCase(r))))
-      if (zoneStats.isEmpty)
+      if (snap.stats.isEmpty)
         (kept.map(_._1.getLen).sum, None)
       else {
         var b = 0L
@@ -1186,72 +1119,14 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
   private def readerFilters: Array[Filter] =
     if (partCols.isEmpty) allFilters else allFilters.filterNot(partitionOnly)
 
-  /** One filesystem listing per Scan, shared by partition planning and
-    * [[estimateStatistics]] — stats are re-read per planning round (and
-    * per AQE re-optimization), and a fresh glob + listStatus each time
-    * is remote-RPC latency paid for nothing. Each file carries the raw
-    * `k=v` values collected on its directory path (aligned to
-    * `partCols`); statically-pushed partition-only filters have already
-    * pruned non-matching DIRECTORIES during the walk.
+  /** Files the full partition-filter set (static + runtime) dropped at
+    * the LATEST planning round (AQE / runtime-filter re-planning
+    * re-plans; the newest count is the one a plan description should
+    * show) — beside the snapshot's pruned directories, the observability
+    * a pruning scan owes: "read 3 files" must be distinguishable from
+    * "there were only 3".
     */
-  private lazy val listing: Seq[(FileStatus, Array[String])] =
-    listFiles(new Path(path),
-      SparkSession.active.sparkContext.hadoopConfiguration)
-
-  /** Directories the static partition filters pruned during the listing
-    * walk (subtrees never listed), and files the full partition-filter
-    * set (static + runtime) dropped at the LATEST planning round (AQE /
-    * runtime-filter re-planning re-plans; the newest count is the one a
-    * plan description should show). Exposed through [[description]] once
-    * known — the observability a pruning scan owes: "read 3 files" must
-    * be distinguishable from "there were only 3". Atomics, not volatile
-    * `+=`: planning can in principle run concurrently (observability
-    * only — results never depend on these).
-    */
-  private val prunedDirs = new java.util.concurrent.atomic.AtomicInteger(0)
   private val prunedFiles = new java.util.concurrent.atomic.AtomicInteger(0)
-  @volatile private var listed = false
-
-  /** The loaded zone-map sidecar (PHASE 1: FILE-level min/max/null rows
-    * only — block rows load lazily in phase 1.5, scoped to the min/max
-    * survivors, and bloom blobs in phase 2), read whenever the drop has
-    * one — empty when the path is not a plain directory or no sidecar
-    * exists (always fail-soft: absent stats cost speed, never rows).
-    * Loaded once per scan like the listing — or not at all, when the
-    * builder's metadata-aggregate probe already paid for it. At a
-    * block-indexed 100 TB drop the block rows are the sidecar's bulk
-    * (columns × blocks-per-file × files); collecting them here would make
-    * EVERY zone-mapped query pay O(corpus-metadata) driver work before
-    * one file is pruned.
-    */
-  @volatile private var zoneStatsLoaded:
-      Option[Map[(String, Long, Long), ZoneMaps.FileStats]] = preloadedZoneStats
-
-  private def zoneStats: Map[(String, Long, Long), ZoneMaps.FileStats] =
-    zoneStatsLoaded.getOrElse {
-      val m: Map[(String, Long, Long), ZoneMaps.FileStats] =
-        try ZoneMaps.dropStats(SparkSession.active, path, fullSchema)
-        catch { case scala.util.control.NonFatal(_) => Map.empty }
-      zoneStatsLoaded = Some(m)
-      m
-    }
-
-  private lazy val zoneRootUri = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    fs.makeQualified(root).toUri
-  }
-
-  /** The sidecar key of a listed file ([[ZoneMaps.statsKey]]). */
-  private def zoneKey(f: FileStatus): (String, Long, Long) =
-    ZoneMaps.statsKey(zoneRootUri, f)
-
-  /** The ONE stats lookup: a listed file's phase-1 stats, None when it
-    * is stats-less or stale.
-    */
-  private def statsOf(f: FileStatus): Option[ZoneMaps.FileStats] =
-    zoneStats.get(zoneKey(f))
 
   @volatile private var zonePrunedFiles = 0
   @volatile private var zonePrunedBlocks = 0
@@ -1289,7 +1164,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     // parse them as null, so body stats would answer "no non-null
     // values" and wrongly kill a disjunct the spliced values satisfy
     // (partition-ONLY filters were already removed; this drops the MIXED
-    // ones). Emptiness is checked before zoneStats so an unfiltered scan
+    // ones). Emptiness is checked before the stats so an unfiltered scan
     // never pays the sidecar load.
     val filters = readerFilters.filterNot(f =>
       f.references.exists(r => partCols.exists(_.equalsIgnoreCase(r)))).toSeq
@@ -1313,13 +1188,13 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     val noFilters = readerFilters.isEmpty
     val sawAll = filters.nonEmpty && filters.length == readerFilters.length
     def allRows(t: ZoneMaps.Truth): Boolean = noFilters || (sawAll && t.all)
-    if ((filters.isEmpty && !wantTopN && !wantLimit) || zoneStats.isEmpty)
+    if ((filters.isEmpty && !wantTopN && !wantLimit) || snap.stats.isEmpty)
       return files.map { case (f, v) => KeptFile(f, v, None, noFilters, None) }
     // phase 1: min/max/null (the loaded stats carry no blooms or blocks
     // yet — both load lazily below, scoped to this phase's survivors)
     val phase1 = files.flatMap { case (f, vals) =>
-      val key = zoneKey(f)
-      zoneStats.get(key) match {
+      val key = snap.key(f)
+      snap.stats.get(key) match {
         case None => Some((f, vals, key, None))
         case Some(s) =>
           val t = ZoneMaps.truth(filters, s.cols, fullSchema)
@@ -1552,13 +1427,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
         return Array(StatsAnswerPartition(rows, types))
       case None =>
     }
-    val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-    val maxSplit = maxSplitOverride.getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")))
-      .max(1L)
+    val maxSplit = snap.maxSplit
     // file-level partition pruning over the FULL filter set: runtime
     // filters (dynamic partition pruning — a dimension join's observed
     // keys) arrive after the listing may already be cached, and files
@@ -1587,7 +1456,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
       // mid-file entry points, so a range split would decode garbage —
       // silent wrong results, the worst kind. One whole-file partition
       // instead; the reader decompresses through the codec.
-      if (codecs.getCodec(f.getPath) != null)
+      if (snap.compressed(f))
         // sortedAsc holds for a whole-file codec split too: the stats
         // pass read the decoded lines in stream order, the same order
         // this reader will
@@ -1638,9 +1507,8 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     }.toArray
     // COMPLETE-pushdown invariant, held loudly: Spark plans no final
     // merge, so two partitions would each surface as an answer row —
-    // wrong results. The builder only offers complete for a
-    // single-split input; a listing that changed (or a conf that shrank
-    // maxPartitionBytes) between planning rounds must fail, not split.
+    // wrong results. The builder only offers complete when this same
+    // snapshot plans as one split, so this holds by construction.
     require(!completeCount || parts.length == 1,
       s"complete COUNT pushdown planned ${parts.length} partitions ($path)")
     // storage-partitioned mode: every split carries its partition-value
@@ -1786,6 +1654,161 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     else Some(gs)
   }
 
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val conf = new SerializableWritable(
+      SparkSession.active.sparkContext.hadoopConfiguration)
+    ExtJsonReaderFactory(conf, parseSchema.json, required.json, readerFilters,
+      pushedLimit, pushedAggs, pushedSorts, pushedTopN, pushedGroups,
+      maxPushedGroups, partCols, arrayTrunc)
+  }
+
+  /** A clone reading only `cols` (exact top-level names, in `required`
+    * order) — the band window's totals-pass column pruning hook:
+    * everything else (the drop snapshot, pushed filters, split planning)
+    * is shared, so the clone's readers visit the same files and
+    * byte ranges while CONVERTING fewer fields per row. Callers own the
+    * alignment contract (their row consumers must expect exactly the
+    * kept columns) and must not prune under pushed aggregates or
+    * partition columns (readSchema stops mirroring `required` there).
+    */
+  private[graft] def pruneTo(cols: Seq[String]): ExtJsonScan = {
+    require(pushedAggs.isEmpty && partCols.isEmpty,
+      "pruneTo applies to plain column scans only")
+    val keep = cols.toSet
+    new ExtJsonScan(snap,
+      StructType(required.fields.filter(f => keep(f.name))), pushed,
+      pushedLimit, pushedAggs, pushedSorts, pushedTopN,
+      pushedGroups, maxPushedGroups, completeCount, arrayTrunc,
+      statsAnswer, reportPartitioning, rangeAggregation)
+  }
+}
+
+/** @param wholeFile the file is compressed (no mid-file entry points):
+  *   the reader opens through the codec at offset 0 and consumes to EOF
+  *   instead of honoring a byte range
+  * @param partValues raw `k=v` path values aligned to the scan's
+  *   partition columns (null entry: no such directory on this file's
+  *   path). Shipped as STRINGS — the deterministic wire form — and
+  *   converted to internal values reader-side by the shared
+  *   [[PartitionValues]] rules.
+  * @param allTrue zone maps PROVED every reader-side filter true for
+  *   every row of this split ([[ZoneMaps.Truth.all]]): its reader
+  *   skips per-row filter evaluation — residual elimination, the dual
+  *   of pruning.
+  * @param sortedAsc zone maps PROVED the file null-free and
+  *   non-decreasing on the pushed ASC top-N's first sort key (byte order
+  *   = row order, so every byte range of the file inherits the proof):
+  *   its reader stops parsing once `topN` kept rows are in hand and the
+  *   current key strictly exceeds the n-th kept key — `ORDER BY key
+  *   LIMIT n` over a sorted drop parses ~n rows per split, not the split.
+  */
+final case class ExtJsonInputPartition(file: String, start: Long, length: Long,
+    wholeFile: Boolean = false, partValues: Array[String] = Array.empty,
+    allTrue: Boolean = false, sortedAsc: Boolean = false)
+    extends InputPartition
+
+/** One read's view of its drop, shared by the scan builder's probes, the
+  * scan and every [[ExtJsonScan.pruneTo]] clone, so the metadata answer,
+  * the complete-COUNT offer and the planned splits all speak for the same
+  * files: the generation-pinned, partition-pruned [[listing]], the
+  * phase-1 sidecar [[stats]] and the split size
+  * (`spark.sql.files.maxPartitionBytes`). Each part is taken once, on
+  * first use — a plan description never forces one — so stats and
+  * splits re-read per planning round (and per AQE re-optimization) pay
+  * no fresh glob and listStatus RPCs.
+  *
+  * @param pushed the statically pushed filters: the partition-only ones
+  *   prune DIRECTORIES during the walk
+  */
+private[v2] final class DropSnapshot(val path: String,
+    val fullSchema: StructType, val partCols: Array[String],
+    pushed: Array[Filter]) {
+
+  private def conf = SparkSession.active.sparkContext.hadoopConfiguration
+
+  /** Declared types of the partition columns, in `partCols` order. */
+  val partTypes: Array[org.apache.spark.sql.types.DataType] =
+    partCols.map(c => fullSchema.fields.find(_.name.equalsIgnoreCase(c)).get
+      .dataType)
+
+  /** A filter whose every reference is a partition column: fully decided
+    * by the file's path, so it prunes directories/files at planning and
+    * never reaches a reader. A filter mixing partition and data columns
+    * (one `Or`, say) can't prune — it evaluates per row against the
+    * spliced-in constants instead.
+    */
+  def partitionOnly(f: Filter): Boolean = {
+    val refs = f.references
+    refs.nonEmpty && refs.forall(r => partCols.exists(_.equalsIgnoreCase(r)))
+  }
+
+  /** The one-row evaluation frame for partition-only filters: the filter
+    * machinery is exactly [[FilterEval]], over a schema of just the
+    * partition columns.
+    */
+  val partSchema = StructType(partCols.zip(partTypes).map {
+    case (c, t) => StructField(c, t, nullable = true)
+  })
+
+  def partRow(vals: Array[String], where: String): InternalRow =
+    new GenericInternalRow(partCols.indices.map(i =>
+      PartitionValues.toInternal(
+        if (i < vals.length) vals(i) else null, partTypes(i), where)).toArray)
+
+  lazy val maxSplit: Long = org.apache.spark.network.util.JavaUtils
+    .byteStringAsBytes(SparkSession.active.conf
+      .get("spark.sql.files.maxPartitionBytes", "134217728")).max(1L)
+
+  private lazy val codecs =
+    new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+
+  /** A compressed file is never byte-split (no mid-stream entry points). */
+  def compressed(f: FileStatus): Boolean = codecs.getCodec(f.getPath) != null
+
+  /** Directories the static partition filters pruned during the listing
+    * walk (subtrees never listed), exposed through the scan's description
+    * once [[listed]]. An atomic: planning can in principle run
+    * concurrently (observability only — results never depend on it).
+    */
+  val prunedDirs = new java.util.concurrent.atomic.AtomicInteger(0)
+  @volatile var listed = false
+
+  /** The loaded zone-map sidecar (PHASE 1: FILE-level min/max/null rows
+    * only — block rows load lazily in phase 1.5, scoped to the min/max
+    * survivors, and bloom blobs in phase 2), read whenever the drop has
+    * one — empty when the path is not a plain directory, no sidecar
+    * exists or the load fails (fail-soft: absent stats cost pruning,
+    * never rows). At a block-indexed 100 TB drop the block rows are the
+    * sidecar's bulk (columns × blocks-per-file × files); collecting them
+    * here would make EVERY zone-mapped query pay O(corpus-metadata)
+    * driver work before one file is pruned.
+    */
+  lazy val stats: Map[(String, Long, Long), ZoneMaps.FileStats] = {
+    loadedStats = Some(
+      try ZoneMaps.dropStats(SparkSession.active, path, fullSchema)
+      catch { case scala.util.control.NonFatal(_) => Map.empty })
+    loadedStats.get
+  }
+
+  /** [[stats]] once loaded — for descriptions, which must never force a
+    * sidecar read just to explain a plan.
+    */
+  @volatile var loadedStats: Option[Map[(String, Long, Long), ZoneMaps.FileStats]] =
+    None
+
+  private lazy val rootUri = {
+    val root = new Path(path)
+    root.getFileSystem(conf).makeQualified(root).toUri
+  }
+
+  /** The sidecar key of a listed file ([[ZoneMaps.statsKey]]). */
+  def key(f: FileStatus): (String, Long, Long) = ZoneMaps.statsKey(rootUri, f)
+
+  /** The ONE stats lookup: a listed file's phase-1 stats, None when it
+    * is stats-less or stale.
+    */
+  def statsOf(f: FileStatus): Option[ZoneMaps.FileStats] = stats.get(key(f))
+
   /** Expand the glob and RECURSE into matched directories: a nested
     * document drop (`orders/date=…/part-….jsonl`) reads completely — the
     * one-level listing this replaces silently dropped subdirectory trees,
@@ -1793,12 +1816,12 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     * entries (`_`/`.` prefixes) are skipped at every level, matching the
     * builtin file sources.
     */
-  private def listFiles(p: Path,
-      conf: Configuration): Seq[(FileStatus, Array[String])] = {
+  lazy val listing: Seq[(FileStatus, Array[String])] = {
+    val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val matches = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
     require(matches.nonEmpty, s"extjson path matches no files: $path")
-    def visible(st: FileStatus): Boolean = DocListing.visible(st)
+    import DocListing.visible
     // directory-level pruning: statically pushed filters referencing ONLY
     // partition columns, evaluated as soon as every referenced column is
     // bound on the path — a definitively-false subtree is never even
@@ -1948,59 +1971,7 @@ final class ExtJsonScan(path: String, fullSchema: StructType,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableWritable(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    ExtJsonReaderFactory(conf, parseSchema.json, required.json, readerFilters,
-      pushedLimit, pushedAggs, pushedSorts, pushedTopN, pushedGroups,
-      maxPushedGroups, partCols, arrayTrunc)
-  }
-
-  /** A clone reading only `cols` (exact top-level names, in `required`
-    * order) — the band window's totals-pass column pruning hook:
-    * everything else (path, pushed filters, zone state, split planning)
-    * is identical, so the clone's readers visit the same files and
-    * byte ranges while CONVERTING fewer fields per row. Callers own the
-    * alignment contract (their row consumers must expect exactly the
-    * kept columns) and must not prune under pushed aggregates or
-    * partition columns (readSchema stops mirroring `required` there).
-    */
-  private[graft] def pruneTo(cols: Seq[String]): ExtJsonScan = {
-    require(pushedAggs.isEmpty && partCols.isEmpty,
-      "pruneTo applies to plain column scans only")
-    val keep = cols.toSet
-    new ExtJsonScan(path, fullSchema,
-      StructType(required.fields.filter(f => keep(f.name))), pushed,
-      maxSplitOverride, pushedLimit, pushedAggs, pushedSorts, pushedTopN,
-      pushedGroups, maxPushedGroups, partCols, completeCount, arrayTrunc,
-      statsAnswer, preloadedZoneStats, reportPartitioning,
-      rangeAggregation)
-  }
 }
-
-/** @param wholeFile the file is compressed (no mid-file entry points):
-  *   the reader opens through the codec at offset 0 and consumes to EOF
-  *   instead of honoring a byte range
-  * @param partValues raw `k=v` path values aligned to the scan's
-  *   partition columns (null entry: no such directory on this file's
-  *   path). Shipped as STRINGS — the deterministic wire form — and
-  *   converted to internal values reader-side by the shared
-  *   [[PartitionValues]] rules.
-  * @param allTrue zone maps PROVED every reader-side filter true for
-  *   every row of this split ([[ZoneMaps.Truth.all]]): its reader
-  *   skips per-row filter evaluation — residual elimination, the dual
-  *   of pruning.
-  * @param sortedAsc zone maps PROVED the file null-free and
-  *   non-decreasing on the pushed ASC top-N's first sort key (byte order
-  *   = row order, so every byte range of the file inherits the proof):
-  *   its reader stops parsing once `topN` kept rows are in hand and the
-  *   current key strictly exceeds the n-th kept key — `ORDER BY key
-  *   LIMIT n` over a sorted drop parses ~n rows per split, not the split.
-  */
-final case class ExtJsonInputPartition(file: String, start: Long, length: Long,
-    wholeFile: Boolean = false, partValues: Array[String] = Array.empty,
-    allTrue: Boolean = false, sortedAsc: Boolean = false)
-    extends InputPartition
 
 object ExtJsonScan {
   /** Widest k-way merge an ordered-band read will plan: one read task
@@ -2318,9 +2289,9 @@ final class StatsAnswerReader(p: StatsAnswerPartition)
   override def close(): Unit = ()
 }
 
-/** Listing rules shared by every walk over a document drop — the scan's
-  * partition-aware listing, the complete-pushdown probes, and the
-  * zone-map builder MUST agree on what counts as a data file (a
+/** Listing rules shared by every walk over a document drop — a read's
+  * [[DropSnapshot]] listing and the writers' walks (the zone-map builder,
+  * the corpus compaction) MUST agree on what counts as a data file (a
   * divergence would let metadata speak for files the scan never reads,
   * or vice versa).
   */

@@ -422,7 +422,7 @@ object CorpusSink extends org.apache.spark.internal.Logging {
 
   /** Root-relative path of the in-place fold's commit manifest — shared
     * with the READER's generation pinning
-    * ([[graft.ingest.v2.DocListing]]): while this file exists, a listing
+    * ([[graft.ingest.v2.DropSnapshot]]): while this file exists, a listing
     * must read one generation, never a mix.
     */
   private[graft] val CompactManifestRelPath: String =

@@ -652,6 +652,52 @@ class CorpusSinkSpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "_compact")))
   }
 
+  test("generation-pinned metadata answers: the old-generation window answers from the covered files' stats") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("score", DoubleType)))
+    def batch(r: Range) =
+      r.map(i => (i.toLong, ((i * 137) % 100) * 10.0)).toDF("doc_id", "score")
+    val dir = Files.createTempDirectory("graft_genpinagg").toString + "/docs"
+    CorpusSink.landJsonlRangeIndexed(batch(1 to 200), "score", dir,
+      numBands = 3, zoneCols = Seq("score", "doc_id"))
+    CorpusSink.landJsonlRangeIndexed(batch(201 to 300), "score", dir,
+      numBands = 2, zoneCols = Seq("score", "doc_id"),
+      appendTag = Some("b1"))
+    // (answer row, answered metadata-only)
+    def answer() = {
+      val df = graft.ingest.ExtendedJson.read(spark, schema, dir)
+        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("lo"),
+          max(col("score")).as("hi"))
+      val scan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+        .queryExecution.sparkPlan.collect {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            b.scan
+        }.head.asInstanceOf[graft.ingest.v2.ExtJsonScan]
+      (df.collect().head, scan.statsAnswer.isDefined)
+    }
+    val (want, metaBefore) = answer()
+    assert(metaBefore && want.getLong(0) == 300L, want.toString)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new org.apache.hadoop.fs.Path(dir))
+    CorpusSink.stageCompaction(spark, schema, root, "score")
+    val manifest = Generations.readText(fs,
+      new org.apache.hadoop.fs.Path(root, CorpusSink.CompactManifestRelPath)).get
+    val (tag, _) = CorpusSink.parseCompactManifest(manifest)
+    val staged = fs.listStatus(
+      new org.apache.hadoop.fs.Path(root, "_compact/data")).toSeq
+      .filter(st => st.isFile && st.getLen > 0 &&
+        !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+    // mid-rename: one unindexed compact file beside the intact covered set
+    fs.rename(staged.head.getPath, new org.apache.hadoop.fs.Path(root,
+      s"compact-$tag-${staged.head.getPath.getName}"))
+    val (got, meta) = answer()
+    assert(meta, "the pinned old generation is fully indexed")
+    assert(got == want)
+  }
+
   test("manifest round-trips, is order-free, and catches tampering") {
     val d = Files.createTempDirectory("graft_manifest").toString
     CorpusSink.writeSharded(corpus(0), "doc_id", d, numShards = 4)

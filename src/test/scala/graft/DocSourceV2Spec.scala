@@ -20,6 +20,14 @@ import graft.schema.Bson
 class DocSourceV2Spec extends AnyFunSuite {
   import TestSpark.spark
 
+  /** `body` with the session's split size set to `bytes`. */
+  private def withMaxPartitionBytes[T](bytes: String)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   private def writeLines(name: String, lines: Seq[String]): String = {
     val dir = Files.createTempDirectory("graft_v2src").toString
     Files.write(Paths.get(dir, name), lines.mkString("\n").getBytes("UTF-8"))
@@ -527,11 +535,13 @@ class DocSourceV2Spec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("i", LongType), StructField("s", StringType)))
     // force many tiny splits so lines straddle split boundaries constantly
-    val split = spark.read.format("graft-extjson").schema(schema)
-      .option("maxSplitBytes", "64").load(s"$dir/big.jsonl")
-    assert(split.rdd.getNumPartitions > 10)
-    val got = split.select("i").collect().map(_.getLong(0)).sorted.toSeq
-    assert(got == (1L to 500L))
+    withMaxPartitionBytes("64") {
+      val split = spark.read.format("graft-extjson").schema(schema)
+        .load(s"$dir/big.jsonl")
+      assert(split.rdd.getNumPartitions > 10)
+      val got = split.select("i").collect().map(_.getLong(0)).sorted.toSeq
+      assert(got == (1L to 500L))
+    }
   }
 
   test("malformed lines become all-null rows (PERMISSIVE twin)") {
@@ -1498,32 +1508,31 @@ class DocSourceV2Spec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", LongType),
       StructField("s", StringType)))
-    def src(maxSplit: String = "") = {
-      val r = spark.read.format("graft-extjson").schema(schema)
-      (if (maxSplit.nonEmpty) r.option("maxSplitBytes", maxSplit) else r)
-        .load(s"$dir/top.jsonl")
+    def src() = spark.read.format("graft-extjson").schema(schema)
+      .load(s"$dir/top.jsonl")
+    withMaxPartitionBytes("256") {
+      // two sort keys (desc + tiebreak asc), many tiny splits — each split
+      // ships at most 5 rows, the global TakeOrdered assembles the answer
+      val df = src().orderBy(col("v").desc, col("k").asc).limit(5)
+      val scan = v2Scan(df)
+      assert(scan.pushedTopN == 5, scan.description())
+      assert(scan.description().contains("PushedTopN"), scan.description())
+      val expect = (1 to 300).map(i => (i.toLong, (i * 7 % 100).toLong))
+        .sortBy { case (k, v) => (-v, k) }.take(5)
+      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == expect)
+      // ascending with NULLS FIRST: the null-v row must surface
+      val asc = src().orderBy(col("v").asc_nulls_first, col("k").asc).limit(3)
+      assert(v2Scan(asc).pushedTopN == 3)
+      val ascRows = asc.collect().map(r =>
+        (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1))).toSeq
+      assert(ascRows.head == ((1000L, null)), ascRows.toString)
+      // with a pushed filter: top-N of the KEPT rows only
+      val filtered = src().filter(col("v") < 50)
+        .orderBy(col("v").desc, col("k").asc).limit(4)
+      val expectF = (1 to 300).map(i => (i.toLong, (i * 7 % 100).toLong))
+        .filter(_._2 < 50).sortBy { case (k, v) => (-v, k) }.take(4)
+      assert(filtered.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == expectF)
     }
-    // two sort keys (desc + tiebreak asc), many tiny splits — each split
-    // ships at most 5 rows, the global TakeOrdered assembles the answer
-    val df = src("256").orderBy(col("v").desc, col("k").asc).limit(5)
-    val scan = v2Scan(df)
-    assert(scan.pushedTopN == 5, scan.description())
-    assert(scan.description().contains("PushedTopN"), scan.description())
-    val expect = (1 to 300).map(i => (i.toLong, (i * 7 % 100).toLong))
-      .sortBy { case (k, v) => (-v, k) }.take(5)
-    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == expect)
-    // ascending with NULLS FIRST: the null-v row must surface
-    val asc = src("256").orderBy(col("v").asc_nulls_first, col("k").asc).limit(3)
-    assert(v2Scan(asc).pushedTopN == 3)
-    val ascRows = asc.collect().map(r =>
-      (r.getLong(0), if (r.isNullAt(1)) null else r.getLong(1))).toSeq
-    assert(ascRows.head == ((1000L, null)), ascRows.toString)
-    // with a pushed filter: top-N of the KEPT rows only
-    val filtered = src("256").filter(col("v") < 50)
-      .orderBy(col("v").desc, col("k").asc).limit(4)
-    val expectF = (1 to 300).map(i => (i.toLong, (i * 7 % 100).toLong))
-      .filter(_._2 < 50).sortBy { case (k, v) => (-v, k) }.take(4)
-    assert(filtered.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == expectF)
     // a non-field sort key refuses the pushdown and stays correct
     val computed = src().orderBy((col("v") + col("k")).asc).limit(2)
     assert(v2Scan(computed).pushedTopN == -1)
@@ -1538,24 +1547,26 @@ class DocSourceV2Spec extends AnyFunSuite {
     gz.write(lines.mkString("\n").getBytes("UTF-8")); gz.close()
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("s", StringType)))
-    // a tiny maxSplitBytes MUST NOT byte-split the gzip stream: exactly
+    // a tiny split size MUST NOT byte-split the gzip stream: exactly
     // one partition per compressed file, all rows decoded
-    val df = spark.read.format("graft-extjson").schema(schema)
-      .option("maxSplitBytes", "64").load(s"$dir/data.jsonl.gz")
-    assert(df.rdd.getNumPartitions == 1,
-      "compressed files must be whole-file partitions")
-    assert(df.select("k").collect().map(_.getLong(0)).sorted.toSeq == (1L to 200L))
-    // pushdown still applies through the codec: filter, count skim, top-N
-    assert(df.filter(col("k") > 190).collect().length == 10)
-    assert(df.agg(count(lit(1))).collect().head.getLong(0) == 200L)
-    val top = df.orderBy(col("k").desc).limit(3).select("k")
-      .collect().map(_.getLong(0)).toSeq
-    assert(top == Seq(200L, 199L, 198L))
-    // grouped aggregate pushdown composes with the codec too: per-file
-    // partials of the decompressed stream, merged upstream
-    val byKey = df.groupBy(col("s")).agg(min(col("k")).as("mn")).collect()
-    assert(byKey.length == 200 && byKey.forall(r =>
-      r.getString(0) == s"row_${r.getLong(1)}"), byKey.take(3).mkString(","))
+    withMaxPartitionBytes("64") {
+      val df = spark.read.format("graft-extjson").schema(schema)
+        .load(s"$dir/data.jsonl.gz")
+      assert(df.rdd.getNumPartitions == 1,
+        "compressed files must be whole-file partitions")
+      assert(df.select("k").collect().map(_.getLong(0)).sorted.toSeq == (1L to 200L))
+      // pushdown still applies through the codec: filter, count skim, top-N
+      assert(df.filter(col("k") > 190).collect().length == 10)
+      assert(df.agg(count(lit(1))).collect().head.getLong(0) == 200L)
+      val top = df.orderBy(col("k").desc).limit(3).select("k")
+        .collect().map(_.getLong(0)).toSeq
+      assert(top == Seq(200L, 199L, 198L))
+      // grouped aggregate pushdown composes with the codec too: per-file
+      // partials of the decompressed stream, merged upstream
+      val byKey = df.groupBy(col("s")).agg(min(col("k")).as("mn")).collect()
+      assert(byKey.length == 200 && byKey.forall(r =>
+        r.getString(0) == s"row_${r.getLong(1)}"), byKey.take(3).mkString(","))
+    }
     // mixed directory: plain + gz files combine completely
     Files.write(Paths.get(dir, "extra.jsonl"),
       """{"k": 1000, "s": "plain"}""".getBytes("UTF-8"))
@@ -1809,20 +1820,37 @@ class DocSourceV2Spec extends AnyFunSuite {
     assert(!s2.completeCount)
     assert(p2.collect { case a: BaseAggregateExec => a }.nonEmpty)
 
-    // one file that SPLITS (tiny maxSplitBytes) refuses too — each range
+    // one file that SPLITS (tiny split size) refuses too — each range
     // ships its own partial and the merge must stay
-    val split = ExtendedJson.read(spark, schema, s"$dir/c.jsonl",
-      Map("maxSplitBytes" -> "64")).agg(count(lit(1)).as("n"))
-    assert(split.collect().head.getLong(0) == 37L)
-    val (p3, s3) = scanOf(split)
-    assert(!s3.completeCount)
-    assert(p3.collect { case a: BaseAggregateExec => a }.nonEmpty)
+    withMaxPartitionBytes("64") {
+      val split = ExtendedJson.read(spark, schema, s"$dir/c.jsonl")
+        .agg(count(lit(1)).as("n"))
+      assert(split.collect().head.getLong(0) == 37L)
+      val (p3, s3) = scanOf(split)
+      assert(!s3.completeCount)
+      assert(p3.collect { case a: BaseAggregateExec => a }.nonEmpty)
+    }
 
     // a filtered count refuses complete (rows must evaluate per row)
     val filtered = ExtendedJson.read(spark, schema, s"$dir/c.jsonl")
       .filter(col("k") > 30).agg(count(lit(1)).as("n"))
     assert(filtered.collect().head.getLong(0) == 7L)
     assert(!scanOf(filtered)._2.completeCount)
+  }
+
+  test("a planned complete COUNT(*) answers from its own snapshot after a file lands") {
+    val schema = StructType(Seq(StructField("k", LongType)))
+    val dir = writeLines("a.jsonl", (1 to 37).map(i => s"""{"k": $i}"""))
+    val df = ExtendedJson.read(spark, schema, dir).agg(count(lit(1)).as("n"))
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution
+    // planning takes the snapshot: one file, so the count is complete
+    qe.optimizedPlan
+    Files.write(Paths.get(dir, "b.jsonl"),
+      (38 to 40).map(i => s"""{"k": $i}""").mkString("\n").getBytes("UTF-8"))
+    assert(df.collect().head.getLong(0) == 37L)
+    assert(qe.sparkPlan.collect { case b: BatchScanExec => b.scan }
+      .head.asInstanceOf[ExtJsonScan].completeCount)
   }
 
   test("ORDER BY partition columns + LIMIT degenerates to per-split early exit") {
