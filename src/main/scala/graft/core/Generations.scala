@@ -2,7 +2,7 @@ package graft.core
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path, UnsupportedFileSystemException}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-safe generations for the engine's appendable artifacts — the
@@ -18,7 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - A generation is COMPLETE iff its `_folded` manifest exists; the
   *    manifest is the cumulative set of batch tags it covers.
-  *  - Manifests commit atomically (hidden temp file, then rename) and read
+  *  - Manifests commit atomically (hidden temp file, then a no-replace
+  *    rename: a commit creates its file, never rewrites one) and read
   *    back validated (re-rendering must reproduce the bytes): a damaged
   *    one fails loudly, never reads as a shorter covered set.
   *  - Readers see the last complete generation plus every batch its
@@ -109,26 +110,40 @@ object Generations {
     m
   }
 
-  /** Atomic write: a hidden temp file beside `path`, then rename — a crash
-    * never leaves a partial file AT `path`. With `replace = false` the
-    * first writer wins: a no-replace rename, false (and no change) when
-    * `path` already exists.
+  /** Atomic create: a hidden temp file beside `path`, then a no-replace
+    * rename — a crash never leaves a partial file AT `path`, and the first
+    * writer wins: false (the temp file deleted, `path` unchanged) when
+    * `path` already exists. A scheme with no `AbstractFileSystem` binding
+    * renames only after checking `path` is absent, which is atomic for
+    * the single writer every root here has.
     */
-  def commitText(fs: FileSystem, path: Path, text: String,
-      replace: Boolean = true): Boolean = {
-    val tmp = new Path(path.getParent, s".${path.getName}" +
-      (if (replace) "" else s".${java.util.UUID.randomUUID}") + ".tmp")
+  def commitText(fs: FileSystem, path: Path, text: String): Boolean = {
+    val tmp = new Path(path.getParent, s".${path.getName}.${java.util.UUID.randomUUID}.tmp")
     val out = fs.create(tmp, true)
     try out.write(text.getBytes(UTF_8)) finally out.close()
-    if (replace) require(fs.rename(tmp, path), s"commit failed: $tmp -> $path")
-    else try FileContext.getFileContext(fs.getUri, fs.getConf)
-      .rename(tmp, path, Options.Rename.NONE)
-    catch { case _: FileAlreadyExistsException => fs.delete(tmp, false); return false }
-    true
+    val created =
+      try {
+        FileContext.getFileContext(fs.getUri, fs.getConf)
+          .rename(tmp, path, Options.Rename.NONE)
+        true
+      } catch {
+        case _: FileAlreadyExistsException => false
+        case _: UnsupportedFileSystemException =>
+          !fs.exists(path) && fs.rename(tmp, path)
+      }
+    if (!created) fs.delete(tmp, false)
+    created
   }
 
+  /** [[commitText]] of a record nothing else writes: an existing file at
+    * `path` is reported, never replaced.
+    */
   def commit(fs: FileSystem, path: Path, m: Manifest): Unit =
-    commitText(fs, path, render(m))
+    commitNew(fs, path, render(m))
+
+  private def commitNew(fs: FileSystem, path: Path, text: String): Unit =
+    if (!commitText(fs, path, text))
+      throw new IllegalStateException(s"commit refused: $path already exists")
 
   /** None when `path` does not exist. */
   def readText(fs: FileSystem, path: Path): Option[String] =
@@ -231,7 +246,7 @@ object Generations {
     subdirs(fs, new Path(genRoot), "gen=").foreach { case (g, p) =>
       if (g != n.toString) fs.delete(p, true)
     }
-    if (batches.nonEmpty) commitText(fs, new Path(target, ReleasedName), "1")
+    if (batches.nonEmpty) commitNew(fs, new Path(target, ReleasedName), "1")
   }
 
   /** Fold generation n plus the `eligible` uncovered batches into

@@ -375,7 +375,7 @@ private[pipelines] object CheckpointRunId {
     get(spark, checkpointDir).getOrElse {
       val (fs, p) = marker(spark, checkpointDir)
       Generations.commitText(fs, p,
-        java.util.UUID.randomUUID().toString.replace("-", ""), replace = false)
+        java.util.UUID.randomUUID().toString.replace("-", ""))
       get(spark, checkpointDir).get
     }
 
@@ -459,13 +459,6 @@ object StreamingIvfIngest {
     Summary(batches.get(), w.exists(_.needsRebuild), w)
   }
 
-  /** One compaction: `foldedBatches` batch directories folded into
-    * generation `generation` of the canonical cell-partitioned layout at
-    * `path` (0 = nothing new to fold).
-    */
-  type Compaction = Generations.Fold
-  val Compaction = Generations.Fold
-
   private[pipelines] def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -503,7 +496,7 @@ object StreamingIvfIngest {
     *   yet (no marker, no commits, or no landed batch directories)
     */
   def compact(spark: SparkSession, invertedDir: String, compactedDir: String,
-      checkpointDir: String): Option[Compaction] = {
+      checkpointDir: String): Option[Generations.Fold] = {
     val root = new org.apache.hadoop.fs.Path(compactedDir)
     require(!Generations.legacy(fs(spark, root), root),
       s"$compactedDir holds pre-run-scoped generations whose covered-batch " +
@@ -520,7 +513,7 @@ object StreamingIvfIngest {
     */
   private[pipelines] def foldRun(spark: SparkSession, batchRoot: String,
       genRoot: String, checkpointDir: String)(
-      write: (DataFrame, String) => Unit): Option[Compaction] =
+      write: (DataFrame, String) => Unit): Option[Generations.Fold] =
     CheckpointRunId.get(spark, checkpointDir).flatMap { runId =>
       val commits = new org.apache.hadoop.fs.Path(checkpointDir, "commits")
       val f = fs(spark, commits)
@@ -558,14 +551,11 @@ object StreamingIvfIngest {
   */
 object StreamingPqIngest {
 
-  /** The float ingest's summary: one ingest, one summary. */
-  type Summary = StreamingIvfIngest.Summary
-  val Summary = StreamingIvfIngest.Summary
-
   def run(spark: SparkSession, index: graft.ops.Similarity.IvfIndex,
       cb: graft.ops.ProductQuantize.PqCodebooks, batchDir: String,
       schema: StructType, idCol: String, vecCol: String, codesDir: String,
-      checkpointDir: String, relTolerance: Double = 0.05): Summary = {
+      checkpointDir: String,
+      relTolerance: Double = 0.05): StreamingIvfIngest.Summary = {
     // ONE ingest implementation: everything except the written row form
     // (code column instead of the float vector) IS the float ingest —
     // checkpointing, drift gating, and the replay-idempotent landing
@@ -657,7 +647,7 @@ object StreamingNearDupIngest {
     * ingest.
     */
   def compact(spark: SparkSession, indexDir: String,
-      checkpointDir: String): Option[StreamingIvfIngest.Compaction] =
+      checkpointDir: String): Option[Generations.Fold] =
     // plain union write, no shuffle: the scan packs the many small batch
     // files into size-bounded partitions, so the generation's file count
     // is bounded by bytes/maxPartitionBytes regardless of batch count

@@ -39,6 +39,21 @@ class GenerationsSpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "._folded.tmp")))
   }
 
+  test("a second commit to an existing path keeps the first content and leaves no temp file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_gens2").toString
+    val p = new org.apache.hadoop.fs.Path(dir, "_folded")
+    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val first = Manifest(Covered.of(Seq("0")))
+    Generations.commit(fs, p, first)
+    val e = intercept[IllegalStateException](
+      Generations.commit(fs, p, Manifest(Covered.of(Seq("0", "1")))))
+    assert(e.getMessage.contains(p.toString), e.getMessage)
+    assert(!Generations.commitText(fs, p, "second"))
+    assert(Generations.read(fs, p).contains(first))
+    val left = new java.io.File(dir).list().toSeq
+    assert(left.forall(n => !n.contains(".tmp")), left)
+  }
+
   test("consecutive batch ids hold as one range: the record grows with gaps, not count") {
     val ids = (0 until 10000).map(_.toString)
     val c = Covered.of(ids)

@@ -740,8 +740,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // marker commit never replaces, and leaves no temp file behind
     val fresh = new org.apache.hadoop.fs.Path(s"$work/em_ckpt2", "_graft_run_id")
     val fs = fresh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(graft.core.Generations.commitText(fs, fresh, "first", replace = false))
-    assert(!graft.core.Generations.commitText(fs, fresh, "second", replace = false))
+    assert(graft.core.Generations.commitText(fs, fresh, "first"))
+    assert(!graft.core.Generations.commitText(fs, fresh, "second"))
     assert(graft.core.Generations.readText(fs, fresh).contains("first"))
     assert(fs.listStatus(fresh.getParent).map(_.getPath.getName)
       .forall(n => !n.endsWith(".tmp")))
