@@ -121,16 +121,13 @@ object Generations {
     val tmp = new Path(path.getParent, s".${path.getName}.${java.util.UUID.randomUUID}.tmp")
     val out = fs.create(tmp, true)
     try out.write(text.getBytes(UTF_8)) finally out.close()
-    val created =
-      try {
-        FileContext.getFileContext(fs.getUri, fs.getConf)
-          .rename(tmp, path, Options.Rename.NONE)
-        true
-      } catch {
-        case _: FileAlreadyExistsException => false
-        case _: UnsupportedFileSystemException =>
-          !fs.exists(path) && fs.rename(tmp, path)
-      }
+    val created = try {
+      FileContext.getFileContext(fs.getUri, fs.getConf).rename(tmp, path, Options.Rename.NONE)
+      true
+    } catch {
+      case _: FileAlreadyExistsException => false
+      case _: UnsupportedFileSystemException => !fs.exists(path) && fs.rename(tmp, path)
+    }
     if (!created) fs.delete(tmp, false)
     created
   }

@@ -1427,7 +1427,6 @@ final class ExtJsonScan(snap: DropSnapshot,
         return Array(StatsAnswerPartition(rows, types))
       case None =>
     }
-    val maxSplit = snap.maxSplit
     // file-level partition pruning over the FULL filter set: runtime
     // filters (dynamic partition pruning — a dimension join's observed
     // keys) arrive after the listing may already be cached, and files
@@ -1467,7 +1466,7 @@ final class ExtJsonScan(snap: DropSnapshot,
         case Some(blocks) =>
           // SPLIT-LEVEL skipping: plan only the surviving blocks —
           // adjacent survivors coalesce into runs (each run re-chopped
-          // at maxSplit, preserving the line-ownership contract: any
+          // at the split size, preserving the line-ownership contract: any
           // cut of a byte range at interior boundaries partitions its
           // lines), non-matching ranges of the file are never read.
           // Pruned blocks tile the gap, so the row loss is exactly the
@@ -1491,16 +1490,16 @@ final class ExtJsonScan(snap: DropSnapshot,
           runs.result().flatMap { case (s, e, covered) =>
             // a run's rows are the union of its blocks' rows, so if
             // every block is all-true, any re-chop of the run is too
-            (s until e by maxSplit).map { off =>
+            (s until e by snap.maxSplit).map { off =>
               ExtJsonInputPartition(f.getPath.toString, off,
-                math.min(maxSplit, e - off), partValues = vals,
+                math.min(snap.maxSplit, e - off), partValues = vals,
                 allTrue = allTrue || covered, sortedAsc = k.sortedAsc)
             }
           }
         case None =>
-          (0L until f.getLen by maxSplit).map { off =>
+          (0L until f.getLen by snap.maxSplit).map { off =>
             ExtJsonInputPartition(f.getPath.toString, off,
-              math.min(maxSplit, f.getLen - off),
+              math.min(snap.maxSplit, f.getLen - off),
               partValues = vals, allTrue = allTrue, sortedAsc = k.sortedAsc)
           }
       }
@@ -1793,8 +1792,7 @@ private[v2] final class DropSnapshot(val path: String,
   /** [[stats]] once loaded — for descriptions, which must never force a
     * sidecar read just to explain a plan.
     */
-  @volatile var loadedStats: Option[Map[(String, Long, Long), ZoneMaps.FileStats]] =
-    None
+  @volatile var loadedStats: Option[Map[(String, Long, Long), ZoneMaps.FileStats]] = None
 
   private lazy val rootUri = {
     val root = new Path(path)
@@ -1821,7 +1819,6 @@ private[v2] final class DropSnapshot(val path: String,
     val fs = p.getFileSystem(conf)
     val matches = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
     require(matches.nonEmpty, s"extjson path matches no files: $path")
-    import DocListing.visible
     // directory-level pruning: statically pushed filters referencing ONLY
     // partition columns, evaluated as soon as every referenced column is
     // bound on the path — a definitively-false subtree is never even
@@ -1852,7 +1849,7 @@ private[v2] final class DropSnapshot(val path: String,
         if ((bound2 ne bound) && pruned(vals2, bound2, st.getPath.toString)) {
           prunedDirs.incrementAndGet()
           Seq.empty
-        } else fs.listStatus(st.getPath).toSeq.filter(visible)
+        } else fs.listStatus(st.getPath).toSeq.filter(DocListing.visible)
           .flatMap(expand(_, vals2, bound2))
       } else Seq((st, vals))
     // a WILDCARD match on a hidden name is dropped like the builtin file
@@ -1861,7 +1858,7 @@ private[v2] final class DropSnapshot(val path: String,
     // data. Only an EXPLICIT literal path (no glob metacharacters) may
     // name a hidden root: the caller asked for that exact directory.
     val isGlob = path.exists("*?[{".contains(_))
-    val roots = if (isGlob) matches.filter(visible) else matches
+    val roots = if (isGlob) matches.filter(DocListing.visible) else matches
     // a glob whose every match is hidden-named must fail LOUDLY like an
     // unmatched path — a silent zero-partition scan is partial results
     // with no error, the failure mode this listing exists to prevent
