@@ -2,6 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 
 /** Benchmark main. Prints exactly ONE JSON line:
@@ -58,6 +59,15 @@ object Bench {
   private def runOnce(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Classes compiled by Spark's codegen so far in this JVM (one histogram
+    * sample per compile, so the count is exact). A query's delta over its
+    * measured passes is its `codegen_compiles`: after the warm-up pass its
+    * plan's code is cached, so a nonzero count means a per-pass literal in
+    * the generated code or a cache too small for the query.
+    */
+  private def compiledClasses(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** 1/5/15-minute load averages — the direct machine-contention signal.
     * Captured at sweep start/end and on every interleaved control, so a
     * contended record is SELF-LABELING (the r13 adjudication burned a
@@ -106,6 +116,7 @@ object Bench {
     val allRuns = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val reruns = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val loadStart = loadavg()
 
     // SPARK_GRAFT_BENCH_ONLY=q45_asof_join,q52_dedup_clusters runs just the
@@ -199,6 +210,7 @@ object Bench {
           runOnce(fn(spark, sfDir))
           (System.nanoTime() - t0) / 1e9
         }
+        val compiledBefore = compiledClasses()
         val runs = measure(measuredRuns)
         // self-diagnosing contention: passes disagreeing >3× get one
         // same-length re-run appended to the record — min stays the
@@ -211,6 +223,7 @@ object Bench {
             measure(measuredRuns)
           } else Seq.empty[Double]
         val all = runs ++ extra
+        compiles(name) = compiledClasses() - compiledBefore
         // headline estimators come from ONE fixed-size window (the
         // cleanest contiguous measuredRuns samples) so a rerun never
         // shifts a query's estimator basis; the full pool is in `runs`
@@ -287,6 +300,7 @@ object Bench {
     val la = loadStart.mkString("[", ",", "]")
     val lb = loadEnd.mkString("[", ",", "]")
     val rrs = reruns.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    val ccs = compiles.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     // JIT code-cache occupancy at sweep end, per CodeHeap pool: a sweep
     // this size generates thousands of codegen classes, and a SATURATED
     // pool silently disables C2 for the rest of the session — late-sweep
@@ -317,7 +331,7 @@ object Bench {
     val notes = sys.env.get("SPARK_GRAFT_BENCH_NOTES")
       .map(n => s""","notes":${jstr(n)}""").getOrElse("")
     val record =
-      s"""{"metric":"total","value":$total,"unit":"sec","median_total":$medianTotal,"queries":$qs,"medians":$ms,"runs":$rs,"reruns":$rrs,"errors":$es,"control":$cs,"control_runs":$crs,"control_timeline":$tl,"loadavg_start":$la,"loadavg_end":$lb,"code_cache":$codeCache$notes,"tier":${jstr(tier)},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","median_total":$medianTotal,"queries":$qs,"medians":$ms,"runs":$rs,"reruns":$rrs,"codegen_compiles":$ccs,"errors":$es,"control":$cs,"control_runs":$crs,"control_timeline":$tl,"loadavg_start":$la,"loadavg_end":$lb,"code_cache":$codeCache$notes,"tier":${jstr(tier)},"sf":${jstr(sfDir)}}"""
     println(record)
     // the driver's BENCH_r*.json keeps only a 2,000-char stdout tail, which
     // truncates the per-query numbers for most of the registry — persist

@@ -36,7 +36,9 @@ class GenerationsSpec extends AnyFunSuite {
     assert(Generations.read(fs, p).isEmpty)
     Generations.commit(fs, p, Manifest(Covered.of(Seq("0", "1"))))
     assert(Generations.read(fs, p).contains(Manifest(Covered.of(Seq("0", "1")))))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "._folded.tmp")))
+    // the temp name carries a uuid (`._folded.<uuid>.tmp`): list, never probe
+    val left = new java.io.File(dir).list().toSeq
+    assert(left.contains("_folded") && left.forall(n => !n.contains(".tmp")), left)
   }
 
   test("a second commit to an existing path keeps the first content and leaves no temp file") {

@@ -1269,4 +1269,96 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       } finally conn.close()
     }
   }
+
+  test("a second daily cycle with new keys, paths and stamps compiles no class") {
+    // a daily cycle (a delta and a snapshot diff per table, as perfbench's
+    // `incremental` runs them) compiles more classes than Spark's default
+    // codegen cache of 100 holds (129 here under Spark's defaults, ~145 in
+    // perfbench): the cyclic reuse then hits 0% and every cycle recompiles
+    // nearly all of them (GraftSession.codegenCacheEntries).
+    // Any per-call value inlined as a literal into generated code (a max id,
+    // a stamp) makes the second cycle's code new and fails this too, as does
+    // a per-call class name (AQE's whole-stage codegen ids).
+    import scala.collection.mutable
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.types.{BooleanType, DateType}
+    import graft.pipelines.SnapshotUpdatePipeline
+    val urlC = "jdbc:derby:memory:graftcycle;create=true"
+    val dbC = TargetDb(urlC, DerbyUpsertDialect, TableSpec.derbyType,
+      supportsIfNotExists = false, supportsForeignKeys = false)
+    val root = Files.createTempDirectory("graft_cycle")
+    val specs = Seq(Specs.users, Specs.loanapplications)
+    val rnd = new scala.util.Random(11)
+    def key(s: TableSpec): String = s.policy.keyOption.getOrElse("_id")
+    // live model per table: business key -> flat row (CSV field values)
+    val live = specs.map(s => s.table -> mutable.LinkedHashMap.empty[String, Seq[String]]).toMap
+    var docs = 0
+    def fresh(s: TableSpec): Seq[String] = {
+      docs += 1
+      val id = f"$docs%024x"
+      s.flatSchema.fields.toSeq.map { f =>
+        if (f.name == "_id") id
+        else if (f.name == key(s)) s"$id-0"
+        else f.dataType match {
+          case BooleanType => rnd.nextBoolean().toString
+          case DateType => java.time.LocalDate.ofEpochDay(19000L + rnd.nextInt(900)).toString
+          case _ => s"${f.name}-${rnd.nextInt(1000)}"
+        }
+      }
+    }
+    def changed(s: TableSpec, row: Seq[String]): Seq[String] =
+      s.flatSchema.fieldNames.toSeq.zip(row).zip(fresh(s)).map { case ((name, old), next) =>
+        if (name == "_id" || name == key(s)) old else next }
+    def put(s: TableSpec, rows: Seq[Seq[String]]): Unit =
+      rows.foreach(r => live(s.table)(r(s.flatSchema.fieldIndex(key(s)))) = r)
+    def drop(s: TableSpec, dir: String, rows: Iterable[Seq[String]]): String = {
+      val p = root.resolve(dir).resolve(s.table)
+      Files.createDirectories(p)
+      val lines = s.flatSchema.fieldNames.mkString(",") +: rows.map(_.mkString(",")).toSeq
+      Files.write(p.resolve("part-0.csv"), String.join("\n", lines: _*).getBytes)
+      p.toString
+    }
+    def landedKeys(s: TableSpec): Set[String] = {
+      val conn = DriverManager.getConnection(urlC)
+      try {
+        val rs = conn.createStatement().executeQuery(s"SELECT ${q(key(s))} FROM ${q(s.table)}")
+        val out = Set.newBuilder[String]
+        while (rs.next()) out += rs.getString(1)
+        out.result()
+      } finally conn.close()
+    }
+    def snapshot(s: TableSpec, dir: String): Unit = {
+      SnapshotUpdatePipeline.run(spark, s, drop(s, dir, live(s.table).values), dbC)
+      assert(landedKeys(s) == live(s.table).keySet, s.table)
+    }
+    // one cycle: per table a delta of 16 changed known keys and 4 new keys,
+    // then per table a snapshot with 8 updated, 4 vanished and 4 new keys
+    def cycle(c: Int): Unit = {
+      specs.foreach { s =>
+        val known = rnd.shuffle(live(s.table).keys.toSeq).take(16).map(k => changed(s, live(s.table)(k)))
+        val batch = known ++ Seq.fill(4)(fresh(s))
+        assert(DailyUpdatePipeline.run(spark, s, drop(s, s"delta_$c", batch), dbC,
+          root.resolve("archive").toString, s"d$c"))
+        put(s, batch)
+        assert(landedKeys(s) == live(s.table).keySet, s.table)
+      }
+      specs.foreach { s =>
+        val m = live(s.table)
+        val (upd, gone) = rnd.shuffle(m.keys.toSeq).take(12).splitAt(8)
+        put(s, upd.map(k => changed(s, m(k))) ++ Seq.fill(4)(fresh(s)))
+        gone.foreach(m.remove)
+        snapshot(s, s"snapshot_$c")
+      }
+    }
+    specs.foreach { s => put(s, Seq.fill(200)(fresh(s))); snapshot(s, "seed") }
+    def compiles(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles(cycle(1))
+    val second = compiles(cycle(2))
+    info(s"classes compiled: first cycle $first, second cycle $second")
+    assert(second == 0)
+  }
 }
