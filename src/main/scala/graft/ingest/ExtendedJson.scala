@@ -30,17 +30,17 @@ object ExtendedJson {
     *  - `reportPartitioning=true` — report the hive layout as
     *    KeyGroupedPartitioning so co-partitioned drops join/aggregate
     *    with zero exchange (storage-partitioned reads);
-    *  - `rangeAggregation=true` — keep grouped aggregates off the scan so
-    *    the range-layout strategy aggregates band-locally;
-    *  - `maxPushedGroups` — the per-split group cap of a pushed grouped
-    *    aggregate.
+    *  - `rangeAggregation=true` — let the range-layout strategy
+    *    aggregate `GROUP BY key` band-locally with zero exchange.
     *
     * Splits are `spark.sql.files.maxPartitionBytes` long. A drop that
     * carries a `_graft_zonemaps` sidecar is read with it, with or without
     * options: file/block data skipping, metadata-only aggregates,
     * top-N/LIMIT pruning, sorted-scan early exit, and zone-aware planner
     * stats. Each read lists its drop, loads the sidecar and sizes its
-    * splits once, and plans and answers from that one snapshot.
+    * splits once, and plans and answers from that one snapshot. An
+    * aggregate reaches the scan only as a metadata answer or a one-split
+    * COUNT(*); every other aggregate is Spark's own over the scanned rows.
     */
   def read(spark: SparkSession, schema: StructType, path: String,
       options: Map[String, String]): DataFrame =

@@ -132,22 +132,10 @@ final case class PushedAgg(kind: String, field: String) {
   }
 }
 
-/** The partial-sum column type contract with `V2ScanRelationPushDown`'s
-  * final-merge rewrite (verified against the Spark 4.1.2 bytecode):
-  *
-  *  - NON-decimal sums reuse the scan's partial column AS-IS as the new
-  *    `Sum` child — so integral children declare LONG partials (the
-  *    original `SUM(int)` result type is Long, and `Sum(long)` is Long:
-  *    schema-exact, and per-split accumulation can't wrap at int range)
-  *    and float/double children declare DOUBLE (`SUM(float)` is Double).
-  *  - DECIMAL sums get the partial column CAST BACK to the CHILD's
-  *    decimal(p,s) before the final `Sum` — so the reader must declare
-  *    (p,s) itself AND keep every emitted partial inside (p,s), flushing
-  *    a group's partial row BEFORE an accumulation would overflow (the
-  *    cast of an over-precision partial would silently null under
-  *    non-ANSI semantics — wrong results, the worst kind). Flushed
-  *    duplicates per key are exactly what the final merge already
-  *    handles (the maxPushedGroups argument).
+/** Sum typing shared by the aggregate translation and the metadata
+  * answer: which children sum, and Spark's Sum RESULT type, which a
+  * metadata answer row carries (it is the final result; nothing re-sums
+  * it above the scan).
   */
 private[v2] object SumTypes {
   import org.apache.spark.sql.types._
@@ -155,15 +143,6 @@ private[v2] object SumTypes {
     case IntegerType | LongType | FloatType | DoubleType | _: DecimalType => true
     case _ => false
   }
-  def partialType(child: DataType): DataType = child match {
-    case IntegerType | LongType => LongType
-    case FloatType | DoubleType => DoubleType
-    case d: DecimalType => d
-    case other => throw new IllegalStateException(s"unsummable type $other")
-  }
-  /** Spark's Sum RESULT type — what a COMPLETE pushdown row must carry
-    * (a partial row carries [[partialType]] and is re-summed above).
-    */
   def resultType(child: DataType): DataType = child match {
     case IntegerType | LongType => LongType
     case FloatType | DoubleType => DoubleType
@@ -353,28 +332,6 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     case _ => None
   }
 
-  /** COUNT(*) / COUNT(col) / MIN(col) / MAX(col) / SUM(col) combinations
-    * push, grouped or not (PARTIAL: each split returns one row PER
-    * OBSERVED GROUP of its local aggregates — one row total when
-    * ungrouped — and Spark's final aggregation merges them: sum of
-    * counts/sums, min of mins) — the `$group: {_id: "$field", …}`
-    * analogue of the reference's aggregation pipeline (`$group: {_id:
-    * null}` being the ungrouped special case; `$sum` is MQL's single
-    * most idiomatic accumulator, `user_table.py:25-53` being the S1
-    * pipeline surface). AVG also lands here: Spark rewrites it to
-    * SUM + COUNT before pushing when only partial pushdown is supported.
-    * Group keys and aggregate columns may be NESTED (dotted paths),
-    * resolved like pushed filter references. An all-COUNT(*) push with
-    * no filters and no grouping never even parses (the newline skim);
-    * anything referencing a column parses just that column. Reader
-    * memory is bounded: a split observing more than `maxPushedGroups`
-    * distinct keys flushes its partial map and starts over — duplicate
-    * partial rows per key are exactly what the final merge already
-    * handles (decimal and long sums also flush pre-overflow, see
-    * [[SumTypes]]).
-    * Refused under a pushed limit/top-N — Spark then falls back to the
-    * ordinary scan + agg.
-    */
   /** One v2 aggregate expression → the reader's serializable form —
     * THE single translation, shared by [[pushAggregation]] and the
     * metadata-only answer ([[statsAggAnswer]]) so the two can never
@@ -406,65 +363,37 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     }
   }
 
+  /** The document scan answers an aggregate in exactly two ways, both
+    * COMPLETE: from metadata ([[statsAggAnswer]]) or, for an unfiltered
+    * ungrouped COUNT(*) over one split, by counting that split's rows.
+    * So this accepts exactly what [[supportCompletePushDown]] just
+    * offered. Every other aggregate (the `$group` stage, which the
+    * reference never pushes into MongoDB either) runs as Spark's own
+    * partial/final aggregate over the row reader, which counts a
+    * COUNT(*)'s lines without parsing them (the newline skim).
+    */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    if (limit >= 0 || topLimit >= 0) return false
-    // group keys must be comparable atomics: they ride the partial rows
-    // and re-group Spark-side (hash + equality on the internal values)
-    val g: Seq[Option[String]] = aggregation.groupByExpressions().toSeq
-      .map(pathOf(_, needComparable = true))
-    if (g.exists(_.isEmpty)) return false
-    // STORAGE-PARTITIONED mode: when the group-by covers every partition
-    // column, the scan's KeyGroupedPartitioning satisfies the aggregate's
-    // clustered distribution — local aggregation over co-located raw
-    // rows runs with ZERO exchange, strictly better than pushed partials
-    // plus a shuffle. Pushing would also rebind the relation output
-    // (fresh attribute ids), which makes Spark drop the partitioning
-    // report entirely. So refuse the pushdown and let the layout win.
-    // (This can never forfeit a metadata-only answer: statsAggAnswer
-    // structurally requires partCols.isEmpty — partition values live in
-    // paths the body-stats sidecar cannot speak for.)
-    if (reportPartitioningOn && partCols.nonEmpty &&
-      partCols.forall(pc => g.flatten.exists(_.equalsIgnoreCase(pc))))
-      return false
-    // RANGE-LAYOUT mode: the caller declared the drop range-landed on a
-    // grouping key (rangeAggregation=true) — refuse pushed partials so
-    // the Aggregate survives to graft.plans.RangeAggStrategy, which
-    // plans partial+final in ONE stage over the disjoint band groups
-    // (zero exchange) — the q161 precedent: layout beats pushdown when
-    // the layout covers the grouping. The metadata-only answer
-    // (supportCompletePushDown) is consulted first and still wins when
-    // available; if the layout fails to prove out at planning time, the
-    // strategy falls through and the only cost is unpushed partials.
-    if (rangeAggregationOn && g.nonEmpty) return false
-    val parsed: Seq[Option[PushedAgg]] =
-      aggregation.aggregateExpressions().toSeq.map(translateAggExpr)
-    // a grouped query with no aggregate functions is a pushed DISTINCT —
-    // each split ships its observed keys; ungrouped still needs at least
-    // one aggregate to mean anything
-    if ((parsed.isEmpty && g.isEmpty) || parsed.exists(_.isEmpty)) false
-    // COUNT(DISTINCT) has no partial form — only the metadata answer
-    // (supportCompletePushDown ran just before and set statsAnswer)
-    else if (parsed.flatten.exists(_.kind == "countd") &&
-      statsAnswer.isEmpty) false
-    else {
-      groups = g.flatten.toArray
-      aggs = parsed.flatten.toArray
-      true
-    }
+    if (!completeOffered) return false
+    groups = aggregation.groupByExpressions().toSeq
+      .flatMap(pathOf(_, needComparable = true)).toArray
+    aggs = aggregation.aggregateExpressions().toSeq.flatMap(translateAggExpr)
+      .toArray
+    true
   }
 
   /** COMPLETE pushdown — Spark plans NO final-merge aggregate, taking the
-    * scan's rows as the answer — is offered ONLY for the unfiltered,
-    * ungrouped, all-COUNT(*) skim over an input that planInputPartitions
-    * will plan as ONE split anyway (one nonempty visible file, within
-    * the split size or compressed): the single split's partial row IS
-    * the merged row, so the merge node above it buys nothing. Beyond one
-    * split the offer is REFUSED deliberately: complete pushdown would
-    * force a single sequential reader over the whole drop, while the
-    * partial path skims splits in parallel and ships one LONG each — at
+    * scan's rows as the answer — is offered for a metadata answer, and for
+    * the unfiltered, ungrouped, all-COUNT(*) skim over an input that
+    * planInputPartitions will plan as ONE split anyway (one nonempty
+    * visible file, within the split size or compressed): that split's
+    * count IS the answer, and the exchange plus final aggregate above it
+    * would buy nothing. Beyond one split the count is REFUSED
+    * deliberately: complete pushdown would force a single sequential
+    * reader over the whole drop, while Spark's partial aggregate over the
+    * row reader skims splits in parallel and ships one LONG each — at
     * 100 TB that final merge costs nothing and the parallelism is
     * everything. (JSONL has no row-count metadata; a parquet-style
-    * metadata count does not exist to be had.)
+    * metadata count exists only through the zone-map sidecar.)
     */
   override def supportCompletePushDown(aggregation: Aggregation): Boolean = {
     val shapeOk =
@@ -517,8 +446,8 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     * tuple, one answer row per group (the JDBC-style complete GROUP BY
     * pushdown, from metadata). Any gap (one unindexed or rewritten file,
     * one uncovered column, one undecidable survivor, one non-constant
-    * group key) refuses, falling back to the ordinary parallel partial
-    * path.
+    * group key) refuses, falling back to Spark's own aggregate over the
+    * row reader.
     */
   private def statsAggAnswer(
       aggregation: Aggregation): Option[(Array[Array[String]], Array[String])] = {
@@ -710,8 +639,9 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     FilterEval.resolve(field, fullSchema).get.leaf.dataType
 
   /** Whether the last [[supportCompletePushDown]] probe said yes — Spark
-    * then calls `pushAggregation` and, on acceptance, plans WITHOUT the
-    * final merge, so the scan must hold the single-partition invariant.
+    * then calls `pushAggregation`, which accepts exactly then, and plans
+    * WITHOUT the final merge, so the scan must hold the single-partition
+    * invariant.
     */
   private var completeOffered = false
 
@@ -789,46 +719,20 @@ final class ExtJsonScanBuilder(path: String, fullSchema: StructType,
     }
   }
 
-  /** Storage-partitioned reads requested (`reportPartitioning` option):
-    * consulted by [[pushAggregation]] (layout-covered group-bys keep raw
-    * rows so the zero-exchange aggregation wins) and passed to the scan.
-    */
-  private def reportPartitioningOn: Boolean =
-    Option(options.get("reportPartitioning")).exists(_.toBoolean)
-
-  /** Range-layout aggregation requested (`rangeAggregation` option):
-    * consulted by [[pushAggregation]] (grouped shapes keep raw rows so
-    * [[graft.plans.RangeAggStrategy]] can plan the zero-exchange
-    * band-local aggregation) and passed to the scan as the strategy's
-    * opt-in marker.
-    */
-  private def rangeAggregationOn: Boolean =
-    Option(options.get("rangeAggregation")).exists(_.toBoolean)
-
-  /** Parse a numeric option, naming the option in the error — a bare
-    * NumberFormatException at scan build time says nothing about WHICH
-    * option carried the malformed value.
-    */
-  private def numericOption[T](name: String, parse: String => T): Option[T] =
-    Option(options.get(name)).map { raw =>
-      try parse(raw)
-      catch {
-        case e: NumberFormatException => throw new IllegalArgumentException(
-          s"graft-extjson option $name must be numeric, got '$raw'", e)
-      }
-    }
-
-  override def build(): Scan =
+  override def build(): Scan = {
+    val aggPushed = aggs.nonEmpty || groups.nonEmpty
     new ExtJsonScan(snap, required, pushed, limit, aggs,
       topSorts, topLimit, groups,
-      numericOption("maxPushedGroups", _.toInt).getOrElse(16384).max(1),
-      completeCount = completeOffered && aggs.nonEmpty,
+      completeCount = aggs.nonEmpty && statsAnswer.isEmpty,
       arrayTrunc = arrayTrunc,
-      statsAnswer = if (completeOffered && (aggs.nonEmpty || groups.nonEmpty))
-        statsAnswer
-      else None,
-      reportPartitioning = reportPartitioningOn,
-      rangeAggregation = rangeAggregationOn)
+      statsAnswer = if (aggPushed) statsAnswer else None,
+      // storage-partitioned reads (KeyGroupedPartitioning over the hive
+      // layout) and the range-layout aggregation strategy's opt-in
+      reportPartitioning =
+        Option(options.get("reportPartitioning")).exists(_.toBoolean),
+      rangeAggregation =
+        Option(options.get("rangeAggregation")).exists(_.toBoolean))
+  }
 }
 
 final class ExtJsonScan(snap: DropSnapshot,
@@ -838,7 +742,6 @@ final class ExtJsonScan(snap: DropSnapshot,
     val pushedSorts: Array[PushedSort] = Array.empty,
     val pushedTopN: Int = -1,
     val pushedGroups: Array[String] = Array.empty,
-    maxPushedGroups: Int = 16384,
     val completeCount: Boolean = false,
     val arrayTrunc: Map[String, Int] = Map.empty,
     val statsAnswer: Option[(Array[Array[String]], Array[String])] = None,
@@ -905,7 +808,10 @@ final class ExtJsonScan(snap: DropSnapshot,
     runtime = filters.filter(FilterEval.supported(_, fullSchema))
   }
 
-  /** Whether an aggregation (of any shape) is pushed to this scan. */
+  /** Whether an aggregation is pushed to this scan: always a complete
+    * one — the metadata answer ([[statsAnswer]]) or the single-split
+    * COUNT(*) ([[completeCount]]).
+    */
   def aggPushed: Boolean = pushedAggs.nonEmpty || pushedGroups.nonEmpty
 
   /** Static + runtime predicates, the set the readers actually apply. */
@@ -935,11 +841,7 @@ final class ExtJsonScan(snap: DropSnapshot,
                 org.apache.spark.sql.types.LongType, nullable = false)
             case "sum" => org.apache.spark.sql.types.StructField(
               a.render.toLowerCase(java.util.Locale.ROOT),
-              // a metadata answer row IS the final result (no re-sum
-              // above), so it carries Sum's RESULT type; partial rows
-              // carry the child-shaped partial type and re-aggregate
-              if (statsAnswer.isDefined) SumTypes.resultType(leafType(a.field))
-              else SumTypes.partialType(leafType(a.field)), nullable = true)
+              SumTypes.resultType(leafType(a.field)), nullable = true)
             case _ => org.apache.spark.sql.types.StructField(
               a.render.toLowerCase(java.util.Locale.ROOT),
               leafType(a.field), nullable = true)
@@ -957,7 +859,7 @@ final class ExtJsonScan(snap: DropSnapshot,
       (if (aggPushed)
         s", PushedAggregation: [${pushedAggs.map(_.render).mkString(", ")}]" +
           (if (statsAnswer.isDefined) " (complete, metadata-only)"
-          else if (completeCount) " (complete)" else "") +
+          else " (complete)") +
           (if (pushedGroups.nonEmpty)
             s", PushedGroupBy: [${pushedGroups.mkString(", ")}]"
           else "")
@@ -1067,12 +969,11 @@ final class ExtJsonScan(snap: DropSnapshot,
     * corpus. Identity transforms resolve against the relation output
     * without any function catalog; when a query prunes the partition
     * columns away, Spark drops the partitioning report (fail-soft, plans
-    * as before). The metadata-answer path never reports — its one
-    * answer partition has no key.
+    * as before). A pushed aggregate never meets partition columns (both
+    * complete modes refuse them), so its one partition needs no key.
     */
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning = {
-    val keyed = reportPartitioning && partCols.nonEmpty && statsAnswer.isEmpty
-    if (!keyed)
+    if (!reportPartitioning || partCols.isEmpty)
       return new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
     val keys: Array[org.apache.spark.sql.connector.expressions.Expression] =
       partCols.map(c =>
@@ -1095,19 +996,15 @@ final class ExtJsonScan(snap: DropSnapshot,
     */
   private def parseSchema: StructType = {
     // count pushdown: Spark builds the scan BEFORE its prune step runs,
-    // so `required` still carries the full schema — but a count only
-    // needs the filter-referenced fields parsed (none at all for the
-    // unfiltered skim)
+    // so `required` still carries the full schema — but the complete
+    // count reads no column (a metadata answer reads no line at all)
     val base = if (aggPushed) Array.empty[StructField] else required.fields
-    val aggPaths = (pushedGroups.toSeq ++
-      pushedAggs.filter(_.field.nonEmpty).map(_.field))
-      .map(_.split("\\.", -1).toSeq)
     // partition-only filters never reach a reader (enforced at listing /
     // plan time), so their references don't belong in the row schema
     val paths = readerFilters.flatMap(_.references).distinct.toSeq
       .filterNot(_.contains("`"))
       .map(_.split("\\.", -1).toSeq)
-    SchemaMerge.merge(base, paths ++ aggPaths, fullSchema)
+    SchemaMerge.merge(base, paths, fullSchema)
   }
 
   /** The filters the READERS evaluate per row: everything pushed or
@@ -1515,7 +1412,7 @@ final class ExtJsonScan(snap: DropSnapshot,
     // HasPartitionKey contract KeyGroupedPartitioning requires of ALL
     // partitions. Files outside the k=v layout carry null values — a
     // legal key tuple (the null group), never an error.
-    if (reportPartitioning && partCols.nonEmpty && statsAnswer.isEmpty)
+    if (reportPartitioning && partCols.nonEmpty)
       parts.map { p =>
         new KeyedExtJsonInputPartition(p,
           partCols.indices.map(i => PartitionValues.toInternal(
@@ -1539,7 +1436,7 @@ final class ExtJsonScan(snap: DropSnapshot,
     * disjointness BETWEEN groups (`max(g) < min(g+1)`) is what makes the
     * physical RangePartitioning claim honest for CLUSTERED distributions
     * too: equal keys can never straddle groups. Refuses (None) on any
-    * gap: no sidecar, metadata answer planned, storage-partitioned mode
+    * gap: no sidecar, an aggregate pushed, storage-partitioned mode
     * (key-grouped wrappers), a stats-less/stale/unsorted/nullable file,
     * a zero-row file, or a group wider than [[ExtJsonScan.MaxMergeWidth]]
     * (a merge that wide means the layout has decayed to
@@ -1571,7 +1468,7 @@ final class ExtJsonScan(snap: DropSnapshot,
   private[graft] def orderedBandFileStats(
       colName: String): Option[Seq[Seq[ZoneMaps.FileStats]]] = {
     if (pushed.nonEmpty || runtime.nonEmpty || pushedLimit >= 0 ||
-      pushedTopN >= 0 || pushedAggs.nonEmpty || pushedGroups.nonEmpty)
+      pushedTopN >= 0)
       return None
     orderedBandFileStatsBound(colName)
   }
@@ -1582,12 +1479,11 @@ final class ExtJsonScan(snap: DropSnapshot,
     * readers can emit — valid for width/population bounding (the
     * interval join's active-set cap), NEVER for exact totals (the
     * window's metadata prefix must keep using the completeness-gated
-    * form above). Aggregate pushdown still refuses: the scan's output
-    * rows are no longer the file's rows at all.
+    * form above). A pushed aggregate refuses (no band plan): the scan's
+    * output rows are no longer the file's rows at all.
     */
   private[graft] def orderedBandFileStatsBound(
       colName: String): Option[Seq[Seq[ZoneMaps.FileStats]]] = {
-    if (pushedAggs.nonEmpty || pushedGroups.nonEmpty) return None
     orderedBandPartitions(colName).map { groups =>
       val statusByPath = listing.map { case (f, _) =>
         f.getPath.toString -> f
@@ -1604,7 +1500,7 @@ final class ExtJsonScan(snap: DropSnapshot,
     */
   private def computeOrderedBands(
       colName: String): Option[Seq[OrderedBandGroup]] = {
-    if (statsAnswer.isDefined || reportPartitioning) return None
+    if (aggPushed || reportPartitioning) return None
     val dt = FilterEval.resolve(colName, fullSchema)
       .map(_.leaf.dataType).getOrElse(return None)
     if (!ZoneMaps.indexable(dt)) return None
@@ -1656,9 +1552,12 @@ final class ExtJsonScan(snap: DropSnapshot,
   override def createReaderFactory(): PartitionReaderFactory = {
     val conf = new SerializableWritable(
       SparkSession.active.sparkContext.hadoopConfiguration)
-    ExtJsonReaderFactory(conf, parseSchema.json, required.json, readerFilters,
-      pushedLimit, pushedAggs, pushedSorts, pushedTopN, pushedGroups,
-      maxPushedGroups, partCols, arrayTrunc)
+    // the complete COUNT(*) reads rows of the (empty) parse schema and
+    // counts them
+    ExtJsonReaderFactory(conf, parseSchema.json,
+      (if (aggPushed) parseSchema else required).json, readerFilters,
+      pushedLimit, pushedSorts, pushedTopN, partCols, arrayTrunc,
+      countColumns = if (completeCount) pushedAggs.length else 0)
   }
 
   /** A clone reading only `cols` (exact top-level names, in `required`
@@ -1671,13 +1570,13 @@ final class ExtJsonScan(snap: DropSnapshot,
     * partition columns (readSchema stops mirroring `required` there).
     */
   private[graft] def pruneTo(cols: Seq[String]): ExtJsonScan = {
-    require(pushedAggs.isEmpty && partCols.isEmpty,
+    require(!aggPushed && partCols.isEmpty,
       "pruneTo applies to plain column scans only")
     val keep = cols.toSet
     new ExtJsonScan(snap,
       StructType(required.fields.filter(f => keep(f.name))), pushed,
       pushedLimit, pushedAggs, pushedSorts, pushedTopN,
-      pushedGroups, maxPushedGroups, completeCount, arrayTrunc,
+      pushedGroups, completeCount, arrayTrunc,
       statsAnswer, reportPartitioning, rangeAggregation)
   }
 }
@@ -2029,14 +1928,15 @@ final case class StatsAnswerPartition(rows: Array[Array[String]],
 /** Ships to executors: Hadoop conf via the public [[SerializableWritable]],
   * the parse and required schemas as their JSON forms (self-contained,
   * version-stable).
+  *
+  * @param countColumns with the complete single-split COUNT(*) pushed:
+  *   the width of its one answer row ([[CountReader]]); 0 = emit rows
   */
 final case class ExtJsonReaderFactory(conf: SerializableWritable[Configuration],
     parseSchemaJson: String, requiredSchemaJson: String, pushed: Array[Filter],
-    limit: Int = -1, aggs: Array[PushedAgg] = Array.empty,
-    sorts: Array[PushedSort] = Array.empty, topN: Int = -1,
-    groups: Array[String] = Array.empty, maxGroups: Int = 16384,
+    limit: Int = -1, sorts: Array[PushedSort] = Array.empty, topN: Int = -1,
     partCols: Array[String] = Array.empty,
-    arrayTrunc: Map[String, Int] = Map.empty)
+    arrayTrunc: Map[String, Int] = Map.empty, countColumns: Int = 0)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     partition match {
@@ -2055,23 +1955,22 @@ final case class ExtJsonReaderFactory(conf: SerializableWritable[Configuration],
     // true for every row of this split, so compiling and evaluating the
     // filters per line would be work spent confirming a theorem
     val effFilters = if (p.allTrue) Array.empty[Filter] else pushed
-    if (aggs.nonEmpty || groups.nonEmpty)
-      new ExtJsonAggReader(p, conf.value, rowSchema, effFilters, aggs, groups,
-        maxGroups, dataSchema, insert, arrayTrunc)
-    else if (topN >= 0 && sorts.nonEmpty && sorts.forall(s =>
-      partCols.exists(_.equalsIgnoreCase(s.field))))
-      // every pushed sort key is a PARTITION column — constant across
-      // this split (one `k=v` directory tuple per file), so all its kept
-      // rows tie and ANY topN of them is a valid per-split top-N: the
-      // heap degenerates to a partial LIMIT, which parses nothing past
-      // the first topN kept rows instead of consuming the split
-      // (Spark's outer TakeOrdered still picks the global answer)
-      new ExtJsonPartitionReader(p, conf.value, rowSchema,
-        DataTypeJson.structFromJson(requiredSchemaJson), effFilters, topN,
-        dataSchema = dataSchema, insert = insert, arrayTrunc = arrayTrunc)
-    else new ExtJsonPartitionReader(p, conf.value, rowSchema,
-      DataTypeJson.structFromJson(requiredSchemaJson), effFilters, limit,
-      sorts, topN, dataSchema, insert, arrayTrunc)
+    val required = DataTypeJson.structFromJson(requiredSchemaJson)
+    val rows =
+      if (topN >= 0 && sorts.nonEmpty && sorts.forall(s =>
+        partCols.exists(_.equalsIgnoreCase(s.field))))
+        // every pushed sort key is a PARTITION column — constant across
+        // this split (one `k=v` directory tuple per file), so all its kept
+        // rows tie and ANY topN of them is a valid per-split top-N: the
+        // heap degenerates to a partial LIMIT, which parses nothing past
+        // the first topN kept rows instead of consuming the split
+        // (Spark's outer TakeOrdered still picks the global answer)
+        new ExtJsonPartitionReader(p, conf.value, rowSchema, required,
+          effFilters, topN, dataSchema = dataSchema, insert = insert,
+          arrayTrunc = arrayTrunc)
+      else new ExtJsonPartitionReader(p, conf.value, rowSchema, required,
+        effFilters, limit, sorts, topN, dataSchema, insert, arrayTrunc)
+    if (countColumns > 0) new CountReader(rows, countColumns) else rows
   }
 }
 
@@ -2080,7 +1979,15 @@ final case class ExtJsonReaderFactory(conf: SerializableWritable[Configuration],
   * a non-initial split discards its first (possibly partial) line; then
   * lines are consumed while they START at a position `<= end`, so the
   * line straddling `end` is read in full here and skipped by the next
-  * split's discard.
+  * split's discard. Blank lines are no rows.
+  *
+  * The NEWLINE SKIM: with an empty parse schema (partition columns
+  * aside) and no reader filter, every non-blank line is the empty row
+  * plus this split's partition constants — exactly what a PERMISSIVE
+  * parse against an empty schema returns, malformed lines included — so
+  * the lines are counted ([[ScanMetrics.SkimmedLines]]), never parsed.
+  * Every COUNT(*) the scan serves (pushed or Spark's own aggregate over
+  * these rows, grouped by partition columns or not) reads this way.
   *
   * With a pushed top-N the split is consumed into a BOUNDED `topN`-row
   * heap (worst row at the head, evicted on overflow) and the survivors
@@ -2107,13 +2014,20 @@ final class ExtJsonPartitionReader(split: ExtJsonInputPartition,
   private var emitted = 0L
   private var parsedDocs = 0L
   private var filteredDocs = 0L
+  private var skimmedLines = 0L
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(ScanMetrics.TaskValue(ScanMetrics.ParsedDocs, parsedDocs),
       ScanMetrics.TaskValue(ScanMetrics.FilteredDocs, filteredDocs),
-      ScanMetrics.TaskValue(ScanMetrics.SkimmedLines, 0L))
+      ScanMetrics.TaskValue(ScanMetrics.SkimmedLines, skimmedLines))
 
-  private val parser = new ExtJsonParser(parsedSchema, arrayTrunc)
+  // the skim's one row, or null when lines must be parsed
+  private val skimRow: InternalRow =
+    if (parsedSchema.isEmpty && pushed.isEmpty)
+      toRow(new GenericInternalRow(0))
+    else null
+  private val parser =
+    if (skimRow == null) new ExtJsonParser(parsedSchema, arrayTrunc) else null
   // compiled ONCE per reader: field indices, literal conversions, and
   // pattern objects all hoisted out of the per-line loop
   private val keepRow: InternalRow => Boolean =
@@ -2125,12 +2039,32 @@ final class ExtJsonPartitionReader(split: ExtJsonInputPartition,
   private var pos = split.start
   private var current: InternalRow = _
 
-  private val stream = SplitIO.open(split, conf)
-  private val lines = new LineReader(stream)
+  // LineReader.close() closes the wrapped split stream too
+  private val lines = new LineReader(SplitIO.open(split, conf))
   if (split.start != 0) pos += lines.readLine(text)
 
   // pushed partial top-N state: built on first next(), drained after
   private var heapIter: Iterator[InternalRow] = _
+
+  /** The row of the next owned non-blank line (skimmed or parsed, not
+    * yet filtered), or null once the split is consumed.
+    */
+  private def nextLine(): InternalRow = {
+    while (pos <= end) {
+      val n = lines.readLine(text)
+      if (n == 0) return null
+      pos += n
+      if (text.getLength > 0) {
+        if (skimRow != null) {
+          skimmedLines += 1
+          return skimRow
+        }
+        parsedDocs += 1
+        return toRow(parser.parse(text.getBytes, 0, text.getLength))
+      }
+    }
+    null
+  }
 
   override def next(): Boolean = {
     if (topN >= 0) {
@@ -2140,19 +2074,15 @@ final class ExtJsonPartitionReader(split: ExtJsonInputPartition,
       return true
     }
     if (limit >= 0 && emitted >= limit) return false
-    while (pos <= end) {
-      val n = lines.readLine(text)
-      if (n == 0) return false
-      pos += n
-      if (text.getLength > 0) {
-        val row = toRow(parser.parse(text.getBytes, 0, text.getLength))
-        parsedDocs += 1
-        if (keepRow(row)) {
-          current = project(row)
-          emitted += 1
-          return true
-        } else filteredDocs += 1
+    var row = nextLine()
+    while (row != null) {
+      if (keepRow(row)) {
+        current = project(row)
+        emitted += 1
+        return true
       }
+      filteredDocs += 1
+      row = nextLine()
     }
     false
   }
@@ -2186,31 +2116,26 @@ final class ExtJsonPartitionReader(split: ExtJsonInputPartition,
         .map(_.leaf.dataType).orNull
     var kept = 0L
     var bound: Any = null
-    while (pos <= end) {
-      val n = lines.readLine(text)
-      if (n == 0) return drain(heap)
-      pos += n
-      if (text.getLength > 0) {
-        val row = toRow(parser.parse(text.getBytes, 0, text.getLength))
-        parsedDocs += 1
-        val key =
-          if (keyGetter != null && keyType != null) keyGetter(row) else null
-        // the exit tests EVERY parsed row, kept or filtered — keys are
-        // monotone over the whole file, so a filtered row's key bounds
-        // the remainder just as well
-        if (bound != null && key != null &&
-          FilterEval.compareInternal(keyType, key, bound) > 0)
-          return drain(heap)
-        if (keepRow(row)) {
-          heap.offer(project(row))
-          if (heap.size() > topN) heap.poll()
-          kept += 1
-          // bind at (or first non-null key after) the n-th kept row; a
-          // later-than-n-th bind is a LARGER key, which only delays the
-          // exit — never wrongly triggers it
-          if (bound == null && kept >= topN && key != null) bound = key
-        } else filteredDocs += 1
-      }
+    var row = nextLine()
+    while (row != null) {
+      val key =
+        if (keyGetter != null && keyType != null) keyGetter(row) else null
+      // the exit tests EVERY parsed row, kept or filtered — keys are
+      // monotone over the whole file, so a filtered row's key bounds
+      // the remainder just as well
+      if (bound != null && key != null &&
+        FilterEval.compareInternal(keyType, key, bound) > 0)
+        return drain(heap)
+      if (keepRow(row)) {
+        heap.offer(project(row))
+        if (heap.size() > topN) heap.poll()
+        kept += 1
+        // bind at (or first non-null key after) the n-th kept row; a
+        // later-than-n-th bind is a LARGER key, which only delays the
+        // exit — never wrongly triggers it
+        if (bound == null && kept >= topN && key != null) bound = key
+      } else filteredDocs += 1
+      row = nextLine()
     }
     drain(heap)
   }
@@ -2224,10 +2149,28 @@ final class ExtJsonPartitionReader(split: ExtJsonInputPartition,
 
   override def get(): InternalRow = current
 
-  // LineReader.close() already closes the wrapped stream; the explicit
-  // stream.close() keeps this uniform with ExtJsonAggReader so neither
-  // invites a wrong-direction "fix" (Hadoop stream close is idempotent)
-  override def close(): Unit = { lines.close(); stream.close() }
+  override def close(): Unit = lines.close()
+}
+
+/** The complete single-split COUNT(*): counts its row reader's rows (a
+  * newline skim — nothing is parsed) and emits them as the one answer
+  * row, `width` copies of the count.
+  */
+final class CountReader(rows: PartitionReader[InternalRow], width: Int)
+    extends PartitionReader[InternalRow] {
+  private var count = -1L
+  override def next(): Boolean =
+    if (count >= 0) false
+    else {
+      count = 0L
+      while (rows.next()) count += 1
+      true
+    }
+  override def get(): InternalRow =
+    new GenericInternalRow(Array.fill[Any](width)(count))
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    rows.currentMetricsValues()
+  override def close(): Unit = rows.close()
 }
 
 /** The document scan's task metrics — the observability a pushdown-heavy
@@ -2314,7 +2257,7 @@ private[graft] object DocListing {
   }
 }
 
-/** Split stream setup shared by the partition readers. */
+/** Split stream setup shared by the row reader and the zone-map build. */
 private[v2] object SplitIO {
 
   /** Open the split's line stream: a plain byte-range split seeks to its
@@ -2437,7 +2380,9 @@ private[v2] object SchemaMerge {
     }
 }
 
-/** Reader-side row shaping shared by the partition readers. */
+/** Reader-side row shaping: the parse→required projection and the
+  * pushed top-N's row order.
+  */
 private[v2] object RowProject {
 
   /** parse→required projector. Identity when the schemas already agree;
@@ -2537,333 +2482,4 @@ private[v2] object RowProject {
       }
     }
   }
-}
-
-/** The aggregate-pushdown reader: emits this split's local
-  * COUNT(*)/COUNT(col)/MIN(col)/MAX(col) partials in pushed order —
-  * ONE row when ungrouped, one row PER OBSERVED GROUP KEY (group values
-  * first, then aggregates) when a `GROUP BY` is pushed; Spark's final
-  * aggregation merges the per-split partials either way. Aggregate and
-  * group columns may be nested (dotted paths — compiled leaf getters,
-  * null-propagating like `GetStructField`). With only COUNT(*)
-  * aggregates, no filters, and no grouping the lines are never parsed
-  * (a newline skim over the byte range, the fast path a global count
-  * deserves); otherwise each line parses against the minimal field
-  * schema. Same split line-ownership contract as
-  * [[ExtJsonPartitionReader]]; blank lines are skipped exactly as the
-  * row reader skips them, so every count matches the unpushed plan
-  * bit-for-bit. An empty split reports MIN/MAX as null — ignored by the
-  * final merge, matching SQL aggregate semantics.
-  *
-  * Grouped memory is BOUNDED: the per-split hash map holds at most
-  * `maxGroups` keys; observing a new key past that flushes the map as
-  * partial rows and starts a fresh one. Duplicate partial rows per key
-  * are exactly what the final merge already handles (they're
-  * indistinguishable from two splits of the same file), so the cap
-  * trades output rows for memory, never correctness — a split over a
-  * high-cardinality key degrades toward the unpushed row count instead
-  * of OOMing the executor.
-  */
-final class ExtJsonAggReader(split: ExtJsonInputPartition,
-    conf: Configuration, parseSchema: StructType, pushed: Array[Filter],
-    aggs: Array[PushedAgg], groups: Array[String] = Array.empty,
-    maxGroups: Int = 16384,
-    dataSchema: StructType = null, insert: InternalRow => InternalRow = null,
-    arrayTrunc: Map[String, Int] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  // partition-column support, same contract as the row reader: getters
-  // and group keys resolve against the ROW schema; the parser sees only
-  // the data fields, `toRow` splices the split's constants in
-  private val parsedSchema = if (dataSchema == null) parseSchema else dataSchema
-  private val toRow: InternalRow => InternalRow =
-    if (insert == null) identity else insert
-
-  /** The newline skim stays available when every REMAINING per-row input
-    * is path-constant: no reader filters, no parsed field, and only
-    * COUNT(*) accumulators (group keys that are all partition columns
-    * are one constant key per split — `GROUP BY dt` over a partitioned
-    * drop counts lines without parsing a byte). A non-count aggregate
-    * over a partition column still takes the parse path — with an EMPTY
-    * parse schema, so "parse" is token-skipping only.
-    */
-  private val needsParse =
-    pushed.nonEmpty || parsedSchema.nonEmpty || aggs.exists(_.kind != "count*")
-  private val keepRow: InternalRow => Boolean =
-    if (pushed.isEmpty) null else FilterEval.compile(pushed, parseSchema)
-  private val parser =
-    if (needsParse) new ExtJsonParser(parsedSchema, arrayTrunc) else null
-  // per-agg plan compiled once: kind tag + leaf getter + leaf type — the
-  // per-row loop does integer dispatch, never a String match or name walk
-  private val KindCountStar = 0
-  private val KindCount = 1
-  private val KindMin = 2
-  private val KindMax = 3
-  private val KindSumLong = 4
-  private val KindSumDouble = 5
-  private val KindSumDecimal = 6
-  private val aggGetter: Array[InternalRow => Any] = aggs.map(a =>
-    if (a.field.isEmpty) null else FilterEval.compiledGetter(a.field, parseSchema))
-  private val aggType = aggs.map(a =>
-    if (a.field.isEmpty) null
-    else FilterEval.resolve(a.field, parseSchema).get.leaf.dataType)
-  private val kindTag: Array[Int] = aggs.zipWithIndex.map {
-    case (a, i) => a.kind match {
-      case "count*" => KindCountStar
-      case "count" => KindCount
-      case "min" => KindMin
-      case "max" => KindMax
-      case "sum" =>
-        import org.apache.spark.sql.types._
-        aggType(i) match {
-          case IntegerType | LongType => KindSumLong
-          case FloatType | DoubleType => KindSumDouble
-          case _: DecimalType => KindSumDecimal
-        }
-      case "countd" => throw new IllegalStateException(
-        "COUNT(DISTINCT) is metadata-only — pushAggregation refuses it " +
-          "without a stats answer, so it must never reach a scan reader")
-    }
-  }
-  // sums whose partials must stay in-range: decimals can't exceed the
-  // child's (p,s) (the SumTypes cast-back contract) and LONG partials
-  // must never wrap — an unpushed ANSI SUM(BIGINT) would throw on
-  // overflow, so a silently wrapped partial would diverge from the plan
-  // this pushdown replaces. Both flush pre-overflow instead (mode-
-  // agnostic: Spark's final merge then detects a true total overflow
-  // under whatever eval mode the session runs).
-  private val hasBoundedSum =
-    kindTag.contains(KindSumDecimal) || kindTag.contains(KindSumLong)
-  private val groupGetter: Array[InternalRow => Any] =
-    groups.map(FilterEval.compiledGetter(_, parseSchema))
-
-  /** One partial-aggregate state: counts, current extremes, and running
-    * sums (long for integral children, kept in Long range by the
-    * pre-overflow flush — never silently wrapped; double for
-    * float/double; java BigDecimal for decimal children, held unbounded
-    * here and kept emittable by the pre-overflow flush). `seen`
-    * distinguishes a zero sum from no non-null input (SUM over nothing is
-    * NULL, and an all-splits-emit-zero would merge to 0 — wrong).
-    */
-  private final class Accum {
-    val counts = new Array[Long](aggs.length)
-    val extremes = new Array[Any](aggs.length)
-    val lsums = new Array[Long](aggs.length)
-    val dsums = new Array[Double](aggs.length)
-    val decs = new Array[java.math.BigDecimal](aggs.length)
-    val seen = new Array[Boolean](aggs.length)
-  }
-
-  // `single` also backs the skim-with-constant-groups path: the one
-  // group key is path-determined, so one accumulator suffices
-  private var single: Accum =
-    if (groups.isEmpty || !needsParse) new Accum else null
-  // phantom-group guard: a grouped skim over a file of only blank lines
-  // must emit NOTHING — SQL produces no row for an empty group, and an
-  // unconditional (key, 0) partial would invent one
-  private var skimSeen = false
-  private lazy val constRow: InternalRow =
-    toRow(new GenericInternalRow(parsedSchema.length))
-  // grouped state: internal values (UTF8String/boxed primitives/Decimal)
-  // have value equality, so a List key hashes and compares correctly
-  private val groupMap: java.util.LinkedHashMap[List[Any], Accum] =
-    if (groups.isEmpty) null else new java.util.LinkedHashMap
-  private val outQueue = new java.util.ArrayDeque[InternalRow]()
-  private var current: InternalRow = _
-
-  private val end = SplitIO.endBound(split)
-  private val text = new Text()
-  private var pos = split.start
-  private var exhausted = false
-  private var parsedDocs = 0L
-  private var filteredDocs = 0L
-  private var skimmedLines = 0L
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ScanMetrics.TaskValue(ScanMetrics.ParsedDocs, parsedDocs),
-      ScanMetrics.TaskValue(ScanMetrics.FilteredDocs, filteredDocs),
-      ScanMetrics.TaskValue(ScanMetrics.SkimmedLines, skimmedLines))
-
-  private val stream = SplitIO.open(split, conf)
-  private val lines = new LineReader(stream)
-  if (split.start != 0) pos += lines.readLine(text)
-
-  private def accumulate(acc: Accum, row: InternalRow): Unit = {
-    var i = 0
-    while (i < aggs.length) {
-      val tag = kindTag(i)
-      if (tag == KindCountStar) acc.counts(i) += 1
-      else {
-        val v = aggGetter(i)(row)
-        if (v != null) {
-          if (tag == KindCount) acc.counts(i) += 1
-          else if (tag == KindSumLong) {
-            acc.lsums(i) += v.asInstanceOf[Number].longValue()
-            acc.seen(i) = true
-          } else if (tag == KindSumDouble) {
-            acc.dsums(i) += v.asInstanceOf[Number].doubleValue()
-            acc.seen(i) = true
-          } else if (tag == KindSumDecimal) {
-            val bd = v.asInstanceOf[org.apache.spark.sql.types.Decimal]
-              .toJavaBigDecimal
-            acc.decs(i) = if (acc.decs(i) == null) bd else acc.decs(i).add(bd)
-            acc.seen(i) = true
-          } else {
-            val cur = acc.extremes(i)
-            val takeIt = cur == null || {
-              val c = FilterEval.compareInternal(aggType(i), v, cur)
-              if (tag == KindMin) c < 0 else c > 0
-            }
-            if (takeIt) acc.extremes(i) = v
-          }
-        }
-      }
-      i += 1
-    }
-  }
-
-  /** Would accumulating this row push any bounded running sum out of its
-    * partial-row range — a decimal past its child's (precision, scale)
-    * (past what [[SumTypes]]' contract lets a partial row declare) or a
-    * long past Long range (a wrap the unpushed ANSI plan would have
-    * raised as an overflow error)? Checked BEFORE accumulating so the
-    * current state can flush as a valid partial first (the row's own
-    * value always fits: it parsed at that type). Called only when a
-    * decimal or integral sum is pushed.
-    */
-  private def sumWouldOverflow(acc: Accum, row: InternalRow): Boolean = {
-    var i = 0
-    while (i < aggs.length) {
-      if (kindTag(i) == KindSumDecimal && acc.decs(i) != null) {
-        val v = aggGetter(i)(row)
-        if (v != null) {
-          val cand = acc.decs(i).add(
-            v.asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal)
-          val d = aggType(i).asInstanceOf[org.apache.spark.sql.types.DecimalType]
-          // both operands carry scale s, so only precision can move
-          if (cand.precision - cand.scale > d.precision - d.scale) return true
-        }
-      } else if (kindTag(i) == KindSumLong && acc.seen(i)) {
-        val v = aggGetter(i)(row)
-        if (v != null) {
-          val x = v.asInstanceOf[Number].longValue()
-          val s = acc.lsums(i)
-          if ((x > 0 && s > Long.MaxValue - x) ||
-            (x < 0 && s < Long.MinValue - x)) return true
-        }
-      }
-      i += 1
-    }
-    false
-  }
-
-  private def partialRow(key: List[Any], acc: Accum): InternalRow = {
-    val out = new Array[Any](groups.length + aggs.length)
-    var i = 0
-    key.foreach { v => out(i) = v; i += 1 }
-    var j = 0
-    while (j < aggs.length) {
-      out(groups.length + j) = kindTag(j) match {
-        case KindCountStar | KindCount => acc.counts(j): Any
-        case KindSumLong => if (acc.seen(j)) acc.lsums(j): Any else null
-        case KindSumDouble => if (acc.seen(j)) acc.dsums(j): Any else null
-        case KindSumDecimal =>
-          if (acc.seen(j)) {
-            val d = aggType(j).asInstanceOf[org.apache.spark.sql.types.DecimalType]
-            org.apache.spark.sql.types.Decimal(
-              scala.math.BigDecimal(acc.decs(j)), d.precision, d.scale)
-          } else null
-        case _ => acc.extremes(j)
-      }
-      j += 1
-    }
-    new GenericInternalRow(out)
-  }
-
-  /** Drain the group map into the output queue (cap flush or EOF). */
-  private def flushGroups(): Unit = {
-    val it = groupMap.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      outQueue.add(partialRow(e.getKey, e.getValue))
-    }
-    groupMap.clear()
-  }
-
-  private def groupKey(row: InternalRow): List[Any] = {
-    var out: List[Any] = Nil
-    var i = groupGetter.length - 1
-    while (i >= 0) { out = groupGetter(i)(row) :: out; i -= 1 }
-    out
-  }
-
-  /** Consume lines until EOF or a cap flush fills the queue. */
-  private def readSome(): Unit = {
-    while (pos <= end) {
-      val n = lines.readLine(text)
-      if (n == 0) { exhausted = true; onEof(); return }
-      pos += n
-      if (text.getLength > 0) {
-        if (!needsParse) {
-          skimmedLines += 1
-          skimSeen = true
-          var i = 0
-          while (i < single.counts.length) { single.counts(i) += 1; i += 1 }
-        } else {
-          val row = toRow(parser.parse(text.getBytes, 0, text.getLength))
-          parsedDocs += 1
-          if (keepRow == null || keepRow(row)) {
-            if (groups.isEmpty) {
-              if (hasBoundedSum && sumWouldOverflow(single, row)) {
-                // flush the WHOLE accumulator as one valid partial (its
-                // counts/extremes reset with it — duplicate partials per
-                // key are exactly what the final merge handles), then
-                // restart from this row
-                outQueue.add(partialRow(Nil, single))
-                single = new Accum
-                accumulate(single, row)
-                return // queue is non-empty — let it drain
-              }
-              accumulate(single, row)
-            } else {
-              val key = groupKey(row)
-              var acc = groupMap.get(key)
-              if (acc == null) {
-                val flushed = groupMap.size() >= maxGroups
-                if (flushed) flushGroups()
-                acc = new Accum
-                groupMap.put(key, acc)
-                accumulate(acc, row)
-                if (flushed) return // queue is non-empty — let it drain
-              } else if (hasBoundedSum && sumWouldOverflow(acc, row)) {
-                outQueue.add(partialRow(key, acc))
-                acc = new Accum
-                groupMap.put(key, acc)
-                accumulate(acc, row)
-                return // queue is non-empty — let it drain
-              } else accumulate(acc, row)
-            }
-          } else filteredDocs += 1
-        }
-      }
-    }
-    exhausted = true
-    onEof()
-  }
-
-  private def onEof(): Unit =
-    if (groups.isEmpty) outQueue.add(partialRow(Nil, single))
-    else if (!needsParse) {
-      if (skimSeen) outQueue.add(partialRow(groupKey(constRow), single))
-    } else flushGroups()
-
-  override def next(): Boolean = {
-    while (outQueue.isEmpty && !exhausted) readSome()
-    if (outQueue.isEmpty) false
-    else { current = outQueue.poll(); true }
-  }
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = { lines.close(); stream.close() }
 }

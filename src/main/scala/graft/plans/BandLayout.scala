@@ -130,7 +130,7 @@ private[plans] object BandLayout extends PredicateHelper {
     * reference a pruned column.
     */
   def prunable(scan: ExtJsonScan): Boolean =
-    scan != null && scan.partCols.isEmpty && scan.pushedAggs.isEmpty &&
+    scan != null && scan.partCols.isEmpty && !scan.aggPushed &&
       scan.pushedSorts.isEmpty && scan.pushedTopN < 0
 
   /** One join side after the side peel: the scan, the peeled filter

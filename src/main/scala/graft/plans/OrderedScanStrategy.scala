@@ -87,12 +87,11 @@ class OrderedScanStrategy(session: SparkSession) extends SparkStrategy {
   * distribution.
   *
   * Opt-in PER READ (the `rangeAggregation` option) because it is a
-  * mode CHOICE, not an approximation: the scan refuses pushed
-  * aggregation partials so the Aggregate survives to this strategy
-  * (the q161 storage-partitioned precedent — layout beats pushdown
-  * when the layout covers the grouping), and with few wide bands the
+  * mode CHOICE, not an approximation: with few wide bands the
   * band-parallel local aggregation trades parallelism for the
-  * exchange. Sound only when the grouping set CONTAINS the band key as
+  * exchange. A metadata answer from the sidecar still wins (it reads
+  * no rows; the scan then carries the aggregate and no Aggregate node
+  * reaches this strategy). Sound only when the grouping set CONTAINS the band key as
   * a bare attribute (equal grouping tuples then share the key, hence
   * the band); unproven layouts and non-key groupings fall through to
   * Spark's ordinary aggregation. DISTINCT aggregates over ONE distinct

@@ -58,9 +58,9 @@ object DocOps {
 
   /** The SAME document drop read with a DECIMAL money column — the user
     * schema decides the decode (Mongo `$numberDecimal` discipline), and a
-    * decimal-typed `o_totalprice` is what makes its pushed `$sum` partials
-    * exactly mergeable (the [[graft.ingest.v2.SumTypes]] contract) where
-    * double partials would be order-dependent.
+    * decimal-typed `o_totalprice` is what makes its `$sum` partials
+    * exactly mergeable (and its metadata sums exact) where double
+    * partials would be order-dependent.
     */
   private val decodedOrdersDec = StructType(Seq(
     StructField("_id", StringType),
@@ -136,9 +136,11 @@ object DocOps {
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"),
         col("o_totalprice"))
 
-  /** The pushed global COUNT(*) — `$count` through the document source:
-    * per-split counts from the parse-free skim reader (PushedAggregation
-    * on the scan), summed by Spark's final aggregation. One row out.
+  /** The global COUNT(*) — `$count` through the document source. Over a
+    * one-split drop it is a COMPLETE pushdown: the scan counts its lines
+    * without parsing them (the newline skim) and its one row is the
+    * answer, with no exchange or final aggregate. Over more splits Spark's
+    * partial/final aggregate sums the per-split skims. One row out.
     */
   private def q121Count(s: SparkSession, d: String): DataFrame =
     readOrders(s, d).agg(count(lit(1)).as("n_orders"))
@@ -199,12 +201,13 @@ object DocOps {
       .limit(10)
       .select(col("o_orderkey"), col("o_totalprice"))
 
-  /** `$group: {_id: null, …}` through the document source: a pushed
-    * MIN/MAX/COUNT(col)/COUNT(*) combination — each split ships ONE row
-    * of its local aggregates (PlanSpec-pinned PushedAggregation), Spark's
-    * final aggregation merges them. The timestamp min is formatted ABOVE
-    * the aggregate so the pushdown survives and the oracle output stays
-    * string-typed (the raw-timestamp hashing rule).
+  /** `$group: {_id: null, …}` over the document source: a
+    * MIN/MAX/COUNT(col)/COUNT(*) combination. Like the reference, which
+    * pushes no `$group` into MongoDB, the scan only prunes columns (it
+    * parses the three referenced fields) and Spark's partial/final
+    * aggregate answers (PlanSpec pins that nothing is pushed). The
+    * timestamp min is formatted ABOVE the aggregate so the oracle output
+    * stays string-typed (the raw-timestamp hashing rule).
     */
   private def q129AggPush(s: SparkSession, d: String): DataFrame =
     readOrders(s, d)
@@ -217,13 +220,10 @@ object DocOps {
         date_format(col("__first"), "yyyy-MM-dd").as("first_date"),
         col("n_prio"), col("n_all"))
 
-  /** `$group: {_id: "$o_orderstatus", …}` through the document source:
-    * the GROUPED aggregate pushes to the scan — each split ships one
-    * partial row per observed status (three here; bounded by the
-    * `maxPushedGroups` flush cap in general), Spark's final aggregation
-    * merges them (sum of counts, min of mins). The idiomatic MQL
-    * group-by-field shape the reference's aggregation pipeline runs
-    * server-side.
+  /** `$group: {_id: "$o_orderstatus", …}` over the document source:
+    * the idiomatic MQL group-by-field shape. The scan prunes to the
+    * three referenced fields and Spark's partial/final aggregate groups
+    * the rows (sum of counts, min of mins); nothing is pushed.
     */
   private def q131GroupAgg(s: SparkSession, d: String): DataFrame =
     readOrders(s, d)
@@ -246,10 +246,11 @@ object DocOps {
         col("profile.acctbal").as("acctbal"),
         col("profile.mktsegment").as("mktsegment"))
 
-  /** Grouped aggregate on NESTED paths through the document source: both
+  /** Grouped aggregate on NESTED paths over the document source: both
     * the group key (`profile.mktsegment`) and the extremes
-    * (`profile.acctbal`) live a struct level down — pushed as dotted
-    * paths, resolved by the same machinery as nested `$match`.
+    * (`profile.acctbal`) live a struct level down. The scan
+    * nested-prunes `profile` to those two subfields; Spark's own
+    * aggregate groups the rows.
     */
   private def q133NestedGroupAgg(s: SparkSession, d: String): DataFrame =
     readCustomers(s, d)
@@ -258,20 +259,19 @@ object DocOps {
         min(col("profile.acctbal")).as("min_bal"),
         max(col("profile.acctbal")).as("max_bal"))
 
-  /** Pushed DISTINCT through the document source: a grouped aggregation
-    * with NO aggregate functions — each split ships only its observed
-    * keys (three status values here), never the parsed corpus. The
-    * `$group: {_id: "$field"}` shape with an empty accumulator map.
+  /** DISTINCT over the document source: a grouped aggregation with NO
+    * aggregate functions, the `$group: {_id: "$field"}` shape with an
+    * empty accumulator map. The scan parses only the status field;
+    * Spark's partial aggregate dedups each split before the exchange.
     */
   private def q136Distinct(s: SparkSession, d: String): DataFrame =
     readOrders(s, d).select(col("o_orderstatus")).distinct()
 
-  /** The composed `$match + $group` pipeline on ONE scan: a nested
-    * predicate (accepted → the aggregation may push at all: Spark only
-    * pushes aggregates over a fully-consumed filter) feeding a nested
-    * grouped aggregate — rejected documents never reach the accumulators,
-    * and the scan ships per-split per-segment partials of just the
-    * filtered survivors.
+  /** The composed `$match + $group` pipeline: the nested predicate is
+    * pushed to the scan (no residual FilterExec — rejected documents
+    * never leave the reader), and Spark's aggregate groups the survivors
+    * by the nested segment. The reference's split exactly: `$match` runs
+    * in the source, `$group` in Spark.
     */
   private def q138FilteredGroup(s: SparkSession, d: String): DataFrame =
     readCustomers(s, d)
@@ -281,13 +281,11 @@ object DocOps {
         max(col("profile.acctbal")).as("max_bal"))
 
   /** `$group: {_id: "$o_orderstatus", total: {$sum: "$o_totalprice"}}`
-    * through the document source — MQL's most idiomatic accumulator as a
-    * PUSHED grouped SUM: each split ships per-status decimal partials
-    * (exactly mergeable; flushed pre-overflow per the SumTypes contract)
-    * next to its counts, Spark's final aggregation sums the sums. Output
-    * follows the dsum discipline: the decimal total casts to double (and
-    * to exact integer cents) ABOVE the aggregate, so the pushdown
-    * survives and the oracle hash is engine-portable.
+    * over the document source — MQL's most idiomatic accumulator, as
+    * Spark's own grouped decimal SUM over the scanned rows (exact under
+    * any merge order). Output follows the dsum discipline: the decimal
+    * total casts to double (and to exact integer cents) ABOVE the
+    * aggregate, so the oracle hash is engine-portable.
     */
   private def q139GroupSum(s: SparkSession, d: String): DataFrame =
     readOrdersDec(s, d)
@@ -298,11 +296,10 @@ object DocOps {
         (col("__t") * 100).cast("long").as("sum_cents"),
         col("n_orders"))
 
-  /** `$match + $group: {avg: {$avg: …}}` on ONE document scan: Spark
-    * rewrites the AVG to SUM + COUNT before pushing (partial sources
-    * can't merge averages), so the scan ships per-priority (long-sum,
-    * count) partials of just the filter survivors and the final plan
-    * divides once — a single rounding, bit-identical to the oracle's
+  /** `$match + $group: {avg: {$avg: …}}` over one document scan: the
+    * status predicate is pushed to the scan, and Spark's AVG over the
+    * survivors divides its long sum by its count once — a single
+    * rounding, bit-identical to the oracle's
     * `CAST(SUM AS DOUBLE) / CAST(COUNT AS DOUBLE)`.
     */
   private def q140FilteredAvg(s: SparkSession, d: String): DataFrame =
@@ -315,10 +312,9 @@ object DocOps {
   /** A date predicate over a hive-partitioned document drop: the status
     * and year filters prune DIRECTORIES at listing time (non-matching
     * subtrees are never listed, let alone parsed — the scan description
-    * records the pruned counts), the surviving files group by their
-    * path-constant `py` with a pushed SUM partial per split. At 100 TB
-    * this is the difference between reading one year and reading the
-    * archive.
+    * records the pruned counts), and Spark's aggregate groups the
+    * surviving rows by their path-constant `py`. At 100 TB this is the
+    * difference between reading one year and reading the archive.
     */
   private def q141PartitionPrune(s: SparkSession, d: String): DataFrame =
     readOrdersPart(s, d)
@@ -443,8 +439,8 @@ object DocOps {
     * parquet-footer aggregate pushdown, `spark.sql.parquet
     * .aggregatePushdown`, re-created for the JSONL drop). Every listed
     * file must carry a length+mtime-fresh stats row for every referenced
-    * column; one gap refuses and the ordinary parallel partial path
-    * runs instead — so the fast path can never return stale numbers for
+    * column; one gap refuses and Spark's own aggregate over the scanned
+    * rows runs instead — so the fast path can never return stale numbers for
     * a drop that changed under it.
     */
   private def q149MetadataAgg(s: SparkSession, d: String): DataFrame =
@@ -568,7 +564,7 @@ object DocOps {
     * all-TRUE, so its stats speak for its filtered rows —
     * [[graft.ingest.v2.ZoneMaps.Truth.all]]). Zero data bytes read
     * at any corpus size; one undecidable file and the scan refuses,
-    * falling back to the parallel partial path (spec-pinned).
+    * falling back to Spark's own aggregate over the scan (spec-pinned).
     */
   private def q153FilteredMetadataAgg(s: SparkSession, d: String): DataFrame =
     ExtendedJson.read(s, decodedOrdersClustered, ordersByStatusJsonl(s, d))
@@ -629,7 +625,7 @@ object DocOps {
     * GROUP BY pushdown, answered from metadata (parquet's aggregate
     * pushdown refuses grouped shapes outright). Zero data bytes at any
     * corpus size; a key that is not provably constant in some file
-    * refuses to the grouped-partial parallel path (spec-pinned).
+    * refuses to Spark's own grouped aggregate (spec-pinned).
     */
   private def q155GroupedMetadataAgg(s: SparkSession, d: String): DataFrame =
     ExtendedJson.read(s, decodedOrdersClusteredDec,

@@ -26,7 +26,8 @@ import graft.ingest.v2.{ExtJsonInputPartition, ExtJsonScan, KeyedExtJsonInputPar
   *    keys, the graft exec nodes the plan uses (pin values for PlanSpec,
   *    or the list of queries that reach an operator), and the planned
   *    split count, bytes and pushdowns (`push=[…]`: the aggregate mode,
-  *    then `limit`/`topN`) of every document-source scan (the batch
+  *    `metadata` or `complete`, then `limit`/`topN`) of every
+  *    document-source scan (the batch
   *    scans over the document source and the band-scan execs), so a plan
   *    diff also sees files or blocks pruned and a query falling from a
   *    metadata or complete aggregate to a scanning one; `all` probes
@@ -140,14 +141,13 @@ object Inspect {
     }
   }
 
-  /** The pushdowns a document scan took: its aggregate mode (`metadata`,
-    * `complete` or `partial`; none when no aggregate was pushed), then
-    * `limit` and `topN` when pushed.
+  /** The pushdowns a document scan took: its aggregate mode (`metadata`
+    * or `complete`; none when no aggregate was pushed), then `limit` and
+    * `topN` when pushed.
     */
   private def pushOf(s: ExtJsonScan): Seq[String] =
     Seq(Option.when(s.statsAnswer.isDefined)("metadata")
-      .orElse(Option.when(s.completeCount)("complete"))
-      .orElse(Option.when(s.aggPushed)("partial")),
+      .orElse(Option.when(s.completeCount)("complete")),
       Option.when(s.pushedLimit >= 0)("limit"),
       Option.when(s.pushedTopN >= 0)("topN")).flatten
 

@@ -182,46 +182,36 @@ class DocSourceV2Spec extends AnyFunSuite {
     assert(scan.aggPushed, scan.description())
     assert(scan.description().contains("PushedAggregation: [COUNT(*)]"))
     assert(plain.collect().head.getLong(0) == 40L)
-    // filtered count: parses only the filter schema, same answer as the
-    // unpushed plan
+    // everything else is Spark's aggregate over the row reader, with the
+    // same answers: a filtered count (the pushed filter evaluates per
+    // row), grouped counts, SUMs, DISTINCT aggregates
     val filtered = src.filter(col("k") > 30).agg(count(lit(1)))
-    assert(aggScan(filtered).aggPushed)
+    assert(!aggScan(filtered).aggPushed)
     assert(filtered.collect().head.getLong(0) == 10L)
-    // grouped counts now PUSH (one partial row per observed key per
-    // split); unsupported agg functions still refuse and stay correct
     val grouped = src.groupBy(col("s")).agg(count(lit(1)))
-    val gScan = aggScan(grouped)
-    assert(gScan.aggPushed && gScan.pushedGroups.toSeq == Seq("s"),
-      gScan.description())
+    assert(!aggScan(grouped).aggPushed, aggScan(grouped).description())
     assert(grouped.count() == 40L)
-    // SUM pushes since round 12; DISTINCT aggregates still refuse (a
-    // per-split distinct partial is not mergeable) and stay correct
     val summed = src.agg(sum(col("k")))
-    assert(aggScan(summed).aggPushed)
+    assert(!aggScan(summed).aggPushed)
     val distinctSum = src.agg(sum_distinct(col("k")))
     assert(!aggScan(distinctSum).aggPushed)
     assert(distinctSum.collect().head.getLong(0) == (1 to 40).sum.toLong)
-    // MIN/MAX/COUNT(col) combinations push as per-split partials
     val mm = src.agg(min(col("k")).as("mn"), max(col("k")).as("mx"),
       count(col("s")).as("ns"), count(lit(1)).as("n"))
     val mmScan = aggScan(mm)
-    assert(mmScan.aggPushed, mmScan.description())
-    assert(mmScan.description().contains("MIN(k)") &&
-      mmScan.description().contains("MAX(k)") &&
-      mmScan.description().contains("COUNT(s)"), mmScan.description())
+    assert(!mmScan.aggPushed, mmScan.description())
     val mmRow = mm.collect().head
     assert((mmRow.getLong(0), mmRow.getLong(1), mmRow.getLong(2), mmRow.getLong(3)) ==
       ((1L, 40L, 40L, 40L)), mmRow.toString)
-    // filtered min/max: only kept rows feed the partials
     val fm = src.filter(col("k") > 10).agg(min(col("k")), max(col("k")))
-    assert(aggScan(fm).aggPushed)
+    assert(!aggScan(fm).aggPushed)
     assert(fm.collect().head.toSeq == Seq(11L, 40L))
     assert(summed.collect().head.getLong(0) == (1 to 40).sum.toLong)
   }
 
-  test("grouped aggregate pushdown: null keys, flush cap, builtin parity") {
+  test("grouped aggregates over the scan: null keys, builtin parity") {
     // 60 docs over 7 group keys incl. an ABSENT field (null group) and a
-    // null mid-path struct; g cardinality exceeds the tiny cap below
+    // null mid-path struct
     val docs = (1 to 60).map { i =>
       val g = i % 7
       if (g == 0) s"""{"k": $i, "p": {"v": ${i * 2}}}""" // s absent → null key
@@ -238,32 +228,25 @@ class DocSourceV2Spec extends AnyFunSuite {
         count(col("p.v")).as("nv"))
     val expected = agg(spark.read.schema(schema).json(s"$dir/grp.jsonl"))
       .collect().map(_.toSeq).toSet
-    // normal cap: one partial row per key per split
+    // Spark's grouped aggregate over the row reader (nothing pushed)
     val pushed = agg(ExtendedJson.read(spark, schema, s"$dir/grp.jsonl"))
-    assert(expected == pushed.collect().map(_.toSeq).toSet)
-    // cap of 2: the reader flushes repeatedly — duplicate partials per
-    // key merge upstream to the SAME answer (memory-bounded degradation,
-    // never wrong results)
-    val capped = agg(spark.read.format("graft-extjson").schema(schema)
-      .option("maxPushedGroups", "2").load(s"$dir/grp.jsonl"))
-    val cappedScan = capped.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val scan = pushed.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.sparkPlan
       .collect { case b: BatchScanExec => b.scan }
       .head.asInstanceOf[graft.ingest.v2.ExtJsonScan]
-    assert(cappedScan.aggPushed, cappedScan.description())
-    assert(expected == capped.collect().map(_.toSeq).toSet)
-    // pushed DISTINCT: grouped with no aggregate functions
+    assert(!scan.aggPushed, scan.description())
+    assert(expected == pushed.collect().map(_.toSeq).toSet)
+    // DISTINCT: grouped with no aggregate functions
     val distinct = ExtendedJson.read(spark, schema, s"$dir/grp.jsonl")
       .select("s").distinct()
     assert(distinct.collect().map(_.toSeq).toSet ==
       ((1 to 6).map(g => Seq(s"g$g")) :+ Seq(null)).toSet)
   }
 
-  test("SUM pushdown: long/double/decimal partials, null sums, pre-overflow flush") {
-    // group g0 carries NO value fields — its sums must merge to NULL (an
-    // all-splits-emit-zero bug would merge to 0); decimal column m is
-    // typed (3,2), so a split's local sum overflows the child type after
-    // two rows and the reader must flush partials repeatedly
+  test("SUM/AVG over the scan: long/double/decimal sums, null sums, builtin parity") {
+    // group g0 carries NO value fields — its sums must be NULL; decimal
+    // column m is typed (3,2), so a running sum outgrows the child type
+    // after two rows
     val docs = (1 to 40).map { i =>
       val g = i % 3
       if (g == 0) s"""{"k": $i, "s": "g$g"}"""
@@ -289,14 +272,10 @@ class DocSourceV2Spec extends AnyFunSuite {
       .queryExecution.sparkPlan
       .collect { case b: BatchScanExec => b.scan }
       .head.asInstanceOf[ExtJsonScan]
-    assert(scan.aggPushed, scan.description())
-    val desc = scan.description()
-    // the AVG pushes as Spark's SUM + COUNT rewrite; nested SUM(p.v) rides
-    // the same dotted-path machinery as nested min/max
-    assert(desc.contains("SUM(l)") && desc.contains("SUM(m)") &&
-      desc.contains("SUM(p.v)") && desc.contains("COUNT(l)"), desc)
+    // no sidecar: Spark's SUM/AVG over the row reader answers
+    assert(!scan.aggPushed, scan.description())
     assert(expected == pushedDf.collect().map(_.toSeq).toSet)
-    // ungrouped: one row of corpus totals through the same partial path
+    // ungrouped: one row of corpus totals
     def tot(df: DataFrame) = df.agg(sum(col("l")).as("sl"),
       sum(col("m")).as("sm"), avg(col("l")).as("al"),
       count(lit(1)).as("n"))
@@ -385,16 +364,15 @@ class DocSourceV2Spec extends AnyFunSuite {
       assert(scans.length == 1, s"expected one V2 scan, got $scans")
       scans.head.asInstanceOf[ExtJsonScan]
     }
-    // GROUP BY partition col + COUNT(*): the skim path — constant group
-    // key per split, zero bytes parsed
+    // GROUP BY partition col + COUNT(*): Spark's aggregate over the row
+    // reader's skim — constant group key per split, zero bytes parsed
     val counted = src.groupBy(col("py")).agg(count(lit(1)).as("n"))
     val scan = aggScan(counted)
-    assert(scan.aggPushed && scan.pushedGroups.toSeq == Seq("py"),
-      scan.description())
+    assert(!scan.aggPushed, scan.description())
     assert(counted.collect().map(r => (r.getInt(0), r.getLong(1))).toSet ==
       Set((1995, 2L), (1996, 1L)))
-    // grouped SUM over a data column keyed by the partition col: parse
-    // path with constants spliced in
+    // grouped SUM over a data column keyed by the partition col: rows
+    // parse with the constants spliced in
     val summed = src.groupBy(col("py")).agg(sum(col("v")).as("sv"))
     assert(summed.collect().map(r => (r.getInt(0), r.getLong(1))).toSet ==
       Set((1995, 30L), (1996, 30L)))
@@ -1216,8 +1194,8 @@ class DocSourceV2Spec extends AnyFunSuite {
     val kScan = scanOf(ksum)
     assert(kScan.statsAnswer.isDefined, kScan.description())
     assert(kScan.planInputPartitions().head.isInstanceOf[StatsAnswerPartition])
-    // a DOUBLE sum is order-dependent — no sidecar form, the parallel
-    // partial path answers (and statsAnswer stays empty)
+    // a DOUBLE sum is order-dependent — no sidecar form, Spark's SUM
+    // over the scanned rows answers (and statsAnswer stays empty)
     val xsum = src.agg(sum(col("x")).as("sx"))
     assert(scanOf(xsum).statsAnswer.isEmpty)
     assert(xsum.collect().head.getDouble(0) == (1 to 25).map(_ + 0.5).sum)
@@ -1289,8 +1267,8 @@ class DocSourceV2Spec extends AnyFunSuite {
     assert(qe.sparkPlan.collect { case a: BaseAggregateExec => a }.isEmpty,
       qe.sparkPlan.toString.take(600))
     assert(scan.planInputPartitions().head.isInstanceOf[StatsAnswerPartition])
-    // a group key that is NOT constant per file refuses — the parallel
-    // grouped-partial path answers instead (and still correctly)
+    // a group key that is NOT constant per file refuses — Spark's
+    // grouped aggregate answers instead (and still correctly)
     val byK = src.groupBy(col("k")).agg(count(lit(1)).as("n"))
     assert(scanOf(byK).statsAnswer.isEmpty)
     assert(byK.collect().length == 14)
@@ -1806,8 +1784,9 @@ class DocSourceV2Spec extends AnyFunSuite {
     assert(p1.collect { case a: BaseAggregateExec => a }.isEmpty,
       p1.toString.take(600))
 
-    // TWO files → the offer is refused: parallel partial skim + final
-    // merge (the 100 TB shape — complete would serialize the read)
+    // TWO files → the offer is refused: Spark's partial aggregate over
+    // the parallel skims + final merge (the 100 TB shape — complete
+    // would serialize the read)
     val dir2 = Files.createTempDirectory("graft_v2cc").toString
     Files.write(Paths.get(dir2, "a.jsonl"),
       (1 to 20).map(i => s"""{"k": $i}""").mkString("\n").getBytes("UTF-8"))
@@ -1817,17 +1796,17 @@ class DocSourceV2Spec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
     assert(two.collect().head.getLong(0) == 37L)
     val (p2, s2) = scanOf(two)
-    assert(!s2.completeCount)
+    assert(!s2.aggPushed, s2.description())
     assert(p2.collect { case a: BaseAggregateExec => a }.nonEmpty)
 
     // one file that SPLITS (tiny split size) refuses too — each range
-    // ships its own partial and the merge must stay
+    // counts its own lines and the merge must stay
     withMaxPartitionBytes("64") {
       val split = ExtendedJson.read(spark, schema, s"$dir/c.jsonl")
         .agg(count(lit(1)).as("n"))
       assert(split.collect().head.getLong(0) == 37L)
       val (p3, s3) = scanOf(split)
-      assert(!s3.completeCount)
+      assert(!s3.aggPushed, s3.description())
       assert(p3.collect { case a: BaseAggregateExec => a }.nonEmpty)
     }
 
@@ -1835,7 +1814,7 @@ class DocSourceV2Spec extends AnyFunSuite {
     val filtered = ExtendedJson.read(spark, schema, s"$dir/c.jsonl")
       .filter(col("k") > 30).agg(count(lit(1)).as("n"))
     assert(filtered.collect().head.getLong(0) == 7L)
-    assert(!scanOf(filtered)._2.completeCount)
+    assert(!scanOf(filtered)._2.aggPushed)
   }
 
   test("a planned complete COUNT(*) answers from its own snapshot after a file lands") {
@@ -1914,6 +1893,55 @@ class DocSourceV2Spec extends AnyFunSuite {
       assert(re.aggregateTaskMetrics(Array(2L, 3L)).contains("5"),
         s"${m.name()} must sum task values")
     }
+  }
+
+  test("the row reader skims every COUNT(*): multi-split, partition-grouped, unpushed") {
+    import graft.ingest.v2.ScanMetrics
+    // executed scan nodes after the run (AQE-aware), for their metrics
+    def scanExecs(df: DataFrame): Seq[BatchScanExec] =
+      TestPlans.executedNodes(df).collect { case b: BatchScanExec => b }
+    def metric(bs: Seq[BatchScanExec], name: String): Long =
+      bs.map(_.metrics(name).value).sum
+    // 40 documents, a blank line (no row) and a malformed line (a PERMISSIVE
+    // row, as the builtin reader also counts it) over two files
+    val root = Files.createTempDirectory("graft_v2skim").toString
+    Files.write(Paths.get(root, "a.jsonl"),
+      ((1 to 20).map(i => s"""{"k": $i}""") ++ Seq("", "{oops"))
+        .mkString("\n").getBytes("UTF-8"))
+    Files.write(Paths.get(root, "b.jsonl"),
+      (21 to 40).map(i => s"""{"k": $i}""").mkString("\n").getBytes("UTF-8"))
+    val schema = StructType(Seq(StructField("k", LongType)))
+    val lines = 41L
+    assert(spark.read.schema(schema).json(root).count() == lines)
+    // multi-split COUNT(*): Spark's partial aggregate over the skims
+    val counted = ExtendedJson.read(spark, schema, root).agg(count(lit(1)))
+    assert(counted.collect().head.getLong(0) == lines)
+    val cs = scanExecs(counted)
+    assert(cs.nonEmpty && !cs.head.scan.asInstanceOf[ExtJsonScan].aggPushed)
+    assert(metric(cs, ScanMetrics.ParsedDocs) == 0L)
+    assert(metric(cs, ScanMetrics.SkimmedLines) == lines)
+    // an empty projection counted as an RDD never reaches an aggregate
+    // at all: the rows are skimmed just the same (toRdd runs the very
+    // exec whose metrics are read back)
+    val bare = ExtendedJson.read(spark, schema, root).select()
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    assert(bare.toRdd.count() == lines)
+    val bs = bare.executedPlan.collect { case b: BatchScanExec => b }
+    assert(metric(bs, ScanMetrics.ParsedDocs) == 0L)
+    assert(metric(bs, ScanMetrics.SkimmedLines) == lines)
+    // GROUP BY a partition column: the key is the split's path constant
+    val proot = Files.createTempDirectory("graft_v2skimp").toString
+    writePart(proot, "py=1995/a.jsonl", Seq("""{"v": 1}""", "", """{"v": 2}"""))
+    writePart(proot, "py=1996/b.jsonl", Seq("""{"v": 3}"""))
+    val pschema = StructType(Seq(
+      StructField("v", LongType), StructField("py", IntegerType)))
+    val byPy = ExtendedJson.read(spark, pschema, proot,
+      Map("partitionColumns" -> "py")).groupBy(col("py")).agg(count(lit(1)))
+    assert(byPy.collect().map(r => (r.getInt(0), r.getLong(1))).toSet ==
+      Set((1995, 2L), (1996, 1L)))
+    val ps = scanExecs(byPy)
+    assert(metric(ps, ScanMetrics.ParsedDocs) == 0L)
+    assert(metric(ps, ScanMetrics.SkimmedLines) == 3L)
   }
 
   test("explicit schema is required — inference refuses loudly") {
@@ -2688,7 +2716,7 @@ class DocSourceV2Spec extends AnyFunSuite {
       s"float distinct must normalize signed zero and NaN: $fRows")
     assert(nodes(fDist).exists(_.isInstanceOf[OrderedBandScanExec]),
       "the normalized distinct must still take the one-stage band plan")
-    // option OFF: identical rows through the ordinary pushed-partial path
+    // option OFF: identical rows through Spark's ordinary aggregation
     val off = src(ra = false).groupBy(col("k"))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
     assert(off.collect().map(r =>
@@ -2718,6 +2746,35 @@ class DocSourceV2Spec extends AnyFunSuite {
     assert(sns.exists(_.isInstanceOf[OrderedBandScanExec]) &&
       !sns.exists(_.isInstanceOf[ShuffleExchangeLike]),
       sns.map(_.nodeName).mkString(", "))
+  }
+
+  test("metadata answers win under rangeAggregation") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import graft.ingest.v2.ZoneMaps
+    import graft.plans.OrderedBandScanExec
+    // three one-key files: k is constant per file, so the sidecar answers
+    // GROUP BY k COUNT(*) without reading a line
+    val root = Files.createTempDirectory("graft_v2rmeta").toString
+    Seq(1 -> 4, 2 -> 3, 3 -> 5).foreach { case (k, n) =>
+      Files.write(Paths.get(root, s"k$k.jsonl"),
+        Seq.fill(n)(s"""{"k": $k}""").mkString("\n").getBytes("UTF-8"))
+    }
+    val schema = StructType(Seq(StructField("k", LongType)))
+    ZoneMaps.build(spark, root, schema, Seq("k"))
+    Seq(false, true).foreach { ra =>
+      val df = ExtendedJson.read(spark, schema, root,
+        Map("rangeAggregation" -> ra.toString))
+        .groupBy(col("k")).agg(count(lit(1)).as("n"))
+      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+        Set((1L, 4L), (2L, 3L), (3L, 5L)))
+      val nodes = TestPlans.executedNodes(df)
+      val scans = nodes.collect { case b: BatchScanExec => b.scan }
+      assert(scans.length == 1, nodes.map(_.nodeName).mkString(", "))
+      assert(scans.head.description().contains("(complete, metadata-only)"),
+        s"rangeAggregation=$ra: ${scans.head.description()}")
+      assert(!nodes.exists(n => n.isInstanceOf[OrderedBandScanExec] ||
+        n.isInstanceOf[BaseAggregateExec]), nodes.map(_.nodeName).mkString(", "))
+    }
   }
 
   test("k-way merge read: partial overlap groups, DESC, and the merge-width refusal") {

@@ -444,6 +444,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q129 pushes the MIN/MAX/COUNT combination onto the document scan") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     // aggregate plans AQE-wrap: inspect the pre-AQE physical plan
     val p = plan("q129_docsource_agg").sparkPlan
@@ -452,10 +453,13 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(scans.length == 1, p.toString.take(500))
     val d = scans.head.description()
-    assert(scans.head.aggPushed, d)
-    // each split ships one partial row: min/max/count locals, never docs
-    assert(d.contains("MIN(o_totalprice)") && d.contains("MAX(o_totalprice)") &&
-      d.contains("COUNT(o_orderpriority)") && d.contains("COUNT(*)"), d)
+    // no `$group` reaches the scan: it prunes to the three referenced
+    // fields and Spark's partial/final aggregate answers
+    assert(!scans.head.aggPushed, d)
+    assert(scans.head.readSchema().fieldNames.toSet ==
+      Set("o_totalprice", "o_orderdate", "o_orderpriority"), d)
+    assert(p.collect { case a: BaseAggregateExec => a }.nonEmpty,
+      p.toString.take(600))
   }
 
   test("q127 ranks per query with the bounded-heap aggregate, no Window") {
@@ -2499,6 +2503,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q131 grouped aggregate pushes onto the document scan with its group key") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val p = plan("q131_docsource_group_agg").sparkPlan
     val scans = p.collect {
@@ -2506,16 +2511,13 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(scans.length == 1, p.toString.take(500))
     val s = scans.head
-    assert(s.aggPushed, s.description())
-    // each split ships one partial row per observed status — the
-    // $group: {_id: "$o_orderstatus"} shape, never the parsed corpus
-    assert(s.pushedGroups.toSeq == Seq("o_orderstatus"), s.description())
-    val d = s.description()
-    assert(d.contains("PushedGroupBy: [o_orderstatus]"), d)
-    assert(d.contains("COUNT(*)") && d.contains("MIN(o_totalprice)") &&
-      d.contains("MAX(o_totalprice)") && d.contains("COUNT(o_orderpriority)"), d)
-    // the scan's output is group key + partials: 1 + 4 columns
-    assert(s.readSchema().length == 5, s.readSchema().catalogString)
+    // the $group runs in Spark over rows of just the referenced fields
+    assert(!s.aggPushed, s.description())
+    assert(s.readSchema().fieldNames.toSet ==
+      Set("o_orderstatus", "o_totalprice", "o_orderpriority"),
+      s.readSchema().catalogString)
+    assert(p.collect { case a: BaseAggregateExec => a }.nonEmpty,
+      p.toString.take(600))
   }
 
   test("q139 grouped SUM pushes onto the document scan with decimal partials") {
@@ -2526,14 +2528,12 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(scans.length == 1, p.toString.take(500))
     val s = scans.head
-    val d = s.description()
-    // the $sum accumulator runs AT the scan: each split ships per-status
-    // (decimal-sum, count) partials, never the parsed rows
-    assert(d.contains("PushedAggregation: [SUM(o_totalprice), COUNT(*)]"), d)
-    assert(d.contains("PushedGroupBy: [o_orderstatus]"), d)
-    // the partial column declares the CHILD's decimal type — the contract
-    // that makes Spark's cast-back in the final merge lossless
-    assert(s.readSchema().fields(1).dataType ==
+    // Spark's own decimal SUM over the scanned rows: the scan reads the
+    // key and the decimal money column, nothing else
+    assert(!s.aggPushed, s.description())
+    assert(s.readSchema().fieldNames.toSet == Set("o_orderstatus", "o_totalprice"),
+      s.readSchema().catalogString)
+    assert(s.readSchema()("o_totalprice").dataType ==
       org.apache.spark.sql.types.DecimalType(12, 2), s.readSchema().catalogString)
   }
 
@@ -2546,14 +2546,12 @@ class PlanSpec extends AnyFunSuite {
     assert(scans.length == 1, p.toString.take(500))
     val s = scans.head
     val d = s.description()
-    // Spark's partial-pushdown rewrite of AVG: SUM + COUNT land at the
-    // scan, composed with the pushed $match on one scan (filter survivors
-    // only reach the accumulators)
-    assert(d.contains("SUM(o_custkey)") && d.contains("COUNT(o_custkey)"), d)
+    // the $match is pushed to the scan; the AVG is Spark's, over the
+    // survivors only
+    assert(!s.aggPushed, d)
     assert(s.pushed.map(_.toString).exists(_.contains("EqualTo(o_orderstatus,F)")), d)
-    // long-sum partials for a long child (schema-exact under Sum-as-is)
-    assert(s.readSchema().fields(1).dataType ==
-      org.apache.spark.sql.types.LongType, s.readSchema().catalogString)
+    assert(s.readSchema().fieldNames.toSet == Set("o_orderpriority", "o_custkey"),
+      s.readSchema().catalogString)
   }
 
   test("q141 partition filters prune directories; pruned dirs never reach splits") {
@@ -2577,10 +2575,8 @@ class PlanSpec extends AnyFunSuite {
     val d = s.description()
     assert(d.contains("PartitionColumns: [status string, py int]"), d)
     assert(d.matches(".*PartitionPruning: [1-9]\\d* dirs.*"), d)
-    // the surviving files still push the grouped SUM: partition pruning
-    // and aggregate pushdown compose on one scan
-    assert(d.contains("PushedAggregation: [COUNT(*), SUM(o_custkey)]"), d)
-    assert(d.contains("PushedGroupBy: [py]"), d)
+    // the surviving rows group in Spark by their path-constant py
+    assert(!s.aggPushed, d)
   }
 
   test("q132 nested ORDER BY + LIMIT pushes dotted top-N onto the document scan") {
@@ -2604,9 +2600,14 @@ class PlanSpec extends AnyFunSuite {
       case b: BatchScanExec => b.scan.asInstanceOf[graft.ingest.v2.ExtJsonScan]
     }
     assert(scans.length == 1, p.toString.take(500))
-    val d = scans.head.description()
-    assert(d.contains("PushedGroupBy: [profile.mktsegment]"), d)
-    assert(d.contains("MIN(profile.acctbal)") && d.contains("MAX(profile.acctbal)"), d)
+    val s = scans.head
+    assert(!s.aggPushed, s.description())
+    // the nested key and extremes prune `profile` to just those subfields
+    assert(s.readSchema().fieldNames.toSeq == Seq("profile"),
+      s.readSchema().catalogString)
+    assert(s.readSchema()("profile").dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet ==
+      Set("acctbal", "mktsegment"), s.readSchema().catalogString)
   }
 
   test("q136 DISTINCT pushes as a grouped aggregation with no accumulators") {
@@ -2617,10 +2618,10 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(scans.length == 1, p.toString.take(500))
     val s = scans.head
-    // splits ship observed keys only — no aggregate columns at all
-    assert(s.aggPushed && s.pushedAggs.isEmpty &&
-      s.pushedGroups.toSeq == Seq("o_orderstatus"), s.description())
-    assert(s.readSchema().length == 1, s.readSchema().catalogString)
+    // the scan parses the one key field; Spark's aggregate dedups it
+    assert(!s.aggPushed, s.description())
+    assert(s.readSchema().fieldNames.toSeq == Seq("o_orderstatus"),
+      s.readSchema().catalogString)
   }
 
   test("q138 composes pushed nested filter AND grouped aggregation on one scan") {
@@ -2638,10 +2639,8 @@ class PlanSpec extends AnyFunSuite {
       .exists(f => f.contains("profile.acctbal") && f.contains("GreaterThan")),
       s.description())
     assert(p.collect { case f: FilterExec => f }.isEmpty, p.toString.take(800))
-    // the $group half on the same scan: rejected documents never reach
-    // the accumulators, survivors ship as per-split per-segment partials
-    assert(s.pushedGroups.toSeq == Seq("profile.mktsegment"), s.description())
-    assert(s.description().contains("MAX(profile.acctbal)"), s.description())
+    // the $group half is Spark's, over the filter survivors
+    assert(!s.aggPushed, s.description())
   }
 
   test("q108 budget mix: prefix-sum form, never a per-source window") {
