@@ -32,10 +32,10 @@ object GraftSession {
     * session runs in between. Only code is reused, never results.
     *
     * The cache stays effective only while per-call values travel as data
-    * (a join or a broadcast), never as literals: a literal is inlined into
-    * the generated code, so every call's code would be unique and no cap
-    * would help. `SurrogateKeys.reconcile` carries the max id through a
-    * broadcast join for that reason.
+    * (a column of a join or a window), never as literals: a literal is
+    * inlined into the generated code, so every call's code would be unique
+    * and no cap would help. `SurrogateKeys.reconcile` carries the max id as
+    * a window column for that reason.
     *
     * The cache is JVM-global. Spark sizes it once, from the SQLConf active
     * when `CodeGenerator` is first used, so this is a fixed constant of the

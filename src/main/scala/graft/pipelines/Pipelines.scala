@@ -150,23 +150,29 @@ object MigrationPipeline {
     */
   private[pipelines] def load(spark: SparkSession, spec: TableSpec,
       flat: DataFrame, db: TargetDb, staging: Option[String]): Long = {
-    val flatSchema = spec.flatSchema
     val staged = staging match {
       case Some(dir) =>
         val path = s"$dir/${spec.table}"
         Staging.write(flat, path)
-        Staging.read(spark, flatSchema, path)
+        Staging.read(spark, spec.flatSchema, path)
       case None => flat
     }
-    val key = reconcileKey(spec)
-    val existing = db.readKeys(spark, spec, key)
-    val keyed = SurrogateKeys.reconcile(existing, staged, key)
-      .select(("id" +: flatSchema.fieldNames.toSeq).map(col): _*)
-    val skipped = UpsertSink.upsert(keyed, db.url, spec.table, spec.policy,
-      db.dialect, connectionProps = db.props, tolerance = spec.tolerance)
+    val skipped = UpsertSink.upsert(keyed(spark, spec, staged, db), db.url,
+      spec.table, spec.policy, db.dialect, connectionProps = db.props,
+      tolerance = spec.tolerance)
     if (skipped > 0)
       log.warn(s"${spec.table}: permissive upsert skipped $skipped bad row(s)")
     skipped
+  }
+
+  /** What [[load]] hands the sink: `staged` with ids reconciled against the
+    * live table, in the target's column order.
+    */
+  private[graft] def keyed(spark: SparkSession, spec: TableSpec,
+      staged: DataFrame, db: TargetDb): DataFrame = {
+    val key = reconcileKey(spec)
+    SurrogateKeys.reconcile(db.readKeys(spark, spec, key), staged, key)
+      .select(("id" +: spec.flatSchema.fieldNames.toSeq).map(col): _*)
   }
 }
 
@@ -298,8 +304,9 @@ object ResetPipeline {
 /** Daily incremental merge (SURVEY.md §3.2): probe the delta drop (Q9 —
   * absent file means the whole step no-ops), read with the explicit staging
   * schema, reconcile surrogate keys against the live table through
-  * [[MigrationPipeline.load]] (ONE left-outer join + a window over the new
-  * keys instead of the reference's 1+N round trips — `utils.py:27-37`),
+  * [[MigrationPipeline.load]] (ONE exchange that delta and live keys share,
+  * then windows, instead of the reference's 1+N round trips —
+  * `utils.py:27-37`),
   * upsert, then archive the delta under a date stamp (S8). No explicit
   * pre-sort: the reference's `sort_values('_id')` only exists to stabilize
   * PK assignment, which `SurrogateKeys.reconcile` already orders

@@ -35,7 +35,7 @@ object KeyOps {
 
   /** T6/Q7/Q8 — surrogate-key reconciliation: known keys keep their id, new
     * keys get contiguous max(id)+1.. in key order (ref: utils.py:5-39,
-    * rewritten from N+1 lookups into one join + one window).
+    * rewritten from N+1 lookups into one exchange and three windows).
     */
   private def q16PkReconcile(s: SparkSession, d: String): DataFrame = {
     val incoming = Tables.customer(s, d).select("c_custkey", "c_name", "c_mktsegment")

@@ -141,6 +141,13 @@ object DerbyUpsertDialect extends UpsertDialect {
   * and `maxConnections` caps the fan-in the target database sees (a 1000
   * -executor cluster must not open 1000×32 connections).
   *
+  * The pipelines reach it with ONE partition (`SurrogateKeys.reconcile`
+  * ends in one, and the keep-first dedup keeps it), so they write through
+  * one writer. Embedded Derby's `MERGE` can abort with an internal
+  * NullPointerException when several writers update at once; only direct
+  * callers that hand in several partitions reach that now. How one writer
+  * fares against Postgres at volume is not measured.
+  *
   * Within-batch key dedup (keep-first in key order) runs before the write:
   * a multi-row statement batch that hits the same key twice is rejected by
   * Postgres (`ON CONFLICT DO UPDATE command cannot affect row a second

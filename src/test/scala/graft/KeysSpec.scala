@@ -38,6 +38,23 @@ class KeysSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("reconcile over duplicate live keys emits each incoming row once, with the largest live id") {
+    // live keys are unique under the conflict key's UNIQUE; when that
+    // precondition is broken, a row is never repeated (a join would emit
+    // it once per live row) and takes the largest of its key's live ids
+    val dupLive = Seq((10L, "b"), (4L, "b"), (7L, "d"), (3L, "d")).toDF("id", "_id")
+    val out = SurrogateKeys.reconcile(dupLive, incoming, "_id")
+      .orderBy("_id").as[(String, Long)].collect().toSeq
+    assert(out == Seq(("a", 11L), ("b", 10L), ("c", 12L), ("d", 7L), ("e", 13L)))
+  }
+
+  test("reconcile refuses incoming rows that already carry the id column") {
+    val e = intercept[IllegalArgumentException] {
+      SurrogateKeys.reconcile(existing, existing, "_id")
+    }
+    assert(e.getMessage.contains("id column"))
+  }
+
   test("reconcile id assignment is a bijection onto incoming") {
     val out = SurrogateKeys.reconcile(existing, incoming, "_id")
     assert(out.count() == 5)

@@ -97,6 +97,38 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(queryAll("users", "id", "_id", "username", "deleted") == before)
   }
 
+  test("key-to-sink plan: one exchange, each input scanned once, nothing broadcast") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.functions.col
+    import graft.ingest.{ExtendedJsonSource, Staging}
+    import graft.ops.Dedup
+    val spec = Specs.users
+    db.ensureTable(spec)
+    val dir = s"$work/plan_staging/users"
+    Staging.write(spec.transform(ExtendedJsonSource(writeJsonl("users_plan.jsonl",
+      usersDocs :+ """{"_id": {"$oid": "63e1f0a1b2c3d4e5f6a7b8cd"}}""")).read(spark, spec)), dir)
+    // what MigrationPipeline.load hands UpsertSink.upsert, through the
+    // sink's own keep-first window
+    val keyed = MigrationPipeline.keyed(spark, spec, Staging.read(spark, spec.flatSchema, dir), db)
+    val sunk = Dedup.keepFirst(keyed, Seq(spec.policy.keyOption.get),
+      keyed.columns.toSeq.map(c => col(c).asc))
+    assert(sunk.collect().length == 4)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val all = nodes(sunk.queryExecution.executedPlan)
+    val shown = sunk.queryExecution.executedPlan.toString
+    assert(all.count(_.isInstanceOf[ShuffleExchangeLike]) == 1, shown)
+    assert(all.count(_.isInstanceOf[ReusedExchangeExec]) == 1, shown)
+    assert(all.count(_.isInstanceOf[BroadcastExchangeLike]) == 0, shown)
+    assert(all.count(_.isInstanceOf[FileSourceScanExec]) == 1, shown)
+    assert(all.count(_.isInstanceOf[RowDataSourceScanExec]) == 1, shown)
+  }
+
   test("users daily: known keys keep ids, new keys extend contiguously, delta archived") {
     // delta: updates ...c9 (deleted flips true), inserts a new user ...cc
     val deltaDir = s"$work/daily/users.csv"

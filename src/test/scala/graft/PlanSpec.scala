@@ -344,8 +344,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("no query plans a cartesian product (q23 brute-force excepted)") {
     // A BroadcastNestedLoopJoin is allowed only when its build side is a
-    // grand (no-key) aggregate — broadcasting one scalar row (q16 attaches
-    // max(id) that way) is not a scale hazard; anything else is.
+    // grand (no-key) aggregate — broadcasting one scalar row is not a
+    // scale hazard; anything else is. (q16 plans none: its max(id) is a
+    // window over the one exchange both of its inputs meet in.)
     // q116/q120 are q23's twins in the compressed domain: DELIBERATE
     // quadratic exact baselines (the probed IVF-SQ8 path q117 is the
     // scale form) — their crossJoin is the declared contract
@@ -377,11 +378,14 @@ class PlanSpec extends AnyFunSuite {
     // the old shape funnelled the WHOLE batch through a window partitioned
     // on a 2-valued is-new flag; that flag (and its exchange) must be gone
     assert(!p.executedPlan.toString.contains("__graft_is_new"))
-    val windows = p.sparkPlan.collect { case w: WindowExec => w }
+    // the max-id and live-id lookup windows see every row of both inputs;
+    // the row_number numbering window must see ONLY rows that need a new
+    // id: beneath it sits the isnull(id) filter, known rows bypass it
+    val windows = p.sparkPlan.collect {
+      case w: WindowExec if w.windowExpression.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.RowNumber])) => w
+    }
     assert(windows.nonEmpty)
-    // beneath every window sits the isnull(id) filter: the window (and its
-    // single-partition exchange) sees ONLY rows that need a new id — known
-    // rows flow through the union at full parallelism
     for (w <- windows) {
       val guarded = w.collectFirst {
         case f: FilterExec if f.condition.toString.toLowerCase.contains("isnull") => f
